@@ -165,24 +165,6 @@ def main() -> None:
     self_name = "BENCH_SELF.json" if "--refresh" in sys.argv else "BENCH_SELF.run.json"
     if only:
         self_name = None  # probe runs are evidence, not the record
-    summary = {
-        "metric": "total_query_wall_time",
-        "value": result["value"],
-        "unit": "sec",
-        "sf": sf_val,
-        "n_queries": len(timings),
-        "stall_suspected": stall_suspected,
-        "n_flagged": len(flagged),
-        "queries_file": self_name,
-    }
-    # STDOUT ORDER (round-10 verdict item 1): the driver parses the LAST
-    # line of a bounded stdout tail. Printing the compact no-queries summary
-    # last — the round-10 layout — meant PERF_r10.per_query parsed empty in
-    # both rounds. So: summary FIRST (a totals-only fallback if the tail is
-    # so short it cuts the full line entirely), then the full result with
-    # the per-query map as the FINAL line (~7 KB at 3 sig figs; the driver's
-    # tail demonstrably captured the map region in round 10).
-    print(json.dumps(summary, separators=(",", ":")))
     print(line)
     if self_name is not None:
         try:

@@ -116,13 +116,6 @@ class IncrementalRunner:
             df = reconcile(df, stage.target_schema)
         return df
 
-    def run_window(self, stage: IncrementalStage, lo: datetime, hi: datetime) -> None:
-        """Extract + reconcile + idempotent overwrite of one (lo, hi] window.
-        Re-running the same window is a no-op difference-wise (I3/I6)."""
-        overwrite_window(
-            self._prepared_source(stage), stage.target_path, stage.ts_col, lo, hi
-        )
-
     def run_cascade(self, stages: list[IncrementalStage]) -> dict[str, int]:
         """Run stages in order (reference: EDC_Import → ROT_Transform →
         AVM_Process, ``nikon_ETL.py:627-632``)."""

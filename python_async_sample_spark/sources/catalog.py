@@ -8,9 +8,10 @@ new header with the old detail.  The catalog is the missing coordination
 point, built from the same load-bearing primitive:
 
 * a catalog snapshot is a JSON manifest pinning ``{table: (root, version)}``;
-* ``catalog_commit`` publishes the next snapshot with ``os.link`` from a
-  fully-written temp file — create-exclusive and all-or-nothing, so two
-  racing committers cannot both win and no reader observes a torn pin set;
+* ``catalog_commit`` publishes the next snapshot through the manifest
+  log (``manifest_log.publish_exclusive``) — create-exclusive and
+  all-or-nothing, so two racing committers cannot both win and no reader
+  observes a torn pin set;
 * the writer protocol is stage-then-flip: commit each table FIRST (each
   gets its own new version — orphan versions are invisible through the
   catalog until pinned), then one ``catalog_commit`` flips every pointer
@@ -32,15 +33,11 @@ serves a torn or partial state.
 
 from __future__ import annotations
 
-import json
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 
+from python_async_sample_spark.sources import manifest_log as mlog
 from python_async_sample_spark.sources.layout import _require_local_path
 from python_async_sample_spark.sources.versioned import (
-    ConcurrentWriteError,
     current_version,
     read_version,
     table_versions,
@@ -49,17 +46,12 @@ from python_async_sample_spark.sources.versioned import (
 _CAT_DIR = "_catalog"
 
 
-def _cat_path(root: str, version: int) -> str:
-    return f"{root}/{_CAT_DIR}/v{version:07d}.json"
+def _log(root: str) -> str:
+    return f"{root.rstrip('/')}/{_CAT_DIR}"
 
 
 def catalog_versions(root: str) -> list[int]:
-    import glob
-
-    return sorted(
-        int(os.path.basename(p)[1:-5])
-        for p in glob.glob(f"{root.rstrip('/')}/{_CAT_DIR}/v*.json")
-    )
+    return mlog.versions(_log(root))
 
 
 def catalog_current(root: str) -> int:
@@ -70,35 +62,17 @@ def catalog_current(root: str) -> int:
 
 
 def _read_cat(root: str, version: int) -> dict:
-    path = _cat_path(root.rstrip("/"), version)
-    if not os.path.exists(path):
-        raise FileNotFoundError(
-            f"catalog version {version} of {root!r} does not exist "
-            f"(committed: {catalog_versions(root)})"
-        )
-    with open(path, encoding="ascii") as fh:
-        return json.load(fh)
+    return mlog.read(
+        _log(root), version, f"catalog version {version} of {root!r} does not exist"
+    )
 
 
 def _link_cat(root: str, manifest: dict, version: int) -> int:
-    cdir = f"{root}/{_CAT_DIR}"
-    os.makedirs(cdir, exist_ok=True)
-    fd, tmp = tempfile.mkstemp(dir=cdir, suffix=".tmp")
-    try:
-        with os.fdopen(fd, "w", encoding="ascii") as fh:
-            json.dump(manifest, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        try:
-            os.link(tmp, _cat_path(root, version))
-        except FileExistsError as ex:
-            raise ConcurrentWriteError(
-                f"catalog version {version} of {root!r} was committed by "
-                "another writer — rebase on the new current pins and retry"
-            ) from ex
-    finally:
-        os.unlink(tmp)
-    return version
+    return mlog.publish_exclusive(
+        _log(root), version, manifest,
+        f"catalog version {version} of {root!r} was committed by another "
+        "writer — rebase on the new current pins and retry",
+    )
 
 
 def catalog_create(root: str, tables: dict[str, str]) -> int:

@@ -160,7 +160,7 @@ def _file_key_ranges(
     ``(path, None, None, rows)`` — callers must treat a None range as
     conservatively affected.  ZERO-ROW files are skipped entirely (they
     can contain no key, so rewriting them is pure waste), matching
-    ``_file_ranges_from_manifest``'s behavior so the footer and manifest
+    ``versioned._file_ranges``' behavior so the footer and manifest
     planning paths prune identically."""
     import pyarrow.parquet as pq
 
@@ -194,92 +194,40 @@ def _file_key_ranges(
     return out
 
 
-def _prune_files_by_key_stats(
-    files: list[str], key_col: str, targets: list
-) -> tuple[list[str], int]:
-    """Files whose parquet footer min/max range can contain ANY target key,
-    plus their total row count (from the same footers — no second read).
-    ``targets`` must be SORTED — each file costs one binary search, so the
-    driver pays O(files · log keys), not O(files · keys).  A file whose
-    writer omitted the column statistics is conservatively treated as
-    affected."""
-    from bisect import bisect_left
-
-    affected, rows = [], 0
-    for f, lo, hi, n_rows in _file_key_ranges(files, key_col):
-        if lo is None:
-            affected.append(f)
-            rows += n_rows
-            continue
-        i = bisect_left(targets, lo)
-        if i < len(targets) and targets[i] <= hi:
-            affected.append(f)
-            rows += n_rows
-    return affected, rows
-
-
-def build_victims_df(spark, key_field, targets: list):
-    """The victims relation for :func:`_drop_keys_anti`, built ONCE when a
-    caller reuses it across many plans (purge rewrites N files against
-    the same keys).  Types are inferred from the Python values and CAST
-    to the target column's type, preserving ``isin``'s literal coercion
-    (int keys against a double column worked under isin; createDataFrame
-    with the column's strict schema would reject them).  NaN keys are
-    dropped: join equality treats NaN = NaN as TRUE where ``isin`` never
-    matched NaN — silently deleting NaN-key rows nobody targeted."""
-    import math
-
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    clean = [
-        k for k in targets
-        if k is not None and not (isinstance(k, float) and math.isnan(k))
-    ]
-    name, dtype = key_field.name, key_field.dataType
-    if not clean:  # nothing to match: schema-only empty relation
-        return spark.createDataFrame([], T.StructType([T.StructField(name, dtype)]))
-    # Build a pure-JVM LocalRelation (VALUES ...) when the key values have
-    # an exact SQL literal form. A createDataFrame over a Python list is a
-    # pickled RDD in defaultParallelism slices, and every plan that
-    # broadcasts the relation re-runs its build as a 32-Python-task job —
-    # PER REWRITE (purge: 16 rewrites x 32 tasks measured at 0.6-2 s each
-    # under job concurrency). A LocalRelation broadcast collects on the
-    # driver with no distributed job at all (guide §2.4).
-    lits = _sql_key_literals(clean)
-    # the column name is interpolated into SQL text: only a simple
-    # identifier is safe unquoted (spaces/hyphens/reserved words would
-    # parse wrong) — anything else falls back to createDataFrame, which
-    # accepts any name
-    import re
-
-    if lits is not None and re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", name):
-        vals = ",".join(f"({v})" for v in lits)
-        inferred = spark.sql(f"SELECT * FROM VALUES {vals} AS __vic({name})")
-    else:
-        inferred = spark.createDataFrame([(k,) for k in clean], [name])
-    return inferred.select(F.col(name).cast(dtype).alias(name))
+def _values_relation(spark, values: list):
+    """``values`` as a one-column (``__v``) relation, the list form of a
+    victim set before :func:`versioned._prepare_victims` normalises it.
+    A pure-JVM LocalRelation (``VALUES ...``) when every value has an
+    exact SQL literal: a createDataFrame over a Python list is a pickled
+    RDD in defaultParallelism slices, and every plan that broadcasts it
+    re-runs its build as a Python job, PER REWRITE (purge: 16 rewrites x
+    32 tasks measured at 0.6-2 s each under job concurrency), while a
+    LocalRelation collects and broadcasts on the driver with no job at
+    all (guide §2.4).  Values without a literal form fall back to
+    createDataFrame inference."""
+    lits = _sql_key_literals(values)
+    if lits is None:
+        return spark.createDataFrame([(v,) for v in values], ["__v"])
+    vals = ",".join(f"({v})" for v in lits)
+    return spark.sql(f"SELECT * FROM VALUES {vals} AS __vic(__v)")
 
 
 def _sql_key_literals(clean: list) -> list[str] | None:
-    """Exact SQL literals for the victim keys, or None when a value has no
+    """Exact SQL literals for the given keys, or None when a value has no
     lossless literal form (caller falls back to createDataFrame inference).
     bool is checked before int (bool is an int subclass)."""
     out = []
     for k in clean:
-        if isinstance(k, bool):
+        if k is None:
+            out.append("NULL")
+        elif isinstance(k, bool):
             out.append("true" if k else "false")
         elif isinstance(k, int):
-            out.append(f"CAST({k} AS BIGINT)" if -(2**63) <= k < 2**63 else None)
+            out.append(f"{k}L" if -(2**63) <= k < 2**63 else None)
         elif isinstance(k, float):
-            # repr round-trips exactly. NaN would emit 'nanD' — an
-            # unresolvable identifier — so it degrades to createDataFrame
-            # like +-inf (current callers pre-exclude NaN, but the helper
-            # is shared across two modules and must guard itself).
-            if k != k or k in (float("inf"), float("-inf")):
-                out.append(None)
-            else:
-                out.append(repr(k) + "D")
+            # repr round-trips finite doubles exactly; NaN and +-inf have
+            # no numeric literal and go through their string casts
+            out.append(repr(k) + "D" if math.isfinite(k) else f"CAST('{k}' AS DOUBLE)")
         elif isinstance(k, str):
             if "\x00" in k:  # NUL inside a SQL literal: not worth the risk
                 return None
@@ -291,19 +239,13 @@ def _sql_key_literals(clean: list) -> list[str] | None:
     return out
 
 
-def _drop_keys_anti(spark, df, key_col: str, targets: list, vic_df=None):
-    """NULL-safe removal of target-key rows via a broadcast anti join —
-    same semantics as ``isNull() | ~isin(targets)`` (NULL never
-    equi-matches, NaN targets are excluded to mirror isin's NaN
-    non-matching), but large literal isin lists cost seconds of plan
-    analysis per query.  Pass ``vic_df`` (from :func:`build_victims_df`)
-    to reuse one victims relation across many plans."""
-    from pyspark.sql import functions as F
-
-    if vic_df is None:
-        vic_df = build_victims_df(spark, df.schema[key_col], targets)
-    cols = df.columns
-    return df.join(F.broadcast(vic_df), key_col, "left_anti").select(*cols)
+def _drop_victims(df, vic, key_col: str):
+    """``df`` without the rows whose ``key_col`` is in the victims relation
+    ``vic``: the one broadcast anti join every DELETE/PURGE rewrite runs.
+    NULL keys never equi-match, so NULL-key rows always survive; a literal
+    ``isin`` would instead cost seconds of plan analysis per query once
+    the victim list runs to hundreds of keys."""
+    return df.join(F.broadcast(vic), key_col, "left_anti").select(*df.columns)
 
 
 def _staged_swap(
@@ -362,20 +304,23 @@ def delete_keys(
     """
     import glob as _glob
 
+    from python_async_sample_spark.sources.versioned import _victim_hits
+
     _require_local_path(path, "delete_keys")
     pin_reader_conf(spark)
     root = path.rstrip("/")
     files = sorted(_glob.glob(f"{root}/*.parquet"))
-    targets = sorted(keys)
-    affected, rows_before = _prune_files_by_key_stats(files, key_col, targets)
+    if not files:
+        return {"rewritten": 0, "untouched": 0, "deleted_rows": 0}
+    schema = spark.read.parquet(*files).schema
+    ranges = _file_key_ranges(files, key_col)
+    vic, affected, _, _ = _victim_hits(spark, keys, key_col, schema[key_col], ranges)
 
     deleted = 0
     if affected:
-        df = spark.read.parquet(*affected)
-        # NULL-safe keep predicate: a NULL key never equi-matches, so
-        # NULL-key rows survive the anti join — rows nobody asked to
-        # delete are never dropped
-        keep = _drop_keys_anti(spark, df, key_col, targets)
+        hit = set(affected)
+        rows_before = sum(r for f, _, _, r in ranges if f in hit)
+        keep = _drop_victims(spark.read.schema(schema).parquet(*affected), vic, key_col)
         rows_after = _staged_swap(root, keep, len(affected), affected, ".delete_stage")
         deleted = rows_before - rows_after
 
@@ -489,12 +434,9 @@ def merge_into(
     # affected.
     from python_async_sample_spark.sources.versioned import _affected_via_range_join
 
-    franges = _file_key_ranges(files, key_col)
-    forced = [(f, r) for f, lo, _, r in franges if lo is None]
-    ranged = [(f, lo, hi, r) for f, lo, hi, r in franges if lo is not None]
-    names_hit, rows_hit = _affected_via_range_join(spark, updates, key_col, ranged)
-    affected = sorted(set(names_hit) | {f for f, _ in forced})
-    rows_before = rows_hit + sum(r for _, r in forced)
+    affected, rows_before = _affected_via_range_join(
+        spark, updates, key_col, _file_key_ranges(files, key_col)
+    )
 
     # kept = affected rows minus merged keys (NULL-safe: a NULL target key
     # never equi-matches the anti join); staged output = kept ∪ updates

@@ -9,10 +9,11 @@ removes the window entirely:
 
 * data files are IMMUTABLE once written — a snapshot is a MANIFEST (a JSON
   list of file names + the schema), never the directory listing;
-* a commit creates the next manifest with ``os.link`` from a fully-written
-  temp file — create-exclusive AND all-or-nothing, so readers can never
-  observe a half-written manifest, and two racing writers cannot both win
-  the same version (the loser's ``link`` raises and it must rebase);
+* a commit publishes the next manifest through the manifest log
+  (``sources/manifest_log.py``: a fully-written temp file, then an
+  exclusive ``os.link``) — create-exclusive AND all-or-nothing, so readers
+  can never observe a half-written manifest, and two racing writers cannot
+  both win the same version (the loser raises and must rebase);
 * nothing is ever deleted at write time; :func:`vacuum` later removes only
   files unreachable from every retained manifest.
 
@@ -28,6 +29,15 @@ Multiple writers are detected, not assumed away: the exclusive manifest
 create is the commit lock on any namespace with atomic link/create
 (POSIX, HDFS).  Object stores without an atomic create need a coordination
 layer — the same documented porting seam as ``layout._require_local_path``.
+
+Keyed removal is one verb per semantics: :func:`delete_relation` (a new
+head without the victims) and :func:`purge_relation` (the victims erased
+from every snapshot).  Each takes its victims as a Python list of keys or
+as a relation (``delete_keys_versioned`` / ``purge_keys`` name the list
+form) and shares everything but the hit-file finder: one file-range
+source (:func:`_file_ranges`), one victim normaliser
+(:func:`_prepare_victims`), one broadcast anti join for the rewrite, one
+count-plus-checksum purge ledger entry.
 
 Reference tie-in: the reference's watermark table + delete-then-insert
 window (dbs/nikon.py:107-186) hand-rolls "readers see either the old or
@@ -49,9 +59,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from python_async_sample_spark.sources.layout import (
-    _prune_files_by_key_stats,
-    _require_local_path,
+from python_async_sample_spark.sources import manifest_log as mlog
+from python_async_sample_spark.sources.layout import _drop_victims, _require_local_path
+from python_async_sample_spark.sources.manifest_log import (  # noqa: F401
+    ConcurrentWriteError,  # re-exported: callers catch it from this module
 )
 from python_async_sample_spark.sources.readers import pin_reader_conf
 
@@ -59,21 +70,18 @@ _MANIFEST_DIR = "_manifests"
 _DATA_DIR = "data"
 
 
-class ConcurrentWriteError(RuntimeError):
-    """Another writer committed this version first — rebase and retry."""
+def _log(root: str) -> str:
+    return f"{root.rstrip('/')}/{_MANIFEST_DIR}"
 
 
 def _manifest_path(root: str, version: int) -> str:
-    return f"{root}/{_MANIFEST_DIR}/v{version:07d}.json"
+    return mlog.doc_path(_log(root), version)
 
 
 def table_versions(root: str) -> list[int]:
     """All committed versions, ascending. Only fully-committed manifests
     are visible by construction (exclusive-link commit)."""
-    return sorted(
-        int(os.path.basename(p)[1:-5])
-        for p in glob.glob(f"{root.rstrip('/')}/{_MANIFEST_DIR}/v*.json")
-    )
+    return mlog.versions(_log(root))
 
 
 def current_version(root: str) -> int:
@@ -84,14 +92,10 @@ def current_version(root: str) -> int:
 
 
 def _read_manifest(root: str, version: int) -> dict:
-    path = _manifest_path(root.rstrip("/"), version)
-    if not os.path.exists(path):
-        raise FileNotFoundError(
-            f"version {version} of {root!r} does not exist (committed: "
-            f"{table_versions(root)}; it may have been vacuumed)"
-        )
-    with open(path, encoding="ascii") as fh:
-        return json.load(fh)
+    return mlog.read(
+        _log(root), version,
+        f"version {version} of {root!r} does not exist; it may have been vacuumed",
+    )
 
 
 def _stage_files(
@@ -193,58 +197,140 @@ def _carry_stats(manifest: dict, kept: list[str], new_stats: dict) -> dict:
     return out
 
 
-def _affected_from_manifest(
-    manifest: dict, key_col: str, targets: list
-) -> tuple[list[str], int] | None:
-    """Manifest-stats twin of ``layout._prune_files_by_key_stats``: the
-    file names whose recorded [min, max] range can contain ANY target key,
-    plus their total rows — zero footer reads.  ``targets`` must be SORTED:
-    each file costs one binary search (O(files · log keys) total driver
-    CPU), so a million-key purge list stays sub-second where a linear
-    ``any(lo <= k <= hi)`` scan per file was O(files · keys).  Returns
-    None when any file lacks a recorded range for ``key_col`` (legacy
-    manifest, or a column the footers couldn't summarize) so the caller
-    falls back to footers; a partial answer would be unsound, not just
-    slow."""
-    from bisect import bisect_left
-
-    stats = manifest.get("stats") or {}
-    affected, rows = [], 0
-    for n in manifest["files"]:
-        ent = stats.get(n)
-        if ent is not None and ent["rows"] == 0:
-            continue  # an empty file contains no keys (it has no column
-            # ranges either — zero row groups — so don't mistake that for
-            # "stats missing")
-        rng = ent["cols"].get(key_col) if ent else None
-        if rng is None:
-            return None
-        lo, hi = rng
-        i = bisect_left(targets, lo)
-        if i < len(targets) and targets[i] <= hi:
-            affected.append(n)
-            rows += ent["rows"]
-    return affected, rows
-
-
-def _file_ranges_from_manifest(
-    manifest: dict, key_col: str
-) -> list[tuple[str, object, object, int]] | None:
-    """Per-file ``(name, lo, hi, rows)`` for ``key_col`` from the
-    manifest's embedded stats, empty files skipped.  None when any file
-    lacks a recorded range (legacy manifest) — the caller falls back to
-    parquet footers."""
+def _file_ranges(
+    root: str, manifest: dict, key_col: str
+) -> list[tuple[str, object, object, int]]:
+    """Per-file ``(name, lo, hi, rows)`` for ``key_col``, the one input
+    every keyed verb plans its affected files from.  Ranges come from the
+    manifest's embedded stats (zero footer reads); when any file lacks a
+    recorded range (legacy manifest, or a column the footers couldn't
+    summarize) they come from the parquet footers instead, because a
+    partial manifest answer would be unsound, not just slow.  Empty files
+    are skipped (they contain no keys); a ``None`` range means "no usable
+    stats" and every finder treats it as conservatively hit.  Files gone
+    from disk (a vacuum-retained legacy epoch manifest whose data was
+    reclaimed) have no footer to read and are left out of the fallback."""
     stats = manifest.get("stats") or {}
     out = []
     for n in manifest["files"]:
         ent = stats.get(n)
         if ent is not None and ent["rows"] == 0:
-            continue
+            continue  # an empty file has no column ranges either (zero row
+            # groups), so don't mistake it for "stats missing"
         rng = ent["cols"].get(key_col) if ent else None
         if rng is None:
-            return None
+            break
         out.append((n, rng[0], rng[1], ent["rows"]))
-    return out
+    else:
+        return out
+    from python_async_sample_spark.sources.layout import _file_key_ranges
+
+    paths = [
+        p for n in manifest["files"] if os.path.exists(p := f"{root}/{_DATA_DIR}/{n}")
+    ]
+    return [
+        (os.path.basename(p), lo, hi, rows)
+        for p, lo, hi, rows in _file_key_ranges(paths, key_col)
+    ]
+
+
+def _prepare_victims(
+    spark: SparkSession, victims, key_col: str, key_field: T.StructField
+) -> DataFrame:
+    """The one victim normaliser of the DELETE/PURGE verbs.  ``victims``
+    is a Python list of keys or a relation carrying ``key_col`` (or a
+    single-column relation); either way it becomes a one-column relation
+    of the table's key type, holding only victims that can equi-match:
+
+    * each victim is ``try_cast`` to the key type and KEPT ONLY IF the
+      cast value still equals the original: 1.5 never truncates onto an
+      integer key 1 (``isin([1.5])`` matches nothing either), and a NaN
+      or out-of-range double against an integer key drops instead of
+      aborting with CAST_OVERFLOW under ANSI; int victims against a
+      double key still match, as they did under ``isin``;
+    * NULLs drop (they never equi-match), and so do NaNs against a float
+      key: join equality says NaN = NaN, which would erase NaN-key rows
+      nobody targeted;
+    * a relation is deduplicated.  A list is not: it becomes a VALUES
+      LocalRelation that collects and broadcasts with no job at all, a
+      distinct over it would cost one job per plan that broadcasts it,
+      and duplicates are harmless in the anti join.  The list's keys are
+      deduplicated where :func:`_victim_hits` collects them."""
+    from python_async_sample_spark.sources.layout import _values_relation
+
+    if not isinstance(victims, DataFrame):
+        src = _values_relation(spark, list(victims) or [None])
+    elif key_col in victims.columns:
+        src = victims.select(F.col(key_col).alias("__v"))
+    elif len(victims.columns) == 1:
+        src = victims.select(F.col(victims.columns[0]).alias("__v"))
+    else:
+        raise ValueError(
+            f"victims relation must carry {key_col!r} or be single-column; "
+            f"got {victims.columns}"
+        )
+    key = F.col("__v").try_cast(key_field.dataType)
+    exact = key == F.col("__v")
+    if isinstance(key_field.dataType, (T.DoubleType, T.FloatType)):
+        exact = exact & ~F.isnan(key)
+    vic = src.where(exact).select(key.alias(key_col))
+    return vic.distinct() if isinstance(victims, DataFrame) else vic
+
+
+def _victim_hits(
+    spark: SparkSession,
+    victims,
+    key_col: str,
+    key_field: T.StructField,
+    ranges: list[tuple[str, object, object, int]],
+) -> tuple[DataFrame, list[str], int, int]:
+    """Normalise ``victims`` and find the files they hit: the ONLY place
+    the DELETE/PURGE verbs tell a list from a relation.  Returns the
+    victims relation (for the anti join), the hit file names, the number
+    of distinct victims, and their order-insensitive checksum (sum of
+    32-bit md5 key signatures mod 2³², the purge audit ledger's entry).
+
+    * A list's keys are driver-resident anyway: its VALUES relation is
+      evaluated on the driver (no job) and each file costs one binary
+      search over the sorted keys, O(files · log keys) with zero jobs.
+    * A relation's keys never reach the driver: it is materialized once
+      (it feeds the planning join and every rewrite), its count and
+      checksum ride that same job as an ``Observation``, and the hit
+      files come from the distributed :func:`_affected_via_range_join`.
+      Driver state stays O(files) however many victims there are."""
+    vic = _prepare_victims(spark, victims, key_col, key_field)
+    sig = F.conv(
+        F.substring(F.md5(F.col(key_col).cast("string")), 1, 8), 16, 10
+    ).cast("bigint")
+    if isinstance(victims, DataFrame):
+        from pyspark.sql import Observation
+
+        obs = Observation()
+        vic = vic.observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            # 16-bit halves: an int64 sum of 32-bit signatures overflows
+            # (ANSI abort) at ~2^31 victims
+            F.sum(sig.bitwiseAND(F.lit(0xFFFF))).alias("lo"),
+            F.sum(F.shiftright(sig, 16)).alias("hi"),
+        ).localCheckpoint(eager=True)
+        m = obs.get
+        n, ck = m["n"], ((m["lo"] or 0) + (m["hi"] or 0) * 65536) % 2**32
+        hits = _affected_via_range_join(spark, vic, key_col, ranges)[0] if n else []
+    else:
+        from bisect import bisect_left
+
+        sigs = dict(vic.select(key_col, sig).collect())
+        keys = sorted(sigs)
+        n, ck = len(keys), sum(sigs.values()) % 2**32
+        hits = [
+            name for name, lo, hi, _ in ranges
+            if keys and (
+                lo is None
+                or (i := bisect_left(keys, lo)) < len(keys) and keys[i] <= hi
+            )
+        ]
+    return vic, hits, n, ck
 
 
 # Above this many candidate files, _affected_via_range_join spends one
@@ -265,10 +351,10 @@ def _affected_via_range_join(
     small broadcast relation; one join against the batch's keys marks each
     file hit/miss, and only the HIT FILE NAMES come back — O(files
     rewritten) driver rows, however many distinct keys the CDC batch
-    carries.  This is the planning path for MERGE-shaped verbs whose key
-    set lives in a DataFrame; list-keyed verbs (point DELETE / purge) keep
-    the driver-side binary-search prune, where the caller already owns the
-    key list.
+    carries.  This is the planning path for MERGE and for DELETE/PURGE
+    with a victim relation; a victim LIST keeps the driver-side
+    binary-search finder (:func:`_victim_hits`), where the caller already
+    owns the keys.
 
     COST MODEL: the non-equi range condition executes as a broadcast
     nested-loop join — O(broadcast ranges × batch rows) comparisons,
@@ -279,21 +365,24 @@ def _affected_via_range_join(
     GLOBAL key span first — one 2-scalar aggregate action, O(files)
     driver work on rows it already holds — so only span-overlapping
     ranges enter the broadcast.  scripts/scale_probe.py pins that the
-    driver-resident planning state stays O(files) as data scales."""
-    if not ranges:
-        return [], 0
+    driver-resident planning state stays O(files) as data scales.
+
+    A ``None`` range (no usable stats) is conservatively hit without
+    entering the join: an always-true join range is impossible for
+    arbitrary key types."""
+    rows_by_name = {n: r for n, _, _, r in ranges}
+    forced = [n for n, lo, _, _ in ranges if lo is None]
+    ranges = [r for r in ranges if r[1] is not None]
     if len(ranges) > _RANGE_JOIN_PREFILTER_FILES:
         kmin, kmax = batch.select(
             F.min(key_col), F.max(key_col)
         ).first()
-        if kmin is None:  # all-NULL / empty batch: no file can be hit
-            return [], 0
-        ranges = [r for r in ranges if not (r[2] < kmin or r[1] > kmax)]
-        if not ranges:
-            return [], 0
-    rows_by_name = {n: r for n, _, _, r in ranges}
-    hits = _range_join_hits_plan(spark, batch, key_col, ranges).collect()
-    names = sorted(r["__file"] for r in hits)
+        # an all-NULL / empty batch can hit no ranged file
+        ranges = [] if kmin is None else [
+            r for r in ranges if not (r[2] < kmin or r[1] > kmax)
+        ]
+    hits = _range_join_hits_plan(spark, batch, key_col, ranges).collect() if ranges else []
+    names = sorted({r["__file"] for r in hits} | set(forced))
     return names, sum(rows_by_name[n] for n in names)
 
 
@@ -312,7 +401,7 @@ def _range_join_hits_plan(
     # a createDataFrame over a Python list is a pickled RDD whose broadcast
     # build is a defaultParallelism-task Python job on EVERY plan that
     # references it; a VALUES relation broadcast-collects on the driver with
-    # no job at all (same rationale as layout.build_victims_df).
+    # no job at all (same rationale as layout._values_relation).
     from python_async_sample_spark.sources.layout import _sql_key_literals
 
     names_l = _sql_key_literals([n for n, _, _, _ in ranges])
@@ -351,44 +440,40 @@ def _commit(
     checks=_CARRY_CHECKS,
     dropped=_CARRY_CHECKS,
 ) -> int:
-    """Atomically publish the next manifest.  The JSON is fully written to
-    a temp file first; ``os.link`` then both creates the final name
+    """Atomically publish the next manifest through
+    :func:`manifest_log.publish_exclusive`: the final name is created
     EXCLUSIVELY (two writers racing for the same version — one loses with
-    :class:`ConcurrentWriteError`) and makes the complete content visible
-    in one step (no reader can open a torn manifest).
+    :class:`ConcurrentWriteError`) and the complete content becomes
+    visible in one step (no reader can open a torn manifest).
 
     ``epochs`` is the exactly-once stream ledger (epoch id → batch
     fingerprint) carried FORWARD into every child manifest, so replay
     detection survives :func:`vacuum` dropping the ancestor manifests that
     originally recorded each epoch."""
     version = 0 if parent is None else parent + 1
-    if checks is _CARRY_CHECKS or dropped is _CARRY_CHECKS:
+    carry = checks is _CARRY_CHECKS or dropped is _CARRY_CHECKS
+    try:
         parent_m = _read_manifest(root, parent) if parent is not None else {}
-        if checks is _CARRY_CHECKS:
-            # CHECK constraints persist across every verb unless explicitly
-            # replaced (set_check_constraints) — same carry contract as the
-            # epoch ledger, resolved here so no call site can forget it
-            checks = parent_m.get("checks", [])
-        if dropped is _CARRY_CHECKS:
-            # dropped-column ledger likewise carries forever: add_column
-            # consults it to refuse resurrecting a name whose values still
-            # live in pre-drop data files (no column-mapping layer here)
-            dropped = parent_m.get("dropped", [])
-    mdir = f"{root}/{_MANIFEST_DIR}"
-    os.makedirs(mdir, exist_ok=True)
+    except FileNotFoundError:
+        if carry:
+            raise
+        parent_m = {}  # vacuumed parent: nothing to carry or clamp against
+    if checks is _CARRY_CHECKS:
+        # CHECK constraints persist across every verb unless explicitly
+        # replaced (set_check_constraints) — same carry contract as the
+        # epoch ledger, resolved here so no call site can forget it
+        checks = parent_m.get("checks", [])
+    if dropped is _CARRY_CHECKS:
+        # dropped-column ledger likewise carries forever: add_column
+        # consults it to refuse resurrecting a name whose values still
+        # live in pre-drop data files (no column-mapping layer here)
+        dropped = parent_m.get("dropped", [])
     # commit wall-clock, clamped to the parent's so AS-OF-timestamp
     # resolution stays monotone in version order even under clock
     # adjustment (Delta reads file mtimes and carries the same caveat;
     # recording it in the manifest survives copies/backups that reset
     # mtimes)
-    committed_at = time.time()
-    if parent is not None:
-        try:
-            committed_at = max(
-                committed_at, _read_manifest(root, parent).get("committed_at", 0.0)
-            )
-        except FileNotFoundError:
-            pass  # vacuumed parent: nothing to clamp against
+    committed_at = max(time.time(), parent_m.get("committed_at", 0.0))
     manifest = {
         "version": version,
         "parent": parent,
@@ -401,32 +486,12 @@ def _commit(
         "dropped": sorted(dropped or []),
         "committed_at": committed_at,
     }
-    fd, tmp = tempfile.mkstemp(dir=mdir, suffix=".tmp")
-    try:
-        with os.fdopen(fd, "w", encoding="ascii") as fh:
-            json.dump(manifest, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        try:
-            os.link(tmp, _manifest_path(root, version))
-        except FileExistsError as ex:
-            raise ConcurrentWriteError(
-                f"version {version} of {root!r} was committed by another "
-                "writer after this one read its parent snapshot — rebase "
-                "on the new current version and retry"
-            ) from ex
-    finally:
-        os.unlink(tmp)
-    return version
-
-
-def _drop_keys(spark: SparkSession, df: DataFrame, key_col: str, targets: list) -> DataFrame:
-    """NULL-safe removal of target-key rows — delegates to the single
-    shared anti-join helper (``layout._drop_keys_anti``) so the NULL/NaN/
-    type-coercion semantics live in exactly one place."""
-    from python_async_sample_spark.sources.layout import _drop_keys_anti
-
-    return _drop_keys_anti(spark, df, key_col, targets)
+    return mlog.publish_exclusive(
+        _log(root), version, manifest,
+        f"version {version} of {root!r} was committed by another writer "
+        "after this one read its parent snapshot — rebase on the new "
+        "current version and retry",
+    )
 
 
 def create_table(
@@ -607,7 +672,7 @@ def prune_files_for_range(
     """Scan planning off the manifest alone: the data files whose recorded
     ``[min, max]`` for ``key_col`` overlaps ``[lo, hi]``, plus the total
     file count — ZERO footer or data reads.  This is the read-side twin of
-    the keyed MERGE/DELETE pruning (:func:`_affected_from_manifest`), and
+    the keyed MERGE/DELETE pruning (:func:`_file_ranges`), and
     the reason manifests embed per-file column stats at all: at 100 TB a
     keyed range scan that plans from one small JSON touches a handful of
     files instead of opening a million footers over the network.
@@ -1182,27 +1247,9 @@ def merge_into_versioned(
             "upserted_rows": 0, "replaced_rows": 0,
         }
 
-    ranges = _file_ranges_from_manifest(manifest, key_col)
-    if ranges is None:  # legacy manifest without embedded stats: open footers
-        from python_async_sample_spark.sources.layout import _file_key_ranges
-
-        paths = [f"{root}/{_DATA_DIR}/{n}" for n in manifest["files"]]
-        ranges = [
-            (os.path.basename(p), lo, hi, rows)
-            for p, lo, hi, rows in _file_key_ranges(paths, key_col)
-        ]
-        # stats-less files are conservatively affected: an always-true
-        # join range is impossible for arbitrary key types, so they are
-        # partitioned out of the join and unconditionally treated as hit
-        no_stats = [r for r in ranges if r[1] is None]
-        ranges = [r for r in ranges if r[1] is not None]
-        forced_names = [n for n, _, _, _ in no_stats]
-        forced_rows = sum(r for _, _, _, r in no_stats)
-    else:
-        forced_names, forced_rows = [], 0
-    names_hit, rows_hit = _affected_via_range_join(spark, updates, key_col, ranges)
-    names_hit = sorted(set(names_hit) | set(forced_names))
-    rows_before = rows_hit + forced_rows
+    names_hit, rows_before = _affected_via_range_join(
+        spark, updates, key_col, _file_ranges(root, manifest, key_col)
+    )
     affected = [f"{root}/{_DATA_DIR}/{n}" for n in names_hit]
     affected_names = set(names_hit)
 
@@ -1240,92 +1287,27 @@ def merge_into_versioned(
     }
 
 
-def delete_keys_versioned(
-    spark: SparkSession, root: str, key_col: str, keys: list
-) -> dict:
-    """Keyed deletion as a snapshot commit (the versioned twin of
-    ``layout.delete_keys``, NULL-safe the same way: NULL-key rows are
-    never deletion targets)."""
-    root = root.rstrip("/")
-    _require_local_path(root, "delete_keys_versioned")
-    pin_reader_conf(spark)
-    parent = current_version(root)
-    manifest = _read_manifest(root, parent)
-    targets = sorted(keys)
-    pruned = _affected_from_manifest(manifest, key_col, targets)
-    if pruned is not None:
-        names_hit, rows_before = pruned
-        affected = [f"{root}/{_DATA_DIR}/{n}" for n in names_hit]
-    else:  # legacy manifest without embedded stats: open footers
-        paths = [f"{root}/{_DATA_DIR}/{n}" for n in manifest["files"]]
-        affected, rows_before = _prune_files_by_key_stats(paths, key_col, targets)
-    if not affected:
-        return {"version": parent, "rewritten": 0, "deleted_rows": 0}
-    affected_names = {os.path.basename(p) for p in affected}
-    keep = _drop_keys(
-        spark,
-        spark.read.schema(T.StructType.fromJson(json.loads(manifest["schema"])))
-        .parquet(*affected),
-        key_col,
-        targets,
-    )
-    new_names = _stage_files(keep, root, len(affected))
-    new_stats = _collect_file_stats(root, new_names)
-    rows_after = sum(new_stats[n]["rows"] for n in new_names)
-    kept_names = [n for n in manifest["files"] if n not in affected_names]
-    next_files = kept_names + new_names
-    version = _commit(
-        root, next_files, manifest["schema"], f"delete:{key_col}", parent,
-        epochs=manifest.get("epochs"),
-        stats=_carry_stats(manifest, kept_names, new_stats),
-    )
-    return {
-        "version": version,
-        "rewritten": len(affected),
-        "deleted_rows": rows_before - rows_after,
-    }
-
-
-def _prepare_victims(
-    spark: SparkSession, victims: DataFrame, key_col: str, key_field: T.StructField
-) -> DataFrame:
-    """Normalize a victim RELATION for anti-join deletion: project the key
-    column (or accept a single-column relation), cast to the table's key
-    type, drop NULLs (never equi-match — a NULL "victim" targets nothing)
-    and NaNs (NaN = NaN is TRUE under join equality — a NaN victim would
-    silently erase NaN-key rows nobody targeted), dedup, and materialize
-    ONCE (the relation is consumed by the planning range join and then by
-    every per-file rewrite)."""
-    if key_col in victims.columns:
-        src = F.col(key_col)
-    elif len(victims.columns) == 1:
-        src = F.col(victims.columns[0])
-    else:
-        raise ValueError(
-            f"victims relation must carry {key_col!r} or be single-column; "
-            f"got {victims.columns}"
-        )
-    vic = (
-        victims.select(src.cast(key_field.dataType).alias(key_col))
-        .where(F.col(key_col).isNotNull())
-    )
-    if isinstance(key_field.dataType, (T.DoubleType, T.FloatType)):
-        vic = vic.where(~F.isnan(key_col))
-    return vic.distinct().localCheckpoint(eager=True)
-
-
 def delete_relation(
-    spark: SparkSession, root: str, key_col: str, victims: DataFrame
+    spark: SparkSession, root: str, key_col: str, victims
 ) -> dict:
-    """``DELETE WHERE <relation>`` as a snapshot commit —
-    :func:`delete_keys_versioned` with the victim set as a RELATION, the
-    head-only sibling of :func:`purge_relation` (delete removes rows from
-    the NEW head while time travel keeps serving history; purge is the
-    erasure verb that rewrites history).  The reference's delete is
-    predicate-shaped (``dbs/nikon.py:117-136``) — at 100 TB the victims
-    are a relation, not a key list, so planning rides the same distributed
-    range join as MERGE and the rewrite is one broadcast anti join: victim
-    keys never reach the driver, driver state is O(files)."""
+    """``DELETE WHERE key_col IN victims`` as a snapshot commit: the rows
+    leave a NEW head while time travel keeps serving history (the
+    erasure verb that rewrites history is :func:`purge_relation`).  The
+    reference's delete is predicate-shaped (``dbs/nikon.py:117-136``);
+    here the victims come in either of two forms and share everything
+    but the hit-file finder (:func:`_victim_hits`):
+
+    * a Python LIST of keys (``delete_keys_versioned``): files are found
+      by a driver-side binary search over the file ranges, zero jobs;
+    * a RELATION carrying ``key_col`` (or single-column): files are found
+      by the distributed range join MERGE uses, and the keys never reach
+      the driver, so driver state is O(files).
+
+    Victims are normalised once (:func:`_prepare_victims`: exact key-type
+    cast, NULL/NaN never targets), the affected files are rewritten by one
+    broadcast anti join, and NULL-key rows are never deleted.  Returns
+    ``{"version", "rewritten", "deleted_rows"}``; no hit file means no
+    commit."""
     root = root.rstrip("/")
     _require_local_path(root, "delete_relation")
     pin_reader_conf(spark)
@@ -1334,46 +1316,34 @@ def delete_relation(
     schema = T.StructType.fromJson(json.loads(manifest["schema"]))
     if key_col not in schema.fieldNames():
         raise ValueError(f"column {key_col!r} not in {root!r}'s head schema")
-    vic = _prepare_victims(spark, victims, key_col, schema[key_col])
-
-    ranges = _file_ranges_from_manifest(manifest, key_col)
-    if ranges is None:  # legacy manifest without embedded stats
-        from python_async_sample_spark.sources.layout import _file_key_ranges
-
-        paths = [f"{root}/{_DATA_DIR}/{n}" for n in manifest["files"]]
-        ranges = [
-            (os.path.basename(p), lo, hi, rows)
-            for p, lo, hi, rows in _file_key_ranges(paths, key_col)
-        ]
-    forced = [(n, r) for n, lo, _, r in ranges if lo is None]
-    ranged = [(n, lo, hi, r) for n, lo, hi, r in ranges if lo is not None]
-    names_hit, rows_hit = _affected_via_range_join(spark, vic, key_col, ranged)
-    affected_names = sorted(set(names_hit) | {n for n, _ in forced})
-    rows_before = rows_hit + sum(r for _, r in forced)
-    if not affected_names:
+    ranges = _file_ranges(root, manifest, key_col)
+    vic, names_hit, _, _ = _victim_hits(spark, victims, key_col, schema[key_col], ranges)
+    if not names_hit:
         return {"version": parent, "rewritten": 0, "deleted_rows": 0}
-
-    keep = (
-        spark.read.schema(schema)
-        .parquet(*[f"{root}/{_DATA_DIR}/{n}" for n in affected_names])
-        .join(F.broadcast(vic), key_col, "left_anti")
-        .select(*schema.fieldNames())
+    hit = set(names_hit)
+    rows_before = sum(r for n, _, _, r in ranges if n in hit)
+    keep = _drop_victims(
+        spark.read.schema(schema).parquet(*[f"{root}/{_DATA_DIR}/{n}" for n in names_hit]),
+        vic, key_col,
     )
-    new_names = _stage_files(keep, root, len(affected_names))
+    new_names = _stage_files(keep, root, len(names_hit))
     new_stats = _collect_file_stats(root, new_names)
     rows_after = sum(new_stats[n]["rows"] for n in new_names)
-    kept_names = [n for n in manifest["files"] if n not in set(affected_names)]
+    kept_names = [n for n in manifest["files"] if n not in hit]
     version = _commit(
-        root, kept_names + new_names, manifest["schema"],
-        f"delete-rel:{key_col}", parent,
+        root, kept_names + new_names, manifest["schema"], f"delete:{key_col}", parent,
         epochs=manifest.get("epochs"),
         stats=_carry_stats(manifest, kept_names, new_stats),
     )
     return {
         "version": version,
-        "rewritten": len(affected_names),
+        "rewritten": len(names_hit),
         "deleted_rows": rows_before - rows_after,
     }
+
+
+# the list form of the same verb (keys as a Python list)
+delete_keys_versioned = delete_relation
 
 
 def commit_stream_epoch(
@@ -1715,101 +1685,6 @@ def verify_table(root: str, deep: bool = False) -> dict:
     return {"ok": not problems, "versions": len(versions), "problems": problems}
 
 
-def purge_keys(
-    spark: SparkSession, root: str, key_col: str, keys: list
-) -> dict:
-    """Erase the given keys from EVERY committed snapshot — the
-    right-to-be-forgotten verb, and deliberately the ONE operation that
-    rewrites history: ``delete_keys_versioned`` removes rows from the
-    head while time travel keeps serving them from older snapshots,
-    which is exactly what an erasure request forbids.
-
-    Mechanics per affected data file (manifest-stats pruned, same as
-    MERGE): write a purged replacement under a fresh immutable name, then
-    atomically REPLACE (``os.replace``) every manifest that referenced
-    the old file with one referencing the new name — version numbers,
-    ops, the epoch ledger and all other rows are preserved; only the
-    purged rows disappear from every version at once.  Readers see each
-    manifest either before or after its single atomic replace, and both
-    states are complete, valid snapshots (the old data file is not
-    removed here — :func:`vacuum` reclaims it once no manifest references
-    it), so a crash mid-purge leaves every version readable and the purge
-    re-runnable.  NULL keys are never purge targets (same NULL-safety as
-    the delete verbs).
-
-    Unlike every snapshot verb, purge is NOT safe against concurrent
-    writers: a writer that read its parent manifest before the replace
-    commits a child referencing the un-purged file names, resurrecting
-    the rows.  MULTI-VERSION readers need the same window: each manifest
-    flips atomically, but a ``changes_between`` call racing the purge can
-    observe one version flipped and the other not and report the victim
-    rows as phantom inserts/deletes (single-version ``read_version``
-    always sees a complete, valid snapshot).  Run it in a maintenance
-    window (the same exclusive contract every history-rewriting tool
-    carries — git filter-branch, pg VACUUM FULL).  A crash mid-purge is
-    safe: each manifest flips atomically and independently, and
-    re-running finishes the rest.
-
-    Returns per-version rows removed plus rewrite counts.  Scale shape:
-    one pruned rewrite per affected file ACROSS all retained manifests
-    (shared files rewrite once), manifest updates are metadata-only."""
-    root = root.rstrip("/")
-    _require_local_path(root, "purge_keys")
-    pin_reader_conf(spark)
-    targets = sorted(k for k in keys if k is not None)
-    versions = table_versions(root)
-    if not targets or not versions:
-        return {"files_rewritten": 0, "manifests_updated": 0, "rows_removed": {}}
-
-    manifests = {v: _read_manifest(root, v) for v in versions}
-    # union of affected files across every version (a file shared by many
-    # manifests is rewritten exactly once).  Manifests whose schema lacks
-    # the key column (it was added by a later add_column) cannot contain
-    # victim values — their files null-fill the column — so they are
-    # unaffected by construction.  Files that no longer exist on disk
-    # (a vacuum-retained legacy epoch manifest whose data files were
-    # reclaimed) have no reader to protect and are skipped.
-    affected: set[str] = set()
-    for m in manifests.values():
-        fields = {f["name"] for f in json.loads(m["schema"])["fields"]}
-        if key_col not in fields:
-            continue
-        pruned = _affected_from_manifest(m, key_col, targets)
-        if pruned is not None:
-            names_hit = pruned[0]
-        else:
-            paths = [
-                p for n in m["files"]
-                if os.path.exists(p := f"{root}/{_DATA_DIR}/{n}")
-            ]
-            hit, _ = _prune_files_by_key_stats(paths, key_col, targets)
-            names_hit = [os.path.basename(p) for p in hit]
-        affected.update(n for n in names_hit
-                        if os.path.exists(f"{root}/{_DATA_DIR}/{n}"))
-
-    # victims as ONE broadcast anti-join relation (layout.build_victims_df
-    # carries the isin-compatible type coercion + NaN exclusion): an isin()
-    # with hundreds of literal children makes every per-file plan pay
-    # seconds of driver-side analysis (measured 8s for 16 files x 711
-    # keys); the anti join analyzes in milliseconds and keeps NULL-key
-    # rows exactly like the NULL-guarded isin (NULL never equi-matches)
-    from python_async_sample_spark.sources.layout import (
-        _drop_keys_anti,
-        build_victims_df,
-    )
-
-    key_field = _newest_key_field(manifests, key_col, root)
-    vic_df = build_victims_df(spark, key_field, targets)
-
-    def drop_victims(df: DataFrame) -> DataFrame:
-        return _drop_keys_anti(spark, df, key_col, targets, vic_df=vic_df)
-
-    return _purge_rewrite_and_flip(
-        spark, root, manifests, versions, affected, drop_victims,
-        purged_entries={str(k) for k in targets},
-    )
-
-
 def _newest_key_field(manifests: dict, key_col: str, root: str) -> T.StructField:
     """The NEWEST schema's field for ``key_col``: reading an older file
     with an evolved schema null-fills added columns (never the reverse
@@ -1822,25 +1697,75 @@ def _newest_key_field(manifests: dict, key_col: str, root: str) -> T.StructField
     raise ValueError(f"column {key_col!r} exists in no version of {root!r}")
 
 
-def _purge_rewrite_and_flip(
-    spark: SparkSession,
-    root: str,
-    manifests: dict,
-    versions: list[int],
-    affected: set[str],
-    drop_victims,
-    purged_entries: set[str],
+def purge_relation(
+    spark: SparkSession, root: str, key_col: str, victims
 ) -> dict:
-    """The history-rewriting core shared by both purge faces: rewrite each
-    affected data file without its victim rows (``drop_victims``: a
-    DataFrame → DataFrame filter, anti-join-shaped on both call sites),
-    then atomically re-point every manifest at the replacements.
-    ``purged_entries`` lands in each touched manifest's audit ledger —
-    the list face records the keys themselves, the relation face a
-    count+checksum fingerprint (the keys never reach the driver)."""
-    replacement: dict[str, str | None] = {}  # old -> new (None: emptied)
-    new_stats: dict[str, dict] = {}
-    removed_per_file: dict[str, int] = {}
+    """Erase the victim keys from EVERY committed snapshot: the
+    right-to-be-forgotten verb, and deliberately the ONE operation that
+    rewrites history (:func:`delete_relation` removes rows from the head
+    while time travel keeps serving them from older snapshots, which is
+    exactly what an erasure request forbids).
+
+    The victims come in the same two forms as :func:`delete_relation`,
+    sharing everything but the hit-file finder (:func:`_victim_hits`): a
+    Python LIST of keys (``purge_keys``; driver-side binary search, zero
+    planning jobs) or a RELATION (a ``DELETE WHERE o_orderkey % 211 = 0``
+    over 100 TB is not a key list; distributed range join, the keys never
+    reach the driver and driver state stays O(files)).  Either way they
+    are normalised once (:func:`_prepare_victims`; NULL/NaN are never
+    targets), and every touched manifest's ``purged`` audit ledger gains
+    one ``relation:<key_col>:n=<count>:ck=<checksum>`` entry: the victim
+    count and an order-insensitive mod-2³² checksum, never the keys
+    themselves (a ledger of erased keys would keep what it erased).
+
+    Mechanics: the union of affected files across every retained manifest
+    is found once (files are immutable and uniquely named, so a file
+    shared by many manifests is planned and rewritten ONCE).  Each is
+    rewritten by one broadcast anti join under a fresh immutable name,
+    then every manifest that referenced it is atomically REPLACED
+    (:func:`manifest_log.replace`) with one referencing the new name;
+    version numbers, ops, the epoch ledger and all other rows are
+    preserved.  Readers see each manifest either before or after its
+    single atomic replace, and both states are complete, valid snapshots
+    (the old data file stays until :func:`vacuum` finds it unreferenced),
+    so a crash mid-purge leaves every version readable and the purge
+    re-runnable.  Manifests whose schema lacks the key column (it was
+    added later) cannot contain victims, and files gone from disk (a
+    vacuum-retained legacy epoch manifest) have no reader to protect.
+
+    Unlike every snapshot verb, purge is NOT safe against concurrent
+    writers: a writer that read its parent manifest before the replace
+    commits a child referencing the un-purged file names, resurrecting
+    the rows.  MULTI-VERSION readers need the same window: a
+    ``changes_between`` call racing the purge can observe one version
+    flipped and the other not and report the victim rows as phantom
+    inserts/deletes (single-version ``read_version`` always sees a
+    complete, valid snapshot).  Run it in a maintenance window (the same
+    exclusive contract every history-rewriting tool carries: git
+    filter-branch, pg VACUUM FULL).
+
+    Returns ``{"files_rewritten", "manifests_updated", "rows_removed"
+    (per version), "victim_keys" (distinct victims)}``."""
+    root = root.rstrip("/")
+    _require_local_path(root, "purge_relation")
+    pin_reader_conf(spark)
+    versions = table_versions(root)
+    empty = {"files_rewritten": 0, "manifests_updated": 0, "rows_removed": {}, "victim_keys": 0}
+    if not versions:
+        return empty
+    manifests = {v: _read_manifest(root, v) for v in versions}
+    key_field = _newest_key_field(manifests, key_col, root)
+    ranges: dict[str, tuple] = {}
+    for m in manifests.values():
+        if key_col in {f["name"] for f in json.loads(m["schema"])["fields"]}:
+            ranges.update((r[0], r) for r in _file_ranges(root, m, key_col))
+    vic, affected, n_vic, ck = _victim_hits(
+        spark, victims, key_col, key_field,
+        [r for n, r in sorted(ranges.items()) if os.path.exists(f"{root}/{_DATA_DIR}/{n}")],
+    )
+    if n_vic == 0:
+        return empty
+    entry = f"relation:{key_col}:n={n_vic}:ck={ck:08x}"
 
     def _rewrite_one(old: str) -> tuple[str, str | None, dict | None, int]:
         # newest manifest referencing the file: the most-evolved schema
@@ -1849,14 +1774,12 @@ def _purge_rewrite_and_flip(
             m for m in reversed(list(manifests.values())) if old in m["files"]
         )
         schema = T.StructType.fromJson(json.loads(schema_owner["schema"]))
-        kept = drop_victims(
-            spark.read.schema(schema).parquet(f"{root}/{_DATA_DIR}/{old}")
-        ).select(*schema.fieldNames())
+        kept = _drop_victims(
+            spark.read.schema(schema).parquet(f"{root}/{_DATA_DIR}/{old}"), vic, key_col
+        )
         names = _stage_files(kept, root, 1)
         stats = _collect_file_stats(root, names)
-        import pyarrow.parquet as pq
-
-        rows_before = pq.read_metadata(f"{root}/{_DATA_DIR}/{old}").num_rows
+        rows_before = ranges[old][3]
         rows_after = stats[names[0]]["rows"]
         if rows_after == 0:
             os.remove(f"{root}/{_DATA_DIR}/{names[0]}")
@@ -1868,9 +1791,12 @@ def _purge_rewrite_and_flip(
     # sequential loop pays per-job latency x files, ~8x slower here
     from concurrent.futures import ThreadPoolExecutor
 
+    replacement: dict[str, str | None] = {}  # old -> new (None: emptied)
+    new_stats: dict[str, dict] = {}
+    removed_per_file: dict[str, int] = {}
     if affected:
         with ThreadPoolExecutor(max_workers=min(8, len(affected))) as pool:
-            for old, new, st, removed in pool.map(_rewrite_one, sorted(affected)):
+            for old, new, st, removed in pool.map(_rewrite_one, affected):
                 replacement[old] = new
                 removed_per_file[old] = removed
                 if new is not None:
@@ -1884,24 +1810,18 @@ def _purge_rewrite_and_flip(
         rows_removed[v] = sum(removed_per_file[n] for n in hit)
         if not hit:
             continue
-        next_files = [
+        next_files = {
             replacement.get(n, n) for n in m["files"]
             if replacement.get(n, n) is not None
-        ]
+        }
         stats = {
             n: s for n, s in _carry_stats(m, m["files"], new_stats).items()
-            if n in set(next_files)
+            if n in next_files
         }
-        next_m = dict(
+        mlog.replace(_log(root), v, dict(
             m, files=sorted(next_files), stats=stats,
-            purged=sorted(set(m.get("purged", [])) | purged_entries),
-        )
-        fd, tmp = tempfile.mkstemp(dir=f"{root}/{_MANIFEST_DIR}", suffix=".tmp")
-        with os.fdopen(fd, "w", encoding="ascii") as fh:
-            json.dump(next_m, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, _manifest_path(root, v))  # atomic swap
+            purged=sorted(set(m.get("purged", [])) | {entry}),
+        ))
         updated += 1
     return {
         # emptied files count as rewritten: their content was re-examined
@@ -1909,106 +1829,12 @@ def _purge_rewrite_and_flip(
         "files_rewritten": len(replacement),
         "manifests_updated": updated,
         "rows_removed": rows_removed,
+        "victim_keys": n_vic,
     }
 
 
-def purge_relation(
-    spark: SparkSession, root: str, key_col: str, victims: DataFrame
-) -> dict:
-    """:func:`purge_keys` with the victim set as a RELATION — the
-    right-to-be-forgotten face for erasure requests that arrive as a
-    predicate or a table (``DELETE WHERE o_orderkey % 211 = 0`` over
-    100 TB is not a key list), mirroring the reference's predicate-shaped
-    delete (``dbs/nikon.py:117-136``) across snapshot history.
-
-    The victim keys NEVER reach the driver: planning rides the same
-    distributed range join as MERGE (:func:`_affected_via_range_join` —
-    manifest file ranges broadcast against the victim relation, only hit
-    file NAMES return), and each affected file's rewrite is a broadcast
-    anti join against the victim relation.  Driver-resident state is
-    O(files), independent of victim count — the scale contract
-    scripts/scale_probe.py pins.
-
-    ``victims`` must carry ``key_col`` (or be a single-column relation);
-    keys are cast to the table's key type, NULLs and NaNs are dropped
-    (NULL/NaN are never purge targets — same safety as the list face).
-    Same exclusive maintenance-window contract as :func:`purge_keys`.
-    Returns the same counters, plus ``victim_keys`` (distinct purge
-    targets).  The manifest audit ledger records a ``relation:`` entry
-    with the victim count + an order-insensitive mod-2³² checksum, not
-    the keys themselves."""
-    root = root.rstrip("/")
-    _require_local_path(root, "purge_relation")
-    pin_reader_conf(spark)
-    versions = table_versions(root)
-    empty = {
-        "files_rewritten": 0, "manifests_updated": 0,
-        "rows_removed": {}, "victim_keys": 0,
-    }
-    if not versions:
-        return empty
-    manifests = {v: _read_manifest(root, v) for v in versions}
-    key_field = _newest_key_field(manifests, key_col, root)
-    vic = _prepare_victims(spark, victims, key_col, key_field)
-
-    # one scalar action covers emptiness, the audit fingerprint, and the
-    # returned victim count (order-insensitive: sum of 32-bit row
-    # signatures in the mod-2^32 ring via overflow-free half sums)
-    sig = F.conv(F.substring(F.md5(F.col(key_col).cast("string")), 1, 8), 16, 10).cast("bigint")
-    n_vic, fp = vic.agg(
-        F.count(F.lit(1)),
-        (
-            (F.sum(sig % F.lit(65536)) + (F.sum(F.floor(sig / F.lit(65536))) % F.lit(65536)) * F.lit(65536))
-            % F.lit(4294967296)
-        ),
-    ).first()
-    if n_vic == 0:
-        return empty
-
-    # union of per-file ranges across every version: files are immutable
-    # and uniquely named, so a file shared by many manifests contributes
-    # ONE range and the planning join runs ONCE, not per version.
-    # Manifests whose schema lacks the key column cannot contain victim
-    # values (their files null-fill it); vanished files (vacuum-retained
-    # legacy epoch manifests) have no reader to protect.
-    ranged: dict[str, tuple] = {}
-    forced: set[str] = set()
-    for m in manifests.values():
-        fields = {f["name"] for f in json.loads(m["schema"])["fields"]}
-        if key_col not in fields:
-            continue
-        ranges = _file_ranges_from_manifest(m, key_col)
-        if ranges is None:  # legacy manifest without embedded stats
-            from python_async_sample_spark.sources.layout import _file_key_ranges
-
-            paths = [
-                p for n in m["files"]
-                if os.path.exists(p := f"{root}/{_DATA_DIR}/{n}")
-            ]
-            ranges = [
-                (os.path.basename(p), lo, hi, rows)
-                for p, lo, hi, rows in _file_key_ranges(paths, key_col)
-            ]
-        for n, lo, hi, rows in ranges:
-            if not os.path.exists(f"{root}/{_DATA_DIR}/{n}"):
-                continue
-            if lo is None:  # stats-less: conservatively affected
-                forced.add(n)
-            else:
-                ranged[n] = (n, lo, hi, rows)
-    names_hit, _ = _affected_via_range_join(
-        spark, vic, key_col, [r for n, r in sorted(ranged.items())]
-    )
-    affected = set(names_hit) | forced
-
-    def drop_victims(df: DataFrame) -> DataFrame:
-        return df.join(F.broadcast(vic), key_col, "left_anti")
-
-    out = _purge_rewrite_and_flip(
-        spark, root, manifests, versions, affected, drop_victims,
-        purged_entries={f"relation:{key_col}:n={n_vic}:ck={int(fp):08x}"},
-    )
-    return {**out, "victim_keys": int(n_vic)}
+# the list form of the same verb (keys as a Python list)
+purge_keys = purge_relation
 
 
 def vacuum(

@@ -7,12 +7,7 @@ sf0.1), so regressions are judged PER QUERY against the committed
 filters sub-second jitter and first-call codegen).
 
 Usage:
-    python bench.py && cp BENCH_SELF.run.json /tmp/bench.json
-    # (bench.py prints the full per-query line FIRST and a compact
-    #  totals-only summary line LAST — round 8, so the driver's bounded
-    #  tail capture always retains something parseable; the file-mode
-    #  input here must be the full line, i.e. BENCH_SELF(.run).json —
-    #  feeding the summary line is rejected with a pointed error)
+    python bench.py > /tmp/bench.json   # one stdout line: the full record
     python scripts/bench_compare.py /tmp/bench.json
     python scripts/bench_compare.py --run        # runs bench.py itself
     python scripts/bench_compare.py /tmp/bench.json --refresh \
@@ -79,15 +74,7 @@ def load_current(args) -> dict:
             "record; inspect bench.py's output directly"
         )
     with open(args.bench_json) as f:
-        doc = json.load(f)
-    if "queries" not in doc and "queries_file" in doc:
-        sys.exit(
-            "input is bench.py's totals-only SUMMARY line (no 'queries' map) — "
-            "bench.py prints the full per-query line FIRST and the summary "
-            "LAST; feed the first stdout line or BENCH_SELF(.run).json, "
-            "never `bench.py | tail -1`"
-        )
-    return doc
+        return json.load(f)
 
 
 def refresh_baseline(

@@ -58,15 +58,12 @@ fi
 
 if [ "$SKIP_BENCH" = 0 ]; then
   step "bench @ sf0.1 + per-query regression gate"
-  # bench.py prints the full per-query line FIRST and a totals-last
-  # summary line LAST (round 8); gate on THIS run's stdout, never the
-  # committed BENCH_SELF.json (bench.py tolerates a failed self-write on
-  # read-only checkouts, so the repo file can be stale). Capture to a file
-  # FIRST so bench.py's own exit code is observed and `head` can never
-  # SIGPIPE it mid-run (round-9 ADVICE: `bench.py | head -1` reported
-  # head's status and could kill bench before its self-write finished).
-  python bench.py >/tmp/round_check_bench_full.out 2>/dev/null || fail=1
-  head -1 /tmp/round_check_bench_full.out > /tmp/round_check_bench.json
+  # bench.py prints exactly one stdout line: the full per-query record.
+  # Gate on THIS run's stdout, never the committed BENCH_SELF.json
+  # (bench.py tolerates a failed self-write on read-only checkouts, so
+  # the repo file can be stale). Redirect to a file rather than a pipe
+  # so bench.py's own exit code is observed.
+  python bench.py >/tmp/round_check_bench.json 2>/dev/null || fail=1
   python scripts/bench_compare.py /tmp/round_check_bench.json | tail -4 || fail=1
 fi
 

@@ -476,6 +476,7 @@ def test_relation_verb_anti_join_broadcasts_victims(spark, sf_dir):
     file) and never a nested loop."""
     from pyspark.sql import functions as F
 
+    from python_async_sample_spark.sources.layout import _drop_victims
     from python_async_sample_spark.sources.readers import load_table
     from python_async_sample_spark.sources.versioned import _prepare_victims
 
@@ -486,7 +487,7 @@ def test_relation_verb_anti_join_broadcasts_victims(spark, sf_dir):
         "o_orderkey",
         orders.schema["o_orderkey"],
     )
-    kept = orders.join(F.broadcast(vic), "o_orderkey", "left_anti")
+    kept = _drop_victims(orders, vic, "o_orderkey")
     plan = plan_str(kept)
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
     assert "SortMergeJoin" not in plan, plan

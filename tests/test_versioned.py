@@ -356,8 +356,9 @@ def test_manifest_stats_prune_without_footer_reads(spark, sf_dir, root):
     and a targeted merge must rewrite only the files whose range covers
     the keys."""
     from python_async_sample_spark.sources.versioned import (
-        _affected_from_manifest,
+        _file_ranges,
         _read_manifest,
+        _victim_hits,
     )
 
     orders = _orders(spark, sf_dir)
@@ -365,11 +366,13 @@ def test_manifest_stats_prune_without_footer_reads(spark, sf_dir, root):
     m = _read_manifest(root, 0)
     assert set(m["stats"]) == set(m["files"])
     lo_key = orders.agg(F.min("o_orderkey")).first()[0]
-    got = _affected_from_manifest(m, "o_orderkey", [int(lo_key)])
-    assert got is not None
-    names_hit, rows = got
+    ranges = _file_ranges(root, m, "o_orderkey")
+    assert len(ranges) == 8 and all(r[1] is not None and r[3] > 0 for r in ranges)
+    _, names_hit, _, _ = _victim_hits(
+        spark, [int(lo_key)], "o_orderkey", orders.schema["o_orderkey"], ranges
+    )
     # range-ordered 8-file layout: the smallest key lives in exactly 1 file
-    assert len(names_hit) == 1 and rows > 0
+    assert len(names_hit) == 1
     res = merge_into_versioned(
         spark, root,
         orders.where(F.col("o_orderkey") == lo_key).withColumn(
@@ -383,7 +386,7 @@ def test_manifest_stats_prune_without_footer_reads(spark, sf_dir, root):
     assert set(m1["stats"]) == set(m1["files"])
     # legacy manifest (stats stripped) falls back to footers, same answer
     m_stripped = dict(m, stats={})
-    assert _affected_from_manifest(m_stripped, "o_orderkey", [int(lo_key)]) is None
+    assert sorted(_file_ranges(root, m_stripped, "o_orderkey")) == sorted(ranges)
 
 
 def test_append_compact_preserves_content_and_packs_files(spark, root):
@@ -589,7 +592,11 @@ def test_purge_keys_erases_from_every_snapshot(spark, sf_dir, root):
     assert table_versions(root) == [0, 1, 2]
     m2 = _read_manifest(root, 2)
     assert m2["op"].startswith("merge:") and m2["epochs"] == {"0": "fp-e0"}
-    assert set(m2["purged"]) == {str(k) for k in victims}
+    # audit ledger: one count + checksum entry, never the erased keys
+    (entry,) = m2["purged"]
+    assert entry.startswith("relation:o_orderkey:n=4:ck=")
+    for v in table_versions(root):
+        assert _read_manifest(root, v).get("purged", []) in ([], [entry]), v
     # replay of the pre-purge epoch is still recognized
     assert commit_stream_epoch(spark, root, orders.limit(5), 0, "fp-e0") is None
 
@@ -653,6 +660,10 @@ def test_purge_keys_on_evolved_column_and_after_vacuum(spark, root):
 
     res = purge_keys(spark, root, "email", ["x@y.z"])
     assert res["manifests_updated"] >= 1
+    # the erased value is stored nowhere in the manifest log
+    for p in glob.glob(f"{root}/_manifests/*.json"):
+        with open(p, encoding="ascii") as fh:
+            assert "x@y.z" not in fh.read(), p
     head = read_version(spark, root)
     assert head.where(F.col("email") == "x@y.z").count() == 0
     assert head.where(F.col("email") == "p@q.r").count() == 1
@@ -676,6 +687,21 @@ def test_anti_join_filters_coerce_types_and_ignore_nan(spark, root):
     assert res["deleted_rows"] == 1
     left = {r["v"] for r in read_version(spark, root).collect()}
     assert left == {"b", "nan-row", "null-row"}
+
+    # a fractional victim must not truncate onto an integer key (isin([1.5])
+    # matches nothing), in either input form; a NaN victim against an
+    # integer key is dropped, never a CAST_OVERFLOW abort
+    from python_async_sample_spark.sources.versioned import delete_relation
+
+    int_root = root + "_bigint"
+    create_table(
+        spark, int_root,
+        spark.createDataFrame([(1, "a"), (2, "b")], "k bigint, v string"), n_files=1,
+    )
+    assert delete_keys_versioned(spark, int_root, "k", [1.5])["deleted_rows"] == 0
+    frac = spark.createDataFrame([(1.5,), (float("nan"),)], "k double")
+    assert delete_relation(spark, int_root, "k", frac)["deleted_rows"] == 0
+    assert read_version(spark, int_root).count() == 2
 
 
 def test_decimal_columns_commit_without_stats(spark, root):
@@ -1246,7 +1272,7 @@ def test_delete_relation_head_only(spark, sf_dir, root):
     # history intact — v0 still serves the victims (delete ≠ purge)
     assert read_version(spark, root, 0).count() == n_all
     m1 = _read_manifest(root, 1)
-    assert m1["op"] == "delete-rel:o_orderkey" and m1["parent"] == 0
+    assert m1["op"] == "delete:o_orderkey" and m1["parent"] == 0
 
     # empty and NULL-only victim relations are no-ops, not errors
     res2 = delete_relation(
@@ -1292,6 +1318,7 @@ def test_relation_and_list_purge_faces_agree(spark, sf_dir, root):
     state purge_keys(victims_list) does for the same victim set — the
     relation face is an execution strategy, never a semantics change."""
     from python_async_sample_spark.sources.versioned import (
+        _read_manifest,
         purge_keys,
         purge_relation,
     )
@@ -1302,13 +1329,15 @@ def test_relation_and_list_purge_faces_agree(spark, sf_dir, root):
 
     res_l = purge_keys(spark, roots["list"], "o_orderkey", victims_list)
     res_r = purge_relation(spark, roots["rel"], "o_orderkey", victims_df)
-    assert res_r["rows_removed"] == res_l["rows_removed"]
-    assert res_r["victim_keys"] == len(victims_list)
+    assert res_r == res_l and res_r["victim_keys"] == len(victims_list)
     assert table_versions(roots["list"]) == table_versions(roots["rel"])
     for v in table_versions(roots["list"]):
         a = read_version(spark, roots["list"], v)
         b = read_version(spark, roots["rel"], v)
         assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0, v
+        # one audit ledger: both forms record the same count + checksum
+        purged = _read_manifest(roots["list"], v).get("purged")
+        assert purged and purged == _read_manifest(roots["rel"], v).get("purged"), v
 
 
 def test_relation_and_list_delete_faces_agree(spark, sf_dir, root):
@@ -1571,10 +1600,9 @@ def test_as_of_timestamp_travel_and_fsck(spark, sf_dir, root):
 
 
 def test_prepare_victims_coercion_nan_and_shape(spark):
-    """_prepare_victims (the relation verbs' shared normalization): victim
-    keys cast to the table's key type (int victims vs double column — the
-    isin-compatible coercion build_victims_df applies on the list face),
-    NULLs and NaNs dropped (NaN = NaN is TRUE under join equality; a NaN
+    """_prepare_victims (the DELETE/PURGE verbs' one victim normaliser):
+    victim keys cast to the table's key type (int victims vs double column,
+    the isin-compatible coercion), NULLs and NaNs dropped (NaN = NaN is TRUE under join equality; a NaN
     victim would erase NaN-key rows nobody targeted), duplicates
     deduped, and a multi-column relation without the key column refuses."""
     from pyspark.sql import types as T
@@ -1596,6 +1624,21 @@ def test_prepare_victims_coercion_nan_and_shape(spark):
         "k", field,
     )
     assert [r[0] for r in vic2.collect()] == [3.0]
+
+    # a victim is kept only if its cast value still equals the original:
+    # 1.5 must not truncate onto the integer key 1, and a NaN against an
+    # integer key drops (a bare cast aborts with CAST_OVERFLOW under ANSI)
+    int_field = T.StructField("k", T.LongType())
+    vic_int = _prepare_victims(
+        spark,
+        spark.createDataFrame([(1.5,), (float("nan"),), (2.0,)], "k double"),
+        "k", int_field,
+    )
+    assert vic_int.schema["k"].dataType == T.LongType()
+    assert [r[0] for r in vic_int.collect()] == [2]
+    # the list form goes through the same normaliser
+    vic_list = _prepare_victims(spark, [1.5, float("nan"), None, 3], "k", int_field)
+    assert [r[0] for r in vic_list.collect()] == [3]
 
     # single-column relations adopt the key name; multi-column must carry it
     vic3 = _prepare_victims(
