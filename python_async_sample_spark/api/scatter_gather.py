@@ -10,8 +10,10 @@ dict results client-side (``_bind_parm``, :200-214).
 
 Spark collapses the whole machinery into declarative joins:
 
-* stage-1 fan-out        → one ``left_semi`` join of the fact against the keys;
-* flatten + stage-2      → the join's output *is* the flattened key set;
+* stage-1 fan-out        → one ``left_semi`` join of the history against the
+  broadcast keys;
+* flatten + stage-2      → the join's output *is* the flattened link set,
+  broadcast into a second ``left_semi`` join against the result fact;
 * ``_bind_parm``'s dict-join + non-empty filter → ``left_semi`` against the
   params-present summary (J7);
 * ``subquery=True`` vs per-key point queries (the repo's namesake
@@ -19,6 +21,14 @@ Spark collapses the whole machinery into declarative joins:
   to a left-semi join (``RewritePredicateSubquery``) and picks broadcast vs
   shuffle from stats, so both reference modes compile to one physical
   strategy chosen by the optimizer, not by the caller.
+
+Neither build side is deduplicated. A left-semi join emits each probe row
+at most once whatever duplicates its build side holds, so a ``distinct()``
+there changes no result and costs a hash shuffle and one more job per
+request. Both build sides are broadcast explicitly: the keys are the
+caller's list and the links are the history rows of those keys, so both are
+bounded by the request, and without a shuffle in front of them AQE has no
+runtime size to pick a broadcast from.
 
 Parallelism is partition-level and automatic; per-task failure isolation
 replaces the reference's per-future exception swallowing (:66-68).
@@ -52,12 +62,12 @@ class KeyedQuery:
     @checked
     def glass_history(self, keys: DataFrame) -> DataFrame:
         """Stage-1 fan-out: all history rows for the key list — one semi-join
-        instead of len(keys) point queries on a thread pool. Arguments are
+        against the broadcast keys instead of len(keys) point queries on a
+        thread pool. A key listed twice still yields each history row once
+        (semi-join), so the keys are not deduplicated. Arguments are
         runtime-validated like the reference's ``@checktypes`` entry points
         (``eda_query.py:163-165``)."""
-        return self.history.join(
-            F.broadcast(keys.select(self.key_col).distinct()), self.key_col, "left_semi"
-        )
+        return self.history.join(F.broadcast(keys.select(self.key_col)), self.key_col, "left_semi")
 
     @checked
     def glass_raw_data(
@@ -70,8 +80,10 @@ class KeyedQuery:
         existence-filtered by ``summary`` (J5/J7). ``subquery`` is accepted
         for signature parity with the reference — both modes were different
         physical strategies for the same semantics, a choice Catalyst now
-        makes; the returned plan is identical."""
-        links = self.glass_history(keys).select(*self.link_cols).distinct()
+        makes; the returned plan is identical. The link set is broadcast
+        as is: it is bounded by the keys' history rows, and a link the
+        history repeats still returns each result row once (semi-join)."""
+        links = F.broadcast(self.glass_history(keys).select(*self.link_cols))
         out = self.result.join(links, self.link_cols, "left_semi")
         if summary is not None:
             out = out.join(summary, self.link_cols, "left_semi")

@@ -57,8 +57,10 @@ def run_rot(
     default because the grid invariant is a property of real metrology layouts,
     not of arbitrary inputs.
     """
-    # 1. design-value gate: semi-join keepers, anti-join rejects (J9).
-    dv = F.broadcast(design_glasses.select(glass_col).distinct())
+    # 1. design-value gate: semi-join keepers, anti-join rejects (J9). Both
+    # joins ignore duplicates on their build side, so `dv` is broadcast
+    # without a dedup (that would be a shuffle and a job per consumer).
+    dv = F.broadcast(design_glasses.select(glass_col))
     with_dv = rawdata.join(dv, glass_col, "left_semi")
     no_dv = (
         rawdata.join(dv, glass_col, "left_anti")

@@ -6,8 +6,11 @@ session), runs entry() + every queries() entry at the given sf_dir, and
 compares each against oracle_sql() via DuckDB with order-insensitive,
 name-sorted-column value comparison.
 
-Usage: python scripts/driver_sim.py [sf_dir] [--only name1,name2,...]
-       (--only: substring-or-exact match filter for targeted re-probes)
+Usage: python scripts/driver_sim.py [sf_dir] [--only name1,name2,...] [--master URL]
+       (--only: substring-or-exact match filter for targeted re-probes;
+        --master: the session's master, default local[8]; a caller of
+        entry() builds its own session with any core count, so results
+        must not depend on it)
 """
 
 from __future__ import annotations
@@ -23,15 +26,21 @@ from pyspark.sql import SparkSession
 
 def main() -> int:
     args = list(sys.argv[1:])
-    only: list[str] = []
-    if "--only" in args:
-        i = args.index("--only")
-        only = args[i + 1].split(",")
+
+    def option(flag: str, default: str) -> str:
+        if flag not in args:
+            return default
+        i = args.index(flag)
+        value = args[i + 1]
         del args[i:i + 2]
+        return value
+
+    only = [n for n in option("--only", "").split(",") if n]
+    master = option("--master", "local[8]")
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     import __spark_entry__ as e
 
-    spark = SparkSession.builder.master("local[8]").appName("driver-sim").getOrCreate()
+    spark = SparkSession.builder.master(master).appName("driver-sim").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     if not only:

@@ -98,23 +98,31 @@ def test_mea_mismatched_grid_rejects(spark):
 
 
 def test_scatter_gather_modes_identical(spark):
+    # duplicates on every build side: history row (2, 12) repeated (link 12
+    # twice), summary link 12 twice, key 2 listed twice; key 4 has no history
     history = spark.createDataFrame(
-        [(1, 10), (1, 11), (2, 12), (3, 13)], "k int, link int"
+        [(1, 10), (1, 11), (2, 12), (2, 12), (3, 13)], "k int, link int"
     )
     result = spark.createDataFrame(
         [(10, "a"), (11, "b"), (12, "c"), (13, "d"), (14, "e")], "link int, v string"
     )
-    keys = spark.createDataFrame([(1,), (2,)], "k int")
-    summary = spark.createDataFrame([(10,), (12,), (13,)], "link int")
+    keys = spark.createDataFrame([(1,), (2,), (2,), (4,)], "k int")
+    summary = spark.createDataFrame([(10,), (12,), (12,), (13,)], "link int")
     api = KeyedQuery(history=history, result=result, key_col="k", link_cols=["link"])
 
     sub = api.glass_raw_data(keys, summary=summary, subquery=True)
     fan = api.glass_raw_data(keys, summary=summary, subquery=False)
-    got = {(r.link, r.v) for r in sub.collect()}
-    # keys {1,2} → links {10,11,12}; summary keeps {10,12}
-    assert got == {(10, "a"), (12, "c")}
+    # a list, not a set: a result row duplicated by a build side fails here
+    got = sorted((r.link, r.v) for r in sub.collect())
+    # keys {1,2,4} → links {10,11,12}; summary keeps {10,12}
+    assert got == [(10, "a"), (12, "c")]
     # the reference's two physical modes are one logical plan here
     assert sub.sameSemantics(fan)
+
+    # key 2 is given twice, yet each history row comes back once: (2, 12)
+    # twice because the history holds it twice, not four times
+    hist = sorted(tuple(r) for r in api.glass_history(keys).collect())
+    assert hist == [(1, 10), (1, 11), (2, 12), (2, 12)]
 
 
 def test_write_audit_publish_gate_blocks_bad_snapshot(spark, tmp_path, sf_dir):

@@ -198,6 +198,49 @@ def test_aqe_splits_planted_skewed_join(spark):
             spark.conf.set(k, v)
 
 
+def _final_adaptive_plan(df) -> str:
+    """Collect ``df`` and return the Final Plan section of its adaptive
+    plan (the executed tree, without the Initial Plan it was re-planned
+    from)."""
+    df.collect()
+    text = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in text, text
+    return text.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+
+
+def test_keyed_lookup_has_no_shuffle(spark):
+    """KeyedQuery.glass_raw_data is the per-request lookup path: keys and
+    links reach their left-semi joins as broadcasts, never through a
+    dedup shuffle (semi-join output does not depend on build-side
+    duplicates, so a shuffle there is one more job per request). Without
+    a shuffle AQE has no runtime size to broadcast from, so the two build
+    sides must broadcast by hint, even with auto-broadcast off."""
+    from pyspark.sql import functions as F
+
+    from python_async_sample_spark.api.scatter_gather import KeyedQuery
+
+    history = spark.range(0, 400).select(
+        (F.col("id") % 100).alias("k"), F.col("id").alias("link")
+    )
+    result = spark.range(0, 2000).select(
+        (F.col("id") % 400).alias("link"), F.col("id").alias("v")
+    )
+    summary = spark.range(0, 400, 2).select(F.col("id").alias("link"))
+    keys = spark.createDataFrame([(1,), (2,), (2,), (7,)], "k bigint")
+    api = KeyedQuery(history=history, result=result, key_col="k", link_cols=["link"])
+
+    final = _final_adaptive_plan(api.glass_raw_data(keys, summary=summary))
+    assert "ShuffleExchange" not in final, final
+    assert "Exchange hashpartitioning" not in final, final
+
+    with Q89_NO_AUTO_BROADCAST(spark):
+        final = _final_adaptive_plan(api.glass_raw_data(keys))
+    # the key join (inside the link broadcast) and the link join
+    assert final.count("BroadcastHashJoin") == 2, final
+    assert final.count("LeftSemi, BuildRight") == 2, final
+    assert "SortMergeJoin" not in final, final
+
+
 def test_fuzzy_join_never_cartesian(spark, sf_dir):
     """q106's candidate generation must be a key equi-join over blocking
     segments — an all-pairs/cartesian plan is the exact thing the blocking

@@ -109,6 +109,30 @@ def test_delete_keys_versioned_null_safe(spark, root):
     assert read_version(spark, root, 0).count() == 4
 
 
+def test_delete_keys_versioned_reserved_word_key_under_ansi(spark, root):
+    """A key column named after a reserved word deletes under ANSI mode
+    with reserved keywords enforced: the list form's VALUES relation uses
+    the fixed alias ``__vic(__v)`` and never puts the key column's name
+    into SQL text."""
+    confs = {"spark.sql.ansi.enabled": "true",
+             "spark.sql.ansi.enforceReservedKeywords": "true"}
+    saved = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        df = spark.createDataFrame(
+            [(1, "a"), (2, "b"), (3, "c"), (4, "d")], "`select` bigint, v string"
+        )
+        create_table(spark, root, df, n_files=2)
+        res = delete_keys_versioned(spark, root, "select", [2, 4, 9])
+        assert res["deleted_rows"] == 2 and res["version"] == 1
+        left = sorted((r["select"], r["v"]) for r in read_version(spark, root).collect())
+        assert left == [(1, "a"), (3, "c")]
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
 def test_crash_before_commit_is_invisible_and_rerunnable(spark, sf_dir, root):
     """Orphaned data files (crash after staging, before the manifest link)
     must not change any reader's view; re-running the verb then succeeds
