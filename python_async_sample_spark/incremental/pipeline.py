@@ -14,12 +14,18 @@ Reference lifecycle (``nikon_ETL.py:293-336``, traced in SURVEY §3.1):
 Every step is a DataFrame operation; the loop itself is driver logic, exactly
 as in the reference — but each chunk is a distributed job instead of a
 row-at-a-time coroutine insert.
+
+A run reads its source once: the probe (2) and every window (5) see one
+snapshot of the source's file listing. The probe is a one-job top-1 scan
+(no shuffle), and a source that is an upstream target (``read_target``)
+takes its schema from a parquet footer, so a run of N windows over it costs
+N + 1 Spark jobs.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from datetime import datetime, timedelta
 
 from pyspark.sql import DataFrame, SparkSession
@@ -68,15 +74,24 @@ class IncrementalRunner:
         two disagree by the UTC offset and the catch-up silently drops the
         tail of the window. Integer micros → naive-UTC datetime is
         timezone-independent end to end.
-        """
-        row = stage.source(self.spark).agg(
-            F.unix_micros(F.max(stage.ts_col)).alias("us")
-        ).first()
-        if not row or row["us"] is None:
-            return None
-        from datetime import timezone as _tz
 
-        return datetime.fromtimestamp(row["us"] / 1e6, tz=_tz.utc).replace(tzinfo=None)
+        A top-1 scan (non-null ts, descending, limit 1) rather than a global
+        ``max``: it runs as one job with no exchange, where the aggregate
+        under AQE is a shuffle job plus a final job. The microseconds are
+        converted with integer ``timedelta`` arithmetic, exactly.
+        """
+        ts = F.col(stage.ts_col)
+        rows = (
+            stage.source(self.spark)
+            .where(ts.isNotNull())
+            .orderBy(ts.desc())
+            .limit(1)
+            .select(F.unix_micros(ts).alias("us"))
+            .collect()
+        )
+        if not rows:
+            return None
+        return datetime(1970, 1, 1) + timedelta(microseconds=rows[0]["us"])
 
     def run(self, stage: IncrementalStage) -> int:
         """Catch the stage up in bounded chunks. Returns chunk count."""
@@ -84,6 +99,11 @@ class IncrementalRunner:
         if own is None:
             raise ValueError(f"no enabled watermark row for ({self.toolid}, {stage.name})")
 
+        # One source read per run: the probe and every window share this
+        # DataFrame, so they see one snapshot of the source listing and the
+        # reader (and any schema inference it does) runs once.
+        src = stage.source(self.spark)
+        stage = replace(stage, source=lambda _s: src)
         hi_bound = self.source_high_water(stage)
         if hi_bound is None:
             return 0
@@ -97,7 +117,7 @@ class IncrementalRunner:
 
         # Build the source plan once per catch-up run; each window re-filters
         # the same DataFrame (lazy — no data is held), instead of rebuilding
-        # the reader/transform/reconcile chain per chunk.
+        # the transform/reconcile chain per chunk.
         prepared = self._prepared_source(stage)
         iters = 0
         while own < hi_bound and iters < stage.max_iter:

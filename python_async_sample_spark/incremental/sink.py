@@ -11,10 +11,15 @@ writes boundary ∪ new — a literal delete-then-insert, so a re-delivered
 window that *retracts* rows (even a whole day) converges too; dynamic
 partition overwrite alone cannot delete a partition that ends up empty. At
 100 TB the windows are day-aligned (the reference's catch-up chunk is exactly
-86 400 s) so the read-back side is empty and each iteration rewrites whole
-partitions — no table-wide shuffle, no delete scan. All partition metadata
-ops go through the Hadoop FileSystem API (``sources/hadoop_fs``), so the sink
-is scheme-agnostic (file/hdfs/s3a). Crash-consistency is strictly better
+86 400 s), so each iteration rewrites whole partitions — no table-wide
+shuffle, no delete scan. The read-back is small but not always empty: a row
+stamped exactly at midnight belongs to the window that ends at that midnight
+yet lands in partition ``hi.date()``, and the next window reads that
+partition back. The read-back and ``read_target`` take their schema from one
+parquet footer (``hadoop_fs.parquet_schema``), so neither launches a
+schema-inference job. All partition metadata ops go through the Hadoop
+FileSystem API (``sources/hadoop_fs``), so the sink is scheme-agnostic
+(file/hdfs/s3a). Crash-consistency is strictly better
 than the reference's delete-then-insert: the full replacement content
 (boundary ∪ new) is written to a hidden staging directory FIRST, then swapped
 in per-partition via rename, so a crash anywhere during the (long) Spark
@@ -67,7 +72,8 @@ def overwrite_window(
        under the target (readers ignore dot-dirs) — the ONLY data-sized
        step, and the old window stays fully readable throughout;
     3. swap each staged partition into place: delete the old partition dir,
-       rename the staged one in (one metadata RPC each);
+       rename the staged one in (one metadata RPC each); a refused delete
+       stops the swap before its rename;
     4. delete touched partitions that produced no staged output (a window
        whose every row was retracted upstream must vanish).
 
@@ -117,8 +123,9 @@ def overwrite_window(
             hadoop_fs.delete(spark, stale)
 
     # Existing partitions the window touches. Only those need the boundary
-    # read-back — during forward catch-up none exist, so each chunk is a pure
-    # write. Day-aligned windows keep this set empty at any scale.
+    # read-back. In a day-aligned forward catch-up the only one is
+    # ``lo.date()``'s partition, and only when the previous window left a
+    # row stamped exactly at midnight there.
     touched = []
     d = lo.date()
     while d <= hi.date():
@@ -128,8 +135,10 @@ def overwrite_window(
         d += timedelta(days=1)
 
     if touched:
-        existing = spark.read.option("basePath", target_path).parquet(
-            *(f"{target_path}/{p}" for p in touched)
+        existing = (
+            _reader(spark, f"{target_path}/{touched[0]}")
+            .option("basePath", target_path)
+            .parquet(*(f"{target_path}/{p}" for p in touched))
         )
         keep = existing.where(
             ~((F.col(ts_col) > _utc_lit(lo)) & (F.col(ts_col) <= _utc_lit(hi)))
@@ -147,9 +156,17 @@ def overwrite_window(
     # failure the staged copy (the only copy of an already-deleted
     # partition's boundary rows) stays on disk for the next run's GC sweep
     # / manual recovery rather than being destroyed in a finally block.
+    # A refused delete must stop the swap too: renaming onto a partition
+    # that is still there nests the staged one inside it.
     staged = [p for p in hadoop_fs.listdir(spark, stage) if p.startswith(f"{DT_COL}=")]
     for part in staged:
-        hadoop_fs.delete(spark, f"{target_path}/{part}")
+        try:
+            hadoop_fs.delete(spark, f"{target_path}/{part}")
+        except OSError as e:
+            raise RuntimeError(
+                f"overwrite_window: could not delete partition {part!r} of "
+                f"{target_path!r}; staged data preserved at {stage!r}"
+            ) from e
         if not hadoop_fs.rename(spark, f"{stage}/{part}", f"{target_path}/{part}"):
             raise RuntimeError(
                 f"overwrite_window: rename of staged partition {part!r} into "
@@ -161,6 +178,14 @@ def overwrite_window(
     hadoop_fs.delete(spark, stage)
 
 
+def _reader(spark: SparkSession, path: str):
+    """A reader pinned to the footer schema of the parquet data at ``path``
+    (no inference job); plain ``spark.read`` — inference and its errors —
+    when there is no data file there."""
+    schema = hadoop_fs.parquet_schema(spark, path)
+    return spark.read if schema is None else spark.read.schema(schema)
+
+
 def read_target(spark: SparkSession, target_path: str) -> DataFrame:
     """Read the sink back, dropping the physical partition column."""
-    return spark.read.parquet(target_path).drop(DT_COL)
+    return _reader(spark, target_path).parquet(target_path).drop(DT_COL)

@@ -10,7 +10,7 @@ being a no-op) is exactly the reference's exactly-once-per-window contract.
 from __future__ import annotations
 
 import tempfile
-from datetime import datetime
+from datetime import datetime, timedelta
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -1936,14 +1936,12 @@ def q211_watermark_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (which converts through the driver's OS timezone and would make this
     # assert fail on a non-UTC driver despite a correct cascade) — the same
     # discipline as IncrementalRunner.source_high_water
-    from datetime import datetime as _dt, timezone as _tz
-
     src_us = (
         load_table(spark, sf_dir, "events")
         .agg(F.unix_micros(F.max("ts")).alias("us"))
         .first()["us"]
     )
-    src_max = _dt.fromtimestamp(src_us / 1e6, tz=_tz.utc).replace(tzinfo=None)
+    src_max = datetime(1970, 1, 1) + timedelta(microseconds=src_us)
     for name in ("EDC_Import", "ROT_Transform", "AVM_Process"):
         assert store.get("NIKON", name) == src_max, f"{name} watermark lag"
 

@@ -6,11 +6,16 @@ Partition probes and deletes on the data path must go through Hadoop's
 any non-local URI, which would make an overwrite drop the boundary rows of a
 partial-day window on a cluster. These are driver-side metadata calls (one
 RPC per touched partition), never a data scan.
+
+``parquet_schema`` is the same kind of call for a schema: it reads one
+parquet footer on the driver, where ``spark.read.parquet(path).schema``
+would launch a one-task Spark job to infer it.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
+from pyspark.sql.types import StructType, _parse_datatype_json_string
 
 
 def _fs(spark: SparkSession, path: str):
@@ -26,12 +31,19 @@ def exists(spark: SparkSession, path: str) -> bool:
 
 
 def delete(spark: SparkSession, path: str, recursive: bool = True) -> bool:
-    """Delete ``path`` (no-op if absent). Returns True if something was
-    removed."""
+    """Delete ``path``. Returns False only if it was already absent.
+
+    Hadoop reports a refused delete by returning False, not by raising; a
+    caller that goes on as if the path were gone (e.g. renames a
+    replacement onto it, which nests the replacement INSIDE the old
+    directory) corrupts the table. So a path still present after the
+    delete raises ``OSError``."""
     fs, jpath = _fs(spark, path)
     if not fs.exists(jpath):
         return False
-    return bool(fs.delete(jpath, recursive))
+    if not fs.delete(jpath, recursive) and fs.exists(jpath):
+        raise OSError(f"Hadoop FileSystem refused to delete {path!r}")
+    return True
 
 
 def listdir(spark: SparkSession, path: str) -> list[str]:
@@ -50,3 +62,58 @@ def rename(spark: SparkSession, src: str, dst: str) -> bool:
     fs, jsrc = _fs(spark, src)
     jdst = spark._jvm.org.apache.hadoop.fs.Path(dst)
     return bool(fs.rename(jsrc, jdst))
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The data columns ``spark.read.parquet(path)`` would infer, read from
+    one footer on the driver; None if ``path`` is absent or holds no data
+    file.
+
+    Schema inference without ``mergeSchema`` reads the footer of the first
+    data file in full-path order; this reads the same footer with Spark's
+    own conversion (``ParquetFileFormat.readSchemaFromFooter``, its
+    converter built from the session's SQL conf, so ``inferTimestampNTZ``
+    and ``nanosAsLong`` apply), without the Spark job inference launches.
+    Partition columns are not included: pass the result to
+    ``spark.read.schema(...)`` and the reader still discovers them from the
+    directory names. Summary files (``_metadata``, ``_common_metadata``),
+    which Spark no longer writes, are skipped rather than preferred."""
+    fs, jpath = _fs(spark, path)
+    if not fs.exists(jpath):
+        return None
+    status = _first_data_file(fs, fs.getFileStatus(jpath))
+    if status is None:
+        return None
+    jvm = spark._jvm
+    pq = jvm.org.apache.spark.sql.execution.datasources.parquet
+    conf = spark._jsc.hadoopConfiguration()
+    meta = pq.ParquetFooterReader.readFooter(
+        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(status, conf),
+        jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+    )
+    footer = jvm.org.apache.parquet.hadoop.Footer(status.getPath(), meta)
+    converter = pq.ParquetToSparkSchemaConverter(spark._jsparkSession.sessionState().conf())
+    schema = pq.ParquetFileFormat.readSchemaFromFooter(footer, converter).asNullable()
+    return _parse_datatype_json_string(schema.json())
+
+
+def _first_data_file(fs, status):
+    """``status`` if it is a file, else the first data file under it in
+    full-path order (``name/`` sorts a directory as its paths do), skipping
+    the names Spark's file index hides: ``_SUCCESS``-style files, dot-dirs
+    such as the sink's ``.stage-*``, in-flight ``._COPYING_`` files. A
+    ``__dt=`` partition directory is kept."""
+    if not status.isDirectory():
+        return status
+    children = {}
+    for child in fs.listStatus(status.getPath()):
+        name = child.getPath().getName()
+        hidden = name.startswith(".") or (name.startswith("_") and "=" not in name)
+        if hidden or name.endswith("._COPYING_"):
+            continue
+        children[name + "/" if child.isDirectory() else name] = child
+    for key in sorted(children):
+        found = _first_data_file(fs, children[key])
+        if found is not None:
+            return found
+    return None

@@ -29,6 +29,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from python_async_sample_spark.sources import hadoop_fs
 from python_async_sample_spark.sources.readers import pin_reader_conf
 
 
@@ -312,7 +313,7 @@ def delete_keys(
     files = sorted(_glob.glob(f"{root}/*.parquet"))
     if not files:
         return {"rewritten": 0, "untouched": 0, "deleted_rows": 0}
-    schema = spark.read.parquet(*files).schema
+    schema = hadoop_fs.parquet_schema(spark, files[0])
     ranges = _file_key_ranges(files, key_col)
     vic, affected, _, _ = _victim_hits(spark, keys, key_col, schema[key_col], ranges)
 
@@ -418,7 +419,7 @@ def merge_into(
     files = sorted(_glob.glob(f"{root}/*.parquet"))
     if not files:
         raise ValueError(f"merge target {target_path!r} has no parquet files")
-    target_schema = spark.read.parquet(*files).schema
+    target_schema = hadoop_fs.parquet_schema(spark, files[0])
     if set(updates.columns) != set(target_schema.fieldNames()):
         raise ValueError(
             f"updates schema {sorted(updates.columns)} != target "

@@ -26,6 +26,7 @@ from datetime import timedelta
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from python_async_sample_spark.sources import hadoop_fs
 from python_async_sample_spark.sources.readers import _nanos_timestamp_columns, pin_reader_conf
 
 # State-store partitions for a bounded drain. A streaming query's state is
@@ -65,7 +66,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ns_cols = _nanos_timestamp_columns(path)
     if ns_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(path).schema
+    schema = hadoop_fs.parquet_schema(spark, path)
     stream = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
@@ -284,7 +285,7 @@ def stream_dedup_counts_to_parquet(
     ns_cols = _nanos_timestamp_columns(events_path)
     if ns_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(src_dir).schema
+    schema = hadoop_fs.parquet_schema(spark, src_dir)
     stream = spark.readStream.schema(schema).parquet(src_dir)
     for c in ns_cols:
         stream = stream.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
@@ -330,7 +331,7 @@ def stream_bounded_dedup_counts_to_parquet(
     ns_cols = _nanos_timestamp_columns(f"{src_dir}/00_events.parquet")
     if ns_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(src_dir).schema
+    schema = hadoop_fs.parquet_schema(spark, src_dir)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -392,7 +393,7 @@ def stream_session_stats_to_parquet(
     ns_cols = _nanos_timestamp_columns(f"{src_dir}/00_events.parquet")
     if ns_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(src_dir).schema
+    schema = hadoop_fs.parquet_schema(spark, src_dir)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -508,7 +509,7 @@ def drain_mv_merge(spark: SparkSession, src_dir: str, work_dir: str) -> None:
     the final view must still equal the batch aggregate)."""
     mv_root = f"{work_dir}/mv"
     os.makedirs(mv_root, exist_ok=True)
-    schema = spark.read.parquet(src_dir).schema
+    schema = hadoop_fs.parquet_schema(spark, src_dir)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -610,7 +611,7 @@ def stream_score_documents_to_parquet(
         n_source_files, "__f"
     ).drop("__f").write.mode("overwrite").parquet(src_dir)
 
-    schema = spark.read.parquet(src_dir).schema
+    schema = hadoop_fs.parquet_schema(spark, src_dir)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")

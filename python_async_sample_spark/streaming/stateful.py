@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from python_async_sample_spark.sources import hadoop_fs
 from python_async_sample_spark.sources.readers import _nanos_timestamp_columns, pin_reader_conf
 from python_async_sample_spark.streaming.jobs import (
     _stage_source_with_sentinels,
@@ -127,7 +128,7 @@ def stream_user_profiles_to_parquet(
     ns_cols = _nanos_timestamp_columns(f"{src_dir}/00_events.parquet")
     if ns_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(src_dir).schema
+    schema = hadoop_fs.parquet_schema(spark, src_dir)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -357,7 +358,7 @@ def stream_profiles_tws_to_parquet(
         def close(self) -> None:
             pass
 
-    schema = spark.read.parquet(f"{src}/0_chunk.parquet").schema
+    schema = hadoop_fs.parquet_schema(spark, f"{src}/0_chunk.parquet")
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")

@@ -450,3 +450,180 @@ def test_cascade_rewind_must_reach_downstream(spark, sf_dir, tmpdir):
         .first()[0]
     )
     assert healed_max == clean_max
+
+
+def test_refused_partition_delete_aborts_swap_before_rename(spark, tmp_path, monkeypatch):
+    """A Hadoop delete that returns False leaves the old partition in place;
+    renaming the staged partition onto it would nest the new one INSIDE the
+    old (``__dt=X/__dt=X/...``) and duplicate rows on the next read. The
+    swap must stop before the rename and keep the stage dir for recovery."""
+    import datetime as dt
+    import glob
+
+    from python_async_sample_spark.sources import hadoop_fs
+
+    target = str(tmp_path / "tgt")
+    assert hadoop_fs.delete(spark, f"{target}/absent") is False
+    day = (dt.datetime(2024, 1, 1), dt.datetime(2024, 1, 2))
+    old = spark.createDataFrame(
+        [(dt.datetime(2024, 1, 1, 5), 1), (dt.datetime(2024, 1, 1, 6), 2)], "ts timestamp, v int"
+    )
+    overwrite_window(old, target, "ts", *day)
+    before = sorted(tuple(r) for r in read_target(spark, target).collect())
+
+    class RefusingDelete:
+        """A FileSystem whose delete reports failure and removes nothing."""
+
+        def __init__(self, fs):
+            self._fs = fs
+
+        def delete(self, path, recursive):
+            return False
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+    real_fs = hadoop_fs._fs
+
+    def refusing_fs(s, path):
+        fs, jpath = real_fs(s, path)
+        return RefusingDelete(fs), jpath
+
+    new = spark.createDataFrame([(dt.datetime(2024, 1, 1, 7), 3)], "ts timestamp, v int")
+    monkeypatch.setattr(hadoop_fs, "_fs", refusing_fs)
+    with pytest.raises(RuntimeError, match="staged data preserved"):
+        overwrite_window(new, target, "ts", *day)
+    monkeypatch.undo()
+
+    assert not glob.glob(f"{target}/__dt=*/__dt=*"), "staged partition nested in the old one"
+    assert sorted(tuple(r) for r in read_target(spark, target).collect()) == before
+    assert glob.glob(f"{target}/.stage-*/__dt=2024-01-01"), "stage dir not preserved"
+
+    # with deletes working again, the same delivery converges and cleans up
+    overwrite_window(new, target, "ts", *day)
+    assert [tuple(r) for r in read_target(spark, target).collect()] == [
+        (dt.datetime(2024, 1, 1, 7), 3)
+    ]
+    assert not glob.glob(f"{target}/.stage-*")
+
+
+def _next_job(spark) -> int:
+    """The DAG scheduler's next job id: the difference across a call is the
+    number of Spark jobs the call ran."""
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+
+def test_catchup_job_counts_over_read_target_source(spark, tmp_path):
+    """A stage run over an upstream target reads its source once and runs
+    N + 1 Spark jobs for N windows: one probe job (a top-1 scan, no
+    shuffle) and one write per window. Neither ``read_target`` nor the
+    sink's read-back launches a schema-inference job."""
+    from datetime import timedelta
+
+    up, down = str(tmp_path / "up"), str(tmp_path / "down")
+    t0 = ts("2024-01-01 00:00:00")
+    rows = [(i, t0 + timedelta(hours=5 * i + 1)) for i in range(14)]  # to 01-03 18:00
+    overwrite_window(
+        spark.createDataFrame(rows, "id long, ts timestamp"), up, "ts",
+        ts("2023-12-31 00:00:00"), ts("2024-01-05 00:00:00"),
+    )
+
+    calls = []
+
+    def source(s):
+        calls.append(1)
+        return read_target(s, up)
+
+    store = WatermarkStore(spark, str(tmp_path / "state"))
+    runner = IncrementalRunner(spark, store)
+    stage = IncrementalStage("ROT_Transform", source, down, "ts")
+    store.put("NIKON", "ROT_Transform", t0)
+    j0 = _next_job(spark)
+    windows = runner.run(stage)
+    assert (windows, _next_job(spark) - j0) == (3, 4)
+    assert len(calls) == 1, "stage.source must be called once per run"
+    assert store.get("NIKON", "ROT_Transform") == ts("2024-01-03 18:00:00")
+
+    # re-delivery off a day boundary: one window, which reads back the
+    # existing 01-03 partition's rows before 10:00 — still one job
+    store.put("NIKON", "ROT_Transform", ts("2024-01-03 10:00:00"))
+    j0 = _next_job(spark)
+    assert runner.run(stage) == 1
+    assert _next_job(spark) - j0 == 2
+    src = read_target(spark, up)
+    j0 = _next_job(spark)
+    overwrite_window(src, down, "ts", ts("2024-01-03 10:00:00"), ts("2024-01-03 18:00:00"))
+    assert _next_job(spark) - j0 == 1
+    assert sorted(r.id for r in read_target(spark, down).collect()) == list(range(14))
+
+
+def test_source_high_water_is_exact_microseconds(spark):
+    """The probe converts integer microseconds exactly; float seconds lose
+    the last microsecond for timestamps this far out."""
+    hw = ts("3000-01-01 00:00:00.123464")
+    df = spark.createDataFrame(
+        [(ts("2024-01-01 00:00:00"),), (hw,), (None,)], "ts timestamp"
+    )
+    stage = IncrementalStage("EDC_Import", lambda s: df, "unused", "ts")
+    assert IncrementalRunner(spark, None).source_high_water(stage) == hw
+    empty = IncrementalStage("EDC_Import", lambda s: df.where("ts is null"), "unused", "ts")
+    assert IncrementalRunner(spark, None).source_high_water(empty) is None
+
+
+def test_parquet_schema_equals_inferred_schema(spark, tmp_path):
+    """``hadoop_fs.parquet_schema`` returns what ``spark.read.parquet``
+    infers for the data columns, reading one footer and running no job."""
+    import datetime as dt
+    import decimal
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from python_async_sample_spark.sources.hadoop_fs import parquet_schema
+
+    def data_cols(path):
+        return T.StructType([f for f in spark.read.parquet(path).schema if f.name != "__dt"])
+
+    # a Spark-written partitioned sink target
+    target = str(tmp_path / "tgt")
+    spark_rows = spark.createDataFrame(
+        [(1, ts("2024-01-01 05:00:00"), "a", decimal.Decimal("1.25"), [1.0, 2.0]),
+         (2, ts("2024-01-02 05:00:00"), None, None, None)],
+        "id long, ts timestamp, s string, d decimal(12,2), xs array<double>",
+    )
+    overwrite_window(spark_rows, target, "ts", ts("2024-01-01 00:00:00"), ts("2024-01-03 00:00:00"))
+
+    # a pyarrow-written file: naive timestamp[us] is TIMESTAMP (not NTZ)
+    # under the session's inferTimestampNTZ=false
+    arrow_file = str(tmp_path / "arrow.parquet")
+    pq.write_table(
+        pa.table({
+            "ts": pa.array([dt.datetime(2024, 1, 1, 5)], pa.timestamp("us")),
+            "s": pa.array(["x"], pa.string()),
+            "v": pa.array([1.5], pa.float64()),
+            "d": pa.array([decimal.Decimal("3.14")], pa.decimal128(10, 2)),
+            "xs": pa.array([[1, 2]], pa.list_(pa.int64())),
+        }),
+        arrow_file,
+    )
+    assert spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled") == "false"
+    part_dir = f"{target}/__dt=2024-01-01"
+    part_file = next(f"{part_dir}/{n}" for n in sorted(os.listdir(part_dir)) if n.endswith(".parquet"))
+
+    for path in (target, arrow_file, part_file):
+        j0 = _next_job(spark)
+        got = parquet_schema(spark, path)
+        assert _next_job(spark) == j0, f"{path}: footer read ran a Spark job"
+        assert got == data_cols(path), path
+    assert parquet_schema(spark, arrow_file)["ts"].dataType == T.TimestampType()
+
+    # absent or empty: None, and read_target raises what spark.read did
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    for path in (str(tmp_path / "absent"), str(empty)):
+        assert parquet_schema(spark, path) is None
+        with pytest.raises(Exception) as inferred:
+            spark.read.parquet(path)
+        with pytest.raises(type(inferred.value)):
+            read_target(spark, path)
