@@ -26,10 +26,23 @@ in per-partition via rename, so a crash anywhere during the (long) Spark
 write leaves the old window fully readable; only the per-partition
 metadata-swap window remains, and a crash there is healed by the next
 idempotent re-delivery.
+
+A window commit has a small fixed cost, paid once per chunk of a catch-up:
+
+* one listing of the target serves the stale-stage heal, the touched
+  partitions and the choice of which swaps need a delete (no per-day
+  ``exists`` probe);
+* the window predicate and the partition label are each one SQL
+  expression, its bounds exact integer microseconds (float seconds are
+  off by a microsecond or two past year ~2255);
+* the stage is a plain write into a fresh private directory: no dynamic
+  overwrite staging layer and no ``_SUCCESS`` marker, because the swap,
+  not the write job, is the commit.
 """
 
 from __future__ import annotations
 
+import uuid
 from datetime import datetime, timedelta
 
 from pyspark.sql import DataFrame, SparkSession
@@ -38,20 +51,15 @@ from pyspark.sql import functions as F
 from python_async_sample_spark.sources import hadoop_fs
 
 DT_COL = "__dt"
+_EPOCH = datetime(1970, 1, 1)
+_DAY_US = 86_400_000_000
 
 
-def _utc_lit(dt: datetime) -> F.Column:
-    """Timestamp literal pinned to UTC wall time.
-
-    ``F.lit(naive_datetime)`` converts through the driver's LOCAL timezone
-    (``time.mktime``), so on a non-UTC driver the window predicate shifts by
-    the UTC offset and boundary rows are silently lost. Routing through
-    integer microseconds makes the literal a pure function of the naive-UTC
-    wall time this subsystem uses everywhere."""
-    from datetime import timezone as _tz
-
-    us = int(dt.replace(tzinfo=_tz.utc).timestamp() * 1_000_000)
-    return F.timestamp_micros(F.lit(us))
+def _micros(dt: datetime) -> int:
+    """``dt``'s naive-UTC wall time as exact integer microseconds since the
+    epoch. Pure integer arithmetic: no driver-timezone conversion (what
+    ``F.lit(naive_datetime)`` does) and no float rounding."""
+    return (dt.replace(tzinfo=None) - _EPOCH) // timedelta(microseconds=1)
 
 
 def overwrite_window(
@@ -68,35 +76,49 @@ def overwrite_window(
 
     1. compute ``out = boundary-rows-outside-window ∪ new-rows`` for every
        date partition the window touches;
-    2. write ``out`` partitioned by day to a hidden ``.stage-*`` directory
-       under the target (readers ignore dot-dirs) — the ONLY data-sized
-       step, and the old window stays fully readable throughout;
-    3. swap each staged partition into place: delete the old partition dir,
-       rename the staged one in (one metadata RPC each); a refused delete
-       stops the swap before its rename;
+    2. write ``out`` partitioned by day to a fresh hidden ``.stage-*``
+       directory under the target (readers ignore dot-dirs) — the ONLY
+       data-sized step, and the old window stays fully readable
+       throughout. A plain write: it leaves no ``_SUCCESS`` marker, since
+       nothing reads one — the swap is the commit;
+    3. swap each staged partition into place: delete the old partition dir
+       if the listing holds one, rename the staged one in (one metadata RPC
+       each); a refused delete stops the swap before its rename;
     4. delete touched partitions that produced no staged output (a window
        whose every row was retracted upstream must vanish).
+
+    One listing of the target, plus the partitions healed in from stale
+    stages, decides which partitions the window touches and which swaps
+    need a delete. The window bounds are exact integer microseconds.
 
     A crash in (1)-(2) leaves the target byte-identical; a crash in (3)-(4)
     leaves some partitions old and some new — healed by re-running the same
     idempotent delivery. No session-wide conf is mutated.
     """
-    import uuid
-
     spark = df.sparkSession
-
-    new_rows = df.where((F.col(ts_col) > _utc_lit(lo)) & (F.col(ts_col) <= _utc_lit(hi)))
-    # partition label from EPOCH-DAY arithmetic, never date_format: the
-    # format path renders through the ambient session timezone, so a
+    ts = "`" + ts_col.replace("`", "``") + "`"
+    window = (
+        f"{ts} > timestamp_micros({_micros(lo)}) "
+        f"AND {ts} <= timestamp_micros({_micros(hi)})"
+    )
+    # Partition label from EPOCH-DAY integer arithmetic, never date_format:
+    # the format path renders through the ambient session timezone, so a
     # non-UTC session would label rows into partitions OUTSIDE `touched`
     # (computed from the window's UTC dates below) and step 3's swap would
     # replace an existing partition whose rows were never read back —
-    # silent loss. unix_micros ⌊/86400e6⌋ is timezone-free.
-    epoch_day = F.floor(F.unix_micros(F.col(ts_col)) / F.lit(86400000000)).cast("int")
-    new_rows = new_rows.withColumn(
-        DT_COL, F.date_add(F.to_date(F.lit("1970-01-01")), epoch_day).cast("string")
+    # silent loss. The floor division is exact (pmod, then div), where a
+    # double division rounds the last microsecond of a day into the next
+    # one past year ~2255.
+    us = f"unix_micros({ts})"
+    new_rows = df.where(window).withColumn(
+        DT_COL,
+        F.expr(
+            f"CAST(date_from_unix_date(CAST(({us} - pmod({us}, {_DAY_US})) "
+            f"div {_DAY_US} AS INT)) AS STRING)"
+        ),
     )
 
+    listing = set(hadoop_fs.listdir(spark, target_path))
     # Heal-forward, then garbage-collect, stage dirs a previous crashed run
     # left behind (single-writer store — see incremental/state.py — so any
     # existing .stage-* is stale).  Healing must come FIRST: a crash between
@@ -106,21 +128,17 @@ def overwrite_window(
     # re-delivery recovery a permanent data loss.  Completing the
     # interrupted swap (rename in any staged partition whose target is
     # missing) restores the invariant before this run recomputes anything.
-    for child in hadoop_fs.listdir(spark, target_path):
-        if child.startswith(".stage-"):
-            stale = f"{target_path}/{child}"
-            for part in hadoop_fs.listdir(spark, stale):
-                if part.startswith(f"{DT_COL}=") and not hadoop_fs.exists(
-                    spark, f"{target_path}/{part}"
-                ):
-                    if not hadoop_fs.rename(
-                        spark, f"{stale}/{part}", f"{target_path}/{part}"
-                    ):
-                        raise RuntimeError(
-                            f"overwrite_window: recovery rename of {part!r} from "
-                            f"stale stage {stale!r} failed; nothing deleted"
-                        )
-            hadoop_fs.delete(spark, stale)
+    for child in sorted(c for c in listing if c.startswith(".stage-")):
+        stale = f"{target_path}/{child}"
+        for part in hadoop_fs.listdir(spark, stale):
+            if part.startswith(f"{DT_COL}=") and part not in listing:
+                if not hadoop_fs.rename(spark, f"{stale}/{part}", f"{target_path}/{part}"):
+                    raise RuntimeError(
+                        f"overwrite_window: recovery rename of {part!r} from "
+                        f"stale stage {stale!r} failed; nothing deleted"
+                    )
+                listing.add(part)
+        hadoop_fs.delete(spark, stale)
 
     # Existing partitions the window touches. Only those need the boundary
     # read-back. In a day-aligned forward catch-up the only one is
@@ -130,7 +148,7 @@ def overwrite_window(
     d = lo.date()
     while d <= hi.date():
         part = f"{DT_COL}={d.isoformat()}"
-        if hadoop_fs.exists(spark, f"{target_path}/{part}"):
+        if part in listing:
             touched.append(part)
         d += timedelta(days=1)
 
@@ -140,15 +158,17 @@ def overwrite_window(
             .option("basePath", target_path)
             .parquet(*(f"{target_path}/{p}" for p in touched))
         )
-        keep = existing.where(
-            ~((F.col(ts_col) > _utc_lit(lo)) & (F.col(ts_col) <= _utc_lit(hi)))
-        )
-        out = keep.unionByName(new_rows)
+        out = existing.where(f"NOT ({window})").unionByName(new_rows)
     else:
         out = new_rows
 
     stage = f"{target_path}/.stage-{uuid.uuid4().hex}"
-    out.write.mode("overwrite").partitionBy(DT_COL).parquet(stage)
+    (
+        out.write.mode("errorifexists")
+        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+        .partitionBy(DT_COL)
+        .parquet(stage)
+    )
 
     # Swap. Hadoop rename reports most failures by RETURNING FALSE, not
     # raising — treat false as fatal BEFORE anything else is touched, and
@@ -160,13 +180,14 @@ def overwrite_window(
     # that is still there nests the staged one inside it.
     staged = [p for p in hadoop_fs.listdir(spark, stage) if p.startswith(f"{DT_COL}=")]
     for part in staged:
-        try:
-            hadoop_fs.delete(spark, f"{target_path}/{part}")
-        except OSError as e:
-            raise RuntimeError(
-                f"overwrite_window: could not delete partition {part!r} of "
-                f"{target_path!r}; staged data preserved at {stage!r}"
-            ) from e
+        if part in listing:
+            try:
+                hadoop_fs.delete(spark, f"{target_path}/{part}")
+            except OSError as e:
+                raise RuntimeError(
+                    f"overwrite_window: could not delete partition {part!r} of "
+                    f"{target_path!r}; staged data preserved at {stage!r}"
+                ) from e
         if not hadoop_fs.rename(spark, f"{stage}/{part}", f"{target_path}/{part}"):
             raise RuntimeError(
                 f"overwrite_window: rename of staged partition {part!r} into "

@@ -70,9 +70,12 @@ def get_spark(
 
     Scale posture: every knob here is chosen so the same code runs on
     local[32] for tests and on a 1000-executor cluster unchanged —
-    AQE (+skew join) handles runtime re-planning, dynamic partition
-    overwrite enables idempotent window rewrites (SURVEY §2.9 I3), and
-    Arrow keeps the pandas-UDF kernel path vectorized.
+    AQE (+skew join) handles runtime re-planning and Arrow keeps the
+    pandas-UDF kernel path vectorized. Dynamic partition overwrite is on
+    for user code that overwrites a partitioned table in place; the
+    incremental sink's idempotent window rewrites (SURVEY §2.9 I3) do not
+    use it — they stage a plain write and swap partitions in by rename
+    (``incremental/sink``).
     """
     cpus = cpus or DEFAULT_CPUS
     shuffle = shuffle_partitions or max(cpus, 8)

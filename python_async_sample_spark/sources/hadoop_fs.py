@@ -10,6 +10,11 @@ RPC per touched partition), never a data scan.
 ``parquet_schema`` is the same kind of call for a schema: it reads one
 parquet footer on the driver, where ``spark.read.parquet(path).schema``
 would launch a one-task Spark job to infer it.
+
+JVM classes are looked up by their full name (``jclass``), one py4j round
+trip each, as PySpark's own ``observation.py`` does; the attribute walk
+``spark._jvm.org.apache.hadoop.fs.Path`` costs a round trip per segment,
+each of them a failed class load.
 """
 
 from __future__ import annotations
@@ -18,8 +23,14 @@ from pyspark.sql import SparkSession
 from pyspark.sql.types import StructType, _parse_datatype_json_string
 
 
+def jclass(spark: SparkSession, name: str):
+    """The JVM class ``name`` (fully qualified), resolved in one py4j round
+    trip."""
+    return getattr(spark._jvm, name)
+
+
 def _fs(spark: SparkSession, path: str):
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    jpath = jclass(spark, "org.apache.hadoop.fs.Path")(path)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
     return fs, jpath
 
@@ -60,7 +71,7 @@ def rename(spark: SparkSession, src: str, dst: str) -> bool:
     (s3a) a copy+delete, which is why callers keep the renamed unit small
     (one partition directory, not the table)."""
     fs, jsrc = _fs(spark, src)
-    jdst = spark._jvm.org.apache.hadoop.fs.Path(dst)
+    jdst = jclass(spark, "org.apache.hadoop.fs.Path")(dst)
     return bool(fs.rename(jsrc, jdst))
 
 
@@ -84,16 +95,21 @@ def parquet_schema(spark: SparkSession, path: str) -> StructType | None:
     status = _first_data_file(fs, fs.getFileStatus(jpath))
     if status is None:
         return None
-    jvm = spark._jvm
-    pq = jvm.org.apache.spark.sql.execution.datasources.parquet
+    pq = "org.apache.spark.sql.execution.datasources.parquet."
     conf = spark._jsc.hadoopConfiguration()
-    meta = pq.ParquetFooterReader.readFooter(
-        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(status, conf),
-        jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+    meta = jclass(spark, pq + "ParquetFooterReader").readFooter(
+        jclass(spark, "org.apache.parquet.hadoop.util.HadoopInputFile").fromStatus(status, conf),
+        jclass(
+            spark, "org.apache.parquet.format.converter.ParquetMetadataConverter"
+        ).SKIP_ROW_GROUPS,
     )
-    footer = jvm.org.apache.parquet.hadoop.Footer(status.getPath(), meta)
-    converter = pq.ParquetToSparkSchemaConverter(spark._jsparkSession.sessionState().conf())
-    schema = pq.ParquetFileFormat.readSchemaFromFooter(footer, converter).asNullable()
+    footer = jclass(spark, "org.apache.parquet.hadoop.Footer")(status.getPath(), meta)
+    converter = jclass(spark, pq + "ParquetToSparkSchemaConverter")(
+        spark._jsparkSession.sessionState().conf()
+    )
+    schema = jclass(spark, pq + "ParquetFileFormat").readSchemaFromFooter(
+        footer, converter
+    ).asNullable()
     return _parse_datatype_json_string(schema.json())
 
 

@@ -32,6 +32,8 @@ from datetime import datetime, timedelta
 
 from pyspark.sql import DataFrame, SparkSession
 
+from python_async_sample_spark.sources.hadoop_fs import jclass
+
 
 def ts_literal_ansi(dt: datetime) -> str:
     """ANSI timestamp literal — Oracle, PostgreSQL, most engines."""
@@ -310,19 +312,18 @@ def _staged_replace_jdbc(
     df.write.jdbc(url=url, table=staging, mode="overwrite", properties=props)
 
     cols = ", ".join(f'"{c}"' for c in df.columns)
-    jvm = spark._jvm
     # the driver-side connection needs the SAME credentials/driver the
     # executors used: load the driver class explicitly (a --jars-loaded
     # driver is not visible to DriverManager's default lookup — the reason
     # Spark keeps its own DriverRegistry) and forward every property
     # except Spark's writer knobs
     if "driver" in props:
-        jvm.java.lang.Class.forName(props["driver"])
-    jprops = jvm.java.util.Properties()
+        jclass(spark, "java.lang.Class").forName(props["driver"])
+    jprops = jclass(spark, "java.util.Properties")()
     for k, v in props.items():
         if k not in ("batchsize", "driver", "numPartitions"):
             jprops.setProperty(k, v)
-    conn = jvm.java.sql.DriverManager.getConnection(url, jprops)
+    conn = jclass(spark, "java.sql.DriverManager").getConnection(url, jprops)
     try:
         conn.setAutoCommit(False)
         # Two defenses against concurrent overlapping deliveries (the
@@ -345,7 +346,7 @@ def _staged_replace_jdbc(
         # rolls back whole, and the re-delivery converges — the same
         # idempotency contract as a crash.
         conn.setTransactionIsolation(
-            jvm.java.sql.Connection.TRANSACTION_SERIALIZABLE
+            jclass(spark, "java.sql.Connection").TRANSACTION_SERIALIZABLE
         )
         st = conn.createStatement()
         # The locking defenses do not cover the BOOTSTRAP branch: two

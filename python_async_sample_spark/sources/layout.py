@@ -36,7 +36,7 @@ from python_async_sample_spark.sources.readers import pin_reader_conf
 def dir_bytes(spark: SparkSession, path: str) -> int:
     """Total bytes under ``path`` — one metadata RPC on whatever filesystem
     the scheme names (file://, hdfs://, s3a://)."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    jpath = hadoop_fs.jclass(spark, "org.apache.hadoop.fs.Path")(path)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
     return int(fs.getContentSummary(jpath).getLength())
 

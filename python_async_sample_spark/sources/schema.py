@@ -16,7 +16,6 @@ import re
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 
@@ -78,12 +77,20 @@ def reconcile(df: DataFrame, target: StructType) -> DataFrame:
     Extra source columns are dropped; missing ones raise :class:`BatchAbort`.
     Types are cast to the target's (the reference stores measurements as text
     and casts client-side, ``R/tlcd_nikonrot.R:131`` — here the cast happens
-    in the plan, JVM-side).
+    in the plan, JVM-side). A column already of the target type is not
+    cast, and columns are bound to ``df`` (``df[name]``) rather than built
+    with ``F.col``: each ``Column`` call is a py4j round trip or more, and a
+    catch-up reconciles once per stage run.
     """
     state = column_state(df.schema, target)
     if not state.ok:
         raise BatchAbort(f"source missing target columns: {list(state.del_cols)}")
-    by_lower = {f.name.lower(): f.name for f in df.schema.fields}
-    return df.select(
-        *(F.col(by_lower[f.name.lower()]).cast(f.dataType).alias(f.name) for f in target.fields)
-    )
+    by_lower = {f.name.lower(): f for f in df.schema.fields}
+    cols = []
+    for f in target.fields:
+        src = by_lower[f.name.lower()]
+        col = df["`" + src.name.replace("`", "``") + "`"]
+        if src.dataType != f.dataType:
+            col = col.cast(f.dataType)
+        cols.append(col if src.name == f.name else col.alias(f.name))
+    return df.select(*cols)

@@ -159,6 +159,27 @@ def test_schema_reconciliation(spark):
     row = out.first()
     assert row.a == 1 and row.b == 2.5  # string cast to double in-plan
 
+    # a column named after a keyword, one already of the target type, and
+    # decimals: a string cast to decimal, a decimal narrowed to the target
+    import decimal
+
+    wide = T.StructType(
+        target.fields
+        + [
+            T.StructField("select", T.LongType()),
+            T.StructField("amt", T.DecimalType(10, 2)),
+            T.StructField("rate", T.DecimalType(10, 2)),
+        ]
+    )
+    src2 = spark.createDataFrame(
+        [(1, "2.5", 7, "3.14", decimal.Decimal("0.1250"))],
+        "A long, b string, SELECT long, amt string, rate decimal(12,4)",
+    )
+    out2 = reconcile(src2, wide)
+    assert out2.columns == ["a", "b", "select", "amt", "rate"]
+    assert out2.schema == wide
+    assert tuple(out2.first()) == (1, 2.5, 7, decimal.Decimal("3.14"), decimal.Decimal("0.13"))
+
     missing = spark.createDataFrame([(1,)], ["a"])
     bad = column_state(missing.schema, target)
     assert bad.del_cols == ("b",) and not bad.ok
@@ -247,8 +268,9 @@ def test_retraction_rewrites_empty_partition(spark, tmpdir):
 
 
 def test_partition_probe_uses_fs_abstraction(spark, sf_dir, tmpdir, monkeypatch):
-    # the probe must route through the Hadoop FileSystem API (scheme-aware),
-    # never os.path: mock it with a recorder backed by a Hadoop listing
+    # partition metadata must route through the Hadoop FileSystem API
+    # (scheme-aware), never os.path; and one listing of the target per
+    # delivery replaces the per-day exists probes
     import inspect
 
     from python_async_sample_spark.incremental import sink
@@ -256,21 +278,131 @@ def test_partition_probe_uses_fs_abstraction(spark, sf_dir, tmpdir, monkeypatch)
 
     assert "os.path" not in inspect.getsource(sink), "os.path on the data path"
 
-    probed = []
-    real_exists = hadoop_fs.exists
+    listed, probed = [], []
+    real_listdir, real_exists = hadoop_fs.listdir, hadoop_fs.exists
+
+    def recording_listdir(s, path):
+        listed.append(path)
+        return real_listdir(s, path)
 
     def recording_exists(s, path):
         probed.append(path)
         return real_exists(s, path)
 
+    monkeypatch.setattr(sink.hadoop_fs, "listdir", recording_listdir)
     monkeypatch.setattr(sink.hadoop_fs, "exists", recording_exists)
     events = load_table(spark, sf_dir, "events")
+    target = f"{tmpdir}/t"
     lo, hi = ts("2024-01-05 00:00:00"), ts("2024-01-07 00:00:00")
-    overwrite_window(events, f"{tmpdir}/t", "ts", lo, hi)
-    n1 = read_target(spark, f"{tmpdir}/t").count()
-    overwrite_window(events, f"{tmpdir}/t", "ts", lo, hi)  # re-delivery
-    assert read_target(spark, f"{tmpdir}/t").count() == n1 > 0
-    assert len(probed) == 6  # 3 dates probed per delivery
+    overwrite_window(events, target, "ts", lo, hi)
+    assert listed.count(target) == 1, listed
+    n1 = read_target(spark, target).count()
+    overwrite_window(events, target, "ts", lo, hi)  # re-delivery
+    assert read_target(spark, target).count() == n1 > 0
+    assert listed.count(target) == 2, listed  # one target listing per delivery
+    assert probed == []
+
+
+def test_no_jvm_package_walks():
+    """JVM classes are resolved by their full name in one py4j round trip
+    (``hadoop_fs.jclass``). An attribute walk from the JVM view
+    (``jvm.org.apache...``) costs a round trip per segment, each a failed
+    class lookup."""
+    import ast
+    import pathlib
+
+    import python_async_sample_spark as pkg
+
+    walks = []
+    for path in sorted(pathlib.Path(pkg.__file__).parent.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+            if isinstance(node, ast.Attribute) and node.attr in ("org", "java", "javax", "scala"):
+                base = node.value
+                name = base.attr if isinstance(base, ast.Attribute) else getattr(base, "id", None)
+                if name in ("_jvm", "jvm"):
+                    walks.append(f"{path.name}:{node.lineno}")
+    assert walks == []
+
+
+def test_stage_write_is_plain(spark, tmp_path, monkeypatch):
+    """The stage is a plain write: mid-swap it holds only ``__dt=*`` dirs,
+    with no ``_SUCCESS`` marker and no dynamic-overwrite staging dir, and
+    the target does not depend on the session's partitionOverwriteMode."""
+    import datetime as dt
+    import glob
+    import os
+
+    from python_async_sample_spark.sources import hadoop_fs
+
+    day = (dt.datetime(2024, 1, 1), dt.datetime(2024, 1, 3))
+    first = spark.createDataFrame(
+        [(dt.datetime(2024, 1, 1, 5), 1), (dt.datetime(2024, 1, 2, 0), 2)], "ts timestamp, v int"
+    )
+    again = spark.createDataFrame(
+        [(dt.datetime(2024, 1, 1, 7), 3), (dt.datetime(2024, 1, 2, 9), 4)], "ts timestamp, v int"
+    )
+
+    class RefusingRename:
+        """A FileSystem whose rename reports failure and moves nothing."""
+
+        def __init__(self, fs):
+            self._fs = fs
+
+        def rename(self, src, dst):
+            return False
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+    real_fs = hadoop_fs._fs
+
+    def refusing_fs(s, path):
+        fs, jpath = real_fs(s, path)
+        return RefusingRename(fs), jpath
+
+    def fail_mid_swap(path):
+        """Deliver ``first`` with every rename refused; return the names in
+        the stage dir left behind, and whether any level of it holds a
+        ``_SUCCESS`` marker or a ``.spark-staging-*`` dir."""
+        with monkeypatch.context() as m:
+            m.setattr(hadoop_fs, "_fs", refusing_fs)
+            with pytest.raises(RuntimeError, match="staged data preserved"):
+                overwrite_window(first, path, "ts", *day)
+        (stage,) = glob.glob(f"{path}/.stage-*")
+        extra = [
+            f"{root}/{n}"
+            for root, dirs, files in os.walk(stage)
+            for n in dirs + files
+            if n == "_SUCCESS" or n.startswith(".spark-staging")
+        ]
+        return sorted(os.listdir(stage)), extra
+
+    def deliver(path):
+        """The stale stage heals forward, then two deliveries land."""
+        overwrite_window(first, path, "ts", *day)
+        overwrite_window(again, path, "ts", dt.datetime(2024, 1, 1, 6), dt.datetime(2024, 1, 2, 12))
+        parts = sorted(os.listdir(path))
+        return parts, sorted(tuple(r) for r in read_target(spark, path).collect())
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    saved = spark.conf.get(key)
+    results = {}
+    try:
+        for mode in ("dynamic", "static"):
+            spark.conf.set(key, mode)
+            path = str(tmp_path / mode)
+            assert fail_mid_swap(path) == (["__dt=2024-01-01", "__dt=2024-01-02"], []), mode
+            results[mode] = deliver(path)
+    finally:
+        spark.conf.set(key, saved)
+    assert results["dynamic"] == results["static"] == (
+        ["__dt=2024-01-01", "__dt=2024-01-02"],
+        [
+            (dt.datetime(2024, 1, 1, 5), 1),
+            (dt.datetime(2024, 1, 1, 7), 3),
+            (dt.datetime(2024, 1, 2, 9), 4),
+        ],
+    )  # the re-delivered window retracted v=2
 
 
 def test_iteration_cap(spark, sf_dir, tmpdir):
@@ -568,6 +700,32 @@ def test_source_high_water_is_exact_microseconds(spark):
     assert IncrementalRunner(spark, None).source_high_water(stage) == hw
     empty = IncrementalStage("EDC_Import", lambda s: df.where("ts is null"), "unused", "ts")
     assert IncrementalRunner(spark, None).source_high_water(empty) is None
+
+
+def test_catchup_delivers_high_water_row_past_2255(spark, tmp_path):
+    """Window bounds are exact integer microseconds. Built from float
+    seconds they are off by a microsecond or two this far out, and the
+    run's last window missed its high-water row while the watermark moved
+    past it, so it was never delivered. The partition label's epoch-day
+    division is exact too: the last microsecond of a day stays in it."""
+    import datetime as dt
+    import os
+
+    t0 = ts("3000-01-01 00:00:00.123464")
+    rows = [(i, t0 + dt.timedelta(microseconds=1_000_003 * i)) for i in range(20)]
+    df = spark.createDataFrame(rows, "id long, ts timestamp")
+    target = str(tmp_path / "t")
+    store = WatermarkStore(spark, str(tmp_path / "state"))
+    store.put("NIKON", "EDC_Import", ts("3000-01-01 00:00:00"))
+    stage = IncrementalStage("EDC_Import", lambda s: df, target, "ts")
+    assert IncrementalRunner(spark, store).run(stage) == 1
+    assert sorted(r.id for r in read_target(spark, target).collect()) == list(range(20))
+    assert store.get("NIKON", "EDC_Import") == rows[-1][1]
+
+    last = str(tmp_path / "last")
+    late = spark.createDataFrame([(ts("3000-01-01 23:59:59.999999"),)], "ts timestamp")
+    overwrite_window(late, last, "ts", ts("3000-01-01 00:00:00"), ts("3000-01-02 00:00:00"))
+    assert [d for d in os.listdir(last) if not d.startswith(".")] == ["__dt=3000-01-01"]
 
 
 def test_parquet_schema_equals_inferred_schema(spark, tmp_path):

@@ -58,28 +58,30 @@ def test_registry_is_idempotent(spark):
     assert all(a[k] is b[k] for k in a)
 
 
-def test_utc_lit_is_driver_timezone_independent(spark):
+def test_window_bounds_are_driver_timezone_independent(spark, tmp_path):
     """F.lit(naive_datetime) converts through the driver's LOCAL timezone —
-    the incremental sink must not depend on it. _utc_lit pins the wall time
-    to UTC regardless of the driver's TZ."""
+    the incremental sink must not depend on it. Its window bounds are the
+    naive-UTC wall time as exact integer microseconds whatever the
+    driver's TZ: under America/New_York the half-open window (lo, hi]
+    still keeps exactly lo + 1 µs and hi."""
     import os
     import time
-    from datetime import datetime, timezone
+    from datetime import datetime
 
-    from pyspark.sql import functions as F
+    from python_async_sample_spark.incremental.sink import overwrite_window, read_target
 
-    from python_async_sample_spark.incremental.sink import _utc_lit
-
-    dt = datetime.fromisoformat("2024-01-24 00:00:00")
-    want_us = int(dt.replace(tzinfo=timezone.utc).timestamp() * 1_000_000)
+    lo, hi = datetime(2024, 1, 24), datetime(2024, 1, 25)
+    lo_us, hi_us = 1706054400 * 1_000_000, 1706140800 * 1_000_000
+    df = spark.createDataFrame(
+        [(u,) for u in (lo_us, lo_us + 1, hi_us, hi_us + 1)], "us long"
+    ).selectExpr("timestamp_micros(us) AS ts", "us")
     old_tz = os.environ.get("TZ")
     os.environ["TZ"] = "America/New_York"
     time.tzset()
     try:
-        got = spark.range(1).select(
-            F.unix_micros(_utc_lit(dt)).alias("us")
-        ).collect()[0]["us"]
-        assert got == want_us
+        overwrite_window(df, str(tmp_path / "t"), "ts", lo, hi)
+        got = sorted(r.us for r in read_target(spark, str(tmp_path / "t")).collect())
+        assert got == [lo_us + 1, hi_us]
     finally:
         if old_tz is None:
             del os.environ["TZ"]
