@@ -90,31 +90,33 @@ def q17_incremental_catchup(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
     FROM merged GROUP BY o_orderstatus ORDER BY o_orderstatus
     """,
-    ref="S12+I3 generalized: keyed MERGE INTO (VERDICT r3 item 7; the key-addressed form of the reference's delete-then-insert window, dbs/nikon.py:117-145)",
+    ref="S12+I3 generalized: keyed MERGE INTO as a versioned snapshot commit (sources/versioned.merge_into_versioned; VERDICT r3 item 7; the key-addressed form of the reference's delete-then-insert window, dbs/nikon.py:117-145)",
     tags=("incremental", "sink"),
 )
 def q177_merge_into(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Keyed MERGE INTO on a parquet table, certified end-to-end: a fresh
-    range-clustered copy of ``orders`` receives one CDC-shaped batch —
-    updates (keys ≡ 0 mod 97: status→'M', price+1000) plus inserts (fresh
-    keys ≡ 0 mod 397 offset past the key space) — through
-    ``sources.layout.merge_into``; the batch is **delivered twice** to
-    prove re-delivery idempotence, then the merged table's per-status
+    """Keyed MERGE INTO, certified end-to-end: a fresh key-clustered
+    versioned copy of ``orders`` receives one CDC-shaped batch — updates
+    (keys ≡ 0 mod 97: status→'M', price+1000) plus inserts (fresh keys ≡ 0
+    mod 397 offset past the key space) — through
+    ``sources.versioned.merge_into_versioned``; the batch is **delivered
+    twice** to prove re-delivery idempotence, then the head's per-status
     rollup must equal DuckDB's from-first-principles reconstruction.
 
-    Scale shape: footer min/max pruning rewrites only files whose key
-    range intersects the batch (range-clustered table → a handful), the
-    swap is staged-then-move (crash leaves duplicates, never loss), and
-    the driver touch is the batch's distinct keys — CDC-sized, never
-    table-sized.  Prices ride DECIMAL(18,2) on both sides, so the sums
-    are exact, not summation-order-dependent."""
-    from python_async_sample_spark.sources.layout import cluster_by, merge_into
+    Scale shape: the manifest's per-file key ranges prune the rewrite to
+    the files whose range intersects the batch (key-clustered table → a
+    handful), each merge lands as one atomic snapshot commit, and the
+    driver touch is O(files), never O(batch keys).  Prices ride
+    DECIMAL(18,2) on both sides, so the sums are exact, not
+    summation-order-dependent."""
+    from python_async_sample_spark.sources.versioned import (
+        create_table,
+        merge_into_versioned,
+        read_version,
+    )
 
-    tmp = tempfile.mkdtemp(prefix="spark_graft_merge_")
-    target = f"{tmp}/orders"
-    cluster_by(spark, f"{sf_dir.rstrip('/')}/orders.parquet", target, ["o_orderkey"], n_files=8)
-
+    root = f"{tempfile.mkdtemp(prefix='spark_graft_merge_')}/orders"
     orders = load_table(spark, sf_dir, "orders")
+    create_table(spark, root, orders, n_files=8, layout_col="o_orderkey")
     updates = (
         orders.where(F.col("o_orderkey") % 97 == 0)
         .withColumn("o_orderstatus", F.lit("M"))
@@ -129,11 +131,11 @@ def q177_merge_into(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("o_totalprice", F.lit(42.42))
         )
     )
-    merge_into(spark, target, updates, "o_orderkey")
-    merge_into(spark, target, updates, "o_orderkey")  # re-delivery: same state
+    merge_into_versioned(spark, root, updates, "o_orderkey")
+    merge_into_versioned(spark, root, updates, "o_orderkey")  # re-delivery
 
     return (
-        spark.read.parquet(target)
+        read_version(spark, root)
         .groupBy("o_orderstatus")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
@@ -201,8 +203,7 @@ def q184_versioned_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     tmp = tempfile.mkdtemp(prefix="spark_graft_vtq_")
     root = f"{tmp}/orders_v"
     orders = load_table(spark, sf_dir, "orders")
-    # range-ordered base so footer min/max pruning has teeth (same reason
-    # q177 cluster_by's its copy)
+    # range-ordered base so the manifest's min/max pruning has teeth
     create_table(spark, root, orders.orderBy("o_orderkey"), n_files=8)
 
     updates = (

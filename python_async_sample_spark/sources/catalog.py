@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from python_async_sample_spark.sources import manifest_log as mlog
-from python_async_sample_spark.sources.layout import _require_local_path
+from python_async_sample_spark.sources.manifest_log import _require_local_path
 from python_async_sample_spark.sources.versioned import (
     current_version,
     read_version,

@@ -30,6 +30,19 @@ class ConcurrentWriteError(RuntimeError):
     """Another writer committed this version first — rebase and retry."""
 
 
+def _require_local_path(path: str, verb: str) -> None:
+    """File discovery, staging and the commit ride the LOCAL filesystem
+    (glob/os/shutil) — on an object-store URI the glob would match nothing
+    and the operation would silently "succeed" over zero files, the worst
+    failure mode a data-mutation verb can have. Refuse loudly; this module
+    is the porting seam when a remote-FS variant is needed."""
+    if "://" in path:
+        raise ValueError(
+            f"{verb} operates on local paths only; got {path!r} "
+            f"(a silent no-op over an object store would fake a completed {verb})"
+        )
+
+
 def doc_path(log_dir: str, version: int) -> str:
     return f"{log_dir}/v{version:07d}.json"
 

@@ -2,10 +2,8 @@
 optimistic concurrency — the Iceberg/Delta discipline distilled to its
 load-bearing core on plain parquet + POSIX primitives.
 
-The in-place verbs (``layout.delete_keys`` / ``layout.merge_into``) carry a
-documented crash window: staged files move IN before originals leave, so a
-crash (or a concurrent reader) can observe duplicated rows.  Versioning
-removes the window entirely:
+Every mutation is a snapshot commit, so no crash or concurrent reader can
+observe a half-applied rewrite:
 
 * data files are IMMUTABLE once written — a snapshot is a MANIFEST (a JSON
   list of file names + the schema), never the directory listing;
@@ -22,13 +20,13 @@ while staging or moving data files the new files are orphans no manifest
 references (vacuum reclaims them); before the manifest link lands the
 commit simply never happened; after, it fully happened.  Re-running the
 interrupted verb is always safe, and readers are never exposed to an
-intermediate state — strictly stronger than the in-place verbs'
-"duplicates, never loss".
+intermediate state.
 
 Multiple writers are detected, not assumed away: the exclusive manifest
 create is the commit lock on any namespace with atomic link/create
 (POSIX, HDFS).  Object stores without an atomic create need a coordination
-layer — the same documented porting seam as ``layout._require_local_path``.
+layer; ``manifest_log`` is the porting seam for it, and its
+``_require_local_path`` refuses remote roots until then.
 
 Keyed removal is one verb per semantics: :func:`delete_relation` (a new
 head without the victims) and :func:`purge_relation` (the victims erased
@@ -49,6 +47,7 @@ from __future__ import annotations
 
 import glob
 import json
+import math
 import os
 import shutil
 import tempfile
@@ -60,9 +59,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from python_async_sample_spark.sources import manifest_log as mlog
-from python_async_sample_spark.sources.layout import _drop_victims, _require_local_path
+from python_async_sample_spark.sources.layout import morton2
 from python_async_sample_spark.sources.manifest_log import (  # noqa: F401
     ConcurrentWriteError,  # re-exported: callers catch it from this module
+    _require_local_path,
 )
 from python_async_sample_spark.sources.readers import pin_reader_conf
 
@@ -201,37 +201,84 @@ def _file_ranges(
     root: str, manifest: dict, key_col: str
 ) -> list[tuple[str, object, object, int]]:
     """Per-file ``(name, lo, hi, rows)`` for ``key_col``, the one input
-    every keyed verb plans its affected files from.  Ranges come from the
-    manifest's embedded stats (zero footer reads); when any file lacks a
-    recorded range (legacy manifest, or a column the footers couldn't
-    summarize) they come from the parquet footers instead, because a
-    partial manifest answer would be unsound, not just slow.  Empty files
-    are skipped (they contain no keys); a ``None`` range means "no usable
-    stats" and every finder treats it as conservatively hit.  Files gone
-    from disk (a vacuum-retained legacy epoch manifest whose data was
-    reclaimed) have no footer to read and are left out of the fallback."""
+    every keyed verb plans its affected files from, under the same rule as
+    the read-side planner (:func:`prune_files_for_box`).  Ranges come from
+    the manifest's embedded stats; only a file with no stats entry at all
+    (legacy manifest) has its footer read, through
+    :func:`_collect_file_stats`, and a file gone from disk (a
+    vacuum-retained legacy epoch manifest whose data was reclaimed) is
+    left out.  Empty files are skipped (they contain no keys).  A ``None``
+    range — a column added after the file was written, or one the footers
+    couldn't summarize (decimal, bool, timestamp) — means "no evidence",
+    and every finder treats it as conservatively hit."""
     stats = manifest.get("stats") or {}
+    legacy = [
+        n for n in manifest["files"]
+        if n not in stats and os.path.exists(f"{root}/{_DATA_DIR}/{n}")
+    ]
+    stats = {**stats, **_collect_file_stats(root, legacy)}
     out = []
     for n in manifest["files"]:
         ent = stats.get(n)
-        if ent is not None and ent["rows"] == 0:
-            continue  # an empty file has no column ranges either (zero row
-            # groups), so don't mistake it for "stats missing"
-        rng = ent["cols"].get(key_col) if ent else None
-        if rng is None:
-            break
-        out.append((n, rng[0], rng[1], ent["rows"]))
-    else:
-        return out
-    from python_async_sample_spark.sources.layout import _file_key_ranges
+        if ent is None or ent["rows"] == 0:
+            continue
+        lo, hi = ent["cols"].get(key_col) or (None, None)
+        out.append((n, lo, hi, ent["rows"]))
+    return out
 
-    paths = [
-        p for n in manifest["files"] if os.path.exists(p := f"{root}/{_DATA_DIR}/{n}")
-    ]
-    return [
-        (os.path.basename(p), lo, hi, rows)
-        for p, lo, hi, rows in _file_key_ranges(paths, key_col)
-    ]
+
+def _values_relation(spark, values: list):
+    """``values`` as a one-column (``__v``) relation, the list form of a
+    victim set before :func:`_prepare_victims` normalises it.
+    A pure-JVM LocalRelation (``VALUES ...``) when every value has an
+    exact SQL literal: a createDataFrame over a Python list is a pickled
+    RDD in defaultParallelism slices, and every plan that broadcasts it
+    re-runs its build as a Python job, PER REWRITE (purge: 16 rewrites x
+    32 tasks measured at 0.6-2 s each under job concurrency), while a
+    LocalRelation collects and broadcasts on the driver with no job at
+    all (guide §2.4).  Values without a literal form fall back to
+    createDataFrame inference."""
+    lits = _sql_key_literals(values)
+    if lits is None:
+        return spark.createDataFrame([(v,) for v in values], ["__v"])
+    vals = ",".join(f"({v})" for v in lits)
+    return spark.sql(f"SELECT * FROM VALUES {vals} AS __vic(__v)")
+
+
+def _sql_key_literals(clean: list) -> list[str] | None:
+    """Exact SQL literals for the given keys, or None when a value has no
+    lossless literal form (caller falls back to createDataFrame inference).
+    bool is checked before int (bool is an int subclass)."""
+    out = []
+    for k in clean:
+        if k is None:
+            out.append("NULL")
+        elif isinstance(k, bool):
+            out.append("true" if k else "false")
+        elif isinstance(k, int):
+            out.append(f"{k}L" if -(2**63) <= k < 2**63 else None)
+        elif isinstance(k, float):
+            # repr round-trips finite doubles exactly; NaN and +-inf have
+            # no numeric literal and go through their string casts
+            out.append(repr(k) + "D" if math.isfinite(k) else f"CAST('{k}' AS DOUBLE)")
+        elif isinstance(k, str):
+            if "\x00" in k:  # NUL inside a SQL literal: not worth the risk
+                return None
+            out.append("'" + k.replace("\\", "\\\\").replace("'", "\\'") + "'")
+        else:
+            return None
+        if out[-1] is None:
+            return None
+    return out
+
+
+def _drop_victims(df, vic, key_col: str):
+    """``df`` without the rows whose ``key_col`` is in the victims relation
+    ``vic``: the one broadcast anti join every DELETE/PURGE rewrite runs.
+    NULL keys never equi-match, so NULL-key rows always survive; a literal
+    ``isin`` would instead cost seconds of plan analysis per query once
+    the victim list runs to hundreds of keys."""
+    return df.join(F.broadcast(vic), key_col, "left_anti").select(*df.columns)
 
 
 def _prepare_victims(
@@ -256,8 +303,6 @@ def _prepare_victims(
       distinct over it would cost one job per plan that broadcasts it,
       and duplicates are harmless in the anti join.  The list's keys are
       deduplicated where :func:`_victim_hits` collects them."""
-    from python_async_sample_spark.sources.layout import _values_relation
-
     if not isinstance(victims, DataFrame):
         src = _values_relation(spark, list(victims) or [None])
     elif key_col in victims.columns:
@@ -401,9 +446,7 @@ def _range_join_hits_plan(
     # a createDataFrame over a Python list is a pickled RDD whose broadcast
     # build is a defaultParallelism-task Python job on EVERY plan that
     # references it; a VALUES relation broadcast-collects on the driver with
-    # no job at all (same rationale as layout._values_relation).
-    from python_async_sample_spark.sources.layout import _sql_key_literals
-
+    # no job at all (same rationale as _values_relation).
     names_l = _sql_key_literals([n for n, _, _, _ in ranges])
     lo_l = _sql_key_literals([lo for _, lo, _, _ in ranges])
     hi_l = _sql_key_literals([hi for _, _, hi, _ in ranges])
@@ -645,8 +688,6 @@ def rewrite_layout(
     :class:`ConcurrentWriteError` (standard rebase-and-retry).  Columns
     participate in the curve modulo 2^16 — quantize wider domains first,
     as production Z-order implementations do."""
-    from python_async_sample_spark.sources.layout import morton2
-
     root = root.rstrip("/")
     _require_local_path(root, "rewrite_layout")
     pin_reader_conf(spark)
@@ -1200,15 +1241,64 @@ def _conform_to_schema(df: DataFrame, schema_json: str) -> DataFrame:
     )
 
 
+def ansi_merge_guard(updates: DataFrame, key_col: str, verb: str) -> int:
+    """ANSI MERGE cardinality + NULL-key rejection, detected DISTRIBUTEDLY
+    in ONE action (VERDICT r5 item 2: O(1) driver rows, never O(batch
+    keys)).
+
+    Per-key counts aggregate to three scalars and only those reach the
+    driver; offending keys are collected (capped at 5) solely on the
+    failure path, for the error message.  Returns the batch row count
+    (== distinct keys, since duplicates raise)."""
+    probe = (
+        updates.groupBy(key_col)
+        .agg(F.count(F.lit(1)).alias("__n"))
+        .agg(
+            F.coalesce(F.sum("__n"), F.lit(0)).alias("n_rows"),
+            F.coalesce(
+                F.sum(F.when(F.col(key_col).isNull(), 1).otherwise(0)), F.lit(0)
+            ).alias("n_null"),
+            F.coalesce(
+                F.sum(F.when(F.col("__n") > 1, 1).otherwise(0)), F.lit(0)
+            ).alias("n_dupe"),
+        )
+        .first()
+    )
+    if probe["n_null"]:
+        raise ValueError(
+            f"{verb}: updates contain NULL merge keys — a NULL never equals "
+            "a target key, so 'merging' it is an unconditional insert the "
+            "caller should state explicitly"
+        )
+    if probe["n_dupe"]:
+        dup = sorted(
+            r[key_col]
+            for r in updates.groupBy(key_col)
+            .agg(F.count(F.lit(1)).alias("__n"))
+            .where(F.col("__n") > 1)
+            .limit(5)
+            .collect()
+        )
+        raise ValueError(
+            f"{verb}: duplicate merge key(s) (e.g. {dup}) — ANSI MERGE "
+            "cardinality violation, no deterministic winner"
+        )
+    return probe["n_rows"]
+
+
 def merge_into_versioned(
     spark: SparkSession, root: str, updates: DataFrame, key_col: str
 ) -> dict:
-    """Keyed MERGE INTO as a snapshot commit: same semantics and ANSI
-    guards as ``layout.merge_into`` (update rows replace matching target
-    rows, unmatched keys insert; duplicate or NULL update keys raise), but
-    the rewrite lands as a NEW manifest — readers switch from the old
-    snapshot to the merged one atomically, and the old version stays
-    queryable for time travel until vacuumed.
+    """Keyed MERGE INTO as a snapshot commit: update rows replace matching
+    target rows and unmatched keys insert; duplicate or NULL update keys
+    raise (:func:`ansi_merge_guard`).  The rewrite lands as a NEW manifest —
+    readers switch from the old snapshot to the merged one atomically, and
+    the old version stays queryable for time travel until vacuumed.
+
+    Reference tie-in: the delete-then-insert idempotency window
+    (dbs/nikon.py:117-145) is a keyed merge done by hand, and this verb
+    keeps its contract — the same batch merged twice leaves the same
+    content (a second, identical snapshot).
 
     Scale shape: the driver touch is O(files), never O(batch keys).  The
     batch is localCheckpoint-materialized once (so a non-deterministic
@@ -1233,12 +1323,6 @@ def merge_into_versioned(
     ]
     updates = _conform_to_schema(updates, schema_json).localCheckpoint(eager=True)
     _enforce_checks(updates, manifest, "merge_into_versioned")
-
-    # ANSI MERGE cardinality + NULL-key rejection — the guard shared with
-    # the in-place verb (layout.ansi_merge_guard): one distributed action,
-    # three scalars to the driver, offending keys collected capped only on
-    # the failure path.
-    from python_async_sample_spark.sources.layout import ansi_merge_guard
 
     n_updates = ansi_merge_guard(updates, key_col, "merge_into_versioned")
     if n_updates == 0:

@@ -324,6 +324,29 @@ def test_no_jvm_package_walks():
     assert walks == []
 
 
+def test_layout_imports_nothing_from_versioned():
+    """``sources/layout`` rewrites files into new directories and keeps no
+    keyed-mutation code; ``sources/versioned`` builds on it (``morton2``),
+    never the reverse.  Function-level imports count too."""
+    import ast
+    import pathlib
+
+    import python_async_sample_spark as pkg
+
+    path = pathlib.Path(pkg.__file__).parent / "sources" / "layout.py"
+    found = []
+    for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+        if isinstance(node, ast.ImportFrom):
+            mods = [node.module or ""] + [f"{node.module}.{a.name}" for a in node.names]
+        elif isinstance(node, ast.Import):
+            mods = [a.name for a in node.names]
+        else:
+            continue
+        if any("versioned" in m.split(".") for m in mods):
+            found.append(f"layout.py:{node.lineno}")
+    assert found == []
+
+
 def test_stage_write_is_plain(spark, tmp_path, monkeypatch):
     """The stage is a plain write: mid-swap it holds only ``__dt=*`` dirs,
     with no ``_SUCCESS`` marker and no dynamic-overwrite staging dir, and

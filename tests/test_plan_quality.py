@@ -519,9 +519,8 @@ def test_relation_verb_anti_join_broadcasts_victims(spark, sf_dir):
     file) and never a nested loop."""
     from pyspark.sql import functions as F
 
-    from python_async_sample_spark.sources.layout import _drop_victims
     from python_async_sample_spark.sources.readers import load_table
-    from python_async_sample_spark.sources.versioned import _prepare_victims
+    from python_async_sample_spark.sources.versioned import _drop_victims, _prepare_victims
 
     orders = load_table(spark, sf_dir, "orders")
     vic = _prepare_victims(

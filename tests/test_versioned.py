@@ -10,6 +10,7 @@ import shutil
 import tempfile
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from python_async_sample_spark.sources.readers import load_table
@@ -93,6 +94,10 @@ def test_merge_rejects_duplicate_and_null_keys(spark, sf_dir, root):
             spark, root, one.withColumn("o_orderkey", F.lit(None).cast("long")),
             "o_orderkey",
         )
+    with pytest.raises(AnalysisException, match="o_orderpriority"):
+        merge_into_versioned(spark, root, one.drop("o_orderpriority"), "o_orderkey")
+    with pytest.raises(ValueError, match="local paths only"):
+        merge_into_versioned(spark, "s3a://bucket/t", one, "o_orderkey")
     assert current_version(root) == 0  # nothing committed
 
 
@@ -107,6 +112,8 @@ def test_delete_keys_versioned_null_safe(spark, root):
     assert left == {"a", "keepme"}
     # v0 still intact
     assert read_version(spark, root, 0).count() == 4
+    with pytest.raises(ValueError, match="local paths only"):
+        delete_keys_versioned(spark, "s3a://bucket/t", "k", [1])
 
 
 def test_delete_keys_versioned_reserved_word_key_under_ansi(spark, root):
@@ -694,6 +701,51 @@ def test_purge_keys_on_evolved_column_and_after_vacuum(spark, root):
     assert head.count() == 2  # k=2 row (NULL email) + k=3 survive
 
 
+def test_keyed_verbs_on_added_column_with_pre_evolution_file_live(spark, root):
+    """A column added by add_column has no range in the manifest stats of
+    the files written before it.  Every keyed write verb keyed on it must
+    plan such a file as conservatively hit — its rows read the column as
+    NULL and survive — instead of failing on the file's footer, which has
+    no such column."""
+    from python_async_sample_spark.sources.versioned import (
+        add_column,
+        delete_relation,
+        purge_keys,
+    )
+
+    schema = "k int, v string, email string"
+
+    def head():
+        return sorted(
+            (r["k"], r["email"]) for r in read_version(spark, root).collect()
+        )
+
+    create_table(
+        spark, root, spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string"), n_files=1
+    )
+    add_column(spark, root, "email", "string")
+    batch = spark.createDataFrame(
+        [(k, "x", f"e{k}@x") for k in (3, 4, 5, 6)], schema
+    )
+    # inserts only: the pre-evolution file (k 1..2) stays live
+    assert merge_into_versioned(spark, root, batch, "k")["untouched"] == 1
+
+    assert delete_keys_versioned(spark, root, "email", ["e3@x"])["deleted_rows"] == 1
+    one_col = spark.createDataFrame([("e4@x",)], "addr string")
+    assert delete_relation(spark, root, "email", one_col)["deleted_rows"] == 1
+    assert head() == [(1, None), (2, None), (5, "e5@x"), (6, "e6@x")]
+
+    purge_keys(spark, root, "email", ["e5@x"])
+    for v in table_versions(root)[1:]:  # v0 predates the column
+        assert read_version(spark, root, v).where(F.col("email") == "e5@x").count() == 0, v
+    assert head() == [(1, None), (2, None), (6, "e6@x")]
+
+    upsert = spark.createDataFrame([(60, "y", "e6@x"), (7, "z", "e7@x")], schema)
+    res = merge_into_versioned(spark, root, upsert, "email")
+    assert res["upserted_rows"] == 2 and res["replaced_rows"] == 1
+    assert head() == [(1, None), (2, None), (7, "e7@x"), (60, "e6@x")]
+
+
 def test_anti_join_filters_coerce_types_and_ignore_nan(spark, root):
     """Review finding: the isin→anti-join swap must keep isin's literal
     coercion (int keys vs double column) and must NOT treat NaN keys as
@@ -802,8 +854,9 @@ def test_read_keyed_range_falls_back_without_stats(spark, root):
 
 def test_rewrite_layout_enables_box_pruning(spark, root):
     """Z-ordering as a snapshot commit: v0 (round-robin) prunes NOTHING for
-    a box predicate; the rewrite_layout head prunes most files; rows are
-    preserved exactly and old versions stay time-travelable."""
+    a box predicate; the rewrite_layout head prunes most files, for reads
+    and keyed deletes alike; rows are preserved exactly and old versions
+    stay time-travelable."""
     from python_async_sample_spark.sources.versioned import (
         prune_files_for_box,
         read_box,
@@ -828,6 +881,9 @@ def test_rewrite_layout_enables_box_pruning(spark, root):
     assert got.count() == expect.count() == 8 * 16  # one id per (x, y) pair
     assert read_version(spark, root, 0).count() == 4096  # time travel intact
     assert read_version(spark, root, 1).count() == 4096  # rows preserved
+    # keyed writes prune off the same per-file rectangles
+    res = delete_keys_versioned(spark, root, "y", [0, 1])
+    assert res["deleted_rows"] == 128 and res["rewritten"] < total // 2, res
 
 
 def test_rewrite_layout_carries_ledger_and_loses_races(spark, root):
@@ -1289,13 +1345,17 @@ def test_delete_relation_head_only(spark, sf_dir, root):
     assert res["version"] == 1
     assert res["deleted_rows"] == n_victims
     assert 1 <= res["rewritten"] < 4, "range pruning rewrote every file"
+    # untouched files keep their names and recorded stats
+    m0, m1 = _read_manifest(root, 0), _read_manifest(root, 1)
+    untouched = set(m0["files"]) & set(m1["files"])
+    assert res["rewritten"] + len(untouched) == len(m0["files"])
+    assert all(m1["stats"][n] == m0["stats"][n] for n in untouched)
 
     head = read_version(spark, root, 1)
     assert head.count() == n_all - n_victims
     assert head.join(victims, "o_orderkey", "left_semi").count() == 0
     # history intact — v0 still serves the victims (delete ≠ purge)
     assert read_version(spark, root, 0).count() == n_all
-    m1 = _read_manifest(root, 1)
     assert m1["op"] == "delete:o_orderkey" and m1["parent"] == 0
 
     # empty and NULL-only victim relations are no-ops, not errors
