@@ -76,6 +76,15 @@ def get_spark(
     incremental sink's idempotent window rewrites (SURVEY §2.9 I3) do not
     use it — they stage a plain write and swap partitions in by rename
     (``incremental/sink``).
+
+    Local sessions fork their Python workers from the engine's daemon
+    (``_pydaemon``), not pyspark's. Before CPython 3.12 every Python-worker
+    task (``createDataFrame`` from a list, ``applyInPandas``, pandas UDFs,
+    Python data sources) re-reads the directory of each zip archive on the
+    worker's path, 250-350 ms per task; the engine's daemon re-reads an
+    archive only after it changed. The daemon is set only on the local
+    fallback: on an external master the executors' filesystem and Python
+    are unknown, so pyspark's daemon stays.
     """
     cpus = cpus or DEFAULT_CPUS
     shuffle = shuffle_partitions or max(cpus, 8)
@@ -88,8 +97,18 @@ def get_spark(
     # detected from the environment spark-submit itself sets
     # (PYSPARK_SUBMIT_ARGS carries --master / --conf spark.master) plus the
     # SPARK_MASTER / MASTER conventions.
+    extra_conf = dict(extra_conf or {})
     if _external_master() is None:
-        builder = builder.master(f"local[{cpus}]")
+        builder = builder.master(f"local[{cpus}]").config(
+            "spark.python.daemon.module", "python_async_sample_spark._pydaemon"
+        )
+        # the daemon is launched as `python -m`, so its package must be on the
+        # workers' path whatever the process's cwd is
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        pythonpath = extra_conf.get("spark.executorEnv.PYTHONPATH")
+        extra_conf["spark.executorEnv.PYTHONPATH"] = (
+            f"{root}{os.pathsep}{pythonpath}" if pythonpath else root
+        )
     builder = (
         builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle))
@@ -115,7 +134,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.execution.pythonUDF.arrow.enabled", "true")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -1226,7 +1226,7 @@ def _enforce_checks(df: DataFrame, manifest: dict, verb: str) -> None:
         )
 
 
-def _conform_to_schema(df: DataFrame, schema_json: str) -> DataFrame:
+def _conform_to_schema(df: DataFrame, schema_json: str, verb: str) -> DataFrame:
     """Select + CAST a write batch to the manifest schema.  Writers must
     stage files the PINNED schema can read back: Spark widens arithmetic
     results silently (decimal(18,2) + literal → decimal(19,2)), and a
@@ -1234,11 +1234,28 @@ def _conform_to_schema(df: DataFrame, schema_json: str) -> DataFrame:
     every future read of that snapshot (parquet decimal ≤18 digits is
     INT64; 19 becomes FIXED_LEN_BYTE_ARRAY — the reader throws).  Casts
     run under the session's ANSI setting, so a genuinely overflowing
-    value fails the WRITE loudly instead of poisoning the table."""
+    value fails the WRITE loudly instead of poisoning the table.
+
+    A batch column the table does not have is refused rather than dropped
+    (``add_column`` first); a missing one fails analysis, naming it.  The
+    projection is one ``selectExpr`` call, casting only drifted columns."""
     schema = T.StructType.fromJson(json.loads(schema_json))
-    return df.select(
-        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
-    )
+    have = {f.name.lower(): f for f in df.schema.fields}
+    extra = sorted(have.keys() - {f.name.lower() for f in schema.fields})
+    if extra:
+        raise ValueError(
+            f"{verb}: batch columns {[have[c].name for c in extra]} are not in "
+            "the table schema; add them with add_column before writing"
+        )
+    exprs = []
+    for f in schema.fields:
+        q = "`" + f.name.replace("`", "``") + "`"
+        src = have.get(f.name.lower())
+        if src is not None and src.name == f.name and src.dataType == f.dataType:
+            exprs.append(q)
+        else:
+            exprs.append(f"CAST({q} AS {f.dataType.simpleString()}) AS {q}")
+    return df.selectExpr(*exprs)
 
 
 def ansi_merge_guard(updates: DataFrame, key_col: str, verb: str) -> int:
@@ -1321,7 +1338,9 @@ def merge_into_versioned(
     target_fields = [
         f["name"] for f in json.loads(schema_json)["fields"]
     ]
-    updates = _conform_to_schema(updates, schema_json).localCheckpoint(eager=True)
+    updates = _conform_to_schema(
+        updates, schema_json, "merge_into_versioned"
+    ).localCheckpoint(eager=True)
     _enforce_checks(updates, manifest, "merge_into_versioned")
 
     n_updates = ansi_merge_guard(updates, key_col, "merge_into_versioned")
@@ -1501,7 +1520,9 @@ def commit_stream_epoch(
             "— this is a fresh checkpoint reusing epoch ids against an old "
             "table, not a replay; refusing to guess which batch is real"
         )
-    epoch_batch = _conform_to_schema(batch_df, manifest["schema"])
+    epoch_batch = _conform_to_schema(
+        batch_df, manifest["schema"], "commit_stream_epoch"
+    )
     if manifest.get("checks"):
         # pin the batch bytes: without this, a non-deterministic source
         # could pass the CHECK scan yet stage different (violating) rows
@@ -1528,7 +1549,7 @@ def append_versioned(
     _require_local_path(root, "append_versioned")
     parent = current_version(root)
     manifest = _read_manifest(root, parent)
-    batch = _conform_to_schema(df, manifest["schema"])
+    batch = _conform_to_schema(df, manifest["schema"], "append_versioned")
     if manifest.get("checks"):
         # same CHECK-vs-stage determinism pin as commit_stream_epoch
         batch = batch.localCheckpoint(eager=True)
@@ -1961,6 +1982,7 @@ def vacuum(
     for the next one."""
     import time
 
+    _require_local_path(root, "vacuum")
     root = root.rstrip("/")
     versions = table_versions(root)
     if not versions:

@@ -8,6 +8,10 @@ the hostile variants against the same oracles so the contract in
 
 from __future__ import annotations
 
+import os
+import sys
+
+import pytest
 from pyspark.sql.types import TimestampType
 
 from python_async_sample_spark.plans.registry import load_all
@@ -119,3 +123,92 @@ def test_external_master_detection_covers_submit_args(monkeypatch):
     for args, want in cases:
         monkeypatch.setenv("PYSPARK_SUBMIT_ARGS", args)
         assert _external_master() == want, args
+
+
+def test_pydaemon_rereads_a_zip_only_after_it_changed(tmp_path, monkeypatch):
+    """The daemon's zipimporter.invalidate_caches re-reads an archive's
+    directory on its first call and then only when the file changed, so
+    an unchanged zip costs a stat per task and a rewritten one is still
+    picked up."""
+    import importlib
+    import zipfile
+    import zipimport
+
+    from python_async_sample_spark import _pydaemon
+
+    archive = tmp_path / "lib.zip"
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("zd_probe_one.py", "X = 1\n")
+    reads = []
+    real_read = zipimport._read_directory
+
+    def counting_read(path):
+        if path == str(archive):
+            reads.append(path)
+        return real_read(path)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counting_read)
+    monkeypatch.setattr(
+        zipimport.zipimporter, "invalidate_caches", _pydaemon.invalidate_caches
+    )
+    monkeypatch.syspath_prepend(str(archive))
+    try:
+        assert importlib.import_module("zd_probe_one").X == 1
+        importlib.invalidate_caches()  # first call on the importer: re-read
+        n = len(reads)
+        assert n >= 1
+        importlib.invalidate_caches()  # unchanged archive: no re-read
+        assert len(reads) == n
+
+        with zipfile.ZipFile(archive, "w") as z:
+            z.writestr("zd_probe_one.py", "X = 1\n")
+            z.writestr("zd_probe_two.py", "Y = 2\n")
+        importlib.invalidate_caches()
+        assert len(reads) == n + 1
+        assert importlib.import_module("zd_probe_two").Y == 2
+    finally:
+        sys.modules.pop("zd_probe_one", None)
+        sys.modules.pop("zd_probe_two", None)
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 12), reason="the zip re-read is fixed in 3.12")
+def test_local_session_workers_run_the_engine_daemon(spark):
+    """get_spark's local sessions fork Python workers from _pydaemon, so a
+    task's zipimporter.invalidate_caches is the patched one."""
+    if not spark.sparkContext.master.startswith("local"):
+        pytest.skip("pyspark's own daemon runs on an external master")
+
+    def where_from(_):
+        import zipimport
+
+        yield zipimport.zipimporter.invalidate_caches.__code__.co_filename
+
+    got = spark.sparkContext.parallelize(range(2), 2).mapPartitions(where_from).collect()
+    assert got and all(f.endswith("_pydaemon.py") for f in got), got
+
+
+def test_daemon_imports_whatever_the_cwd(tmp_path):
+    """The daemon is launched as `python -m`, so get_spark must put the
+    package on the workers' path: a driver started outside the repo still
+    runs Python-worker tasks."""
+    import subprocess
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        f"import sys; sys.path.insert(0, {repo!r})\n"
+        "from python_async_sample_spark.session import get_spark\n"
+        "s = get_spark(app_name='cwd-probe', cpus=1)\n"
+        "print('ROWS', s.createDataFrame([(1,)], 'a int').collect())\n"
+        "s.stop()\n"
+    )
+    env = {
+        k: v for k, v in os.environ.items()
+        if not k.startswith("PYSPARK_GATEWAY") and k not in ("SPARK_MASTER", "MASTER")
+    }
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert "ROWS [Row(a=1)]" in out.stdout

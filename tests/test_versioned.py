@@ -18,6 +18,8 @@ from python_async_sample_spark.sources.versioned import (
     ConcurrentWriteError,
     _manifest_path,
     _stage_files,
+    append_versioned,
+    commit_stream_epoch,
     create_table,
     current_version,
     delete_keys_versioned,
@@ -99,6 +101,32 @@ def test_merge_rejects_duplicate_and_null_keys(spark, sf_dir, root):
     with pytest.raises(ValueError, match="local paths only"):
         merge_into_versioned(spark, "s3a://bucket/t", one, "o_orderkey")
     assert current_version(root) == 0  # nothing committed
+
+
+@pytest.mark.parametrize(
+    "write",
+    [
+        lambda spark, root, batch: merge_into_versioned(spark, root, batch, "k"),
+        lambda spark, root, batch: append_versioned(spark, root, batch),
+        lambda spark, root, batch: commit_stream_epoch(spark, root, batch, 0, "fp"),
+    ],
+    ids=["merge_into_versioned", "append_versioned", "commit_stream_epoch"],
+)
+def test_write_refuses_a_batch_column_the_table_lacks(spark, root, write):
+    """A batch column the manifest does not have is an error naming it,
+    never silently dropped from the commit."""
+    create_table(
+        spark, root, spark.createDataFrame([(1, "a")], "k int, v string"), n_files=1
+    )
+    batch = spark.createDataFrame([(2, "b", "x@y")], "k int, v string, email string")
+    with pytest.raises(ValueError, match="email"):
+        write(spark, root, batch)
+    assert current_version(root) == 0  # nothing committed
+
+
+def test_vacuum_refuses_remote_paths():
+    with pytest.raises(ValueError, match="local paths only"):
+        vacuum("s3a://bucket/t", keep_last=1, grace_seconds=0)
 
 
 def test_delete_keys_versioned_null_safe(spark, root):
