@@ -273,11 +273,12 @@ def q103_stream_bounded_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q131_stream_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-(user, event_type) aggregates maintained INCREMENTALLY across 4
-    micro-batches: each foreachBatch merges the batch's partial aggregates
-    into a versioned snapshot of the view (commit-marker isolation; merge
-    cost is O(batch + |view|), never O(event history)). The final snapshot
-    must equal the one-shot batch aggregate — the oracle IS that batch
-    SQL."""
+    micro-batches: each foreachBatch appends the batch's partial aggregates
+    (n_events, sum_value) to a versioned table as one exactly-once epoch
+    commit (readers see whole epochs only; a batch costs O(batch), never
+    O(|view|) or O(event history)), and the view folds the partials with
+    one groupBy. The folded view must equal the one-shot batch aggregate —
+    the oracle IS that batch SQL."""
     from python_async_sample_spark.streaming.jobs import stream_incremental_mv_to_parquet
 
     tmp = tempfile.mkdtemp(prefix="spark_graft_inc_mv_")
@@ -377,10 +378,10 @@ def q163_stream_pit_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     STREAMING ENGINE: each micro-batch of facts is as-of joined against
     the static profile history inside foreachBatch (batching cannot change
     any row's answer — the kernel needs only the batch plus the history),
-    partial counts land in epoch-keyed overwrite-idempotent files, and the
-    readout merges them.  Oracled by the same DuckDB ASOF JOIN SQL as the
-    batch q143: the streamed partials must merge to exactly the batch
-    answer."""
+    partial counts are appended to a versioned table as exactly-once epoch
+    commits, and the readout merges them.  Oracled by the same DuckDB ASOF
+    JOIN SQL as the batch q143: the streamed partials must merge to exactly
+    the batch answer."""
     import tempfile
 
     from python_async_sample_spark.streaming.jobs import stream_pit_enrich_to_parquet
@@ -406,9 +407,10 @@ def q163_stream_pit_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q165_stream_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q142's heavy-hitter readout where the count-min cells are built BY
-    THE STREAMING ENGINE — per-batch bounded cell partials merged by cell
-    sum (the CMS merge law), so frequency state stays depth×width forever
-    on an unbounded stream.  Because merge is exact, the streamed sketch
+    THE STREAMING ENGINE — per-batch bounded cell partials, appended as
+    exactly-once epoch commits to a versioned table and merged by cell sum
+    (the CMS merge law), so frequency state stays depth×width forever on an
+    unbounded stream.  Because merge is exact, the streamed sketch
     is BIT-IDENTICAL to the batch-built one, and the same in-plan
     never-underestimate guard runs against exact counts."""
     import tempfile
@@ -442,31 +444,29 @@ def q165_stream_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame
            CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
     FROM events GROUP BY event_type ORDER BY event_type
     """,
-    ref="streaming exactly-once sink onto the manifest-versioned table (beyond reference; the atomic-visibility upgrade of the epoch-keyed-directory recipe)",
+    ref="streaming exactly-once sink onto the manifest-versioned table (beyond reference; the one foreachBatch file sink, streaming/jobs.drain_to_versioned)",
     tags=("streaming", "versioned", "sink"),
 )
 def q185_stream_versioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drain the events stream into a MANIFEST-VERSIONED table, then drain
     it AGAIN from a fresh checkpoint — the replay every directory-based
     sink mishandles: epoch ids restart at 0, but the (id, content
-    fingerprint) identity recorded in the manifest op recognizes the
-    replay and skips it, so the rollup equals ONE copy of the stream.
-    Readers meanwhile only ever see whole epochs (each append is one
-    atomic manifest commit). The same mechanism refuses loudly when a
-    reused epoch id carries DIFFERENT data (tests/test_versioned.py)."""
-    from python_async_sample_spark.sources.versioned import create_table, read_version
-    from python_async_sample_spark.streaming.jobs import stream_append_to_versioned
+    fingerprint) identity recorded in the manifest's epoch ledger
+    recognizes the replay and skips it, so the rollup equals ONE copy of
+    the stream. Readers meanwhile only ever see whole epochs (each append
+    is one atomic manifest commit). The same mechanism refuses loudly when
+    a reused epoch id carries DIFFERENT data (tests/test_versioned.py)."""
+    from python_async_sample_spark.sources.versioned import read_version
+    from python_async_sample_spark.streaming.jobs import drain_to_versioned, read_events_stream
 
     tmp = tempfile.mkdtemp(prefix="spark_graft_svs_")
     root = f"{tmp}/events_v"
-    seed = load_table(spark, sf_dir, "events").select(
+    stream = read_events_stream(spark, sf_dir).select(
         "event_id", "user_id", "event_type", "value", "ts"
     )
-    create_table(spark, root, seed.limit(0), n_files=1)
-
-    stream_append_to_versioned(spark, sf_dir, root, f"{tmp}/ckpt1")
+    drain_to_versioned(spark, stream, root, f"{tmp}/ckpt1")
     # fresh checkpoint, same source: epoch 0 replays; fingerprint says skip
-    stream_append_to_versioned(spark, sf_dir, root, f"{tmp}/ckpt2")
+    drain_to_versioned(spark, stream, root, f"{tmp}/ckpt2")
 
     return (
         read_version(spark, root)
@@ -527,22 +527,30 @@ _CDC_SOURCE_ORACLE = """
 )
 def q222_stream_cdc_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """create → MERGE → keyed DELETE, then the table is consumed as a
-    STREAM through the ``versioned_cdc`` data source (availableNow drain);
-    the query nets each version's insert/delete multisets (file-granular
+    STREAM through the ``versioned_cdc`` data source (availableNow drain)
+    into the exactly-once versioned sink (``jobs.drain_to_versioned``: an
+    epoch replayed after a crash is skipped, not captured twice); the
+    query nets each version's insert/delete multisets (file-granular
     deltas cancel rewritten-unchanged rows) and rolls them up.  The v1
     merge updates only o_orderstatus, so its net insert and delete faces
     carry the SAME price sums — a subtle pin: a source that swapped
     change tags still mismatches on v2, whose deletes have no insert
     twin."""
+    tmp = tempfile.mkdtemp(prefix="spark_graft_cdcsrc_")
+    root = f"{tmp}/t"
+    _stage_cdc_source_table(spark, sf_dir, root)
+    return _net_cdc_rollup(_capture_cdc_stream(spark, root, tmp))
+
+
+def _stage_cdc_source_table(spark: SparkSession, sf_dir: str, root: str) -> None:
+    """q222's source table at ``root``: create (v0) → MERGE (v1) → keyed
+    DELETE (v2) over the even-keyed orders."""
     from python_async_sample_spark.sources.versioned import (
         create_table,
         delete_keys_versioned,
         merge_into_versioned,
     )
-    from python_async_sample_spark.streaming.cdc_source import VersionedCDCDataSource
 
-    tmp = tempfile.mkdtemp(prefix="spark_graft_cdcsrc_")
-    root = f"{tmp}/t"
     base = load_table(spark, sf_dir, "orders").where(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_orderstatus",
         F.col("o_totalprice").cast("decimal(18,2)").alias("price"),
@@ -559,20 +567,33 @@ def q222_stream_cdc_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     delete_keys_versioned(spark, root, "o_orderkey", victims)             # v2
 
-    spark.dataSource.register(VersionedCDCDataSource)
-    sink = f"{tmp}/cdc_out"
-    q = (
-        spark.readStream.format("versioned_cdc").option("path", root).load()
-        .writeStream.foreachBatch(
-            lambda b, e: b.write.mode("append").parquet(sink)
-        )
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
-    cdc = spark.read.parquet(sink)
+def _capture_cdc_stream(spark: SparkSession, root: str, work_dir: str) -> DataFrame:
+    """Drain the change stream of the table at ``root`` (the
+    ``versioned_cdc`` source, availableNow) into the versioned table
+    ``work_dir/cdc_out``, one exactly-once epoch commit per micro-batch,
+    checkpointed at ``work_dir/ckpt``; returns the captured changes. A
+    re-run after a crash between the sink commit and the checkpoint commit
+    replays the epoch, and the sink skips it."""
+    from python_async_sample_spark.sources.versioned import read_version
+    from python_async_sample_spark.streaming.cdc_source import VersionedCDCDataSource
+    from python_async_sample_spark.streaming.jobs import drain_to_versioned
+
+    spark.dataSource.register(VersionedCDCDataSource)
+    sink = f"{work_dir}/cdc_out"
+    drain_to_versioned(
+        spark,
+        spark.readStream.format("versioned_cdc").option("path", root).load(),
+        sink,
+        f"{work_dir}/ckpt",
+    )
+    return read_version(spark, sink)
+
+
+def _net_cdc_rollup(cdc: DataFrame) -> DataFrame:
+    """Net each version's insert/delete multisets of the captured changes
+    and roll them up to (commit_version, change_type, n_rows,
+    total_price)."""
     cols = ["o_orderkey", "o_orderstatus", "price"]
     # Net the insert/delete multisets via grouped counts: exceptAll keeps
     # exactly max(n_insert - n_delete, 0) copies of each distinct row (and

@@ -15,6 +15,8 @@ from functools import lru_cache
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from python_async_sample_spark.sources import hadoop_fs
+
 # The driver-provided star schema (TESTDATA.md).
 TABLES = (
     "region",
@@ -80,6 +82,32 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     for c in ns_cols:
         df = df.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
     return df
+
+
+def read_parquet_stream(
+    spark: SparkSession, path: str, probe: str | None = None, **options: str
+) -> DataFrame:
+    """File-source stream over the parquet under ``path``; ``options`` go to
+    the stream reader (``maxFilesPerTrigger``, ``pathGlobFilter``).
+
+    Streams declare their schema up front: it is read from the footer of
+    ``probe``, a data file of the source (default: the first one under
+    ``path``). ``probe``'s TIMESTAMP(NANOS) columns are converted as
+    :func:`load_table` converts them. Pass it only for copies of the
+    testdata files: pyarrow reports the INT96 timestamps Spark writes as
+    nanos too.
+    """
+    pin_reader_conf(spark)
+    ns_cols = _nanos_timestamp_columns(probe) if probe else ()
+    if ns_cols:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    reader = spark.readStream.schema(hadoop_fs.parquet_schema(spark, probe or path))
+    for key, value in options.items():
+        reader = reader.option(key, value)
+    stream = reader.parquet(path)
+    for c in ns_cols:
+        stream = stream.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
+    return stream
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -1474,8 +1474,7 @@ def commit_stream_epoch(
       fingerprint, not the checkpoint, is the identity;
     * the same epoch id with a DIFFERENT fingerprint refuses loudly — a
       fresh checkpoint pointed at an old table would otherwise silently
-      drop or double its first batches (the ``drain_mv_merge`` lesson,
-      streaming/jobs.py);
+      drop or double its first batches;
     * a crash after staging but before the manifest link leaves the table
       exactly at its previous snapshot, and the engine's replay of the
       epoch commits it cleanly (orphans go to :func:`vacuum`).

@@ -11,7 +11,21 @@ same semantics:
   analog of the reference's 1-day catch-up chunk,
 * event-time windowed aggregation,
 * ``Trigger.AvailableNow`` + checkpoint → run-to-completion micro-batches
-  with exactly-once sink semantics, mirroring I3/I5.
+  (:func:`_drain`, the one place a query is started).
+
+Sinks. Every ``foreachBatch`` job that lands files commits through ONE
+exactly-once sink, :func:`drain_to_versioned`: each micro-batch is one
+atomic epoch commit to a manifest-versioned table
+(``versioned.commit_stream_epoch``), identified by (epoch id, batch
+fingerprint) in the manifest's ledger, so a replayed epoch is skipped even
+from a fresh checkpoint. Per-batch outputs (the incremental MV's and PIT
+enrichment's partial aggregates, CMS cells, transformWithState emissions,
+the CDC capture) are appended this way, and the reader folds them. Three
+sinks keep their own protocol on purpose: the complete-mode overwrite of
+:func:`run_available_now` (each batch replaces the whole result), Spark's
+built-in append-mode parquet file sink (its own ``_spark_metadata`` log),
+and JDBC (:func:`stream_events_to_jdbc_exactly_once`, a server-side
+transaction per epoch).
 
 Everything here returns/consumes ordinary DataFrames, so the streaming and
 batch paths share operator code.
@@ -20,14 +34,25 @@ batch paths share operator code.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 from contextlib import contextmanager
 from datetime import timedelta
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
-from python_async_sample_spark.sources import hadoop_fs
-from python_async_sample_spark.sources.readers import _nanos_timestamp_columns, pin_reader_conf
+from python_async_sample_spark.sources.readers import (
+    load_table,
+    pin_reader_conf,
+    read_parquet_stream,
+)
+from python_async_sample_spark.sources.versioned import (
+    commit_stream_epoch,
+    create_table,
+    read_version,
+    table_versions,
+)
 
 # State-store partitions for a bounded drain. A streaming query's state is
 # partitioned by spark.sql.shuffle.partitions *at first checkpoint*, and
@@ -35,8 +60,8 @@ from python_async_sample_spark.sources.readers import _nanos_timestamp_columns, 
 # replay of a small source that per-batch, per-partition fixed cost swamps
 # the data (measured 16 s → 3 s on the stream-stream join at sf0.1 going
 # 32 → 8). Production unbounded streams should size this to key
-# cardinality/volume instead; the env knob mirrors SPARK_GRAFT_CPUS.
-DRAIN_PARTITIONS = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8")
+# cardinality/volume instead.
+DRAIN_PARTITIONS = "8"
 
 
 @contextmanager
@@ -53,28 +78,23 @@ def bounded_drain_conf(spark: SparkSession):
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
-def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the events table.
+def _drain(writer: DataStreamWriter, checkpoint: str) -> None:
+    """Run ``writer``'s query over everything its source holds now
+    (``Trigger.AvailableNow``), checkpointed at ``checkpoint``, under
+    :func:`bounded_drain_conf`; returns once the drain has finished."""
+    with bounded_drain_conf(writer._spark):
+        writer.option("checkpointLocation", checkpoint).trigger(
+            availableNow=True
+        ).start().awaitTermination()
 
-    Schema is taken from a footer probe (streams must declare schemas up
-    front). TIMESTAMP(NANOS) columns — which Spark's parquet reader cannot
-    produce as timestamps — are read as long nanos and truncated to
-    microsecond timestamps, identically to the batch reader.
-    """
-    path = f"{sf_dir.rstrip('/')}/events.parquet"
-    pin_reader_conf(spark)
-    ns_cols = _nanos_timestamp_columns(path)
-    if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = hadoop_fs.parquet_schema(spark, path)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir.rstrip("/"))
+
+def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """File-source stream over the events table, with the batch reader's
+    timestamp handling (``readers.read_parquet_stream``)."""
+    sf_dir = sf_dir.rstrip("/")
+    return read_parquet_stream(
+        spark, sf_dir, probe=f"{sf_dir}/events.parquet", pathGlobFilter="events.parquet"
     )
-    for c in ns_cols:
-        stream = stream.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
-    return stream
 
 
 def windowed_event_counts(stream: DataFrame, window: str = "1 day") -> DataFrame:
@@ -108,17 +128,12 @@ def run_available_now(result: DataFrame, out_path: str, checkpoint: str) -> None
     stuck in state. Overwriting the sink per micro-batch is idempotent under
     retry — the same exactly-once-per-window contract the reference builds
     from delete-then-insert (I3/I5)."""
-    with bounded_drain_conf(result.sparkSession):
-        q = (
-            result.writeStream.outputMode("complete")
-            .foreachBatch(
-                lambda batch_df, _epoch: batch_df.write.mode("overwrite").parquet(out_path)
-            )
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(
+        result.writeStream.outputMode("complete").foreachBatch(
+            lambda batch_df, _epoch: batch_df.write.mode("overwrite").parquet(out_path)
+        ),
+        checkpoint,
+    )
 
 
 def stream_window_counts_to_parquet(
@@ -177,16 +192,12 @@ def stream_stream_join_to_parquet(
         F.unix_micros("purchase_ts").alias("purchase_us"),
         (F.unix_micros("purchase_ts") - F.unix_micros("click_ts")).alias("gap_us"),
     )
-    with bounded_drain_conf(spark):
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", f"{work_dir}/sink")
-            .option("checkpointLocation", f"{work_dir}/checkpoint")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(
+        joined.writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", f"{work_dir}/sink"),
+        f"{work_dir}/checkpoint",
+    )
     return spark.read.parquet(f"{work_dir}/sink")
 
 
@@ -202,8 +213,6 @@ def stream_static_enrich_to_parquet(
     stateless join needs no watermark; the downstream complete-mode agg
     drains through the same foreachBatch sink as the windowed counts.
     """
-    from python_async_sample_spark.sources.readers import load_table
-
     stream = read_events_stream(spark, sf_dir)
     cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_nationkey"
@@ -280,15 +289,7 @@ def stream_dedup_counts_to_parquet(
     events_path = f"{sf_dir.rstrip('/')}/events.parquet"
     shutil.copy(events_path, f"{src_dir}/00_events.parquet")
     shutil.copy(events_path, f"{src_dir}/01_events_redelivered.parquet")
-
-    pin_reader_conf(spark)
-    ns_cols = _nanos_timestamp_columns(events_path)
-    if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = hadoop_fs.parquet_schema(spark, src_dir)
-    stream = spark.readStream.schema(schema).parquet(src_dir)
-    for c in ns_cols:
-        stream = stream.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
+    stream = read_parquet_stream(spark, src_dir, probe=f"{src_dir}/00_events.parquet")
 
     counts = (
         stream.dropDuplicates(["event_id"])
@@ -326,19 +327,9 @@ def stream_bounded_dedup_counts_to_parquet(
     """
     src_dir = f"{work_dir}/src"
     _stage_source_with_sentinels(sf_dir, src_dir, copies=2)
-
-    pin_reader_conf(spark)
-    ns_cols = _nanos_timestamp_columns(f"{src_dir}/00_events.parquet")
-    if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = hadoop_fs.parquet_schema(spark, src_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
+    stream = read_parquet_stream(
+        spark, src_dir, probe=f"{src_dir}/00_events.parquet", maxFilesPerTrigger="1"
     )
-    for c in ns_cols:
-        stream = stream.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
 
     counts = (
         stream.withWatermark("ts", redelivery_horizon)
@@ -355,16 +346,12 @@ def stream_bounded_dedup_counts_to_parquet(
             "sum_value",
         )
     )
-    with bounded_drain_conf(spark):
-        q = (
-            counts.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", f"{work_dir}/sink")
-            .option("checkpointLocation", f"{work_dir}/checkpoint")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(
+        counts.writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", f"{work_dir}/sink"),
+        f"{work_dir}/checkpoint",
+    )
     return (
         spark.read.parquet(f"{work_dir}/sink")
         .where(F.col("event_type") != "__sentinel__")
@@ -388,19 +375,9 @@ def stream_session_stats_to_parquet(
     lag/running-sum sessionizer (operators/sessionize.py) — same oracle."""
     src_dir = f"{work_dir}/src"
     _stage_source_with_sentinels(sf_dir, src_dir)
-
-    pin_reader_conf(spark)
-    ns_cols = _nanos_timestamp_columns(f"{src_dir}/00_events.parquet")
-    if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = hadoop_fs.parquet_schema(spark, src_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
+    stream = read_parquet_stream(
+        spark, src_dir, probe=f"{src_dir}/00_events.parquet", maxFilesPerTrigger="1"
     )
-    for c in ns_cols:
-        stream = stream.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
 
     sessions = (
         stream.withWatermark("ts", delay)
@@ -412,35 +389,18 @@ def stream_session_stats_to_parquet(
         )
         .select("user_id", "n_events", "start_us", "end_us")
     )
-    with bounded_drain_conf(spark):
-        q = (
-            sessions.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", f"{work_dir}/sink")
-            .option("checkpointLocation", f"{work_dir}/checkpoint")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(
+        sessions.writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", f"{work_dir}/sink"),
+        f"{work_dir}/checkpoint",
+    )
 
     from pyspark.sql.window import Window as W
 
     out = spark.read.parquet(f"{work_dir}/sink").where(F.col("user_id") >= 0)
     w = W.partitionBy("user_id").orderBy("start_us")
     return out.withColumn("session_no", F.row_number().over(w).cast("bigint"))
-
-
-def _latest_mv_version(mv_root: str) -> str | None:
-    """The newest committed MV snapshot dir (``v*`` with Spark's _SUCCESS
-    marker) — readers never see a half-written version."""
-    import glob
-
-    done = [
-        d
-        for d in sorted(glob.glob(f"{mv_root}/v*"))
-        if os.path.exists(f"{d}/_SUCCESS")
-    ]
-    return done[-1] if done else None
 
 
 def _batch_fingerprint(batch_df: DataFrame) -> str:
@@ -458,137 +418,94 @@ def _batch_fingerprint(batch_df: DataFrame) -> str:
     return f"{row['n']}:{row['h']}"
 
 
+def drain_to_versioned(
+    spark: SparkSession,
+    stream: DataFrame,
+    root: str,
+    checkpoint: str,
+    transform: Callable[[DataFrame, int], DataFrame] | None = None,
+) -> None:
+    """Drain ``stream`` into the manifest-versioned table at ``root``, one
+    exactly-once :func:`versioned.commit_stream_epoch` per micro-batch.
+
+    Each batch commits ``transform(batch_df, epoch_id)`` (default: the batch
+    itself), identified by its epoch id and the :func:`_batch_fingerprint`
+    of the INPUT batch. So a reader never sees part of an epoch (one atomic
+    manifest commit each); an epoch the engine replays because the sink
+    committed but the checkpoint did not is skipped, even from a fresh
+    checkpoint; and a fresh checkpoint whose epoch ids carry different
+    data raises instead of silently skipping or doubling it. The reference
+    gets the same guarantee by deleting, then re-inserting, a window
+    (``dbs/nikon.py:117-145``). If ``root`` holds no table yet, the first
+    epoch creates it, empty, with its output's schema."""
+
+    def commit(batch_df: DataFrame, epoch_id: int) -> None:
+        out = batch_df if transform is None else transform(batch_df, epoch_id)
+        if not table_versions(root):
+            create_table(spark, root, out.limit(0), n_files=1)
+        commit_stream_epoch(spark, root, out, epoch_id, _batch_fingerprint(batch_df))
+
+    _drain(stream.writeStream.foreachBatch(commit), checkpoint)
+
+
 def stream_incremental_mv_to_parquet(
     spark: SparkSession, sf_dir: str, work_dir: str, n_source_files: int = 4
 ) -> DataFrame:
     """Incrementally-maintained materialized view: per-(user, event_type)
-    running aggregates merged per micro-batch — the streaming replacement
-    for q29's full recompute.
+    running aggregates maintained per micro-batch — the streaming
+    replacement for q29's full recompute.
 
-    Each ``foreachBatch`` computes the batch's PARTIAL aggregates (count,
-    sum — mergeable by summation), unions them with the previous snapshot
-    and re-aggregates, then commits a NEW versioned snapshot dir
-    (``v<epoch>`` + _SUCCESS marker). Readers take the latest committed
-    version, so a crash mid-write is invisible (the poor-man's snapshot
-    isolation a transactional table format provides natively; swap in
-    Delta/Iceberg ``MERGE INTO`` at production scale). The checkpoint
-    makes batch replay exactly-once, and the merge cost per batch is
-    O(batch + |view|), never O(history of events).
+    Each micro-batch appends its PARTIAL aggregates (count, sum — mergeable
+    by summation) as one exactly-once epoch of a versioned table
+    (:func:`drain_mv_partials`); the view is those partials folded by one
+    ``groupBy`` (:func:`read_mv`). A batch costs O(batch), never
+    O(|view|) or O(history of events), and a reader sees whole epochs only.
 
     The source is staged as ``n_source_files`` files with
-    maxFilesPerTrigger=1, so the view provably survives multiple
-    incremental merges before the final comparison."""
+    maxFilesPerTrigger=1, so the view provably spans several epochs before
+    the final comparison."""
     src_dir = f"{work_dir}/src"
-    mv_root = f"{work_dir}/mv"
-    os.makedirs(mv_root, exist_ok=True)
-
-    pin_reader_conf(spark)
-    events_path = f"{sf_dir.rstrip('/')}/events.parquet"
-    ns_cols = _nanos_timestamp_columns(events_path)
-    if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    ev = spark.read.parquet(events_path)
+    ev = load_table(spark, sf_dir, "events")
     # deterministic hash split (not repartition round-robin) so each staged
     # file's membership is stable across runs
     ev.withColumn("__f", F.pmod(F.xxhash64("event_id"), F.lit(n_source_files))).repartition(
         n_source_files, "__f"
     ).drop("__f").write.mode("overwrite").parquet(src_dir)
 
-    drain_mv_merge(spark, src_dir, work_dir)
-
-    latest = _latest_mv_version(mv_root)
-    assert latest is not None, "no committed MV snapshot"
-    return spark.read.parquet(latest)
+    drain_mv_partials(spark, src_dir, work_dir)
+    return read_mv(spark, work_dir)
 
 
-def drain_mv_merge(spark: SparkSession, src_dir: str, work_dir: str) -> None:
-    """One AvailableNow drain of the MV-merge stream over whatever source
-    files currently exist. Re-invoking with the SAME work_dir resumes from
-    the checkpoint: already-committed batches are never re-merged (that is
-    the crash-recovery contract — tests restart the drain mid-corpus and
-    the final view must still equal the batch aggregate)."""
-    mv_root = f"{work_dir}/mv"
-    os.makedirs(mv_root, exist_ok=True)
-    schema = hadoop_fs.parquet_schema(spark, src_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-
-    def merge(batch_df: DataFrame, epoch_id: int) -> None:
-        # Epoch-replay idempotence: if this epoch's snapshot is already
-        # COMMITTED (crash landed between the snapshot's _SUCCESS and the
-        # streaming commit log), re-merging would double-count the batch
-        # into its own output AND overwrite the directory being read as
-        # `prev` — skip; the work is durably done.  A half-written v{N}
-        # (no _SUCCESS) is invisible to _latest_mv_version and safely
-        # overwritten below.
-        #
-        # Epoch ids are only unique per CHECKPOINT lifetime, so `v{epoch}`
-        # alone cannot distinguish a genuine replay from a FRESH checkpoint
-        # pointed at an old mv_root (where skipping batch 0 would silently
-        # drop data).  A content fingerprint of the batch, persisted in a
-        # sidecar committed BEFORE the snapshot, disambiguates: matching
-        # fingerprint → true replay, skip; anything else → refuse loudly
-        # (mv_root and checkpoint must be created/deleted together).
-        snap = f"{mv_root}/v{epoch_id:05d}"
-        fp_path = f"{snap}.fp"
-        fp = _batch_fingerprint(batch_df)
-        if os.path.exists(f"{snap}/_SUCCESS"):
-            if not os.path.exists(fp_path):
-                # legacy snapshot (committed before fingerprints existed):
-                # the new-lifetime hazard cannot apply — every snapshot this
-                # code writes gets a sidecar first — so this is the old
-                # crash-window replay; skip like the pre-fingerprint code
-                # did, but say so.
-                import warnings
-
-                warnings.warn(
-                    f"MV snapshot {snap} has no batch-fingerprint sidecar "
-                    "(committed by a pre-fingerprint version); treating the "
-                    "replay as genuine and skipping the merge.",
-                    stacklevel=2,
-                )
-                return
-            with open(fp_path, encoding="ascii") as fh:
-                committed_fp = fh.read().strip()
-            if committed_fp == fp:
-                return  # genuine epoch replay — durably merged already
-            raise RuntimeError(
-                f"MV snapshot {snap} is committed but its batch fingerprint "
-                f"({committed_fp!r}) does not match this batch ({fp!r}): the "
-                "checkpoint and mv_root are from different stream lifetimes. "
-                "Delete (or move) BOTH together and re-drain — skipping here "
-                "would silently drop the new batch."
-            )
-        with open(fp_path, "w", encoding="ascii") as fh:
-            fh.write(fp)
-        partial = batch_df.groupBy("user_id", "event_type").agg(
+def drain_mv_partials(spark: SparkSession, src_dir: str, work_dir: str) -> None:
+    """One AvailableNow drain of the MV stream over whatever source files
+    currently exist, one file per micro-batch, into ``work_dir/mv``.
+    Re-invoking with the SAME work_dir resumes from the checkpoint:
+    committed epochs are never appended twice (tests restart the drain
+    mid-corpus and the final view must still equal the batch aggregate)."""
+    stream = read_parquet_stream(spark, src_dir, maxFilesPerTrigger="1")
+    drain_to_versioned(
+        spark,
+        stream,
+        f"{work_dir}/mv",
+        f"{work_dir}/checkpoint",
+        lambda batch_df, _epoch: batch_df.groupBy("user_id", "event_type").agg(
             F.count(F.lit(1)).cast("bigint").alias("n_events"),
             F.sum("value").alias("sum_value"),
-        )
-        prev = _latest_mv_version(mv_root)
-        if prev is not None:
-            partial = (
-                spark.read.parquet(prev)
-                .unionByName(partial)
-                .groupBy("user_id", "event_type")
-                .agg(
-                    F.sum("n_events").cast("bigint").alias("n_events"),
-                    F.sum("sum_value").alias("sum_value"),
-                )
-            )
-        partial.write.mode("overwrite").parquet(snap)
+        ),
+    )
 
-    with bounded_drain_conf(spark):
-        q = (
-            stream.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", f"{work_dir}/checkpoint")
-            .trigger(availableNow=True)
-            .start()
+
+def read_mv(spark: SparkSession, work_dir: str) -> DataFrame:
+    """The MV as of its newest epoch: the appended partials summed per
+    (user_id, event_type)."""
+    return (
+        read_version(spark, f"{work_dir}/mv")
+        .groupBy("user_id", "event_type")
+        .agg(
+            F.sum("n_events").cast("bigint").alias("n_events"),
+            F.sum("sum_value").alias("sum_value"),
         )
-        q.awaitTermination()
+    )
 
 
 def stream_score_documents_to_parquet(
@@ -611,24 +528,14 @@ def stream_score_documents_to_parquet(
         n_source_files, "__f"
     ).drop("__f").write.mode("overwrite").parquet(src_dir)
 
-    schema = hadoop_fs.parquet_schema(spark, src_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
+    stream = read_parquet_stream(spark, src_dir, maxFilesPerTrigger="1")
     scored = batch_score(stream, "text", "score")
-
-    with bounded_drain_conf(spark):
-        q = (
-            scored.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", f"{work_dir}/sink")
-            .option("checkpointLocation", f"{work_dir}/checkpoint")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(
+        scored.writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", f"{work_dir}/sink"),
+        f"{work_dir}/checkpoint",
+    )
     return spark.read.parquet(f"{work_dir}/sink")
 
 
@@ -663,39 +570,6 @@ def stream_drift_bins_to_parquet(
     return spark.read.parquet(out_path)
 
 
-def drain_epoch_partials(
-    spark: SparkSession,
-    stream: DataFrame,
-    transform,
-    out_path: str,
-    checkpoint: str,
-) -> DataFrame:
-    """Run ``transform(batch_df)`` on each micro-batch and land the result
-    in an epoch-keyed subdirectory — the exactly-once partials recipe:
-    deterministic ``epoch=<id>`` paths are overwrite-idempotent under batch
-    retry (a replayed epoch rewrites its own directory, never double-lands),
-    and the checkpoint guarantees each epoch is committed at most once.
-    Returns the merged readout (all epochs' rows); callers aggregate the
-    mergeable partials.  Shared by every per-batch-partials streaming job
-    (PIT enrich, CMS cells) so the idempotence contract lives in ONE place."""
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        transform(batch_df).write.mode("overwrite").parquet(
-            f"{out_path}/epoch={epoch_id}"
-        )
-
-    with bounded_drain_conf(spark):
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(out_path)
-
-
-
 def stream_pit_enrich_to_parquet(
     spark: SparkSession,
     sf_dir: str,
@@ -710,12 +584,11 @@ def stream_pit_enrich_to_parquet(
     facts plus the static history; batching cannot change any row's
     answer).
 
-    Per-batch partial counts land in epoch-keyed subdirectories
-    (deterministic names → overwrite-idempotent under batch retry, the
-    same exactly-once recipe as the MV sink); the final readout merges the
-    mergeable partials with one small groupBy."""
+    Per-batch partial counts are appended to the versioned table at
+    ``out_path`` as exactly-once epochs (:func:`drain_to_versioned`, the
+    same sink as the MV); returns the partials, which the caller merges
+    with one small groupBy."""
     from python_async_sample_spark.operators.asof import asof_join
-    from python_async_sample_spark.sources.readers import load_table
 
     ev_static = load_table(spark, sf_dir, "events")
     profile = (
@@ -725,7 +598,7 @@ def stream_pit_enrich_to_parquet(
     )
     stream = read_events_stream(spark, sf_dir)
 
-    def enrich(batch_df: DataFrame) -> DataFrame:
+    def enrich(batch_df: DataFrame, _epoch: int) -> DataFrame:
         fact = batch_df.select("user_id", "ts", "event_type")
         return (
             asof_join(fact, profile, ["user_id"], "ts", "ts", payload_cols=["state"])
@@ -736,7 +609,8 @@ def stream_pit_enrich_to_parquet(
             .agg(F.count(F.lit(1)).alias("n_part"))
         )
 
-    return drain_epoch_partials(spark, stream, enrich, out_path, checkpoint)
+    drain_to_versioned(spark, stream, out_path, checkpoint, enrich)
+    return read_version(spark, out_path)
 
 
 def stream_cms_cells_to_parquet(
@@ -749,59 +623,24 @@ def stream_cms_cells_to_parquet(
 ) -> DataFrame:
     """Streaming count-min sketch maintenance (q165): each micro-batch
     builds its own depth×width cell relation (bounded regardless of batch
-    size) and lands it in an epoch-keyed overwrite-idempotent directory;
-    the readout merges partials by CELL SUM — the CMS merge law
+    size) and appends it to the versioned table at ``out_path`` as one
+    exactly-once epoch (:func:`drain_to_versioned`); the readout merges
+    partials by CELL SUM — the CMS merge law
     (test_sketches pins merged ≡ whole-stream).  This is the streaming
     face of the sketch-state story: frequency state bounded at depth×width
     counters forever, on an unbounded stream."""
     from python_async_sample_spark.operators.sketches import cms_build
 
-    stream = read_events_stream(spark, sf_dir)
-    partials = drain_epoch_partials(
+    drain_to_versioned(
         spark,
-        stream,
-        lambda batch_df: cms_build(batch_df, "user_id", depth=depth, width=width),
+        read_events_stream(spark, sf_dir),
         out_path,
         checkpoint,
+        lambda batch_df, _epoch: cms_build(batch_df, "user_id", depth=depth, width=width),
     )
-    return partials.groupBy("row", "col").agg(
+    return read_version(spark, out_path).groupBy("row", "col").agg(
         F.sum("cnt").cast("bigint").alias("cnt")
     )
-
-
-def stream_append_to_versioned(
-    spark: SparkSession, sf_dir: str, root: str, checkpoint: str
-) -> None:
-    """Drain the events stream into a MANIFEST-VERSIONED table with
-    exactly-once epoch commits (``versioned.commit_stream_epoch``).
-
-    Strictly stronger than the epoch-keyed-directory recipe
-    (:func:`drain_epoch_partials`): each micro-batch append is one atomic
-    manifest commit, so a reader NEVER sees a partially-landed epoch, a
-    replayed epoch is skipped by (id, content-fingerprint) identity — even
-    from a FRESH checkpoint, which the directory recipe can't distinguish —
-    and a fresh checkpoint carrying DIFFERENT data under a reused epoch id
-    refuses loudly instead of silently skipping (the drain_mv_merge
-    hazard, solved here without sidecar files)."""
-    from python_async_sample_spark.sources.versioned import commit_stream_epoch
-
-    stream = read_events_stream(spark, sf_dir).select(
-        "event_id", "user_id", "event_type", "value", "ts"
-    )
-
-    def append(batch_df: DataFrame, epoch_id: int) -> None:
-        commit_stream_epoch(
-            spark, root, batch_df, epoch_id, _batch_fingerprint(batch_df)
-        )
-
-    with bounded_drain_conf(spark):
-        q = (
-            stream.writeStream.foreachBatch(append)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
 
 
 def stream_events_to_jdbc_exactly_once(
@@ -835,12 +674,5 @@ def stream_events_to_jdbc_exactly_once(
         )
         epochs.append(int(epoch_id))
 
-    with bounded_drain_conf(spark):
-        q = (
-            stream.writeStream.foreachBatch(deliver)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(stream.writeStream.foreachBatch(deliver), checkpoint)
     return len(epochs)

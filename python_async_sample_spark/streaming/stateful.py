@@ -37,11 +37,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from python_async_sample_spark.sources import hadoop_fs
-from python_async_sample_spark.sources.readers import _nanos_timestamp_columns, pin_reader_conf
+from python_async_sample_spark.sources.readers import load_table, read_parquet_stream
+from python_async_sample_spark.sources.versioned import read_version
 from python_async_sample_spark.streaming.jobs import (
+    _drain,
     _stage_source_with_sentinels,
-    bounded_drain_conf,
+    drain_to_versioned,
 )
 
 _OUT_SCHEMA = (
@@ -123,19 +124,9 @@ def stream_user_profiles_to_parquet(
     stream; returns the drained sink."""
     src_dir = f"{work_dir}/src"
     _stage_source_with_sentinels(sf_dir, src_dir)
-
-    pin_reader_conf(spark)
-    ns_cols = _nanos_timestamp_columns(f"{src_dir}/00_events.parquet")
-    if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = hadoop_fs.parquet_schema(spark, src_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
+    stream = read_parquet_stream(
+        spark, src_dir, probe=f"{src_dir}/00_events.parquet", maxFilesPerTrigger="1"
     )
-    for c in ns_cols:
-        stream = stream.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
 
     gap_us = gap_minutes * 60 * 1_000_000
     profiles = (
@@ -154,18 +145,15 @@ def stream_user_profiles_to_parquet(
     # The stateful shuffle width is fixed at stream start and baked into the
     # checkpoint; at the session's batch width every micro-batch pays that
     # many Arrow→Python tasks for a handful of keys per partition —
-    # bounded_drain_conf sizes it to the replay and restores the session
-    # conf. On a real cluster this is the one knob to size to executor count.
-    with bounded_drain_conf(spark):
-        q = (
-            profiles.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", f"{work_dir}/sink")
-            .option("checkpointLocation", f"{work_dir}/checkpoint")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    # _drain's bounded_drain_conf sizes it to the replay and restores the
+    # session conf. On a real cluster this is the one knob to size to
+    # executor count.
+    _drain(
+        profiles.writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", f"{work_dir}/sink"),
+        f"{work_dir}/checkpoint",
+    )
     # The sentinel key never times out (its own timeout chases the final
     # watermark) — filtered with the same guard q60 uses.
     return spark.read.parquet(f"{work_dir}/sink").where(F.col("user_id") >= 0)
@@ -265,12 +253,13 @@ def stream_profiles_tws_to_parquet(
     The source is staged as three TIME-ORDERED chunks (maxFilesPerTrigger=1
     → three micro-batches), so state genuinely persists and transitions
     across batches in the RocksDB store.  Each batch EMITS the key's
-    updated profile (update-mode semantics); per-batch emissions land in
-    epoch-keyed partials and the readout keeps each user's LATEST — which
-    equals the full-history profile regardless of how the stream was
-    batched.  No timers needed: unlike q75's emit-once-on-timeout contract,
-    update-mode emission needs no watermark flush, so no sentinel batches
-    either."""
+    updated profile (update-mode semantics); each batch's emissions, stamped
+    with their ``epoch``, are appended to a versioned table as one
+    exactly-once epoch (``jobs.drain_to_versioned``), and the readout keeps
+    each user's LATEST — which equals the full-history profile regardless
+    of how the stream was batched.  No timers needed: unlike q75's
+    emit-once-on-timeout contract, update-mode emission needs no watermark
+    flush, so no sentinel batches either."""
     import glob as _glob
     import os as _os
 
@@ -288,21 +277,12 @@ def stream_profiles_tws_to_parquet(
 
     from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 
-    from python_async_sample_spark.streaming.jobs import drain_epoch_partials
-
     gap_us = gap_minutes * 60 * 1_000_000
     src = f"{work_dir}/src"
     _os.makedirs(src, exist_ok=True)
-    pin_reader_conf(spark)
-    events_path = f"{sf_dir.rstrip('/')}/events.parquet"
-    ns_cols = _nanos_timestamp_columns(events_path)
-    if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    full = spark.read.parquet(events_path)
-    ts_us = (
-        F.expr("`ts` div 1000") if ns_cols else F.unix_micros("ts")
+    base = load_table(spark, sf_dir, "events").select(
+        "user_id", F.unix_micros("ts").alias("ts_us"), "value"
     )
-    base = full.select("user_id", ts_us.alias("ts_us"), "value")
     lo, hi = base.agg(F.min("ts_us"), F.max("ts_us")).collect()[0]
     cut1, cut2 = lo + (hi - lo) // 3, lo + 2 * (hi - lo) // 3
     for i, cond in enumerate(
@@ -358,12 +338,7 @@ def stream_profiles_tws_to_parquet(
         def close(self) -> None:
             pass
 
-    schema = hadoop_fs.parquet_schema(spark, f"{src}/0_chunk.parquet")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
+    stream = read_parquet_stream(spark, src, maxFilesPerTrigger="1")
     old_provider = spark.conf.get(
         "spark.sql.streaming.stateStore.providerClass", None
     )
@@ -378,8 +353,14 @@ def stream_profiles_tws_to_parquet(
             outputMode="Update",
             timeMode="None",
         )
-        parts = drain_epoch_partials(
-            spark, out, lambda b: b, f"{work_dir}/sink", f"{work_dir}/checkpoint"
+        drain_to_versioned(
+            spark,
+            out,
+            f"{work_dir}/sink",
+            f"{work_dir}/checkpoint",
+            lambda batch_df, epoch_id: batch_df.withColumn(
+                "epoch", F.lit(epoch_id).cast("bigint")
+            ),
         )
     finally:
         if old_provider is not None:
@@ -392,5 +373,8 @@ def stream_profiles_tws_to_parquet(
         W.partitionBy("user_id").orderBy(F.desc("epoch"))
     )
     return (
-        parts.withColumn("__rk", latest).where(F.col("__rk") == 1).drop("__rk", "epoch")
+        read_version(spark, f"{work_dir}/sink")
+        .withColumn("__rk", latest)
+        .where(F.col("__rk") == 1)
+        .drop("__rk", "epoch")
     )

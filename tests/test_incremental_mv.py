@@ -1,63 +1,62 @@
-"""Streaming incremental-MV maintenance: versioned snapshots + merge."""
+"""Streaming incremental-MV maintenance: exactly-once partial epochs folded
+at read time."""
 
 from __future__ import annotations
 
 import glob
 import os
+import shutil
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
+from python_async_sample_spark.sources.readers import pin_reader_conf
+from python_async_sample_spark.sources.versioned import _read_manifest, current_version
 from python_async_sample_spark.streaming.jobs import (
-    _latest_mv_version,
+    drain_mv_partials,
+    read_mv,
     stream_incremental_mv_to_parquet,
 )
+
+
+def _view(df) -> dict:
+    return {
+        (r["user_id"], r["event_type"]): (r["n_events"], round(r["sum_value"], 4))
+        for r in df.collect()
+    }
+
+
+def _batch_view(ev) -> dict:
+    return _view(
+        ev.groupBy("user_id", "event_type").agg(
+            F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("sum_value")
+        )
+    )
+
+
+def _events(spark, sf_dir):
+    pin_reader_conf(spark)
+    return spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet")
 
 
 def test_mv_merges_across_multiple_batches_and_matches_batch_agg(spark, sf_dir):
     tmp = tempfile.mkdtemp(prefix="mv_test_")
     out = stream_incremental_mv_to_parquet(spark, sf_dir, tmp, n_source_files=4)
-    versions = sorted(glob.glob(f"{tmp}/mv/v*"))
-    assert len(versions) >= 2, versions  # the view was merged incrementally
-    batch = (
-        spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet")
-        .groupBy("user_id", "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("sum_value"))
-    )
-    got = {
-        (r["user_id"], r["event_type"]): (r["n_events"], round(r["sum_value"], 4))
-        for r in out.collect()
-    }
-    want = {
-        (r["user_id"], r["event_type"]): (r["n_events"], round(r["sum_value"], 4))
-        for r in batch.collect()
-    }
-    assert got == want
-
-
-def test_uncommitted_snapshot_is_invisible(tmp_path):
-    root = str(tmp_path)
-    os.makedirs(f"{root}/v00001")
-    open(f"{root}/v00001/_SUCCESS", "w").close()
-    os.makedirs(f"{root}/v00002")  # no _SUCCESS: a crash mid-write
-    assert _latest_mv_version(root) == f"{root}/v00001"
-    assert _latest_mv_version(str(tmp_path / "empty")) is None
+    mv = f"{tmp}/mv"
+    epochs = _read_manifest(mv, current_version(mv))["epochs"]
+    assert len(epochs) >= 2, epochs  # the view was maintained incrementally
+    assert _view(out) == _batch_view(_events(spark, sf_dir))
 
 
 def test_restart_from_checkpoint_resumes_exactly_once(spark, sf_dir):
     """Crash-recovery contract: drain half the source, 'restart' (a second
     drain with the same checkpoint), add the remaining files, drain again —
-    no batch is replayed into the view, and the final snapshot still equals
+    no batch is replayed into the view, and the folded view still equals
     the batch aggregate."""
-    import shutil
-
-    from python_async_sample_spark.sources.readers import pin_reader_conf
-    from python_async_sample_spark.streaming.jobs import drain_mv_merge
-
     tmp = tempfile.mkdtemp(prefix="mv_restart_")
     src, staged = f"{tmp}/src", f"{tmp}/staged"
-    pin_reader_conf(spark)
-    ev = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet")
+    ev = _events(spark, sf_dir)
     ev.withColumn("__f", F.pmod(F.xxhash64("event_id"), F.lit(4))).repartition(
         4, "__f"
     ).drop("__f").write.mode("overwrite").parquet(staged)
@@ -68,67 +67,40 @@ def test_restart_from_checkpoint_resumes_exactly_once(spark, sf_dir):
     for f in files[:half]:
         shutil.copy(f, src)
 
-    drain_mv_merge(spark, src, tmp)  # first run: 2 batches
-    versions_after_first = sorted(glob.glob(f"{tmp}/mv/v*"))
-    assert len(versions_after_first) >= 1
+    drain_mv_partials(spark, src, tmp)  # first run
+    epochs_after_first = _read_manifest(f"{tmp}/mv", current_version(f"{tmp}/mv"))["epochs"]
+    assert len(epochs_after_first) == half
 
     for f in files[half:]:
         shutil.copy(f, src)
-    drain_mv_merge(spark, src, tmp)  # restart: must merge ONLY the new files
+    drain_mv_partials(spark, src, tmp)  # restart: must append ONLY the new files
 
-    from python_async_sample_spark.streaming.jobs import _latest_mv_version
-
-    final = spark.read.parquet(_latest_mv_version(f"{tmp}/mv"))
-    batch = ev.groupBy("user_id", "event_type").agg(
-        F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("sum_value")
-    )
-    got = {
-        (r["user_id"], r["event_type"]): (r["n_events"], round(r["sum_value"], 4))
-        for r in final.collect()
-    }
-    want = {
-        (r["user_id"], r["event_type"]): (r["n_events"], round(r["sum_value"], 4))
-        for r in batch.collect()
-    }
-    assert got == want
+    assert _view(read_mv(spark, tmp)) == _batch_view(ev)
 
 
 def test_replayed_epoch_is_not_double_merged(spark, sf_dir):
-    """Review fix: a crash AFTER an epoch's snapshot committed (_SUCCESS)
-    but BEFORE the streaming commit log recorded the batch causes that
-    epoch to REPLAY on restart. The merge must skip it — re-merging would
-    double-count the batch into its own committed output and overwrite the
-    directory being read. Simulated by deleting the newest streaming
-    commit marker between two drains."""
-    import shutil
-
-    from python_async_sample_spark.sources.readers import pin_reader_conf
-    from python_async_sample_spark.streaming.jobs import _latest_mv_version, drain_mv_merge
-
+    """A crash AFTER an epoch's partials committed but BEFORE the streaming
+    commit log recorded the batch makes that epoch REPLAY on restart; the
+    sink must skip it. Here the whole checkpoint is removed, so epoch 0
+    replays from a fresh checkpoint against its own committed output: the
+    (epoch id, batch fingerprint) pair in the table's ledger matches, and
+    nothing is appended."""
     tmp = tempfile.mkdtemp(prefix="mv_replay_")
     src, staged = f"{tmp}/src", f"{tmp}/staged"
-    pin_reader_conf(spark)
-    ev = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet")
+    ev = _events(spark, sf_dir)
     ev.coalesce(1).write.mode("overwrite").parquet(staged)
     os.makedirs(src, exist_ok=True)
     for i, f in enumerate(sorted(glob.glob(f"{staged}/part-*.parquet"))):
         shutil.copy(f, f"{src}/file{i}.parquet")
 
-    drain_mv_merge(spark, src, tmp)
+    drain_mv_partials(spark, src, tmp)
+    head = current_version(f"{tmp}/mv")
 
-    # crash window: snapshot v0 is committed but the streaming commit log
-    # never recorded batch 0 — equivalent to restarting with a FRESH
-    # checkpoint against the same mv_root, which replays epoch 0 against
-    # its own already-committed output (Spark refuses hand-edited commit
-    # logs, so the lost-log crash is simulated by removing the checkpoint)
     shutil.rmtree(f"{tmp}/checkpoint")
-    drain_mv_merge(spark, src, tmp)  # replays epoch 0; must skip merging
+    drain_mv_partials(spark, src, tmp)  # replays epoch 0; must skip it
 
-    got = (
-        spark.read.parquet(_latest_mv_version(f"{tmp}/mv"))
-        .orderBy("user_id", "event_type")
-        .collect()
-    )
+    assert current_version(f"{tmp}/mv") == head
+    got = read_mv(spark, tmp).orderBy("user_id", "event_type").collect()
     want = (
         ev.groupBy("user_id", "event_type")
         .agg(
@@ -143,27 +115,21 @@ def test_replayed_epoch_is_not_double_merged(spark, sf_dir):
 
 
 def test_fresh_checkpoint_with_different_batch_refuses_loudly(spark, sf_dir):
-    """ADVICE r3 fix: epoch ids are only unique per checkpoint lifetime —
-    a FRESH checkpoint whose batch 0 differs from the old mv_root's
-    committed v00000 must NOT be silently skipped (that is data loss).
-    The batch fingerprint detects the lifetime mismatch and raises."""
-    import shutil
-
-    import pytest
-
-    from python_async_sample_spark.sources.readers import pin_reader_conf
-    from python_async_sample_spark.streaming.jobs import drain_mv_merge
+    """Epoch ids are only unique per checkpoint lifetime — a FRESH
+    checkpoint whose batch 0 differs from the view's committed epoch 0
+    must NOT be silently skipped (that is data loss). The batch
+    fingerprint in the ledger detects the lifetime mismatch and raises."""
+    from pyspark.errors.exceptions.captured import StreamingQueryException
 
     tmp = tempfile.mkdtemp(prefix="mv_fresh_ckpt_")
     src, staged = f"{tmp}/src", f"{tmp}/staged"
-    pin_reader_conf(spark)
-    ev = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet")
+    ev = _events(spark, sf_dir)
     ev.coalesce(1).write.mode("overwrite").parquet(staged)
     os.makedirs(src, exist_ok=True)
     (part,) = sorted(glob.glob(f"{staged}/part-*.parquet"))
     shutil.copy(part, f"{src}/file0.parquet")
 
-    drain_mv_merge(spark, src, tmp)  # commits v00000 for file0
+    drain_mv_partials(spark, src, tmp)  # commits epoch 0 for file0
 
     # New stream lifetime: fresh checkpoint AND a different source file —
     # its batch 0 is new data, but reuses epoch id 0.
@@ -175,40 +141,6 @@ def test_fresh_checkpoint_with_different_batch_refuses_loudly(spark, sf_dir):
     (part2,) = sorted(glob.glob(f"{tmp}/staged2/part-*.parquet"))
     shutil.copy(part2, f"{src}/other.parquet")
 
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
-    with pytest.raises(StreamingQueryException, match="different stream lifetimes"):
-        drain_mv_merge(spark, src, tmp)
-    shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_legacy_snapshot_without_sidecar_skips_replay(spark, sf_dir):
-    """A snapshot committed by the pre-fingerprint code (no .fp sidecar)
-    replaying after a crash must SKIP (the old, correct behavior) — not
-    raise a false 'different lifetimes' diagnosis."""
-    import shutil
-
-    from python_async_sample_spark.sources.readers import pin_reader_conf
-    from python_async_sample_spark.streaming.jobs import _latest_mv_version, drain_mv_merge
-
-    tmp = tempfile.mkdtemp(prefix="mv_legacy_")
-    src, staged = f"{tmp}/src", f"{tmp}/staged"
-    pin_reader_conf(spark)
-    ev = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet")
-    ev.coalesce(1).write.mode("overwrite").parquet(staged)
-    os.makedirs(src, exist_ok=True)
-    (part,) = sorted(glob.glob(f"{staged}/part-*.parquet"))
-    shutil.copy(part, f"{src}/file0.parquet")
-
-    drain_mv_merge(spark, src, tmp)
-    os.remove(f"{tmp}/mv/v00000.fp")  # simulate a pre-fingerprint commit
-    shutil.rmtree(f"{tmp}/checkpoint")  # crash-window replay of epoch 0
-
-    drain_mv_merge(spark, src, tmp)  # must warn+skip, not raise
-
-    got = (
-        spark.read.parquet(_latest_mv_version(f"{tmp}/mv"))
-        .groupBy().agg(F.sum("n_events").alias("n")).collect()[0]["n"]
-    )
-    assert got == ev.count()  # not double-merged
+    with pytest.raises(StreamingQueryException, match="different batch fingerprint"):
+        drain_mv_partials(spark, src, tmp)
     shutil.rmtree(tmp, ignore_errors=True)

@@ -252,29 +252,30 @@ def test_empty_table_snapshot_readable(spark, root):
 
 def test_stream_epoch_commit_exactly_once_and_refuses_foreign_batch(spark, sf_dir, root):
     """The streaming sink's replay identity is (epoch id, content
-    fingerprint) in the manifest op: same pair skips even from a fresh
-    checkpoint; same id with different content refuses loudly."""
+    fingerprint) in the manifest's epoch ledger: same pair skips even from
+    a fresh checkpoint; same id with different content refuses loudly."""
     import glob as _glob
 
     from python_async_sample_spark.sources.versioned import commit_stream_epoch
     from python_async_sample_spark.streaming.jobs import (
         _batch_fingerprint,
-        stream_append_to_versioned,
+        drain_to_versioned,
+        read_events_stream,
     )
 
-    seed = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", "value", "ts"
-    )
+    cols = ["event_id", "user_id", "event_type", "value", "ts"]
+    seed = load_table(spark, sf_dir, "events").select(*cols)
     create_table(spark, root, seed.limit(0), n_files=1)
     n = seed.count()
 
     base = os.path.dirname(root)
-    stream_append_to_versioned(spark, sf_dir, root, f"{base}/ckpt1")
+    stream = read_events_stream(spark, sf_dir).select(*cols)
+    drain_to_versioned(spark, stream, root, f"{base}/ckpt1")
     assert read_version(spark, root).count() == n
     v_after_first = current_version(root)
 
     # fresh checkpoint = epoch ids restart at 0; fingerprint says replay
-    stream_append_to_versioned(spark, sf_dir, root, f"{base}/ckpt2")
+    drain_to_versioned(spark, stream, root, f"{base}/ckpt2")
     assert read_version(spark, root).count() == n          # not doubled
     assert current_version(root) == v_after_first           # no new commit
 
