@@ -12,8 +12,16 @@ observe a half-applied rewrite:
   exclusive ``os.link``) — create-exclusive AND all-or-nothing, so readers
   can never observe a half-written manifest, and two racing writers cannot
   both win the same version (the loser raises and must rebase);
-* nothing is ever deleted at write time; :func:`vacuum` later removes only
-  files unreachable from every retained manifest.
+* nothing is ever deleted at write time; :func:`vacuum` later removes the
+  manifests it does not retain, then only files unreachable from every
+  retained manifest.
+
+One manifest format: every manifest carries its ``files``, ``schema``,
+``stats`` (one entry per file: row count plus the column ranges the footer
+could summarise), the ``epochs`` stream ledger, ``checks``, ``dropped`` and
+``committed_at``.  :func:`_commit` is the only writer and refuses a file it
+has no stats entry for, so every reader plans from the manifest alone and
+no reader falls back to data-file footers.
 
 A crash at ANY step leaves every committed snapshot intact and readable:
 while staging or moving data files the new files are orphans no manifest
@@ -188,42 +196,21 @@ def _collect_file_stats(root: str, names: list[str]) -> dict:
     return out
 
 
-def _carry_stats(manifest: dict, kept: list[str], new_stats: dict) -> dict:
-    """Stats for a child manifest: inherited entries for kept files (they
-    are immutable, so their stats never change) plus the new files'."""
-    parent = manifest.get("stats") or {}
-    out = {n: parent[n] for n in kept if n in parent}
-    out.update(new_stats)
-    return out
-
-
-def _file_ranges(
-    root: str, manifest: dict, key_col: str
-) -> list[tuple[str, object, object, int]]:
+def _file_ranges(manifest: dict, key_col: str) -> list[tuple[str, object, object, int]]:
     """Per-file ``(name, lo, hi, rows)`` for ``key_col``, the one input
     every keyed verb plans its affected files from, under the same rule as
     the read-side planner (:func:`prune_files_for_box`).  Ranges come from
-    the manifest's embedded stats; only a file with no stats entry at all
-    (legacy manifest) has its footer read, through
-    :func:`_collect_file_stats`, and a file gone from disk (a
-    vacuum-retained legacy epoch manifest whose data was reclaimed) is
-    left out.  Empty files are skipped (they contain no keys).  A ``None``
-    range — a column added after the file was written, or one the footers
-    couldn't summarize (decimal, bool, timestamp) — means "no evidence",
-    and every finder treats it as conservatively hit."""
-    stats = manifest.get("stats") or {}
-    legacy = [
-        n for n in manifest["files"]
-        if n not in stats and os.path.exists(f"{root}/{_DATA_DIR}/{n}")
-    ]
-    stats = {**stats, **_collect_file_stats(root, legacy)}
+    the manifest's stats alone; empty files are skipped (they contain no
+    keys).  A ``None`` range — a column added after the file was written,
+    or one the footers couldn't summarize (decimal, bool, timestamp) —
+    means "no evidence", and every finder treats it as conservatively
+    hit."""
     out = []
     for n in manifest["files"]:
-        ent = stats.get(n)
-        if ent is None or ent["rows"] == 0:
-            continue
-        lo, hi = ent["cols"].get(key_col) or (None, None)
-        out.append((n, lo, hi, ent["rows"]))
+        ent = manifest["stats"][n]
+        if ent["rows"]:
+            lo, hi = ent["cols"].get(key_col) or (None, None)
+            out.append((n, lo, hi, ent["rows"]))
     return out
 
 
@@ -469,7 +456,8 @@ def _range_join_hits_plan(
     )
 
 
-_CARRY_CHECKS = object()  # sentinel: inherit the parent manifest's checks
+# what a first commit (no parent) inherits
+_NO_PARENT = {"stats": {}, "epochs": {}, "checks": [], "dropped": [], "committed_at": 0.0}
 
 
 def _commit(
@@ -478,10 +466,10 @@ def _commit(
     schema_json: str,
     op: str,
     parent: int | None,
-    epochs: dict[str, str] | None = None,
     stats: dict | None = None,
-    checks=_CARRY_CHECKS,
-    dropped=_CARRY_CHECKS,
+    epochs: dict[str, str] | None = None,
+    checks: list[dict] | None = None,
+    dropped: list[str] | None = None,
 ) -> int:
     """Atomically publish the next manifest through
     :func:`manifest_log.publish_exclusive`: the final name is created
@@ -489,45 +477,46 @@ def _commit(
     :class:`ConcurrentWriteError`) and the complete content becomes
     visible in one step (no reader can open a torn manifest).
 
-    ``epochs`` is the exactly-once stream ledger (epoch id → batch
-    fingerprint) carried FORWARD into every child manifest, so replay
-    detection survives :func:`vacuum` dropping the ancestor manifests that
-    originally recorded each epoch."""
+    The one manifest writer, so the one place the format is decided.
+    ``stats`` holds the entries of new files (or replaces existing ones,
+    as :func:`add_file_blooms` does); a file the parent lists keeps the
+    parent's entry (files are immutable), and a file with no entry either
+    way is refused.  ``epochs``, ``checks`` and ``dropped`` left ``None``
+    inherit the parent's, so no call site can forget them:
+
+    * ``epochs`` is the exactly-once stream ledger (epoch id → batch
+      fingerprint); carried into every child, replay detection survives
+      :func:`vacuum` dropping the manifest that first recorded an epoch;
+    * CHECK constraints persist until :func:`set_check_constraints`
+      replaces them;
+    * the dropped-column ledger lets :func:`add_column` refuse a name
+      whose values still live in pre-drop data files (there is no
+      column-mapping layer)."""
     version = 0 if parent is None else parent + 1
-    carry = checks is _CARRY_CHECKS or dropped is _CARRY_CHECKS
-    try:
-        parent_m = _read_manifest(root, parent) if parent is not None else {}
-    except FileNotFoundError:
-        if carry:
-            raise
-        parent_m = {}  # vacuumed parent: nothing to carry or clamp against
-    if checks is _CARRY_CHECKS:
-        # CHECK constraints persist across every verb unless explicitly
-        # replaced (set_check_constraints) — same carry contract as the
-        # epoch ledger, resolved here so no call site can forget it
-        checks = parent_m.get("checks", [])
-    if dropped is _CARRY_CHECKS:
-        # dropped-column ledger likewise carries forever: add_column
-        # consults it to refuse resurrecting a name whose values still
-        # live in pre-drop data files (no column-mapping layer here)
-        dropped = parent_m.get("dropped", [])
-    # commit wall-clock, clamped to the parent's so AS-OF-timestamp
-    # resolution stays monotone in version order even under clock
-    # adjustment (Delta reads file mtimes and carries the same caveat;
-    # recording it in the manifest survives copies/backups that reset
-    # mtimes)
-    committed_at = max(time.time(), parent_m.get("committed_at", 0.0))
+    base = _NO_PARENT if parent is None else _read_manifest(root, parent)
+    known = {**base["stats"], **(stats or {})}
+    unknown = sorted(set(files) - known.keys())
+    if unknown:
+        raise ValueError(
+            f"commit of {root!r} v{version}: no stats entry for {len(unknown)} "
+            f"file(s) (e.g. {unknown[:3]}); stage them through _collect_file_stats"
+        )
     manifest = {
         "version": version,
         "parent": parent,
         "op": op,
         "files": sorted(files),
         "schema": schema_json,
-        "epochs": dict(epochs or {}),
-        "stats": dict(stats or {}),
-        "checks": list(checks or []),
-        "dropped": sorted(dropped or []),
-        "committed_at": committed_at,
+        "epochs": dict(base["epochs"] if epochs is None else epochs),
+        "stats": {n: known[n] for n in sorted(files)},
+        "checks": list(base["checks"] if checks is None else checks),
+        "dropped": sorted(base["dropped"] if dropped is None else dropped),
+        # commit wall-clock, clamped to the parent's so AS-OF-timestamp
+        # resolution stays monotone in version order even under clock
+        # adjustment (Delta reads file mtimes and carries the same caveat;
+        # recording it in the manifest survives copies/backups that reset
+        # mtimes)
+        "committed_at": max(time.time(), base["committed_at"]),
     }
     return mlog.publish_exclusive(
         _log(root), version, manifest,
@@ -606,22 +595,15 @@ def prune_files_for_box(
     root = root.rstrip("/")
     version = current_version(root) if version is None else version
     manifest = _read_manifest(root, version)
-    stats = manifest.get("stats") or {}
-    picked = []
-    for n in manifest["files"]:
-        ent = stats.get(n)
-        if ent is not None and ent["rows"] == 0:
-            continue
-        keep = True
-        for col, (lo, hi) in preds.items():
-            rng = ent["cols"].get(col) if ent else None
-            if rng is None:
-                continue  # no evidence — cannot exclude on this column
-            if not (rng[0] <= hi and lo <= rng[1]):
-                keep = False
-                break
-        if keep:
-            picked.append(n)
+    picked = [
+        n for n in manifest["files"]
+        if (ent := manifest["stats"][n])["rows"]
+        and all(
+            # a column with no range is no evidence: it cannot exclude
+            (rng := ent["cols"].get(col)) is None or (rng[0] <= hi and lo <= rng[1])
+            for col, (lo, hi) in preds.items()
+        )
+    ]
     return picked, len(manifest["files"]), version
 
 
@@ -697,12 +679,7 @@ def rewrite_layout(
     z = morton2(F.col(x_col), F.col(y_col))
     new_names = _stage_files(df, root, n_files, layout_col=z)
     return _commit(
-        root,
-        new_names,
-        manifest["schema"],
-        f"zorder:{x_col},{y_col}",
-        parent,
-        epochs=manifest.get("epochs"),
+        root, new_names, manifest["schema"], f"zorder:{x_col},{y_col}", parent,
         stats=_collect_file_stats(root, new_names),
     )
 
@@ -719,8 +696,9 @@ def prune_files_for_range(
     files instead of opening a million footers over the network.
 
     Sound, not just fast: any file missing a recorded range for
-    ``key_col`` (legacy manifest, unsummarizable column type, all-NULL
-    column) is INCLUDED — a skipped maybe-match would silently drop rows.
+    ``key_col`` (a column added after the file was written, an
+    unsummarizable column type, an all-NULL column) is INCLUDED — a
+    skipped maybe-match would silently drop rows.
     Empty files (rows == 0) are skipped; they contain no keys.
 
     Returns ``(picked, total_files, resolved_version)`` — same contract
@@ -790,21 +768,15 @@ def add_file_blooms(
     by_file: dict[str, dict[str, int]] = {}
     for r in rows:
         by_file.setdefault(r["__f"], {})[str(r["word"])] = r["mask"]
-    stats = {n: dict(ent) for n, ent in (manifest.get("stats") or {}).items()}
-    # legacy manifests (no embedded stats) get REAL footer stats for the
-    # files we touch — a fabricated {"rows": None} placeholder would crash
-    # every consumer that sums row counts (table_history)
-    missing = [n for n in manifest["files"] if n not in stats]
-    if missing:
-        stats.update(_collect_file_stats(root, missing))
-    for n in manifest["files"]:
-        ent = stats[n]
-        blooms = dict(ent.get("blooms") or {})
-        blooms[col] = {"m": m_bits, "k": k, "words": by_file.get(n, {})}
-        ent["blooms"] = blooms
+    stats = {
+        n: {**ent, "blooms": {
+            **ent.get("blooms", {}),
+            col: {"m": m_bits, "k": k, "words": by_file.get(n, {})},
+        }}
+        for n, ent in manifest["stats"].items()
+    }
     return _commit(
-        root, manifest["files"], manifest["schema"], f"bloom:{col}", parent,
-        epochs=manifest.get("epochs"), stats=stats,
+        root, manifest["files"], manifest["schema"], f"bloom:{col}", parent, stats=stats
     )
 
 
@@ -842,50 +814,38 @@ def prune_files_for_points(
     root = root.rstrip("/")
     version = current_version(root) if version is None else version
     manifest = _read_manifest(root, version)
-    stats = manifest.get("stats") or {}
 
     if len(keys) > _BLOOM_PROBE_MAX_KEYS:
         from bisect import bisect_left
 
         targets = sorted(k for k in keys if k is not None)
-        picked = []
-        for n in manifest["files"]:
-            ent = stats.get(n)
-            if ent is not None and ent.get("rows") == 0:
-                continue
-            rng = ent["cols"].get(col) if ent else None
-            if rng is None:
-                picked.append(n)  # no evidence — conservatively affected
-                continue
-            i = bisect_left(targets, rng[0])
-            if i < len(targets) and targets[i] <= rng[1]:
-                picked.append(n)
+        picked = [
+            n for n in manifest["files"]
+            if (ent := manifest["stats"][n])["rows"]
+            and (
+                (rng := ent["cols"].get(col)) is None  # no evidence: affected
+                or (i := bisect_left(targets, rng[0])) < len(targets)
+                and targets[i] <= rng[1]
+            )
+        ]
         return picked, len(manifest["files"]), version
 
-    picked = []
-    for n in manifest["files"]:
-        ent = stats.get(n)
-        if ent is not None and ent.get("rows") == 0:
-            continue
-        bloom = (ent or {}).get("blooms", {}).get(col)
-        if bloom is None:
-            picked.append(n)  # no evidence — conservatively affected
-            continue
-        m, kk, words = bloom["m"], bloom["k"], bloom["words"]
-        hit = False
-        for key in keys:
-            ok = True
-            for i in range(kk):
-                pos = portable_hash_py(int(key), i) % m
-                w = words.get(str(pos // 64))
-                if w is None or not ((w >> (pos % 64)) & 1):
-                    ok = False
-                    break
-            if ok:
-                hit = True
-                break
-        if hit:
-            picked.append(n)
+    def _may_contain(bloom: dict, key) -> bool:
+        for i in range(bloom["k"]):
+            pos = portable_hash_py(int(key), i) % bloom["m"]
+            w = bloom["words"].get(str(pos // 64))
+            if w is None or not ((w >> (pos % 64)) & 1):
+                return False
+        return True
+
+    picked = [
+        n for n in manifest["files"]
+        if (ent := manifest["stats"][n])["rows"]
+        and (
+            (bloom := ent.get("blooms", {}).get(col)) is None  # no evidence: affected
+            or any(_may_contain(bloom, key) for key in keys)
+        )
+    ]
     return picked, len(manifest["files"]), version
 
 
@@ -974,8 +934,7 @@ def restore_version(spark: SparkSession, root: str, to_version: int) -> int:
             f"{to_version} were vacuumed (e.g. {sorted(missing)[:3]}) — "
             "the snapshot is no longer materializable"
         )
-    head_manifest = _read_manifest(root, head)
-    carried_checks = head_manifest.get("checks", [])
+    carried_checks = _read_manifest(root, head)["checks"]
     if carried_checks:
         probe = spark.createDataFrame(
             [], T.StructType.fromJson(json.loads(target["schema"]))
@@ -990,14 +949,10 @@ def restore_version(spark: SparkSession, root: str, to_version: int) -> int:
                     f"({c['expr']!r}: {ex}) — replace the constraints "
                     "(set_check_constraints) before restoring"
                 ) from ex
+    # the epoch ledger and checks are the head's: _commit inherits them
     return _commit(
-        root,
-        list(target["files"]),
-        target["schema"],
-        f"restore({to_version})",
-        parent=head,
-        epochs=head_manifest.get("epochs"),
-        stats=dict(target.get("stats") or {}),
+        root, target["files"], target["schema"], f"restore({to_version})",
+        parent=head, stats=target["stats"],
     )
 
 
@@ -1016,7 +971,7 @@ def add_column(spark: SparkSession, root: str, name: str, ddl_type: str) -> int:
     schema = T.StructType.fromJson(json.loads(manifest["schema"]))
     if name in schema.fieldNames():
         raise ValueError(f"column {name!r} already exists in {root!r}")
-    if name in manifest.get("dropped", []):
+    if name in manifest["dropped"]:
         raise ValueError(
             f"column {name!r} was previously dropped from {root!r}: pre-drop "
             "data files still store its values under this name, and this "
@@ -1025,11 +980,7 @@ def add_column(spark: SparkSession, root: str, name: str, ddl_type: str) -> int:
             "column name (Delta/Iceberg solve this with column IDs)"
         )
     new_schema = schema.add(T.StructField(name, _parse_ddl_type(ddl_type), True))
-    return _commit(
-        root, manifest["files"], new_schema.json(), f"alter-add:{name}", parent,
-        epochs=manifest.get("epochs"),
-        stats=_carry_stats(manifest, manifest["files"], {}),
-    )
+    return _commit(root, manifest["files"], new_schema.json(), f"alter-add:{name}", parent)
 
 
 def drop_column(spark: SparkSession, root: str, name: str) -> int:
@@ -1058,7 +1009,7 @@ def drop_column(spark: SparkSession, root: str, name: str) -> int:
         raise ValueError(f"cannot drop {name!r}: it is the only column")
     new_schema = T.StructType([f for f in schema.fields if f.name != name])
     probe = spark.createDataFrame([], new_schema)
-    for c in manifest.get("checks", []):
+    for c in manifest["checks"]:
         try:
             probe.where(F.expr(c["expr"])).schema
         except Exception as ex:
@@ -1068,14 +1019,12 @@ def drop_column(spark: SparkSession, root: str, name: str) -> int:
                 "(set_check_constraints)"
             ) from ex
     stats = {
-        n: {**e, "cols": {k: v for k, v in e.get("cols", {}).items() if k != name}}
-        for n, e in manifest.get("stats", {}).items()
+        n: {**e, "cols": {k: v for k, v in e["cols"].items() if k != name}}
+        for n, e in manifest["stats"].items()
     }
     return _commit(
         root, manifest["files"], new_schema.json(), f"alter-drop:{name}", parent,
-        epochs=manifest.get("epochs"),
-        stats=stats,
-        dropped=sorted(set(manifest.get("dropped", [])) | {name}),
+        stats=stats, dropped=[*manifest["dropped"], name],
     )
 
 
@@ -1137,12 +1086,9 @@ def clone_table(
             shutil.copy2(src, tmp)
             os.replace(tmp, dst)
     return _commit(
-        dst_root, list(manifest["files"]), manifest["schema"],
-        f"clone:{src_root}@{v}", parent=None,
-        epochs=manifest.get("epochs"),
-        stats=dict(manifest.get("stats") or {}),
-        checks=manifest.get("checks", []),
-        dropped=manifest.get("dropped", []),
+        dst_root, manifest["files"], manifest["schema"], f"clone:{src_root}@{v}",
+        parent=None, stats=manifest["stats"], epochs=manifest["epochs"],
+        checks=manifest["checks"], dropped=manifest["dropped"],
     )
 
 
@@ -1188,10 +1134,7 @@ def set_check_constraints(spark: SparkSession, root: str, checks: list[dict]) ->
             ) from ex
     return _commit(
         root, manifest["files"], manifest["schema"],
-        f"constrain:{','.join(c['name'] for c in checks)}", parent,
-        epochs=manifest.get("epochs"),
-        stats=_carry_stats(manifest, manifest["files"], {}),
-        checks=checks,
+        f"constrain:{','.join(c['name'] for c in checks)}", parent, checks=checks,
     )
 
 
@@ -1204,7 +1147,7 @@ def _enforce_checks(df: DataFrame, manifest: dict, verb: str) -> None:
     declared check; raises :class:`CheckConstraintViolation` naming the
     failing checks and their row counts.  Violation = expression FALSE
     (NULL passes — SQL CHECK semantics)."""
-    checks = manifest.get("checks") or []
+    checks = manifest["checks"]
     if not checks:
         return
     agg = df.agg(
@@ -1351,7 +1294,7 @@ def merge_into_versioned(
         }
 
     names_hit, rows_before = _affected_via_range_join(
-        spark, updates, key_col, _file_ranges(root, manifest, key_col)
+        spark, updates, key_col, _file_ranges(manifest, key_col)
     )
     affected = [f"{root}/{_DATA_DIR}/{n}" for n in names_hit]
     affected_names = set(names_hit)
@@ -1375,11 +1318,8 @@ def merge_into_versioned(
     new_stats = _collect_file_stats(root, new_names)
     rows_after = sum(new_stats[n]["rows"] for n in new_names)
     kept_names = [n for n in manifest["files"] if n not in affected_names]
-    next_files = kept_names + new_names
     version = _commit(
-        root, next_files, schema_json, f"merge:{key_col}", parent,
-        epochs=manifest.get("epochs"),
-        stats=_carry_stats(manifest, kept_names, new_stats),
+        root, kept_names + new_names, schema_json, f"merge:{key_col}", parent, stats=new_stats
     )
     return {
         "version": version,
@@ -1419,7 +1359,7 @@ def delete_relation(
     schema = T.StructType.fromJson(json.loads(manifest["schema"]))
     if key_col not in schema.fieldNames():
         raise ValueError(f"column {key_col!r} not in {root!r}'s head schema")
-    ranges = _file_ranges(root, manifest, key_col)
+    ranges = _file_ranges(manifest, key_col)
     vic, names_hit, _, _ = _victim_hits(spark, victims, key_col, schema[key_col], ranges)
     if not names_hit:
         return {"version": parent, "rewritten": 0, "deleted_rows": 0}
@@ -1435,8 +1375,7 @@ def delete_relation(
     kept_names = [n for n in manifest["files"] if n not in hit]
     version = _commit(
         root, kept_names + new_names, manifest["schema"], f"delete:{key_col}", parent,
-        epochs=manifest.get("epochs"),
-        stats=_carry_stats(manifest, kept_names, new_stats),
+        stats=new_stats,
     )
     return {
         "version": version,
@@ -1455,22 +1394,20 @@ def commit_stream_epoch(
     batch_df: DataFrame,
     epoch_id: int,
     fingerprint: str,
-    n_files: int = 1,
 ) -> int | None:
-    """Exactly-once APPEND of a streaming micro-batch as a snapshot commit.
+    """Exactly-once APPEND of a streaming micro-batch as a snapshot commit,
+    staged as one data file.
 
     Epoch identity is ``(epoch_id, content fingerprint)`` recorded in the
-    manifest's ``epochs`` ledger — a dict carried FORWARD into every child
-    manifest by every verb, so replay detection survives :func:`vacuum`
-    dropping the ancestor manifest that first recorded an epoch.  (The
-    ``op`` string still names the epoch for humans, but it is no longer
-    the source of truth: before the ledger existed, a vacuumed epoch
-    manifest silently re-admitted its replay as duplicate rows.)
-    Idempotence needs no sidecar files and inherits the manifest's
-    atomicity:
+    manifest's ``epochs`` ledger — a dict :func:`_commit` carries into
+    every child manifest, so the head's ledger is the one record of every
+    epoch and replay detection survives :func:`vacuum` dropping the
+    manifest that first recorded it.  (The ``op`` string names the epoch
+    for humans only; nothing reads it back.)  Idempotence needs no sidecar
+    files and inherits the manifest's atomicity:
 
-    * a replay whose (id, fingerprint) pair already appears in a committed
-      manifest is SKIPPED — even across checkpoint lifetimes, because the
+    * a replay whose (id, fingerprint) pair is in the head's ledger is
+      SKIPPED — even across checkpoint lifetimes, because the
       fingerprint, not the checkpoint, is the identity;
     * the same epoch id with a DIFFERENT fingerprint refuses loudly — a
       fresh checkpoint pointed at an old table would otherwise silently
@@ -1484,32 +1421,9 @@ def commit_stream_epoch(
     root = root.rstrip("/")
     _require_local_path(root, "commit_stream_epoch")
     parent = current_version(root)
-    op_prefix = f"append-epoch:{epoch_id}:"
-    op = op_prefix + fingerprint
     manifest = _read_manifest(root, parent)
-    # primary check: the carried-forward ledger in the CURRENT manifest —
-    # survives vacuum of every ancestor manifest
-    ledger = dict(manifest.get("epochs", {}))
     key = str(epoch_id)
-    prior_fp = ledger.get(key)
-    if prior_fp is None:
-        # legacy fallback: tables whose manifests predate the ledger field
-        # recorded epochs only in the ``op`` string — scan whatever
-        # manifests remain (vacuum refuses to drop un-ledgered epoch
-        # manifests, so this scan stays complete for legacy tables too).
-        # Fold EVERY discovered legacy epoch into the ledger we are about
-        # to commit, not just the one being checked: that is what finally
-        # lets vacuum release the legacy manifests (its retention
-        # condition is "epoch already in the newest retained ledger")
-        for v in table_versions(root):
-            legacy = _read_manifest(root, v)
-            if "epochs" in legacy:
-                continue  # ledgered manifests were already consulted above
-            legacy_op = legacy["op"]
-            if legacy_op.startswith("append-epoch:"):
-                _, eid, fp = legacy_op.split(":", 2)
-                ledger.setdefault(eid, fp)
-        prior_fp = ledger.get(key)
+    prior_fp = manifest["epochs"].get(key)
     if prior_fp == fingerprint:
         return None  # durably committed — genuine replay
     if prior_fp is not None:
@@ -1522,19 +1436,19 @@ def commit_stream_epoch(
     epoch_batch = _conform_to_schema(
         batch_df, manifest["schema"], "commit_stream_epoch"
     )
-    if manifest.get("checks"):
+    if manifest["checks"]:
         # pin the batch bytes: without this, a non-deterministic source
         # could pass the CHECK scan yet stage different (violating) rows
         # in the second evaluation — the 'a bad batch fails its own
         # commit' guarantee must span both actions
         epoch_batch = epoch_batch.localCheckpoint(eager=True)
     _enforce_checks(epoch_batch, manifest, "commit_stream_epoch")
-    new_names = _stage_files(epoch_batch, root, n_files)
-    ledger[key] = fingerprint
+    new_names = _stage_files(epoch_batch, root, 1)
     return _commit(
-        root, manifest["files"] + new_names, manifest["schema"], op, parent,
-        epochs=ledger,
-        stats=_carry_stats(manifest, manifest["files"], _collect_file_stats(root, new_names)),
+        root, manifest["files"] + new_names, manifest["schema"],
+        f"append-epoch:{epoch_id}:{fingerprint}", parent,
+        stats=_collect_file_stats(root, new_names),
+        epochs={**manifest["epochs"], key: fingerprint},
     )
 
 
@@ -1549,15 +1463,14 @@ def append_versioned(
     parent = current_version(root)
     manifest = _read_manifest(root, parent)
     batch = _conform_to_schema(df, manifest["schema"], "append_versioned")
-    if manifest.get("checks"):
+    if manifest["checks"]:
         # same CHECK-vs-stage determinism pin as commit_stream_epoch
         batch = batch.localCheckpoint(eager=True)
     _enforce_checks(batch, manifest, "append_versioned")
     new_names = _stage_files(batch, root, n_files)
     return _commit(
         root, manifest["files"] + new_names, manifest["schema"], "append", parent,
-        epochs=manifest.get("epochs"),
-        stats=_carry_stats(manifest, manifest["files"], _collect_file_stats(root, new_names)),
+        stats=_collect_file_stats(root, new_names),
     )
 
 
@@ -1606,9 +1519,7 @@ def compact(
     new_names = _stage_files(packed, root, n_out)
     version = _commit(
         root, kept + new_names, manifest["schema"], f"compact:{len(small)}->{len(new_names)}",
-        parent,
-        epochs=manifest.get("epochs"),
-        stats=_carry_stats(manifest, kept, _collect_file_stats(root, new_names)),
+        parent, stats=_collect_file_stats(root, new_names),
     )
     return {
         "version": version,
@@ -1669,32 +1580,14 @@ def changes_between(
 
 def table_history(spark: SparkSession, root: str) -> DataFrame:
     """One row per committed snapshot — (version, op_kind, n_files,
-    n_rows) — computed ENTIRELY from manifests (their embedded row-count
-    stats; a footer read only for legacy manifests without stats).  The
-    DESCRIBE HISTORY face of the table: a 100 TB audit costs kilobytes of
-    JSON, no data I/O."""
+    n_rows) — computed ENTIRELY from manifests (their per-file row-count
+    stats).  The DESCRIBE HISTORY face of the table: a 100 TB audit costs
+    kilobytes of JSON, no data I/O."""
     root = root.rstrip("/")
     rows = []
     for v in table_versions(root):
         m = _read_manifest(root, v)
-        stats = m.get("stats") or {}
-        n_rows = 0
-        for n in m["files"]:
-            ent = stats.get(n)
-            if ent is not None:
-                n_rows += ent["rows"]
-            else:
-                import pyarrow.parquet as pq
-
-                try:
-                    n_rows += pq.read_metadata(
-                        f"{root}/{_DATA_DIR}/{n}").num_rows
-                except FileNotFoundError:
-                    # a manifest retained past its data files' vacuum (the
-                    # legacy-epoch bookkeeping case): the history row stays
-                    # but its row count is honestly UNKNOWN, not 0
-                    n_rows = None
-                    break
+        n_rows = sum(m["stats"][n]["rows"] for n in m["files"])
         rows.append((v, m["op"].split(":", 1)[0], len(m["files"]), n_rows))
     return spark.createDataFrame(
         rows, "version int, op_kind string, n_files int, n_rows bigint"
@@ -1713,13 +1606,12 @@ def version_as_of(root: str, ts: float) -> int:
     root = root.rstrip("/")
     best = None
     for v in table_versions(root):
-        at = _read_manifest(root, v).get("committed_at")
-        if at is not None and at <= ts:
+        if _read_manifest(root, v)["committed_at"] <= ts:
             best = v
     if best is None:
         raise ValueError(
             f"no version of {root!r} existed at ts={ts} (oldest retained "
-            "version is newer, or the table predates commit timestamps)"
+            "version is newer)"
         )
     return best
 
@@ -1733,49 +1625,54 @@ def read_as_of(spark: SparkSession, root: str, ts: float) -> DataFrame:
 def verify_table(root: str, deep: bool = False) -> dict:
     """fsck for a versioned table: walk every retained manifest and
     report — never raise — what a reader would hit.  Checks: manifest
-    JSON parses, schema parses, the parent chain is contiguous over the
-    retained range, commit timestamps are monotone, every referenced
-    data file exists, and (``deep=True``) each file's footer row count
-    matches its manifest stats entry (a stats/data divergence would
-    silently corrupt MERGE/DELETE planning, which trusts the manifest).
-    O(manifests) shallow; deep adds one local footer read per referenced
-    file.  Returns ``{"ok": bool, "versions": int, "problems": [str]}``
-    — the operational pre-flight before vacuum/purge maintenance."""
+    JSON parses and carries every field of the one manifest format,
+    schema parses, the parent chain is contiguous over the retained
+    range, commit timestamps are monotone, the stats entries match the
+    file list, every referenced data file exists (in every retained
+    version, not only the head), and (``deep=True``) each file's footer
+    row count matches its manifest stats entry (a stats/data divergence
+    would silently corrupt MERGE/DELETE planning, which trusts the
+    manifest).  O(manifests) shallow; deep adds one local footer read per
+    referenced file.  Returns ``{"ok": bool, "versions": int, "problems":
+    [str]}`` — the operational pre-flight before vacuum/purge
+    maintenance."""
     root = root.rstrip("/")
     problems: list[str] = []
     versions = table_versions(root)
     if not versions:
         return {"ok": False, "versions": 0, "problems": ["no manifests found"]}
-    prev_v = None
+    fields = {"parent", "op", "files", "schema", "stats", "epochs", "checks",
+              "dropped", "committed_at"}
     prev_ts = None
-    for v in versions:
+    for i, v in enumerate(versions):
         try:
             m = _read_manifest(root, v)
         except (json.JSONDecodeError, OSError) as ex:
             problems.append(f"v{v}: manifest unreadable ({ex})")
             continue
+        lacking = sorted(fields - m.keys())
+        if lacking:
+            problems.append(f"v{v}: manifest lacks {lacking}")
+            continue
         try:
             T.StructType.fromJson(json.loads(m["schema"]))
         except Exception as ex:  # noqa: BLE001
             problems.append(f"v{v}: schema unparseable ({ex})")
-        if prev_v is not None:
-            if v != prev_v + 1:
-                problems.append(f"v{prev_v}->v{v}: version gap (vacuum keeps a "
-                                "contiguous recent range; a hole inside it is damage)")
-            elif m.get("parent") != prev_v:
-                problems.append(f"v{v}: parent={m.get('parent')} != {prev_v}")
-        at = m.get("committed_at")
-        if at is not None and prev_ts is not None and at < prev_ts:
+        if i and v != versions[i - 1] + 1:
+            problems.append(f"v{versions[i - 1]}->v{v}: version gap (vacuum keeps a "
+                            "contiguous recent range; a hole inside it is damage)")
+        elif i and m["parent"] != versions[i - 1]:
+            problems.append(f"v{v}: parent={m['parent']} != {versions[i - 1]}")
+        at = m["committed_at"]
+        if prev_ts is not None and at < prev_ts:
             problems.append(f"v{v}: committed_at regressed ({at} < {prev_ts})")
-        prev_ts = at if at is not None else prev_ts
-        prev_v = v
-        stats = m.get("stats") or {}
+        prev_ts = at
+        stats = m["stats"]
+        if stats.keys() != set(m["files"]):
+            problems.append(f"v{v}: stats entries do not match the file list")
         for n in m["files"]:
             p = f"{root}/{_DATA_DIR}/{n}"
             if not os.path.exists(p):
-                if m.get("epochs") and v != versions[-1]:
-                    # vacuum-retained legacy epoch manifest: documented state
-                    continue
                 problems.append(f"v{v}: data file missing: {n}")
             elif deep and n in stats:
                 import pyarrow.parquet as pq
@@ -1834,8 +1731,9 @@ def purge_relation(
     (the old data file stays until :func:`vacuum` finds it unreferenced),
     so a crash mid-purge leaves every version readable and the purge
     re-runnable.  Manifests whose schema lacks the key column (it was
-    added later) cannot contain victims, and files gone from disk (a
-    vacuum-retained legacy epoch manifest) have no reader to protect.
+    added later) cannot contain victims.  Every file a retained manifest
+    lists is on disk: :func:`vacuum` removes a manifest before the data
+    only it referenced.
 
     Unlike every snapshot verb, purge is NOT safe against concurrent
     writers: a writer that read its parent manifest before the replace
@@ -1862,10 +1760,9 @@ def purge_relation(
     ranges: dict[str, tuple] = {}
     for m in manifests.values():
         if key_col in {f["name"] for f in json.loads(m["schema"])["fields"]}:
-            ranges.update((r[0], r) for r in _file_ranges(root, m, key_col))
+            ranges.update((r[0], r) for r in _file_ranges(m, key_col))
     vic, affected, n_vic, ck = _victim_hits(
-        spark, victims, key_col, key_field,
-        [r for n, r in sorted(ranges.items()) if os.path.exists(f"{root}/{_DATA_DIR}/{n}")],
+        spark, victims, key_col, key_field, [r for _, r in sorted(ranges.items())]
     )
     if n_vic == 0:
         return empty
@@ -1914,16 +1811,13 @@ def purge_relation(
         rows_removed[v] = sum(removed_per_file[n] for n in hit)
         if not hit:
             continue
-        next_files = {
+        next_files = sorted(
             replacement.get(n, n) for n in m["files"]
             if replacement.get(n, n) is not None
-        }
-        stats = {
-            n: s for n, s in _carry_stats(m, m["files"], new_stats).items()
-            if n in next_files
-        }
+        )
+        stats = {**m["stats"], **new_stats}
         mlog.replace(_log(root), v, dict(
-            m, files=sorted(next_files), stats=stats,
+            m, files=next_files, stats={n: stats[n] for n in next_files},
             purged=sorted(set(m.get("purged", [])) | {entry}),
         ))
         updated += 1
@@ -1949,8 +1843,8 @@ def vacuum(
     dry_run: bool = False,
     keep_newer_than_ts: float | None = None,
 ) -> dict:
-    """Remove data files unreachable from the ``keep_last`` most recent
-    manifests, and the older manifests themselves.
+    """Remove the manifests older than the ``keep_last`` most recent,
+    then the data files no retained manifest references.
 
     ``keep_versions`` pins EXTRA versions beyond the recency window — the
     coordination hook for the multi-table catalog: pass
@@ -1958,8 +1852,12 @@ def vacuum(
     snapshot ever dangles (see catalog.py's retention note).
 
     Safe to run (and crash) at any time, INCLUDING concurrently with
-    writers, because of two guards:
+    writers:
 
+    * **Manifests before data.**  The manifests it does not retain go
+      first, then the data files only they referenced.  A crash in
+      between leaves orphan files, which are garbage by this module's
+      contract; no listed manifest ever points at a reclaimed file.
     * **Orphan age threshold** (Iceberg-style): an unreferenced data file
       or stage dir younger than ``grace_seconds`` is SKIPPED.  Writers
       move staged files under ``data/`` BEFORE their manifest commits, so
@@ -1969,44 +1867,40 @@ def vacuum(
       must exceed the longest stage→commit gap (default 10 min; raise it
       for huge batch writes, or pass ``0`` only when no writer can be
       in flight).
-    * **Epoch-ledger protection**: manifests written before the ``epochs``
-      ledger existed carry their exactly-once epoch identity only in the
-      ``op`` string; dropping one would re-admit a replayed epoch as
-      duplicate rows.  Such legacy epoch manifests are retained until the
-      epoch also appears in the newest retained manifest's ledger.
 
-    With those guards, it deletes only what no retained snapshot (and no
-    possibly-in-flight commit) references, so every surviving version
-    stays exactly readable; an interrupted vacuum just leaves some garbage
-    for the next one."""
-    import time
-
+    It deletes only what no retained snapshot (and no possibly-in-flight
+    commit) references, so every surviving version stays exactly
+    readable; an interrupted vacuum just leaves some garbage for the next
+    one.  Exactly-once stream epochs need no manifest kept for them: the
+    head's ``epochs`` ledger records every epoch."""
     _require_local_path(root, "vacuum")
     root = root.rstrip("/")
     versions = table_versions(root)
     if not versions:
         return {"data_files_removed": 0, "manifests_removed": 0}
     recent = versions[-keep_last:] if keep_last > 0 else versions[-1:]
-    by_age: set[int] = set()
-    if keep_newer_than_ts is not None:
-        # age-based retention (Delta's retention-period face) rides the
-        # manifest commit stamps: every version committed at-or-after the
-        # cutoff is retained IN ADDITION to the keep_last window, so
-        # AS-OF-timestamp travel stays answerable across the period.
-        # Pre-stamp legacy manifests have no committed_at and are
-        # conservatively retained by the age rule.
-        for v in versions:
-            at = _read_manifest(root, v).get("committed_at")
-            if at is None or at >= keep_newer_than_ts:
-                by_age.add(v)
-    retained = sorted(
-        set(recent) | by_age
-        | {v for v in (keep_versions or ()) if v in set(versions)}
-    )
+    # age-based retention (Delta's retention-period face) rides the
+    # manifest commit stamps: every version committed at-or-after the
+    # cutoff is retained IN ADDITION to the keep_last window, so
+    # AS-OF-timestamp travel stays answerable across the period
+    by_age = set() if keep_newer_than_ts is None else {
+        v for v in versions
+        if _read_manifest(root, v)["committed_at"] >= keep_newer_than_ts
+    }
+    retained = set(recent) | by_age | (set(keep_versions or ()) & set(versions))
     live: set[str] = set()
     for v in retained:
         live.update(_read_manifest(root, v)["files"])
-    newest_ledger = _read_manifest(root, retained[-1]).get("epochs", {})
+    dropped = 0
+    for v in versions:
+        if v in retained:
+            continue
+        if not dry_run:
+            try:
+                os.remove(_manifest_path(root, v))
+            except FileNotFoundError:
+                continue  # concurrent vacuum won the race
+        dropped += 1
     now = time.time()
     removed = skipped_young = 0
     for path in glob.glob(f"{root}/{_DATA_DIR}/part-*.parquet"):
@@ -2025,29 +1919,6 @@ def vacuum(
             except FileNotFoundError:
                 continue  # concurrent vacuum won the race
         removed += 1
-    dropped = kept_epoch = 0
-    for v in versions:
-        if v in retained:
-            continue
-        try:
-            m = _read_manifest(root, v)
-        except FileNotFoundError:
-            continue  # concurrent vacuum already dropped it
-        if "epochs" not in m and m["op"].startswith("append-epoch:"):
-            # legacy epoch manifest: its op string is the only durable
-            # record of the epoch unless the ledger now covers it (the
-            # next commit_stream_epoch folds legacy epochs forward, which
-            # is what eventually releases these manifests)
-            eid = m["op"].split(":", 2)[1]
-            if eid not in newest_ledger:
-                kept_epoch += 1
-                continue
-        if not dry_run:
-            try:
-                os.remove(_manifest_path(root, v))
-            except FileNotFoundError:
-                continue  # concurrent vacuum won the race
-        dropped += 1
     # stale stage dirs from crashed writers are unreferenced by definition,
     # but young ones may belong to a LIVE writer mid-stage — same grace
     for stale in glob.glob(f"{root}/.stage-*"):
@@ -2062,7 +1933,6 @@ def vacuum(
         "data_files_removed": removed,
         "manifests_removed": dropped,
         "young_orphans_skipped": skipped_young,
-        "legacy_epoch_manifests_kept": kept_epoch,
     }
     # ``dry_run=True`` REPORTS the same counters a real run would act on
     # and touches NOTHING — the operational what-if before a maintenance

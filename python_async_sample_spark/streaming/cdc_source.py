@@ -29,6 +29,13 @@ manifest v as the delta BASE (the round-8 scale probe pinned this —
 ``vacuum(keep_last=1)`` after a drain at offset v1 with head v2 fails the
 resume loudly; ``keep_last=2`` reclaims v0 and resumes cleanly).
 
+Trigger caveat: pyspark 4.1.2's ``DataSourceStreamReader`` has no
+``prepareForTriggerAvailableNow`` hook, so the engine logs that this
+source "does not support Trigger.AvailableNow" and runs an available-now
+drain as ONE batch up to the latest version.  A drain restarted after a
+lost engine commit re-runs only that batch; versions committed since then
+wait for the next drain.
+
 Usage:
     spark.dataSource.register(VersionedCDCDataSource)
     (spark.readStream.format("versioned_cdc").option("path", root).load()
@@ -48,7 +55,6 @@ from pyspark.sql.datasource import (
 )
 
 _DATA_DIR = "data"
-_MANIFEST_DIR = "_manifests"
 
 
 def _manifest(root: str, version: int) -> dict:

@@ -15,6 +15,7 @@ from python_async_sample_spark.sources.layout import cluster_by, compact, dir_by
 from python_async_sample_spark.sources.readers import load_table
 from python_async_sample_spark.sources.versioned import (
     _DATA_DIR,
+    _collect_file_stats,
     _commit,
     _read_manifest,
     create_table,
@@ -164,9 +165,9 @@ def test_delete_keys_second_pass_scans_rewritten_files(spark, fragmented, tmp_pa
 
 
 def test_delete_keys_tolerates_missing_footer_stats(spark, tmp_path):
-    """A file whose writer omitted column statistics, committed without a
-    manifest stats entry (a legacy manifest), is conservatively treated as
-    affected instead of crashing the job or being skipped."""
+    """A file whose writer omitted column statistics gets a manifest stats
+    entry with its row count but no column ranges; the keyed delete treats
+    it as conservatively affected instead of crashing or skipping it."""
     import pyarrow as pa
 
     root = str(tmp_path / "nostats")
@@ -175,13 +176,16 @@ def test_delete_keys_tolerates_missing_footer_stats(spark, tmp_path):
     )
     create_table(spark, root, df, n_files=1)
     m0 = _read_manifest(root, 0)
-    # add one file written WITHOUT footer statistics and record no stats for it
+    # add one file written WITHOUT footer statistics: its stats entry has
+    # the row count and no column range
     tbl = pa.table({"user_id": pa.array([500, 501], pa.int64()),
                     "body": pa.array(["x", "y"])})
     pq.write_table(tbl, _data_file(root, "nostats-extra.parquet"), write_statistics=False)
+    extra = _collect_file_stats(root, ["nostats-extra.parquet"])
+    assert extra["nostats-extra.parquet"] == {"rows": 2, "cols": {}}
     _commit(
         root, m0["files"] + ["nostats-extra.parquet"], m0["schema"], "append", 0,
-        stats=m0["stats"],
+        stats=extra,
     )
 
     stats = delete_keys_versioned(spark, root, "user_id", [500, 3])

@@ -370,10 +370,11 @@ def test_vacuum_grace_window_spares_inflight_staged_files(spark, root):
     for name in staged:
         assert os.path.exists(f"{root}/data/{name}")
     # the in-flight commit can now land referencing intact files
-    from python_async_sample_spark.sources.versioned import _commit
+    from python_async_sample_spark.sources.versioned import _collect_file_stats, _commit
 
     m = json.load(open(_manifest_path(root, 0), encoding="ascii"))
-    _commit(root, m["files"] + staged, m["schema"], "append", parent=0)
+    _commit(root, m["files"] + staged, m["schema"], "append", parent=0,
+            stats=_collect_file_stats(root, staged))
     assert read_version(spark, root).count() == 13
     # with no writer in flight, zero grace reclaims true orphans
     orphans = _stage_files(df.limit(2), root, 1)
@@ -381,40 +382,11 @@ def test_vacuum_grace_window_spares_inflight_staged_files(spark, root):
     assert res["data_files_removed"] >= len(orphans)
 
 
-def test_vacuum_retains_legacy_epoch_manifests_until_ledgered(spark, root):
-    """Tables written before the epochs ledger carry epoch identity only in
-    the manifest op string; vacuum must keep those manifests so the legacy
-    scan in commit_stream_epoch stays complete."""
-    from python_async_sample_spark.sources.versioned import commit_stream_epoch
-
-    df = spark.createDataFrame([(1, "a")], "k int, v string")
-    create_table(spark, root, df.limit(0), n_files=1)
-    commit_stream_epoch(spark, root, df, 7, "fp-seven")
-    # strip the ledger from every manifest on disk → pre-ledger table
-    for v in table_versions(root):
-        p = _manifest_path(root, v)
-        m = json.load(open(p, encoding="ascii"))
-        m.pop("epochs", None)
-        json.dump(m, open(p, "w", encoding="ascii"))
-    merge_into_versioned(spark, root, df.withColumn("v", F.lit("z")), "k")
-    merge_into_versioned(spark, root, df.withColumn("v", F.lit("w")), "k")
-
-    res = vacuum(root, keep_last=1, grace_seconds=0)
-    assert res["legacy_epoch_manifests_kept"] == 1
-    assert 1 in table_versions(root)  # the epoch manifest survived
-
-    # and the legacy scan still enforces exactly-once
-    assert commit_stream_epoch(spark, root, df, 7, "fp-seven") is None
-    with pytest.raises(RuntimeError, match="different batch fingerprint"):
-        commit_stream_epoch(spark, root, df, 7, "fp-eight")
-
-
 def test_manifest_stats_prune_without_footer_reads(spark, sf_dir, root):
     """Manifests embed per-file row counts + min/max column ranges at
     commit time; keyed verbs plan their file set from the manifest alone.
-    Prune correctness: the manifest answer must equal the footer answer,
-    and a targeted merge must rewrite only the files whose range covers
-    the keys."""
+    Prune correctness: a targeted merge must rewrite only the files whose
+    range covers the keys."""
     from python_async_sample_spark.sources.versioned import (
         _file_ranges,
         _read_manifest,
@@ -426,7 +398,7 @@ def test_manifest_stats_prune_without_footer_reads(spark, sf_dir, root):
     m = _read_manifest(root, 0)
     assert set(m["stats"]) == set(m["files"])
     lo_key = orders.agg(F.min("o_orderkey")).first()[0]
-    ranges = _file_ranges(root, m, "o_orderkey")
+    ranges = _file_ranges(m, "o_orderkey")
     assert len(ranges) == 8 and all(r[1] is not None and r[3] > 0 for r in ranges)
     _, names_hit, _, _ = _victim_hits(
         spark, [int(lo_key)], "o_orderkey", orders.schema["o_orderkey"], ranges
@@ -444,9 +416,6 @@ def test_manifest_stats_prune_without_footer_reads(spark, sf_dir, root):
     # stats carried forward + refreshed for the rewritten file
     m1 = _read_manifest(root, 1)
     assert set(m1["stats"]) == set(m1["files"])
-    # legacy manifest (stats stripped) falls back to footers, same answer
-    m_stripped = dict(m, stats={})
-    assert sorted(_file_ranges(root, m_stripped, "o_orderkey")) == sorted(ranges)
 
 
 def test_append_compact_preserves_content_and_packs_files(spark, root):
@@ -562,7 +531,6 @@ def test_compact_loses_cleanly_to_concurrent_writer(spark, root):
     )  # wins version 2
     with pytest.raises(ConcurrentWriteError):
         _commit(root, staged, m1["schema"], "compact:6->1", parent=1,
-                epochs=m1.get("epochs"),
                 stats=_collect_file_stats(root, staged))
     # the loser committed nothing; re-running compacts the REAL head
     assert read_version(spark, root).where("v = 'MERGED'").count() == 1
@@ -570,53 +538,6 @@ def test_compact_loses_cleanly_to_concurrent_writer(spark, root):
     assert res["compacted"] >= 2
     assert read_version(spark, root).where("v = 'MERGED'").count() == 1
     assert read_version(spark, root).count() == 50
-
-
-def test_legacy_epochs_fold_forward_and_vacuum_releases_manifests(spark, root):
-    """Review finding: the legacy-epoch retention condition must be
-    REACHABLE — the next epoch commit folds op-string epochs into the
-    carried ledger, after which vacuum drops the legacy manifest; and
-    table_history on a table whose retained legacy manifest outlived its
-    data files reports n_rows NULL instead of crashing."""
-    from python_async_sample_spark.sources.versioned import (
-        commit_stream_epoch,
-        table_history,
-    )
-
-    df = spark.createDataFrame([(1, "a")], "k int, v string")
-    create_table(spark, root, df.limit(0), n_files=1)
-    commit_stream_epoch(spark, root, df, 3, "fp-three")
-    # make it a genuinely pre-ledger table: those manifests carry neither
-    # the epochs ledger nor embedded stats
-    for v in table_versions(root):
-        p = _manifest_path(root, v)
-        m = json.load(open(p, encoding="ascii"))
-        m.pop("epochs", None)
-        m.pop("stats", None)
-        json.dump(m, open(p, "w", encoding="ascii"))
-    merge_into_versioned(spark, root, df.withColumn("v", F.lit("z")), "k")
-
-    res1 = vacuum(root, keep_last=1, grace_seconds=0)
-    assert res1["legacy_epoch_manifests_kept"] == 1
-    assert 1 in table_versions(root)
-    # the retained legacy manifest's data files were reclaimed (not in the
-    # newest manifest's live set) — history must degrade to NULL, not raise
-    hist = {r["version"]: r for r in table_history(spark, root).collect()}
-    assert hist[1]["n_rows"] is None
-    assert hist[2]["n_rows"] == 1
-
-    # a NEW epoch commit folds the legacy epoch forward...
-    commit_stream_epoch(spark, root, df, 4, "fp-four")
-    m = json.load(open(_manifest_path(root, current_version(root)), encoding="ascii"))
-    assert m["epochs"] == {"3": "fp-three", "4": "fp-four"}
-    # ...and the next vacuum releases the legacy manifest
-    res2 = vacuum(root, keep_last=1, grace_seconds=0)
-    assert res2["legacy_epoch_manifests_kept"] == 0
-    assert 1 not in table_versions(root)
-    # exactly-once still enforced from the ledger alone
-    assert commit_stream_epoch(spark, root, df, 3, "fp-three") is None
-    with pytest.raises(RuntimeError, match="different batch fingerprint"):
-        commit_stream_epoch(spark, root, df, 3, "fp-other")
 
 
 def test_purge_keys_erases_from_every_snapshot(spark, sf_dir, root):
@@ -690,9 +611,8 @@ def test_purge_keys_null_safe_and_empty_file_dropped(spark, root):
 
 def test_purge_keys_on_evolved_column_and_after_vacuum(spark, root):
     """Review findings: purging on a column ADDED by add_column must work
-    (pre-evolution manifests/files are unaffected by construction), and a
-    vacuum-retained legacy epoch manifest whose data files were reclaimed
-    must not make the purge verb crash."""
+    (pre-evolution manifests/files are unaffected by construction), also
+    after a vacuum has dropped the older manifests and their data."""
     from python_async_sample_spark.sources.versioned import (
         add_column,
         commit_stream_epoch,
@@ -703,20 +623,13 @@ def test_purge_keys_on_evolved_column_and_after_vacuum(spark, root):
     df = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
     create_table(spark, root, df.limit(0), n_files=1)
     commit_stream_epoch(spark, root, df, 0, "fp-z")        # v1
-    # make v0/v1 pre-ledger AND stats-free (legacy)
-    for v in table_versions(root):
-        p = _manifest_path(root, v)
-        m = json.load(open(p, encoding="ascii"))
-        m.pop("epochs", None)
-        m.pop("stats", None)
-        json.dump(m, open(p, "w", encoding="ascii"))
     add_column(spark, root, "email", "string")             # v2
     upd = spark.createDataFrame(
         [(1, "a", "x@y.z"), (3, "c", "p@q.r")], "k int, v string, email string"
     )
     m_i_v(spark, root, upd, "k")                           # v3
-    vacuum(root, keep_last=1, grace_seconds=0)             # keeps legacy v1
-    assert 1 in table_versions(root)
+    vacuum(root, keep_last=2, grace_seconds=0)             # drops v0, v1
+    assert table_versions(root) == [2, 3]
 
     res = purge_keys(spark, root, "email", ["x@y.z"])
     assert res["manifests_updated"] >= 1
@@ -1821,3 +1734,150 @@ def test_vacuum_age_based_retention(spark, sf_dir, root):
     assert read_version(spark, root, 2).count() == 25
     # AS-OF inside the retained period still resolves
     assert read_as_of(spark, root, _time.time()).count() == 26
+
+
+def test_every_verb_commits_the_one_manifest_format(spark, root):
+    """Every write verb publishes the one manifest format: stats with one
+    entry per file, the epoch ledger and a commit stamp.  Readers plan from
+    those fields alone (no footer fallback), so this pins the invariant
+    they rely on; _commit refuses a file it has no stats entry for."""
+    from python_async_sample_spark.sources.versioned import (
+        _commit,
+        _read_manifest,
+        add_column,
+        add_file_blooms,
+        clone_table,
+        compact,
+        delete_relation,
+        drop_column,
+        purge_keys,
+        restore_version,
+        rewrite_layout,
+    )
+
+    def assert_format(table, after):
+        for v in table_versions(table):
+            m = _read_manifest(table, v)
+            assert {"stats", "epochs", "committed_at"} <= m.keys(), (after, v)
+            assert set(m["stats"]) == set(m["files"]), (after, v)
+
+    df = spark.createDataFrame(
+        [(i, i % 7, f"v{i}") for i in range(40)], "k bigint, x bigint, v string"
+    )
+    clone = f"{root}-clone"
+    verbs = {
+        "create_table": lambda: create_table(spark, root, df.where("k < 20"), n_files=2),
+        "append_versioned": lambda: append_versioned(spark, root, df.where("k >= 20 and k < 30")),
+        "commit_stream_epoch": lambda: commit_stream_epoch(
+            spark, root, df.where("k >= 30"), 0, "fp-0"),
+        "merge_into_versioned": lambda: merge_into_versioned(
+            spark, root, df.where("k < 3").withColumn("v", F.lit("m")), "k"),
+        "delete_relation": lambda: delete_relation(spark, root, "k", [5, 6]),
+        "purge_keys": lambda: purge_keys(spark, root, "k", [7]),
+        "add_column": lambda: add_column(spark, root, "email", "string"),
+        "drop_column": lambda: drop_column(spark, root, "email"),
+        "add_file_blooms": lambda: add_file_blooms(spark, root, "x"),
+        "rewrite_layout": lambda: rewrite_layout(spark, root, "k", "x", n_files=2),
+        "compact": lambda: compact(spark, root),
+        "restore_version": lambda: restore_version(spark, root, 1),
+        "clone_table": lambda: clone_table(root, clone),
+    }
+    for name, verb in verbs.items():
+        verb()
+        assert_format(root, name)
+    assert_format(clone, "clone_table")
+    head = _read_manifest(root, current_version(root))
+    assert head["op"] == "restore(1)" and head["epochs"] == {"0": "fp-0"}
+    assert _read_manifest(clone, 0)["epochs"] == {"0": "fp-0"}
+    # v1 held k < 30; the purge erased k = 7 from every snapshot
+    assert read_version(spark, clone).count() == read_version(spark, root).count() == 29
+
+    with pytest.raises(ValueError, match="no stats entry"):
+        _commit(root, head["files"] + ["part-unstated.parquet"], head["schema"],
+                "append", current_version(root))
+    assert_format(root, "refused _commit")
+
+
+def test_verify_table_reports_missing_file_of_non_head_streaming_version(spark, root):
+    """Every retained version of a streaming table carries an epoch ledger;
+    a data file missing from a non-head version is damage all the same
+    (time travel to it fails), so the fsck must report it."""
+    from python_async_sample_spark.sources.versioned import (
+        _DATA_DIR,
+        _read_manifest,
+        verify_table,
+    )
+
+    df = spark.createDataFrame([(i, "x") for i in range(6)], "k int, v string")
+    create_table(spark, root, df.limit(0), n_files=1)                  # v0
+    commit_stream_epoch(spark, root, df.where("k < 3"), 0, "fp-0")     # v1
+    commit_stream_epoch(spark, root, df.where("k >= 3"), 1, "fp-1")    # v2
+    delete_keys_versioned(spark, root, "k", [0])                       # v3
+    old = _read_manifest(root, 2)
+    only_old = sorted(set(old["files"]) - set(_read_manifest(root, 3)["files"]))
+    assert only_old and old["epochs"] == {"0": "fp-0", "1": "fp-1"}
+    assert verify_table(root)["ok"]
+
+    os.remove(f"{root}/{_DATA_DIR}/{only_old[0]}")
+    rep = verify_table(root)
+    assert not rep["ok"]
+    assert any(p.startswith("v2: data file missing") for p in rep["problems"]), rep
+
+    # a manifest off the one format is reported, never raised on
+    def edit(v, change):
+        m = json.load(open(_manifest_path(root, v), encoding="ascii"))
+        change(m)
+        json.dump(m, open(_manifest_path(root, v), "w", encoding="ascii"))
+
+    edit(1, lambda m: m.pop("committed_at"))
+    edit(3, lambda m: m["stats"].pop(m["files"][0]))
+    problems = verify_table(root)["problems"]
+    assert "v1: manifest lacks ['committed_at']" in problems
+    assert "v3: stats entries do not match the file list" in problems
+
+
+def test_vacuum_crash_at_any_remove_leaves_every_listed_version_readable(
+    spark, root, monkeypatch
+):
+    """vacuum drops manifests before the data only they referenced, so a
+    crash at ANY of its removes leaves orphan files at worst: every listed
+    version still fscks clean and reads, and a rerun converges on the
+    uncrashed result."""
+    from python_async_sample_spark.sources.versioned import verify_table
+
+    df = spark.createDataFrame([(i, "x") for i in range(12)], "k int, v string")
+    create_table(spark, root, df.where("k < 4"), n_files=2)                      # v0
+    merge_into_versioned(spark, root, df.where("k < 2").withColumn("v", F.lit("m")), "k")
+    delete_keys_versioned(spark, root, "k", [2])                                 # v2
+    append_versioned(spark, root, df.where("k >= 4"))                            # v3
+    plan = vacuum(root, keep_last=1, grace_seconds=0, dry_run=True)
+    assert plan["manifests_removed"] == 3 and plan["data_files_removed"] >= 2
+    n_removes = plan["manifests_removed"] + plan["data_files_removed"]
+    head = sorted(read_version(spark, root).collect())
+
+    real_remove = os.remove
+    for k in range(1, n_removes + 1):
+        work = f"{root}-crash{k}"
+        shutil.copytree(root, work)
+        calls = []
+
+        def crash_at_k(path, *args, _work=work, _k=k, _calls=calls, **kwargs):
+            if str(path).startswith(_work + "/"):
+                _calls.append(path)
+                if len(_calls) == _k:
+                    raise OSError(f"injected crash at remove #{_k}")
+            return real_remove(path, *args, **kwargs)
+
+        monkeypatch.setattr(os, "remove", crash_at_k)
+        with pytest.raises(OSError, match="injected crash"):
+            vacuum(work, keep_last=1, grace_seconds=0)
+        monkeypatch.setattr(os, "remove", real_remove)
+
+        rep = verify_table(work)
+        assert rep["ok"], (k, rep)
+        for v in table_versions(work):
+            read_version(spark, work, v).count()
+        vacuum(work, keep_last=1, grace_seconds=0)
+        assert table_versions(work) == [3], k
+        assert vacuum(work, keep_last=1, grace_seconds=0)["data_files_removed"] == 0
+        assert sorted(read_version(spark, work).collect()) == head, k
