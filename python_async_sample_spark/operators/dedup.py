@@ -5,7 +5,7 @@ content-hash dedup, n-gram Jaccard, MinHash+LSH banding, and SimHash — each
 designed for the 100 TB posture:
 
 * shingling/hashing is pure built-in expressions (JVM, codegen) — no Python
-  in the hot path except SimHash's vectorized Arrow kernel;
+  in the hot path;
 * the only shuffles are the groupBys on (doc) and (band, bucket); LSH
   candidate generation never goes quadratic — the pairwise verify runs
   only within buckets;
@@ -16,9 +16,11 @@ designed for the 100 TB posture:
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from python_async_sample_spark.operators.text import fan_out_small
@@ -296,36 +298,61 @@ def minhash_dedup_pairs(
 # SimHash
 # ---------------------------------------------------------------------------
 
-SIMHASH_BITS = 64
+def _simhash(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    token_hash: Callable[[Column], Column],
+    bits: int,
+) -> DataFrame:
+    """The ONE SimHash vote-and-pack kernel: (id, simhash) with the low
+    ``bits`` bits of ``token_hash(tok)`` voting — entirely JVM-side.
 
-
-def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """64-bit SimHash per document — entirely JVM-side, no Python in the path.
-
-    Distinct tokens explode to one row each; the token hash is native
-    ``xxhash64``; the per-bit vote is 64 codegen'd conditional-sum
-    aggregates in ONE groupBy (map-side partial aggregation applies, so the
-    shuffle carries 64 longs per document, not per token); the signature is
-    reassembled from the vote signs with integer bit arithmetic. An earlier
-    Arrow-kernel version hashed tokens with Python md5 — ~10× slower and
-    worker-CPU-bound at corpus scale.
-    """
+    Distinct tokens explode to one row each and are hashed in a projection
+    below the aggregate; the per-bit vote is ``bits`` codegen'd
+    conditional-sum aggregates in ONE groupBy (map-side partial
+    aggregation applies, so the shuffle carries ``bits`` longs per
+    document, not per token); the signature is reassembled from the vote
+    signs with integer bit arithmetic.  An earlier Arrow-kernel version
+    hashed tokens with Python md5 — ~10× slower and worker-CPU-bound at
+    corpus scale."""
     toks = F.explode(F.array_distinct(F.split(F.col(text_col), " "))).alias("tok")
-    tokened = df.select(F.col(id_col), toks).where(F.length("tok") > 0)
-    h = F.xxhash64(F.col("tok"))
+    hashed = (
+        df.select(F.col(id_col), toks)
+        .where(F.length("tok") > 0)
+        .select(id_col, token_hash(F.col("tok")).alias("h"))
+    )
     votes = [
         F.sum(
-            F.when(F.shiftrightunsigned(h, i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
+            F.when(F.shiftrightunsigned("h", i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
         ).alias(f"v{i}")
-        for i in range(SIMHASH_BITS)
+        for i in range(bits)
     ]
-    voted = tokened.groupBy(id_col).agg(*votes)
     sig = None
-    for i in range(SIMHASH_BITS):
+    for i in range(bits):
         bit = F.when(F.col(f"v{i}") > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
         term = F.shiftleft(bit, i)
         sig = term if sig is None else sig.bitwiseOR(term)
-    return voted.select(F.col(id_col), sig.alias("simhash"))
+    return hashed.groupBy(id_col).agg(*votes).select(F.col(id_col), sig.alias("simhash"))
+
+
+def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """64-bit SimHash per document on the native ``xxhash64`` token hash
+    (q33's production path)."""
+    return _simhash(df, id_col, text_col, F.xxhash64, 64)
+
+
+def simhash32_md5(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """32-bit SimHash per document on a token hash every engine computes
+    bit-identically: the first 8 hex digits of ``md5(tok)``, digit j
+    carrying bits 4j..4j+3 (``conv(reverse(...), 16, 10)`` reads the
+    digits little-endian).  Same kernel as :func:`simhash`, so q187's
+    DuckDB replay certifies q33's vote-and-pack algebra."""
+    return _simhash(
+        df, id_col, text_col,
+        lambda tok: F.conv(F.reverse(F.substring(F.md5(tok), 1, 8)), 16, 10).cast("long"),
+        32,
+    )
 
 
 def simhash_near_pairs(sim: DataFrame, id_col: str, max_hamming: int = 8) -> DataFrame:

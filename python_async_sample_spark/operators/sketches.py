@@ -1,11 +1,14 @@
-"""Sketch aggregates — approximate distinct counts and quantiles.
+"""Sketch aggregates — approximate distinct counts, quantiles and
+frequencies.
 
 Not in the reference (it has only exact MAX/COUNT/DISTINCT, SURVEY §2.4),
 but core to the 100 TB surface: exact countDistinct is a full shuffle of
 every distinct value; the sketches below are single-pass, mergeable, and
 fixed-size — HyperLogLog++ (`approx_count_distinct`) and the
 Greenwald-Khanna-style quantile sketch (`percentile_approx`), both JVM
-built-ins with map-side partial aggregation.
+built-ins with map-side partial aggregation, and the portable-hash
+count-min / HyperLogLog family, whose every cell and register DuckDB
+recomputes.
 """
 
 from __future__ import annotations
@@ -38,74 +41,11 @@ def approx_quantiles(
     )
 
 
-def cms_build(
-    df: DataFrame, key_col: str, depth: int = 4, width: int = 256
-) -> DataFrame:
-    """Count-min sketch of a key column as a (row, col, cnt) relation.
-
-    Each item increments one counter per hash row (xxhash64 seeded by the
-    row index, modulo ``width``), so the build is one explode (depth rows
-    per item) + one map-side-combinable groupBy bounded at depth*width
-    cells. Two sketches built this way MERGE by summing cells — the
-    additive contract that lets 100 TB build per-partition sketches and
-    combine, and the same mergeability family as q107's partial
-    aggregates."""
-    rows = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(i).alias("row"),
-                    F.pmod(
-                        F.xxhash64(F.col(key_col).cast("string"), F.lit(i)), width
-                    ).cast("int").alias("col"),
-                )
-                for i in range(depth)
-            ]
-        )
-    )
-    return (
-        df.select(rows.alias("rc"))
-        .groupBy(F.col("rc.row").alias("row"), F.col("rc.col").alias("col"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-    )
-
-
-def cms_estimate(
-    keys: DataFrame, sketch: DataFrame, key_col: str, depth: int = 4, width: int = 256
-) -> DataFrame:
-    """Point-frequency estimates: est(k) = min over rows of the counter at
-    (row, hash_row(k)). The sketch relation is bounded at depth*width cells
-    BY CONSTRUCTION, so broadcasting it is legitimate (contrast
-    vocabulary-sized relations, which never are). CMS never underestimates;
-    the overestimate is <= e/width * N with prob 1 - e^-depth per key."""
-    probes = keys.select(
-        F.col(key_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("row"),
-                        F.pmod(
-                            F.xxhash64(F.col(key_col).cast("string"), F.lit(i)), width
-                        ).cast("int").alias("col"),
-                    )
-                    for i in range(depth)
-                ]
-            )
-        ).alias("rc"),
-    ).select(key_col, F.col("rc.row").alias("row"), F.col("rc.col").alias("col"))
-    return (
-        probes.join(F.broadcast(sketch), ["row", "col"], "left")
-        .groupBy(key_col)
-        .agg(F.min(F.coalesce("cnt", F.lit(0))).cast("bigint").alias("est_count"))
-    )
-
-
 # ---------------------------------------------------------------------------
 # Portable-hash sketch variants — cross-engine replayable.
 #
-# xxhash64 has no DuckDB equivalent, so the sketches above carry error-band
-# guards instead of value oracles.  The variants below ride a 32-bit
+# The JVM built-ins above have no DuckDB equivalent, so their queries carry
+# error-band guards instead of value oracles.  The sketches below ride a 32-bit
 # xor-shift-multiply mixer (two rounds of ``h ^= h >> 16; h *= M`` plus a
 # final xor-fold — the splitmix/lowbias32 construction, seeded per hash
 # index by the golden gamma):
@@ -139,18 +79,16 @@ _PH_MULT = 0x45D9F3B
 
 def portable_hash(col, i: int):
     """h_i over an integral column, as exact int64 Spark expressions.
-    The key is pmod-reduced to [0, 2^32) BEFORE the gamma seed lands, so
-    the sum never leaves exact int64 range for ANY int64 key (see the
-    module comment); the mix rounds preserve [0, 2^32) so plain ``%``
-    suffices after them."""
-    x = F.pmod(
-        F.pmod(col.cast("long"), F.lit(_PH_M32)) + F.lit(_PH_GAMMA * (i + 1)),
-        F.lit(_PH_M32),
-    )
+    The key is reduced to [0, 2^32) BEFORE the gamma seed lands, so the
+    sum never leaves exact int64 range for ANY int64 key (see the module
+    comment).  Every ``mod 2^32`` is a mask with ``2^32 - 1``: on
+    two's-complement int64 that IS the non-negative residue (negative
+    keys included), bit-identical to the SQL twin's ``%`` and cheaper
+    than ``pmod``'s divide."""
+    mask = F.lit(_PH_M32 - 1)
+    x = (col.cast("long").bitwiseAND(mask) + F.lit(_PH_GAMMA * (i + 1))).bitwiseAND(mask)
     for _ in range(2):
-        x = F.pmod(
-            x.bitwiseXOR(F.shiftright(x, 16)) * F.lit(_PH_MULT), F.lit(_PH_M32)
-        )
+        x = (x.bitwiseXOR(F.shiftright(x, 16)) * F.lit(_PH_MULT)).bitwiseAND(mask)
     return x.bitwiseXOR(F.shiftright(x, 16))
 
 
@@ -163,32 +101,49 @@ def portable_hash_sql(expr: str, i: int) -> str:
     return f"xor({x}, ({x}) >> 16)"
 
 
-def _cms_cells(key_col: str, depth: int, width: int):
-    """The exploded (row, col) cell coordinates of a key — the ONE place
-    the CMS coordinate arithmetic lives (build, build-from-counts, and the
-    grouped variant all share it, so a change cannot silently fork)."""
-    return F.explode(
+def _cms_cells(
+    df: DataFrame, key_col: str, depth: int, width: int, *keep: str
+) -> DataFrame:
+    """(``*keep``, row, col): one row per hash row of each key — the ONE
+    place the CMS coordinate arithmetic lives (build, build-from-counts,
+    the grouped build and the estimate all share it, so a change cannot
+    silently fork).  The ``depth`` column indexes are computed in a
+    projection BELOW the explode: inside a ``Generate`` node Spark does
+    not eliminate ``portable_hash``'s repeated sub-expressions (a 4×256
+    build over 100k cached events on 4 cores: 0.58–0.66 s with the hash
+    inside the explode, 0.17–0.23 s below it; the shape is pinned by
+    tests/test_plan_quality.py)."""
+    hashed = df.select(
+        *keep,
+        *[
+            (portable_hash(F.col(key_col), i) % width).cast("int").alias(f"__c{i}")
+            for i in range(depth)
+        ],
+    )
+    cells = F.explode(
         F.array(
             *[
-                F.struct(
-                    F.lit(i).alias("row"),
-                    (portable_hash(F.col(key_col), i) % width).cast("int").alias("col"),
-                )
+                F.struct(F.lit(i).alias("row"), F.col(f"__c{i}").alias("col"))
                 for i in range(depth)
             ]
         )
     )
+    return hashed.select(*keep, cells.alias("rc")).select(*keep, "rc.row", "rc.col")
 
 
 def cms_build_portable(
     df: DataFrame, key_col: str, depth: int = 4, width: int = 64
 ) -> DataFrame:
-    """:func:`cms_build` with the portable hash family — same explode +
-    bounded groupBy shape, same cell-sum mergeability, but every cell value
-    is reproducible in SQL (see ``cms_cell_sql``)."""
+    """Count-min sketch of a key column as a (row, col, cnt) relation:
+    each item increments one counter per hash row, so the build is one
+    explode (depth rows per item) + one map-side-combinable groupBy
+    bounded at depth*width cells.  Two sketches MERGE by summing cells —
+    the additive contract that lets 100 TB build per-partition sketches
+    and combine (q205) — and every cell value is reproducible in SQL
+    (``cms_cell_sql``)."""
     return (
-        df.select(_cms_cells(key_col, depth, width).alias("rc"))
-        .groupBy(F.col("rc.row").alias("row"), F.col("rc.col").alias("col"))
+        _cms_cells(df, key_col, depth, width)
+        .groupBy("row", "col")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
     )
 
@@ -212,26 +167,15 @@ def cms_build_portable_from_counts(
 def cms_estimate_portable(
     keys: DataFrame, sketch: DataFrame, key_col: str, depth: int = 4, width: int = 64
 ) -> DataFrame:
-    """:func:`cms_estimate` over a portable-hash sketch (broadcast join —
-    the sketch is depth*width-bounded by construction)."""
-    probes = keys.select(
-        F.col(key_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("row"),
-                        (portable_hash(F.col(key_col), i) % width)
-                        .cast("int")
-                        .alias("col"),
-                    )
-                    for i in range(depth)
-                ]
-            )
-        ).alias("rc"),
-    ).select(key_col, F.col("rc.row").alias("row"), F.col("rc.col").alias("col"))
+    """Point-frequency estimates: est(k) = min over rows of the counter at
+    (row, h_row(k)).  The sketch relation is bounded at depth*width cells
+    BY CONSTRUCTION, so broadcasting it is legitimate (contrast
+    vocabulary-sized relations, which never are).  CMS never
+    underestimates; the overestimate is <= e/width * N with probability
+    1 - e^-depth per key."""
     return (
-        probes.join(F.broadcast(sketch), ["row", "col"], "left")
+        _cms_cells(keys, key_col, depth, width, key_col)
+        .join(F.broadcast(sketch), ["row", "col"], "left")
         .groupBy(key_col)
         .agg(F.min(F.coalesce("cnt", F.lit(0))).cast("bigint").alias("est_count"))
     )
@@ -336,7 +280,8 @@ def hll_portable_registers_grouped(
     union of the groups' key sets is the whole table, the merged relation
     must equal the direct global build REGISTER FOR REGISTER (q203 pins
     that equality in-plan and against DuckDB)."""
-    assert m & (m - 1) == 0 and 2 <= m <= 65536, "m must be a power of two"
+    if m & (m - 1) or not 2 <= m <= 65536:
+        raise ValueError(f"m must be a power of two in [2, 65536], got {m}")
     reg, rho = _hll_reg_rho(key_col, m)
     return (
         df.select(F.col(group_col).alias("grp"), reg, rho)
@@ -384,12 +329,13 @@ def cms_build_portable_grouped_from_counts(
     global build CELL FOR CELL (q205 pins that equality in-plan and
     against DuckDB)."""
     return (
-        counts.select(
-            F.col(group_col).alias("grp"),
-            F.col(cnt_col).alias("__c"),
-            _cms_cells(key_col, depth, width).alias("rc"),
+        _cms_cells(
+            counts.select(
+                F.col(group_col).alias("grp"), F.col(cnt_col).alias("__c"), key_col
+            ),
+            key_col, depth, width, "grp", "__c",
         )
-        .groupBy("grp", F.col("rc.row").alias("row"), F.col("rc.col").alias("col"))
+        .groupBy("grp", "row", "col")
         .agg(F.sum("__c").cast("bigint").alias("cnt"))
     )
 

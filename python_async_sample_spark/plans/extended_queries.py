@@ -10,7 +10,11 @@ from pyspark.sql import functions as F
 
 from python_async_sample_spark.operators.asof import asof_join
 from python_async_sample_spark.operators.rangejoin import interval_point_join
-from python_async_sample_spark.operators.sketches import approx_distinct
+from python_async_sample_spark.operators.sketches import (
+    approx_distinct,
+    cms_cell_sql,
+    cms_estimate_portable,
+)
 from python_async_sample_spark.plans.registry import query
 from python_async_sample_spark.sources.readers import load_table, register_views
 
@@ -1579,37 +1583,104 @@ def q139_date_spine_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# The count-min heavy-hitter report, one oracle for every CMS query: q142
+# (raw-stream build), q165 (streamed build), q180 (build from per-key
+# counts); q205's merge-law oracle reuses the probe fragment.
+_CMS_DEPTH, _CMS_WIDTH = 4, 256
+
+
+def _cms_probe_sql(expr: str) -> str:
+    return "\n    UNION ALL ".join(
+        f"SELECT user_id, {i} AS r, {cms_cell_sql(expr, i, _CMS_WIDTH)} AS col FROM top"
+        for i in range(_CMS_DEPTH)
+    )
+
+
+_CMS_ORACLE = f"""
+    WITH cells AS (
+      SELECT r, col, CAST(count(*) AS BIGINT) AS cnt FROM (
+        {"    UNION ALL ".join(
+            f"SELECT {i} AS r, {cms_cell_sql('user_id', i, _CMS_WIDTH)} AS col FROM events "
+            for i in range(_CMS_DEPTH)
+        )}
+      ) GROUP BY r, col
+    ),
+    top AS (
+      SELECT user_id, CAST(count(*) AS BIGINT) AS true_count,
+             CAST(row_number() OVER (ORDER BY count(*) DESC, user_id) AS INT) AS rank
+      FROM events GROUP BY user_id
+      QUALIFY rank <= 10
+    ),
+    probes AS (
+      {_cms_probe_sql('user_id')}
+    ),
+    est AS (
+      SELECT p.user_id, CAST(min(coalesce(c.cnt, 0)) AS BIGINT) AS est_count
+      FROM probes p LEFT JOIN cells c USING (r, col)
+      GROUP BY p.user_id
+    )
+    SELECT t.rank, t.user_id, t.true_count, e.est_count
+    FROM top t JOIN est e USING (user_id)
+    ORDER BY rank
+"""
+
+
+def _cms_heavy_hitters(per_key: DataFrame, sketch: DataFrame, what: str) -> DataFrame:
+    """The readout every CMS query here shares (q142, q165, q180, q205),
+    the relation ``_CMS_ORACLE`` replays: the 10 hottest keys of a
+    (user_id, true_count) relation, ranked by (count desc, user_id), with
+    their exact counts and ``sketch``'s estimates side by side.  An in-plan
+    guard poisons the query if ANY estimate undercuts its true count — the
+    CMS hard property, checked on every run at full scale (belt and
+    suspenders over the value oracle)."""
+    from pyspark.sql.window import Window as W
+
+    from python_async_sample_spark.plans.similarity_queries import _union_poison_guard
+
+    order = (F.col("true_count").desc(), "user_id")
+    top = (
+        per_key.orderBy(*order)
+        .limit(10)
+        .select(
+            F.row_number().over(W.orderBy(*order)).cast("int").alias("rank"),
+            "user_id",
+            "true_count",
+        )
+    )
+    est = cms_estimate_portable(
+        top.select("user_id"), sketch, "user_id", depth=_CMS_DEPTH, width=_CMS_WIDTH
+    )
+    out = top.join(est, "user_id").select("rank", "user_id", "true_count", "est_count")
+    violation = out.where(F.col("est_count") < F.col("true_count")).limit(1)
+    return _union_poison_guard(
+        out, violation, f"{what} underestimated a key count — impossible by construction"
+    ).orderBy("rank")
+
+
+def _user_counts(ev: DataFrame) -> DataFrame:
+    """(user_id, true_count): the exact per-key counts a heavy-hitter
+    readout ranks."""
+    return ev.groupBy("user_id").agg(F.count(F.lit(1)).cast("bigint").alias("true_count"))
+
+
 @query(
     "q142_cms_heavy_hitters",
-    oracle=None,  # estimates depend on xxhash64 (no DuckDB equivalent);
-    # the CMS never-underestimate property is enforced IN the plan
-    # (union-poison guard) and the e/width error band in tests/test_sketches.py
+    oracle=_CMS_ORACLE,
     ref="count-min frequency sketch (beyond reference; completes the sketch family — HLL distinct q63, KLL quantile q91, CMS frequency)",
-    tags=("sketch", "scale", "no_oracle"),
+    tags=("sketch", "scale"),
 )
 def q142_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 10 hottest event keys with their exact counts and count-min
-    estimates side by side. The sketch is depth*width-bounded by
-    construction (broadcastable, mergeable by cell-sum); the in-plan guard
-    poisons the query if ANY estimate undercuts its true count — the CMS
-    hard property, checked on every run at full scale."""
-    from python_async_sample_spark.operators.sketches import cms_build, cms_estimate
-    from python_async_sample_spark.operators.skew import skew_report
-    from python_async_sample_spark.plans.similarity_queries import _union_poison_guard
+    estimates side by side, the sketch built from the raw event stream
+    (q180 builds the same cells from per-key counts, and both answer
+    ``_CMS_ORACLE``). The sketch is depth*width-bounded by construction
+    (broadcastable, mergeable by cell-sum); the readout's in-plan guard
+    poisons the query if ANY estimate undercuts its true count."""
+    from python_async_sample_spark.operators.sketches import cms_build_portable
 
     ev = load_table(spark, sf_dir, "events")
-    sketch = cms_build(ev, "user_id", depth=4, width=256)
-    top = skew_report(ev, "user_id", top_k=10).select(
-        "rank", "user_id", F.col("n_rows").alias("true_count")
-    )
-    est = cms_estimate(top.select("user_id"), sketch, "user_id", depth=4, width=256)
-    out = top.join(est, "user_id").select(
-        "rank", "user_id", "true_count", "est_count"
-    )
-    violation = out.where(F.col("est_count") < F.col("true_count")).limit(1)
-    return _union_poison_guard(
-        out, violation, "CMS underestimated a key count — impossible by construction"
-    ).orderBy("rank")
+    sketch = cms_build_portable(ev, "user_id", depth=_CMS_DEPTH, width=_CMS_WIDTH)
+    return _cms_heavy_hitters(_user_counts(ev), sketch, "CMS")
 
 
 _PIT_ORACLE = """

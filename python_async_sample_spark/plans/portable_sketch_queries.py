@@ -1,19 +1,20 @@
-"""Portable-hash sketch queries — the cross-engine-replayable twins.
+"""Portable-hash sketch queries — the cross-engine-replayable sketches.
 
-The xxhash64 sketch family (q63/q91/q142/q155/q164/q165) is verified by
-error-band guards and merge-law tests because no independent engine can
-recompute xxhash64 values.  The queries below rebuild the same sketch
-shapes on a 32-bit xor-shift-multiply mixer (the splitmix/lowbias32
-construction: golden-gamma seed per hash index, then two rounds of
-``x = ((x XOR x>>16) * 0x45D9F3B) mod 2^32`` and a final xor-fold —
-``operators/sketches.portable_hash``; NOT an affine ``a·x+b mod p``
-family, which is 2-universal but collapses HLL on sequential keys),
-whose exact int64 arithmetic DuckDB
-replays verbatim — so every CMS cell, HLL register and Bloom bit is
-HASH-MATCHED against the oracle, not just banded.  The xxhash64 variants
-stay the production path (better diffusion, JVM-native); these certify the
-sketch ALGEBRA — build shapes, estimate formulas, membership semantics —
-end to end on an independent engine.
+The JVM sketch built-ins (HLL++ q63/q155/q164, the quantile sketch q91)
+are verified by error-band guards and merge-law tests because no
+independent engine can recompute their state.  The queries below build
+sketch shapes on a 32-bit xor-shift-multiply mixer (the
+splitmix/lowbias32 construction: golden-gamma seed per hash index, then
+two rounds of ``x = ((x XOR x>>16) * 0x45D9F3B) mod 2^32`` and a final
+xor-fold — ``operators/sketches.portable_hash``; NOT an affine
+``a·x+b mod p`` family, which is 2-universal but collapses HLL on
+sequential keys), whose exact int64 arithmetic DuckDB replays verbatim —
+so every CMS cell, HLL register and Bloom bit is HASH-MATCHED against the
+oracle, not just banded.  Count-min has only this kernel (q142, q165,
+q180 and q205 share one readout,
+``extended_queries._cms_heavy_hitters``); the HLL queries
+certify the sketch ALGEBRA — build shapes, estimate formulas, merge laws
+— that the JVM built-ins share.
 
 Reference tie-in: the reference validates outputs only by exact SQL
 (eda_query.py's aggregate checks); sketches are beyond its surface, so this
@@ -28,110 +29,49 @@ from pyspark.sql import functions as F
 
 from python_async_sample_spark.operators.bloom import bloom_might_contain, build_bloom
 from python_async_sample_spark.operators.sketches import (
-    cms_build_portable,
     cms_cell_sql,
-    cms_estimate_portable,
     hll_portable_estimate,
     hll_portable_registers,
     hll_portable_sql,
     portable_hash,
     portable_hash_sql,
 )
+from python_async_sample_spark.plans.extended_queries import (
+    _CMS_DEPTH,
+    _CMS_ORACLE,
+    _CMS_WIDTH,
+    _cms_heavy_hitters,
+    _cms_probe_sql,
+    _user_counts,
+)
 from python_async_sample_spark.plans.registry import query
 from python_async_sample_spark.plans.similarity_queries import _union_poison_guard
 from python_async_sample_spark.sources.readers import load_table
 
-_CMS_DEPTH, _CMS_WIDTH = 4, 256
-
-
-def _cms_probe_sql(expr: str) -> str:
-    return "\n    UNION ALL ".join(
-        f"SELECT user_id, {i} AS r, {cms_cell_sql(expr, i, _CMS_WIDTH)} AS col FROM top"
-        for i in range(_CMS_DEPTH)
-    )
-
-
-_CMS_ORACLE = f"""
-    WITH cells AS (
-      SELECT r, col, CAST(count(*) AS BIGINT) AS cnt FROM (
-        {"    UNION ALL ".join(
-            f"SELECT {i} AS r, {cms_cell_sql('user_id', i, _CMS_WIDTH)} AS col FROM events "
-            for i in range(_CMS_DEPTH)
-        )}
-      ) GROUP BY r, col
-    ),
-    top AS (
-      SELECT user_id, CAST(count(*) AS BIGINT) AS true_count,
-             CAST(row_number() OVER (ORDER BY count(*) DESC, user_id) AS INT) AS rank
-      FROM events GROUP BY user_id
-      QUALIFY rank <= 10
-    ),
-    probes AS (
-      {_cms_probe_sql('user_id')}
-    ),
-    est AS (
-      SELECT p.user_id, CAST(min(coalesce(c.cnt, 0)) AS BIGINT) AS est_count
-      FROM probes p LEFT JOIN cells c USING (r, col)
-      GROUP BY p.user_id
-    )
-    SELECT t.rank, t.user_id, t.true_count, e.est_count
-    FROM top t JOIN est e USING (user_id)
-    ORDER BY rank
-"""
-
-
 @query(
     "q180_cms_portable_exact",
     oracle=_CMS_ORACLE,
-    ref="count-min sketch, cross-engine hash-matched (beyond reference; the value-oracled twin of q142's xxhash64 build)",
+    ref="count-min sketch, cross-engine hash-matched (beyond reference; q142's report with the sketch built from per-key counts)",
     tags=("sketch", "scale"),
 )
 def q180_cms_portable_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q142's heavy-hitter report rebuilt on the portable hash family, so
-    the ORACLE RECOMPUTES EVERY SKETCH CELL: build (explode + bounded
-    groupBy, depth*width cells), point estimates (min over hash rows via a
-    broadcast of the bounded cell relation), and the deterministic top-10
-    ranking all hash-match DuckDB. The never-underestimate guard stays
-    in-plan — belt and suspenders over the value oracle."""
-    from pyspark.sql.window import Window as W
-
+    """q142's heavy-hitter report with the sketch built from per-key
+    counts: ONE scan + ONE per-key groupBy feeds both faces — the sketch
+    build (each key adds its count to its cells — identical cells to
+    q142's raw-stream build) and the heavy-hitter ranking.  Materialized
+    so the two consumers don't re-run the scan+shuffle lineage.  The
+    ORACLE RECOMPUTES EVERY SKETCH CELL: build, point estimates (min over
+    hash rows via a broadcast of the bounded cell relation) and the
+    deterministic top-10 ranking all hash-match DuckDB."""
     from python_async_sample_spark.operators.sketches import (
         cms_build_portable_from_counts,
     )
 
-    ev = load_table(spark, sf_dir, "events")
-    # ONE scan + ONE per-key groupBy feeds both faces: the sketch build
-    # (each key adds its count to its cells — identical cells to the
-    # raw-stream build) and the heavy-hitter ranking.  Materialized so the
-    # two consumers don't re-run the scan+shuffle lineage.
-    per_key = (
-        ev.groupBy("user_id")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("true_count"))
-        .localCheckpoint(eager=False)
-    )
+    per_key = _user_counts(load_table(spark, sf_dir, "events")).localCheckpoint(eager=False)
     sketch = cms_build_portable_from_counts(
         per_key, "user_id", "true_count", depth=_CMS_DEPTH, width=_CMS_WIDTH
     )
-    top = (
-        per_key.orderBy(F.col("true_count").desc(), "user_id")
-        .limit(10)
-        .select(
-            F.row_number()
-            .over(W.orderBy(F.col("true_count").desc(), "user_id"))
-            .cast("int")
-            .alias("rank"),
-            "user_id",
-            "true_count",
-        )
-    )
-    est = cms_estimate_portable(
-        top.select("user_id"), sketch, "user_id", depth=_CMS_DEPTH, width=_CMS_WIDTH
-    )
-    out = top.join(est, "user_id").select("rank", "user_id", "true_count", "est_count")
-    violation = out.where(F.col("est_count") < F.col("true_count")).limit(1)
-    return _union_poison_guard(
-        out, violation, "portable CMS underestimated a key count — impossible by construction"
-    ).orderBy("rank")
+    return _cms_heavy_hitters(per_key, sketch, "portable CMS")
 
 
 _HLL_M = 128
@@ -461,74 +401,24 @@ def q183_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST((CASE WHEN v0 > 0 THEN CAST(1 AS BIGINT) ELSE 0 END) + (CASE WHEN v1 > 0 THEN CAST(2 AS BIGINT) ELSE 0 END) + (CASE WHEN v2 > 0 THEN CAST(4 AS BIGINT) ELSE 0 END) + (CASE WHEN v3 > 0 THEN CAST(8 AS BIGINT) ELSE 0 END) + (CASE WHEN v4 > 0 THEN CAST(16 AS BIGINT) ELSE 0 END) + (CASE WHEN v5 > 0 THEN CAST(32 AS BIGINT) ELSE 0 END) + (CASE WHEN v6 > 0 THEN CAST(64 AS BIGINT) ELSE 0 END) + (CASE WHEN v7 > 0 THEN CAST(128 AS BIGINT) ELSE 0 END) + (CASE WHEN v8 > 0 THEN CAST(256 AS BIGINT) ELSE 0 END) + (CASE WHEN v9 > 0 THEN CAST(512 AS BIGINT) ELSE 0 END) + (CASE WHEN v10 > 0 THEN CAST(1024 AS BIGINT) ELSE 0 END) + (CASE WHEN v11 > 0 THEN CAST(2048 AS BIGINT) ELSE 0 END) + (CASE WHEN v12 > 0 THEN CAST(4096 AS BIGINT) ELSE 0 END) + (CASE WHEN v13 > 0 THEN CAST(8192 AS BIGINT) ELSE 0 END) + (CASE WHEN v14 > 0 THEN CAST(16384 AS BIGINT) ELSE 0 END) + (CASE WHEN v15 > 0 THEN CAST(32768 AS BIGINT) ELSE 0 END) + (CASE WHEN v16 > 0 THEN CAST(65536 AS BIGINT) ELSE 0 END) + (CASE WHEN v17 > 0 THEN CAST(131072 AS BIGINT) ELSE 0 END) + (CASE WHEN v18 > 0 THEN CAST(262144 AS BIGINT) ELSE 0 END) + (CASE WHEN v19 > 0 THEN CAST(524288 AS BIGINT) ELSE 0 END) + (CASE WHEN v20 > 0 THEN CAST(1048576 AS BIGINT) ELSE 0 END) + (CASE WHEN v21 > 0 THEN CAST(2097152 AS BIGINT) ELSE 0 END) + (CASE WHEN v22 > 0 THEN CAST(4194304 AS BIGINT) ELSE 0 END) + (CASE WHEN v23 > 0 THEN CAST(8388608 AS BIGINT) ELSE 0 END) + (CASE WHEN v24 > 0 THEN CAST(16777216 AS BIGINT) ELSE 0 END) + (CASE WHEN v25 > 0 THEN CAST(33554432 AS BIGINT) ELSE 0 END) + (CASE WHEN v26 > 0 THEN CAST(67108864 AS BIGINT) ELSE 0 END) + (CASE WHEN v27 > 0 THEN CAST(134217728 AS BIGINT) ELSE 0 END) + (CASE WHEN v28 > 0 THEN CAST(268435456 AS BIGINT) ELSE 0 END) + (CASE WHEN v29 > 0 THEN CAST(536870912 AS BIGINT) ELSE 0 END) + (CASE WHEN v30 > 0 THEN CAST(1073741824 AS BIGINT) ELSE 0 END) + (CASE WHEN v31 > 0 THEN CAST(2147483648 AS BIGINT) ELSE 0 END) AS BIGINT) AS simhash32
     FROM votes ORDER BY doc_id
     """,
-    ref="q33's SimHash algebra certified end-to-end on an independent engine (dedup.py:simhash is the xxhash64/64-bit production path)",
+    ref="q33's SimHash kernel certified end-to-end on an independent engine (dedup.simhash32_md5: the md5/32-bit face of the kernel dedup.simhash runs on xxhash64)",
     tags=("llm-data", "dedup", "portable-sketch"),
 )
 def q187_simhash_portable_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q33's SimHash, rebuilt on a hash both engines share: the token hash
-    is md5 (bit-identical everywhere), each hex digit contributes its four
-    nibble bits, and the 32 per-bit majority votes assemble the signature
-    — so EVERY document's signature is hash-matched against DuckDB, not
-    just banded (the xxhash64 64-bit variant stays the production path;
-    this certifies the vote/bit-packing algebra it shares).  Same plan
-    shape as production: distinct-token explode, ONE groupBy carrying 32
-    map-side-combined vote sums per doc, signature assembled from vote
-    signs with integer bit arithmetic — no Python anywhere."""
+    """q33's SimHash kernel (``dedup._simhash``) on a token hash both
+    engines share: md5's first 8 hex digits, each contributing its four
+    nibble bits, so EVERY document's 32-bit signature is hash-matched
+    against DuckDB, not just banded.  The oracle spells the votes out by
+    hand on purpose — it is the independent reference for the kernel's
+    vote/bit-packing algebra, which q33's 64-bit xxhash face shares."""
+    from python_async_sample_spark.operators.dedup import simhash32_md5
+
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id",
-        F.explode(F.array_distinct(F.split("text", " "))).alias("tok"),
-    ).where(F.length("tok") > 0)
-    dig = toks.select(
-        "doc_id",
-        *[
-            F.expr(
-                f"instr('0123456789abcdef', substring(md5(tok), {j + 1}, 1)) - 1"
-            ).alias(f"d{j}")
-            for j in range(8)
-        ],
+    return (
+        simhash32_md5(docs, "doc_id", "text")
+        .select("doc_id", F.col("simhash").alias("simhash32"))
+        .orderBy("doc_id")
     )
-    votes = dig.groupBy("doc_id").agg(
-        F.sum(F.when(F.col("d0").bitwiseAND(F.lit(1)) != 0, 1).otherwise(-1)).alias("v0"),
-        F.sum(F.when(F.col("d0").bitwiseAND(F.lit(2)) != 0, 1).otherwise(-1)).alias("v1"),
-        F.sum(F.when(F.col("d0").bitwiseAND(F.lit(4)) != 0, 1).otherwise(-1)).alias("v2"),
-        F.sum(F.when(F.col("d0").bitwiseAND(F.lit(8)) != 0, 1).otherwise(-1)).alias("v3"),
-        F.sum(F.when(F.col("d1").bitwiseAND(F.lit(1)) != 0, 1).otherwise(-1)).alias("v4"),
-        F.sum(F.when(F.col("d1").bitwiseAND(F.lit(2)) != 0, 1).otherwise(-1)).alias("v5"),
-        F.sum(F.when(F.col("d1").bitwiseAND(F.lit(4)) != 0, 1).otherwise(-1)).alias("v6"),
-        F.sum(F.when(F.col("d1").bitwiseAND(F.lit(8)) != 0, 1).otherwise(-1)).alias("v7"),
-        F.sum(F.when(F.col("d2").bitwiseAND(F.lit(1)) != 0, 1).otherwise(-1)).alias("v8"),
-        F.sum(F.when(F.col("d2").bitwiseAND(F.lit(2)) != 0, 1).otherwise(-1)).alias("v9"),
-        F.sum(F.when(F.col("d2").bitwiseAND(F.lit(4)) != 0, 1).otherwise(-1)).alias("v10"),
-        F.sum(F.when(F.col("d2").bitwiseAND(F.lit(8)) != 0, 1).otherwise(-1)).alias("v11"),
-        F.sum(F.when(F.col("d3").bitwiseAND(F.lit(1)) != 0, 1).otherwise(-1)).alias("v12"),
-        F.sum(F.when(F.col("d3").bitwiseAND(F.lit(2)) != 0, 1).otherwise(-1)).alias("v13"),
-        F.sum(F.when(F.col("d3").bitwiseAND(F.lit(4)) != 0, 1).otherwise(-1)).alias("v14"),
-        F.sum(F.when(F.col("d3").bitwiseAND(F.lit(8)) != 0, 1).otherwise(-1)).alias("v15"),
-        F.sum(F.when(F.col("d4").bitwiseAND(F.lit(1)) != 0, 1).otherwise(-1)).alias("v16"),
-        F.sum(F.when(F.col("d4").bitwiseAND(F.lit(2)) != 0, 1).otherwise(-1)).alias("v17"),
-        F.sum(F.when(F.col("d4").bitwiseAND(F.lit(4)) != 0, 1).otherwise(-1)).alias("v18"),
-        F.sum(F.when(F.col("d4").bitwiseAND(F.lit(8)) != 0, 1).otherwise(-1)).alias("v19"),
-        F.sum(F.when(F.col("d5").bitwiseAND(F.lit(1)) != 0, 1).otherwise(-1)).alias("v20"),
-        F.sum(F.when(F.col("d5").bitwiseAND(F.lit(2)) != 0, 1).otherwise(-1)).alias("v21"),
-        F.sum(F.when(F.col("d5").bitwiseAND(F.lit(4)) != 0, 1).otherwise(-1)).alias("v22"),
-        F.sum(F.when(F.col("d5").bitwiseAND(F.lit(8)) != 0, 1).otherwise(-1)).alias("v23"),
-        F.sum(F.when(F.col("d6").bitwiseAND(F.lit(1)) != 0, 1).otherwise(-1)).alias("v24"),
-        F.sum(F.when(F.col("d6").bitwiseAND(F.lit(2)) != 0, 1).otherwise(-1)).alias("v25"),
-        F.sum(F.when(F.col("d6").bitwiseAND(F.lit(4)) != 0, 1).otherwise(-1)).alias("v26"),
-        F.sum(F.when(F.col("d6").bitwiseAND(F.lit(8)) != 0, 1).otherwise(-1)).alias("v27"),
-        F.sum(F.when(F.col("d7").bitwiseAND(F.lit(1)) != 0, 1).otherwise(-1)).alias("v28"),
-        F.sum(F.when(F.col("d7").bitwiseAND(F.lit(2)) != 0, 1).otherwise(-1)).alias("v29"),
-        F.sum(F.when(F.col("d7").bitwiseAND(F.lit(4)) != 0, 1).otherwise(-1)).alias("v30"),
-        F.sum(F.when(F.col("d7").bitwiseAND(F.lit(8)) != 0, 1).otherwise(-1)).alias("v31"),
-    )
-    sig = None
-    for i in range(32):
-        term = F.when(F.col(f"v{i}") > 0, F.lit(1 << i).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        sig = term if sig is None else sig + term
-    return votes.select("doc_id", sig.alias("simhash32")).orderBy("doc_id")
 
 
 # --- q199: mergeable equi-width histogram quantile sketch ------------------
@@ -914,8 +804,6 @@ def q205_cms_merge_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-plan: merged cells must equal a direct global build cell-for-cell
     (full-outer mismatch poison — the merge law), and no estimate may
     undershoot its true count (CMS never underestimates)."""
-    from pyspark.sql.window import Window as W
-
     from python_async_sample_spark.operators.sketches import (
         cms_build_portable_from_counts,
         cms_build_portable_grouped_from_counts,
@@ -936,28 +824,12 @@ def q205_cms_merge_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     global_counts = per_key.groupBy("user_id").agg(
         F.sum("cnt").cast("bigint").alias("true_count")
     ).localCheckpoint(eager=False)
-    top = (
-        global_counts.orderBy(F.col("true_count").desc(), "user_id")
-        .limit(10)
-        .select(
-            F.row_number()
-            .over(W.orderBy(F.col("true_count").desc(), "user_id"))
-            .cast("int")
-            .alias("rank"),
-            "user_id",
-            "true_count",
-        )
-    )
-    est = cms_estimate_portable(
-        top.select("user_id"), merged, "user_id", depth=_CMS_DEPTH, width=_CMS_WIDTH
-    )
     n_sketches = ev.agg(
         F.countDistinct("event_type").cast("bigint").alias("n_sketches_merged")
     )
-    out = (
-        top.join(est, "user_id")
-        .crossJoin(F.broadcast(n_sketches))
-        .select("rank", "user_id", "true_count", "est_count", "n_sketches_merged")
+    # guard 2 (inside the readout): CMS never underestimates
+    out = _cms_heavy_hitters(global_counts, merged, "merged portable CMS").crossJoin(
+        F.broadcast(n_sketches)
     )
     # guard 1: merge law — merged cells == direct global build cells
     direct = cms_build_portable_from_counts(
@@ -973,11 +845,6 @@ def q205_cms_merge_law(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .limit(1)
     )
-    out = _union_poison_guard(
-        out, mismatch, "CMS merge law violated: merged cells differ from direct build"
-    )
-    # guard 2: CMS never underestimates
-    under = out.where(F.col("est_count") < F.col("true_count")).limit(1)
     return _union_poison_guard(
-        out, under, "portable CMS underestimated a key count — impossible by construction"
+        out, mismatch, "CMS merge law violated: merged cells differ from direct build"
     ).orderBy("rank")

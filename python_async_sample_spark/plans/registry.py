@@ -41,21 +41,20 @@ QUERIES: dict[str, QuerySpec] = {}
 # query all fail loudly at registry load.
 ROWS_ONLY_TWINS: dict[str, str] = {
     # SimHash near-pairs: hamming blocking is engine-defined; q187 pins the
-    # identical 64-bit signature kernel against a DuckDB replay.
+    # same vote-and-pack kernel (its 32-bit md5 face) against a DuckDB replay.
     "q33_simhash_near_pairs": "q187_simhash_portable_exact",
     # ANN faces: approximate by construction with in-plan recall floors;
     # each certified twin forces deterministic buckets/centroids and
     # hash-matches exact top-k through the same code path.
     "q36_ann_lsh_topk": "q229_lsh_certified_topk",
     "q37_ann_ivf_topk": "q227_ivf_certified_topk",
-    # Sketches: estimates depend on xxhash64 (no DuckDB equivalent); the
-    # portable-hash twins rebuild the identical register/cell state in SQL.
+    # Sketches on the JVM built-ins (HLL++, the KLL/GK quantile sketch),
+    # whose internal state no other engine recomputes; the portable-hash
+    # twins rebuild the same sketch algebra register by register in SQL.
     "q63_approx_distinct_users": "q181_hll_portable_exact",
     "q91_approx_quantiles": "q199_histogram_quantile_sketch",
-    "q142_cms_heavy_hitters": "q180_cms_portable_exact",
     "q155_hll_rolling_distinct": "q181_hll_portable_exact",
     "q164_audience_overlap_hll": "q203_hll_merge_law",
-    "q165_stream_cms_heavy_hitters": "q205_cms_merge_law",
     # Media perceptual hash: the 64-bit aHash is kernel-defined; q225
     # hash-certifies the same decode->aHash->hamming-join pipeline.
     "q87_media_phash_pairs": "q225_ahash_near_pairs",

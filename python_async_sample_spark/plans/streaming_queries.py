@@ -18,6 +18,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_async_sample_spark.operators.sessionize import session_stats
+from python_async_sample_spark.plans.extended_queries import (
+    _CMS_DEPTH,
+    _CMS_ORACLE,
+    _CMS_WIDTH,
+    _cms_heavy_hitters,
+    _user_counts,
+)
 from python_async_sample_spark.plans.extended_queries import _PIT_ORACLE as _PIT_STREAM_ORACLE
 from python_async_sample_spark.plans.extended_queries import _PSI_ORACLE as _STREAM_PSI_ORACLE
 from python_async_sample_spark.plans.registry import query
@@ -399,41 +406,28 @@ def q163_stream_pit_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q165_stream_cms_heavy_hitters",
-    oracle=None,  # estimates depend on xxhash64 (no DuckDB equivalent); the
-    # never-underestimate property is enforced in-plan and cell-sum merge
-    # law is pinned in tests (merged ≡ whole-stream)
+    oracle=_CMS_ORACLE,
     ref="streaming count-min maintenance (beyond reference; q142's sketch built as epoch-merged streaming state)",
-    tags=("streaming", "sketch", "no_oracle"),
+    tags=("streaming", "sketch"),
 )
 def q165_stream_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q142's heavy-hitter readout where the count-min cells are built BY
     THE STREAMING ENGINE — per-batch bounded cell partials, appended as
     exactly-once epoch commits to a versioned table and merged by cell sum
     (the CMS merge law), so frequency state stays depth×width forever on an
-    unbounded stream.  Because merge is exact, the streamed sketch
-    is BIT-IDENTICAL to the batch-built one, and the same in-plan
+    unbounded stream.  Because merge is exact, the streamed sketch is
+    BIT-IDENTICAL to the batch-built one: the same ``_CMS_ORACLE`` as
+    q142/q180 recomputes every cell, and the same in-plan
     never-underestimate guard runs against exact counts."""
-    import tempfile
-
-    from python_async_sample_spark.operators.sketches import cms_estimate
-    from python_async_sample_spark.operators.skew import skew_report
-    from python_async_sample_spark.plans.similarity_queries import _union_poison_guard
     from python_async_sample_spark.streaming.jobs import stream_cms_cells_to_parquet
 
     tmp = tempfile.mkdtemp(prefix="spark_graft_cms_stream_")
     sketch = stream_cms_cells_to_parquet(
-        spark, sf_dir, f"{tmp}/sink", f"{tmp}/checkpoint", depth=4, width=256
+        spark, sf_dir, f"{tmp}/sink", f"{tmp}/checkpoint",
+        depth=_CMS_DEPTH, width=_CMS_WIDTH,
     )
     ev = load_table(spark, sf_dir, "events")
-    top = skew_report(ev, "user_id", top_k=10).select(
-        "rank", "user_id", F.col("n_rows").alias("true_count")
-    )
-    est = cms_estimate(top.select("user_id"), sketch, "user_id", depth=4, width=256)
-    out = top.join(est, "user_id").select("rank", "user_id", "true_count", "est_count")
-    violation = out.where(F.col("est_count") < F.col("true_count")).limit(1)
-    return _union_poison_guard(
-        out, violation, "streamed CMS underestimated a key count — impossible by construction"
-    ).orderBy("rank")
+    return _cms_heavy_hitters(_user_counts(ev), sketch, "streamed CMS")
 
 
 @query(

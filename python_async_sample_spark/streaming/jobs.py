@@ -629,14 +629,16 @@ def stream_cms_cells_to_parquet(
     (test_sketches pins merged ≡ whole-stream).  This is the streaming
     face of the sketch-state story: frequency state bounded at depth×width
     counters forever, on an unbounded stream."""
-    from python_async_sample_spark.operators.sketches import cms_build
+    from python_async_sample_spark.operators.sketches import cms_build_portable
 
     drain_to_versioned(
         spark,
         read_events_stream(spark, sf_dir),
         out_path,
         checkpoint,
-        lambda batch_df, _epoch: cms_build(batch_df, "user_id", depth=depth, width=width),
+        lambda batch_df, _epoch: cms_build_portable(
+            batch_df, "user_id", depth=depth, width=width
+        ),
     )
     return read_version(spark, out_path).groupBy("row", "col").agg(
         F.sum("cnt").cast("bigint").alias("cnt")

@@ -693,11 +693,12 @@ def probed_verbs(spark):
 
 
 # ---------------------------------------------------------------------------
-# Rows-only error contracts (VERDICT r6 item 8): the 11 no-oracle queries
+# Rows-only error contracts (VERDICT r6 item 8): the no-oracle queries
 # carry their bounds as IN-PLAN guards (recall floors, sketch error bands,
 # completeness poisons) that fire under count() — running each on the ×10
 # corpus makes a scale-induced degradation POISON the probe instead of
-# passing silently.  Two structural exceptions carry no runtime guard and
+# passing silently.  The count-min reports q142/q165 have a DuckDB oracle
+# now but keep their never-underestimate guard, so they stay probed.  Two structural exceptions carry no runtime guard and
 # are documented in SCALE.md's notes instead:
 #   q33_simhash_near_pairs — 4×16-bit chunk blocking is pigeonhole-complete
 #     at d≤3 BY CONSTRUCTION at any N (and the oracled twin q187 hash-pins

@@ -423,6 +423,18 @@ def test_portable_simhash_is_one_aggregate_no_python(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
+def test_cms_explode_carries_no_hash_arithmetic(spark, sf_dir):
+    """q142's count-min build and estimate hash each key in a projection
+    BELOW the explode: inside a Generate node Spark does not eliminate
+    portable_hash's repeated sub-expressions, and the raw-stream build
+    ran several times slower with the hash inlined there."""
+    df = SPECS["q142_cms_heavy_hitters"].fn(spark, sf_dir)
+    generates = [l for l in plan_str(df, "simple").splitlines() if "Generate " in l]
+    assert len(generates) >= 2, generates  # the build and the estimate probes
+    for line in generates:
+        assert "pmod" not in line and "^" not in line, line
+
+
 def test_semdedup_pairs_are_cluster_equi_joins(spark, sf_dir):
     """q200's pair mining must stay inside its quantizer blocks — the
     whole point of SemDeDup's cluster-first design; a cartesian or

@@ -42,23 +42,28 @@ def test_quantile_sketch_rank_error(spark, sf_dir):
 
 
 def test_cms_never_underestimates_and_bounds_overestimate(spark, sf_dir):
-    from python_async_sample_spark.operators.sketches import cms_build, cms_estimate
-    from python_async_sample_spark.sources.readers import load_table
-    from pyspark.sql import functions as F
+    import math
+
+    from python_async_sample_spark.operators.sketches import (
+        cms_build_portable,
+        cms_estimate_portable,
+    )
 
     ev = load_table(spark, sf_dir, "events")
     n = ev.count()
     width = 256
-    sketch = cms_build(ev, "user_id", depth=4, width=width)
+    sketch = cms_build_portable(ev, "user_id", depth=4, width=width)
     # the sketch is bounded and its cells sum to depth * N
     cells = sketch.collect()
     assert len(cells) <= 4 * width
     assert sum(r["cnt"] for r in cells) == 4 * n
 
     exact = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("true"))
-    est = cms_estimate(exact.select("user_id"), sketch, "user_id", depth=4, width=width)
+    est = cms_estimate_portable(
+        exact.select("user_id"), sketch, "user_id", depth=4, width=width
+    )
     j = {r["user_id"]: r for r in exact.join(est, "user_id").collect()}
-    import math
+    assert len(j) == exact.count()
 
     eps_n = math.e / width * n
     over = 0
@@ -71,14 +76,12 @@ def test_cms_never_underestimates_and_bounds_overestimate(spark, sf_dir):
 
 
 def test_cms_merges_by_cell_sum(spark, sf_dir):
-    from python_async_sample_spark.operators.sketches import cms_build
-    from python_async_sample_spark.sources.readers import load_table
-    from pyspark.sql import functions as F
+    from python_async_sample_spark.operators.sketches import cms_build_portable
 
     ev = load_table(spark, sf_dir, "events")
-    whole = cms_build(ev, "user_id")
-    a = cms_build(ev.where("event_id % 2 = 0"), "user_id")
-    b = cms_build(ev.where("event_id % 2 = 1"), "user_id")
+    whole = cms_build_portable(ev, "user_id")
+    a = cms_build_portable(ev.where("event_id % 2 = 0"), "user_id")
+    b = cms_build_portable(ev.where("event_id % 2 = 1"), "user_id")
     merged = (
         a.unionByName(b)
         .groupBy("row", "col")
@@ -308,6 +311,16 @@ def test_portable_hash_py_matches_spark(spark):
         }
         for k in keys:
             assert got[k] == portable_hash_py(k, i), (k, i)
+
+
+def test_hll_register_count_must_be_a_power_of_two(spark):
+    """A ValueError, not an assert: ``python -O`` strips asserts."""
+    import pytest
+
+    from python_async_sample_spark.operators.sketches import hll_portable_registers
+
+    with pytest.raises(ValueError, match="power of two"):
+        hll_portable_registers(spark.range(4).withColumnRenamed("id", "k"), "k", m=100)
 
 
 def test_hll_estimate_empty_relation_returns_default_row(spark):

@@ -1836,6 +1836,29 @@ def test_verify_table_reports_missing_file_of_non_head_streaming_version(spark, 
     assert "v3: stats entries do not match the file list" in problems
 
 
+def test_verify_table_accepts_the_hole_a_pinned_vacuum_leaves(spark, root):
+    """vacuum with ``keep_versions`` (the catalog's pin) keeps an old
+    version below the recent range, so the retained version list has a
+    hole.  No read of a retained version crosses it: the fsck passes and
+    every retained version reads.  A wrong parent between two adjacent
+    retained versions is still reported."""
+    from python_async_sample_spark.sources.versioned import verify_table
+
+    df = spark.createDataFrame([(i, "x") for i in range(6)], "k int, v string")
+    create_table(spark, root, df.where("k = 0"), n_files=1)            # v0
+    for k in range(1, 6):
+        append_versioned(spark, root, df.where(f"k = {k}"))            # v1..v5
+    vacuum(root, keep_last=2, grace_seconds=0, keep_versions={1})
+    assert table_versions(root) == [1, 4, 5]
+    assert verify_table(root) == {"ok": True, "versions": 3, "problems": []}
+    assert [read_version(spark, root, v).count() for v in (1, 4, 5)] == [2, 5, 6]
+
+    m = json.load(open(_manifest_path(root, 5), encoding="ascii"))
+    m["parent"] = 1
+    json.dump(m, open(_manifest_path(root, 5), "w", encoding="ascii"))
+    assert verify_table(root)["problems"] == ["v5: parent=1 != 4"]
+
+
 def test_vacuum_crash_at_any_remove_leaves_every_listed_version_readable(
     spark, root, monkeypatch
 ):
