@@ -79,16 +79,18 @@ _PH_MULT = 0x45D9F3B
 
 def portable_hash(col, i: int):
     """h_i over an integral column, as exact int64 Spark expressions.
-    The key is reduced to [0, 2^32) BEFORE the gamma seed lands, so the
-    sum never leaves exact int64 range for ANY int64 key (see the module
-    comment).  Every ``mod 2^32`` is a mask with ``2^32 - 1``: on
-    two's-complement int64 that IS the non-negative residue (negative
-    keys included), bit-identical to the SQL twin's ``%`` and cheaper
-    than ``pmod``'s divide."""
-    mask = F.lit(_PH_M32 - 1)
-    x = (col.cast("long").bitwiseAND(mask) + F.lit(_PH_GAMMA * (i + 1))).bitwiseAND(mask)
+    The key is pmod-reduced to [0, 2^32) BEFORE the gamma seed lands, so
+    the sum never leaves exact int64 range for ANY int64 key (see the
+    module comment); the mix rounds preserve [0, 2^32) so plain ``%``
+    suffices after them."""
+    x = F.pmod(
+        F.pmod(col.cast("long"), F.lit(_PH_M32)) + F.lit(_PH_GAMMA * (i + 1)),
+        F.lit(_PH_M32),
+    )
     for _ in range(2):
-        x = (x.bitwiseXOR(F.shiftright(x, 16)) * F.lit(_PH_MULT)).bitwiseAND(mask)
+        x = F.pmod(
+            x.bitwiseXOR(F.shiftright(x, 16)) * F.lit(_PH_MULT), F.lit(_PH_M32)
+        )
     return x.bitwiseXOR(F.shiftright(x, 16))
 
 

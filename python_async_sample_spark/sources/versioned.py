@@ -1626,19 +1626,19 @@ def verify_table(root: str, deep: bool = False) -> dict:
     """fsck for a versioned table: walk every retained manifest and
     report — never raise — what a reader would hit.  Checks: manifest
     JSON parses and carries every field of the one manifest format,
-    schema parses, each version's parent is its predecessor wherever both
-    are retained (a hole in the version list is not damage: ``vacuum``
-    leaves one below the recent range for every ``keep_versions`` pin,
-    and no read of a retained version crosses it), commit timestamps are
-    monotone, the stats entries match the
-    file list, every referenced data file exists (in every retained
-    version, not only the head), and (``deep=True``) each file's footer
-    row count matches its manifest stats entry (a stats/data divergence
-    would silently corrupt MERGE/DELETE planning, which trusts the
-    manifest).  O(manifests) shallow; deep adds one local footer read per
-    referenced file.  Returns ``{"ok": bool, "versions": int, "problems":
-    [str]}`` — the operational pre-flight before vacuum/purge
-    maintenance."""
+    schema parses, each version's parent is the version before it
+    (``_commit`` writes ``parent + 1``, so this holds across a hole in
+    the version list, which is not damage: ``vacuum`` leaves one below
+    the recent range for every ``keep_versions`` pin, and no read of a
+    retained version crosses it), commit timestamps are monotone, the
+    stats entries match the file list, every referenced data file exists
+    (in every retained version, not only the head), and (``deep=True``)
+    each file's footer row count matches its manifest stats entry (a
+    stats/data divergence would silently corrupt MERGE/DELETE planning,
+    which trusts the manifest).  O(manifests) shallow; deep adds one
+    local footer read per referenced file.  Returns ``{"ok": bool,
+    "versions": int, "problems": [str]}`` — the operational pre-flight
+    before vacuum/purge maintenance."""
     root = root.rstrip("/")
     problems: list[str] = []
     versions = table_versions(root)
@@ -1647,7 +1647,7 @@ def verify_table(root: str, deep: bool = False) -> dict:
     fields = {"parent", "op", "files", "schema", "stats", "epochs", "checks",
               "dropped", "committed_at"}
     prev_ts = None
-    for i, v in enumerate(versions):
+    for v in versions:
         try:
             m = _read_manifest(root, v)
         except (json.JSONDecodeError, OSError) as ex:
@@ -1661,8 +1661,9 @@ def verify_table(root: str, deep: bool = False) -> dict:
             T.StructType.fromJson(json.loads(m["schema"]))
         except Exception as ex:  # noqa: BLE001
             problems.append(f"v{v}: schema unparseable ({ex})")
-        if i and v == versions[i - 1] + 1 and m["parent"] != versions[i - 1]:
-            problems.append(f"v{v}: parent={m['parent']} != {versions[i - 1]}")
+        parent = v - 1 if v else None
+        if m["parent"] != parent:
+            problems.append(f"v{v}: parent={m['parent']} != {parent}")
         at = m["committed_at"]
         if prev_ts is not None and at < prev_ts:
             problems.append(f"v{v}: committed_at regressed ({at} < {prev_ts})")

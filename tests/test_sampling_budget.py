@@ -151,12 +151,16 @@ def test_epoch_alloc_waterfilling_properties(spark):
             # common water level: equal shares within the 1-token remainder
             assert max(lvls) - min(lvls) <= 1
             # optimality: a filled group's cap never exceeds the level (else
-            # it should have been uncapped), except by the one remainder
-            # token: sizes (1, 1) at budget 1 fill one group to 1 and leave
-            # the other at 0, and no allocation does better
+            # it should have been uncapped) ...
+            over = [s for s in allocs if allocs[s] == caps[s] > max(lvls)]
+            # ... unless the largest-remainder rule filled it with its one
+            # extra token: then its cap is the level + 1 and it ranks ahead
+            # of every uncapped group by (cap, src), the pinned order (sizes
+            # (1, 1) at budget 1 fill s0 to 1 and leave s1 at 0)
             assert all(
-                caps[s] <= min(lvls) + 1
-                for s in allocs if allocs[s] == caps[s] and s not in uncapped
+                caps[s] == max(lvls) + 1
+                and all((caps[s], s) < (caps[u], u) for u in uncapped)
+                for s in over
             )
 
     check()

@@ -1840,8 +1840,8 @@ def test_verify_table_accepts_the_hole_a_pinned_vacuum_leaves(spark, root):
     """vacuum with ``keep_versions`` (the catalog's pin) keeps an old
     version below the recent range, so the retained version list has a
     hole.  No read of a retained version crosses it: the fsck passes and
-    every retained version reads.  A wrong parent between two adjacent
-    retained versions is still reported."""
+    every retained version reads.  A wrong parent is still reported, on
+    either side of the hole."""
     from python_async_sample_spark.sources.versioned import verify_table
 
     df = spark.createDataFrame([(i, "x") for i in range(6)], "k int, v string")
@@ -1853,10 +1853,13 @@ def test_verify_table_accepts_the_hole_a_pinned_vacuum_leaves(spark, root):
     assert verify_table(root) == {"ok": True, "versions": 3, "problems": []}
     assert [read_version(spark, root, v).count() for v in (1, 4, 5)] == [2, 5, 6]
 
-    m = json.load(open(_manifest_path(root, 5), encoding="ascii"))
-    m["parent"] = 1
-    json.dump(m, open(_manifest_path(root, 5), "w", encoding="ascii"))
-    assert verify_table(root)["problems"] == ["v5: parent=1 != 4"]
+    for v in (4, 5):  # v4 sits just above the hole, v5 beside v4
+        m = json.load(open(_manifest_path(root, v), encoding="ascii"))
+        m["parent"] = 1
+        json.dump(m, open(_manifest_path(root, v), "w", encoding="ascii"))
+    assert verify_table(root)["problems"] == [
+        "v4: parent=1 != 3", "v5: parent=1 != 4",
+    ]
 
 
 def test_vacuum_crash_at_any_remove_leaves_every_listed_version_readable(
