@@ -25,11 +25,12 @@ Pieces, each independently reusable:
   the scan (measured ~4x slower at identical arithmetic), the inverse of the
   k=8 tradeoff ``kmeans.assign_clusters`` sits on.
 * :func:`pq_topk_adc` — asymmetric distance computation: the (small, by the
-  same bounded-driver contract as ``_collect_query_matrix``) query set turns
-  into a ``Q x m x ksub`` lookup table of quantized subspace distances; an
-  Arrow kernel gathers ``lut[s, code_s]`` per corpus row and emits only its
-  local top-k per query, so the shuffle into the global merge carries <= k
-  rows per (query, batch) — the same scale bound as ``brute_force_topk``.
+  same bounded-driver contract as ``similarity._collect_queries``) query set
+  turns into a ``Q x m x ksub`` lookup table of quantized subspace
+  distances; the shared broadcast top-k kernel (``similarity._broadcast_topk``)
+  gathers ``lut[s, code_s]`` per corpus row and emits only its local top-k
+  per query, so the shuffle into the global merge carries <= k rows per
+  (query, batch) — the same kernel and scale bound as ``brute_force_topk``.
   The corpus side touches ONLY the codes relation (m small ints per row):
   at serving time the float vectors never leave storage.
 * :func:`pq_oracle_sql` — chained-CTE DuckDB replay of the whole trajectory
@@ -49,9 +50,15 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window as W
 
 from python_async_sample_spark.operators.kmeans import init_centroids
+from python_async_sample_spark.operators.similarity import (
+    _broadcast_topk,
+    _collect_queries,
+    _id_vec,
+    _rank_topk,
+    exact_l2_rank_sql,
+)
 
 _INTEGRAL = ("tinyint", "smallint", "int", "bigint")
 
@@ -217,16 +224,10 @@ def pq_encode(
 def _collect_queries_raw(
     queries: DataFrame, id_col: str, vec_col: str
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Driver-side (ids, RAW double matrix) of the query set — the L2-metric
-    sibling of ``similarity._collect_query_matrix`` (which L2-normalizes for
-    cosine). The query set is small by the same bounded-driver contract."""
+    """Driver-side (ids, RAW double matrix) of the query set
+    (``similarity._collect_queries``) behind the PQ integral-id check."""
     _require_integral_id(queries, id_col, "pq query set")
-    qrows = (
-        queries.select(F.col(id_col), F.col(vec_col).cast("array<double>"))
-        .collect()
-    )
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    return qids, np.vstack([r[1] for r in qrows])
+    return _collect_queries(queries, id_col, vec_col)
 
 
 def pq_topk_adc(
@@ -273,44 +274,17 @@ def pq_topk_adc(
         diff = qs[:, None, :] - cb[s][None, :, :]  # Q x ksub x dsub
         lut[:, s, :] = np.round((diff * diff).sum(axis=2), 9)
 
-    def kernel(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            nids = pdf["_id"].to_numpy()
-            cmat = np.vstack(pdf["_codes"].to_numpy()).astype(np.int64)  # n x m
-            # fixed left-to-right subspace order; the final 1e-9 rounding
-            # absorbs the oracle's unordered SUM over the same m entries
-            scores = lut[:, 0, cmat[:, 0]]  # Q x n
-            for s in range(1, m):
-                scores = scores + lut[:, s, cmat[:, s]]
-            scores = np.round(scores, 9)
-            scores[qids[None, :].T == nids[None, :]] = np.inf  # exclude self
-            kk = min(k, len(nids))
-            out_q, out_n, out_d = [], [], []
-            for j in range(len(qids)):
-                order = np.lexsort((nids, scores[j]))[:kk]
-                keep = order[np.isfinite(scores[j, order])]
-                out_q.append(np.full(len(keep), qids[j], dtype=np.int64))
-                out_n.append(nids[keep])
-                out_d.append(scores[j, keep])
-            if sum(len(a) for a in out_q) == 0:
-                continue  # e.g. a batch whose only rows are the queries themselves
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "approx_d2": np.concatenate(out_d),
-                }
-            )
+    def adc(cmat):
+        cmat = cmat.astype(np.int64)  # n x m
+        # fixed left-to-right subspace order; the final 1e-9 rounding
+        # absorbs the oracle's unordered SUM over the same m entries
+        scores = lut[:, 0, cmat[:, 0]]  # Q x n
+        for s in range(1, m):
+            scores = scores + lut[:, s, cmat[:, s]]
+        return np.round(scores, 9).T
 
-    local = codes.select(
-        F.col(id_col).alias("_id"), F.col("codes").alias("_codes")
-    ).mapInPandas(kernel, schema="query_id bigint, neighbor_id bigint, approx_d2 double")
-    w = W.partitionBy("query_id").orderBy(F.asc("approx_d2"), F.asc("neighbor_id"))
-    return local.withColumn("rank", F.row_number().over(w).cast("bigint")).where(
-        F.col("rank") <= k
-    )
+    rows = codes.select(F.col(id_col).alias("_id"), F.col("codes").alias("_v"))
+    return _broadcast_topk(rows, qids, adc, k, "approx_d2", descending=False)
 
 
 def pq_topk_refined(
@@ -388,10 +362,7 @@ def pq_topk_refined(
     scored = pairs.mapInPandas(
         kernel, schema="query_id bigint, neighbor_id bigint, d2 double"
     )
-    w = W.partitionBy("query_id").orderBy(F.asc("d2"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w).cast("bigint")).where(
-        F.col("rank") <= k
-    )
+    return _rank_topk(scored, "d2", k, descending=False)
 
 
 def brute_force_topk_l2(
@@ -402,54 +373,23 @@ def brute_force_topk_l2(
     k: int = 10,
 ) -> DataFrame:
     """Exact squared-L2 top-k (excluding self) — the float ground truth PQ's
-    recall guard compares against. Same one-GEMM-per-batch kernel shape and
-    <= k-per-(query, batch) shuffle bound as ``brute_force_topk``. Distances
-    ride the expanded ``x2 - 2xq + q2`` GEMM form (the scalable one: no
-    n x Q x d intermediate), clamped at 0 — cancellation can push a
-    near-duplicate pair a few ulps negative; fine for a recall guard whose
-    denominator is the fixed Q*k, but do NOT oracle this form against a
-    per-dim SQL sum."""
+    recall guard compares against: the shared broadcast top-k kernel
+    (``similarity._broadcast_topk``, the one ``brute_force_topk`` runs)
+    scoring squared L2. Distances ride the expanded ``x2 - 2xq + q2`` GEMM
+    form (the scalable one: no n x Q x d intermediate), clamped at 0 —
+    cancellation can push a near-duplicate pair a few ulps negative; fine
+    for a recall guard whose denominator is the fixed Q*k, but do NOT
+    oracle this form against a per-dim SQL sum."""
     qids, qmat = _collect_queries_raw(queries, id_col, vec_col)
     qsq = (qmat * qmat).sum(axis=1)
 
-    def kernel(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            nids = pdf["_id"].to_numpy()
-            xs = np.vstack(pdf["_v"].to_numpy())
-            d2 = np.maximum(
-                (xs * xs).sum(axis=1)[:, None] - 2.0 * (xs @ qmat.T) + qsq[None, :],
-                0.0,
-            )
-            d2[nids[:, None] == qids[None, :]] = np.inf
-            kk = min(k, len(nids))
-            out_q, out_n, out_d = [], [], []
-            for j in range(len(qids)):
-                order = np.lexsort((nids, d2[:, j]))[:kk]
-                keep = order[np.isfinite(d2[order, j])]
-                out_q.append(np.full(len(keep), qids[j], dtype=np.int64))
-                out_n.append(nids[keep])
-                out_d.append(d2[keep, j])
-            if sum(len(a) for a in out_q) == 0:
-                continue
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "d2": np.concatenate(out_d),
-                }
-            )
-
-    local = (
-        corpus.select(
-            F.col(id_col).alias("_id"), F.col(vec_col).cast("array<double>").alias("_v")
+    def sq_l2(xs):
+        return np.maximum(
+            (xs * xs).sum(axis=1)[:, None] - 2.0 * (xs @ qmat.T) + qsq[None, :], 0.0
         )
-        .mapInPandas(kernel, schema="query_id bigint, neighbor_id bigint, d2 double")
-    )
-    w = W.partitionBy("query_id").orderBy(F.asc("d2"), F.asc("neighbor_id"))
-    return local.withColumn("rank", F.row_number().over(w).cast("bigint")).where(
-        F.col("rank") <= k
+
+    return _broadcast_topk(
+        _id_vec(corpus, id_col, vec_col), qids, sq_l2, k, "d2", descending=False
     )
 
 
@@ -640,26 +580,5 @@ def pq_oracle_sql(
           ) WHERE rn <= {refine}
         )"""
     )
-    parts.append(
-        """ex AS (
-          SELECT s.query_id, s.neighbor_id,
-                 round(sum((qd.val - pd.val) * (qd.val - pd.val)), 9) AS d2
-          FROM short s
-          JOIN dims qd ON qd.id = s.query_id
-          JOIN dims pd ON pd.id = s.neighbor_id AND pd.dim = qd.dim
-          GROUP BY 1, 2
-        )"""
-    )
-    return (
-        "WITH "
-        + ",\n".join(parts)
-        + f"""
-        SELECT query_id, neighbor_id, round(d2, {out_round}) AS d2, rank
-        FROM (
-          SELECT query_id, neighbor_id, d2,
-                 CAST(row_number() OVER (PARTITION BY query_id
-                                         ORDER BY d2, neighbor_id) AS BIGINT) AS rank
-          FROM ex
-        ) WHERE rank <= {k}
-        ORDER BY query_id, rank"""
-    )
+    parts.append(exact_l2_rank_sql("short s", k, out_round, " " * 8))
+    return "WITH " + ",\n".join(parts)

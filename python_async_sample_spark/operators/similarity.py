@@ -1,11 +1,28 @@
 """Similarity search over embedding columns (array<float>).
 
-Baseline: brute-force cosine top-k — the (small) query set is broadcast into
-an Arrow kernel as a normalized numpy matrix and every corpus batch scores
-against it with one GEMM. Scale paths: random-hyperplane LSH bucketing and an
-IVF coarse quantizer, so each query only scores its buckets'/cells'
-candidates; candidate scoring is a vectorized einsum kernel, never a per-pair
-expression tree (measured ~100× slower at identical arithmetic).
+One kernel per ANN primitive, each reused by every face that needs it:
+
+* broadcast exact top-k (:func:`_broadcast_topk`): the (small) query set is
+  collected once, every corpus batch scores against it with ONE GEMM and
+  emits only its local top-k per query. Cosine (:func:`brute_force_topk`),
+  squared L2 (``pq.brute_force_topk_l2``) and PQ's asymmetric distance
+  (``pq.pq_topk_adc``) differ only in the score matrix;
+* hyperplane LSH bucketing (:func:`portable_hyperplane_buckets`): plane
+  coefficients from the portable 32-bit mixer, so DuckDB regenerates
+  every bucket (:func:`hyperplane_cte_parts`); ``n_tables`` > 1 gives the
+  multi-table index :func:`lsh_topk` probes (q36), one table is the
+  SemDeDup quantizer (q200, q213) and the certified LSH twin (q229);
+* per-block SemDeDup GEMM (:func:`cosine_pairs_blocked_gemm`): pairs over
+  cosine threshold inside a block, optionally only those touching a new
+  batch (q213);
+* block-pair tiles (:func:`_block_pair_tiles`) for unblocked all-pairs
+  mining: thresholded pairs (:func:`cosine_pairs_gemm`) and per-vector
+  top-k (:func:`all_pairs_topk_gemm`);
+* IVF coarse quantizer (:func:`ivf_topk`) and its certified twin.
+
+Candidate scoring is a vectorized numpy kernel, never a per-pair
+expression tree (measured ~100× slower at identical arithmetic). Every
+top-k face ends in the one per-query ``row_number`` merge (:func:`_rank_topk`).
 
 100 TB posture: the brute-force path scans the corpus once with no corpus
 shuffle and emits only per-batch top-k; the LSH/IVF paths shuffle once on
@@ -57,19 +74,91 @@ def as_double(df: DataFrame, vec_col: str) -> DataFrame:
     return df.withColumn(vec_col, F.col(vec_col).cast("array<double>"))
 
 
-def _collect_query_matrix(
-    queries: DataFrame, id_col: str, vec_col: str
+def _id_vec(df: DataFrame, id_col: str, vec_col: str, *extra) -> DataFrame:
+    """``(_id, _v array<double>, *extra)`` — the projection every Arrow
+    kernel below reads."""
+    return df.select(
+        F.col(id_col).alias("_id"), F.col(vec_col).cast("array<double>").alias("_v"), *extra
+    )
+
+
+def _rows(col: pd.Series, unit: bool = False) -> np.ndarray:
+    """An Arrow batch's vector column as an n × d matrix, optionally
+    L2-normalized per row (the cosine kernels)."""
+    xs = np.vstack(col.to_numpy())
+    return xs / np.linalg.norm(xs, axis=1, keepdims=True) if unit else xs
+
+
+def _rank_topk(scored: DataFrame, score_col: str, k: int, descending: bool) -> DataFrame:
+    """The per-query top-k merge every ANN face ends in: ``rank`` =
+    row_number over (score, neighbor_id asc) per ``query_id``, kept to
+    ``k`` rows."""
+    order = F.desc(score_col) if descending else F.asc(score_col)
+    w = W.partitionBy("query_id").orderBy(order, F.asc("neighbor_id"))
+    return scored.withColumn("rank", F.row_number().over(w).cast("bigint")).where(
+        F.col("rank") <= k
+    )
+
+
+def _collect_queries(
+    queries: DataFrame, id_col: str, vec_col: str, unit: bool = False
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Driver-side (ids, L2-normalized matrix) of the query set.
+    """Driver-side (ids, double matrix) of the query set, rows L2-normalized
+    with ``unit`` (the cosine faces).
 
     The query set is small by contract (it plays the broadcast side); this is
     the standard bounded driver touch that lets every scoring kernel run as
     one numpy GEMM instead of an interpreted expression tree per pair.
     """
-    rows = as_double(queries, vec_col).select(id_col, vec_col).collect()
+    rows = _id_vec(queries, id_col, vec_col).collect()
     qids = np.array([r[0] for r in rows], dtype=np.int64)
-    q = np.vstack([r[1] for r in rows])
-    return qids, q / np.linalg.norm(q, axis=1, keepdims=True)
+    return qids, _rows(pd.Series([r[1] for r in rows]), unit)
+
+
+def _broadcast_topk(
+    rows: DataFrame, qids: np.ndarray, score, k: int, out_col: str, descending: bool
+) -> DataFrame:
+    """THE broadcast exact top-k kernel. ``rows`` is an ``(_id, _v)``
+    relation; ``score(xs)`` turns one Arrow batch's ``_v`` matrix into its
+    n_batch × n_queries score matrix against the collected query set (a
+    score of -inf for ``descending`` faces, +inf otherwise, masks a
+    candidate). Self matches (``_id`` == query id) are masked, and each
+    query keeps its local top-k by (score, neighbor_id) — tie-break
+    parity with the window merge — so the shuffle into :func:`_rank_topk`
+    carries ≤ k rows per (query, batch) instead of the full
+    n_corpus × n_queries score matrix.
+    Returns (query_id, neighbor_id, ``out_col``, rank)."""
+    sign = -1.0 if descending else 1.0
+
+    def kernel(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            nids = pdf["_id"].to_numpy()
+            key = sign * score(np.vstack(pdf["_v"].to_numpy()))  # lower = better
+            key[nids[:, None] == qids[None, :]] = np.inf  # exclude self
+            kk = min(k, len(nids))
+            out_q, out_n, out_s = [], [], []
+            for j in range(len(qids)):
+                order = np.lexsort((nids, key[:, j]))[:kk]
+                keep = order[np.isfinite(key[order, j])]
+                out_q.append(np.full(len(keep), qids[j], dtype=np.int64))
+                out_n.append(nids[keep])
+                out_s.append(key[keep, j])
+            if sum(len(a) for a in out_q) == 0:
+                continue  # e.g. a batch whose only rows are the queries themselves
+            yield pd.DataFrame(
+                {
+                    "query_id": np.concatenate(out_q),
+                    "neighbor_id": np.concatenate(out_n),
+                    out_col: sign * np.concatenate(out_s),
+                }
+            )
+
+    local = rows.mapInPandas(
+        kernel, schema=f"query_id bigint, neighbor_id bigint, {out_col} double"
+    )
+    return _rank_topk(local, out_col, k, descending)
 
 
 def brute_force_topk(
@@ -80,61 +169,25 @@ def brute_force_topk(
     k: int = 10,
     max_cosine: float | None = None,
 ) -> DataFrame:
-    """Exact top-k neighbors per query vector (excluding self).
+    """Exact top-k cosine neighbors per query vector (excluding self) —
+    :func:`_broadcast_topk` scoring ``C @ Q.T`` on unit vectors. Returns
+    (query_id, neighbor_id, cosine, rank).
 
     ``max_cosine`` masks candidates at or above the threshold — the
     HARD-NEGATIVE mining form: the most similar vectors that are NOT
     positives (q119). The mask runs inside the GEMM kernel so the
     ≤k-rows-per-(query, batch) shuffle bound is unchanged.
-
-    The (small) query set is broadcast into an Arrow kernel as a normalized
-    numpy matrix; each corpus batch scores against it with ONE GEMM
-    (``C @ Q.T``) and emits only its local top-k per query, so the shuffle
-    into the global window merge carries ≤ k rows per (query, batch) instead
-    of the full n_corpus × n_queries score matrix. Per-pair higher-order
-    expressions (zip_with + aggregate) measured ~100× slower than this at
-    identical arithmetic. Returns (query_id, neighbor_id, cosine, rank).
     """
-    qids, qn = _collect_query_matrix(queries, id_col, vec_col)
+    qids, qn = _collect_queries(queries, id_col, vec_col, unit=True)
 
-    def kernel(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            nids = pdf["_id"].to_numpy()
-            xs = np.vstack(pdf["_v"].to_numpy())
-            xs = xs / np.linalg.norm(xs, axis=1, keepdims=True)
-            sim = xs @ qn.T  # n_batch × n_queries
-            sim[nids[:, None] == qids[None, :]] = -np.inf  # exclude self
-            if max_cosine is not None:
-                sim[sim >= max_cosine] = -np.inf
-            kk = min(k, len(nids))
-            out_q, out_n, out_c = [], [], []
-            for j in range(len(qids)):
-                # exact tie-break parity with the window merge: cos desc,
-                # neighbor_id asc
-                order = np.lexsort((nids, -sim[:, j]))[:kk]
-                keep = order[np.isfinite(sim[order, j])]
-                out_q.append(np.full(len(keep), qids[j], dtype=np.int64))
-                out_n.append(nids[keep])
-                out_c.append(sim[keep, j])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "cosine": np.concatenate(out_c),
-                }
-            )
+    def cosine(xs):
+        sim = (xs / np.linalg.norm(xs, axis=1, keepdims=True)) @ qn.T
+        if max_cosine is not None:
+            sim[sim >= max_cosine] = -np.inf
+        return sim
 
-    local = (
-        as_double(corpus, vec_col)
-        .select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-        .mapInPandas(kernel, schema="query_id bigint, neighbor_id bigint, cosine double")
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        local.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rank") <= k)
+    return _broadcast_topk(
+        _id_vec(corpus, id_col, vec_col), qids, cosine, k, "cosine", descending=True
     )
 
 
@@ -150,8 +203,7 @@ def _score_candidates(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            xs = np.vstack(pdf["_cv"].to_numpy())
-            xs = xs / np.linalg.norm(xs, axis=1, keepdims=True)
+            xs = _rows(pdf["_cv"], unit=True)
             qidx = pdf["query_id"].map(idx_of).to_numpy(dtype=np.int64)
             cos = np.einsum("ij,ij->i", xs, qn[qidx])
             yield pd.DataFrame(
@@ -201,25 +253,20 @@ def cosine_pairs(
     )
 
 
-def cosine_pairs_gemm(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    threshold: float,
-    num_blocks: int = 8,
+def _block_pair_tiles(
+    df: DataFrame, id_col: str, vec_col: str, num_blocks: int, tile, schema: str
 ) -> DataFrame:
-    """All pairs (d1 < d2) with cosine ≥ threshold, via block-partitioned
-    matrix multiplication.
+    """Block-pair decomposition shared by the unblocked all-pairs miners.
 
-    The scale design: rows are hashed into ``num_blocks`` blocks; each row is
-    replicated to every block-pair it participates in (``num_blocks`` copies),
-    then one Arrow-batched pandas kernel per (bi ≤ bj) block-pair computes the
-    full similarity submatrix as a single numpy GEMM. Total arithmetic is the
-    same O(N²·d) as the naive self-join, but it runs at BLAS speed instead of
-    one interpreted expression tree per pair, and each block-pair is an
-    independent task — at 1000 executors, set ``num_blocks`` ≈ √(2·tasks) and
-    every task holds only 2·N/num_blocks vectors in memory.
-    """
+    Rows are hashed into ``num_blocks`` blocks; each row is replicated to
+    every (bi ≤ bj) block-pair it participates in (``num_blocks`` copies),
+    and one grouped Arrow kernel per pair loads the two blocks as unit
+    vectors and calls ``tile(xs, xid, ys, yid, diag)`` (``diag``: bi == bj,
+    then ``ys is xs``); a tile returns its rows, or None for none. Total
+    arithmetic is the naive O(N²·d), but at BLAS speed, and each
+    block-pair is an independent task — at 1000 executors, set
+    ``num_blocks`` ≈ √(2·tasks) and every task holds only 2·N/num_blocks
+    vectors in memory."""
     blk = F.pmod(F.hash(F.col(id_col)), F.lit(num_blocks))
     # (bi, bj) pair keys this row participates in: (min(b, j), max(b, j)) ∀ j
     pair_keys = F.transform(
@@ -228,164 +275,85 @@ def cosine_pairs_gemm(
             F.least(blk, j).alias("bi"), F.greatest(blk, j).alias("bj")
         ),
     )
-    exploded = (
-        as_double(df, vec_col)
-        .select(
-            F.col(id_col).alias("_id"),
-            F.col(vec_col).alias("_v"),
-            blk.alias("_blk"),
-            F.explode(F.array_distinct(pair_keys)).alias("_bp"),
-        )
-        .select("_id", "_v", "_blk", F.col("_bp.bi").alias("bi"), F.col("_bp.bj").alias("bj"))
-    )
-
-    empty = pd.DataFrame({"d1": [], "d2": [], "cosine": []})
+    exploded = _id_vec(
+        df, id_col, vec_col, blk.alias("_blk"),
+        F.explode(F.array_distinct(pair_keys)).alias("_bp"),
+    ).select("_id", "_v", "_blk", F.col("_bp.bi").alias("bi"), F.col("_bp.bj").alias("bj"))
+    empty = pd.DataFrame({c.split()[0]: [] for c in schema.split(",")})
 
     def kernel(key, pdf):
         bi, bj = key
         left = pdf[pdf["_blk"] == bi]
-        if len(left) == 0:
+        right = left if bi == bj else pdf[pdf["_blk"] == bj]
+        if len(left) == 0 or len(right) == 0:
             return empty
-        xs = np.vstack(left["_v"].to_numpy())
-        xs = xs / np.linalg.norm(xs, axis=1, keepdims=True)
-        xid = left["_id"].to_numpy()
-        if bi == bj:
-            sim = xs @ xs.T
-            iu, ju = np.triu_indices(len(xid), k=1)
-            d1, d2, cos = xid[iu], xid[ju], sim[iu, ju]
-        else:
-            right = pdf[pdf["_blk"] == bj]
-            if len(right) == 0:
-                return empty
-            ys = np.vstack(right["_v"].to_numpy())
-            ys = ys / np.linalg.norm(ys, axis=1, keepdims=True)
-            yid = right["_id"].to_numpy()
-            sim = xs @ ys.T
-            iu, ju = np.nonzero(sim >= threshold)
-            d1, d2, cos = xid[iu], yid[ju], sim[iu, ju]
-        keep = cos >= threshold
-        d1, d2, cos = d1[keep], d2[keep], cos[keep]
-        lo, hi = np.minimum(d1, d2), np.maximum(d1, d2)
-        return pd.DataFrame({"d1": lo, "d2": hi, "cosine": cos})
+        xs, xid = _rows(left["_v"], unit=True), left["_id"].to_numpy()
+        ys, yid = (
+            (xs, xid) if bi == bj else (_rows(right["_v"], unit=True), right["_id"].to_numpy())
+        )
+        out = tile(xs, xid, ys, yid, bi == bj)
+        return empty if out is None else out
 
-    return exploded.groupBy("bi", "bj").applyInPandas(
-        kernel, schema="d1 bigint, d2 bigint, cosine double"
-    )
+    return exploded.groupBy("bi", "bj").applyInPandas(kernel, schema=schema)
 
 
-def hyperplane_buckets(
+def cosine_pairs_gemm(
     df: DataFrame,
     id_col: str,
     vec_col: str,
-    n_planes: int = 8,
-    dim: int = 64,
-    seed: int = 42,
-    n_tables: int = 1,
+    threshold: float,
+    num_blocks: int = 8,
 ) -> DataFrame:
-    """Multi-table random-hyperplane LSH: one (id, table, bucket) row per
-    hash table, bucket = integer sign-bit code of that table's ``n_planes``
-    projections. All tables' projections happen in ONE Arrow kernel as a
-    single GEMM (``X @ planes.T``) — per-plane expression trees don't scale
-    past a few planes. Output carries IDs only (no vectors), so the bucket
-    index shuffles cheap fixed-width rows however many tables are used."""
-    rng = np.random.RandomState(seed)
-    planes = rng.randn(n_tables * n_planes, dim)  # deterministic per seed
-    weights = np.power(2, np.arange(n_planes), dtype=np.int64)
-    d = as_double(df, vec_col)
+    """All pairs (d1 < d2) with cosine ≥ threshold, via block-partitioned
+    matrix multiplication (:func:`_block_pair_tiles`): each tile computes
+    its similarity submatrix as a single numpy GEMM and keeps the pairs
+    over threshold (the upper triangle on a diagonal tile)."""
 
-    def kernel(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            xs = np.vstack(pdf["_v"].to_numpy())
-            bits = (xs @ planes.T >= 0).astype(np.int64)  # n × (tables·planes)
-            codes = bits.reshape(len(xs), n_tables, n_planes) @ weights
-            out = pd.DataFrame(
-                {
-                    "_id": pdf["_id"].to_numpy().repeat(n_tables),
-                    "table": np.tile(np.arange(n_tables), len(xs)),
-                    "bucket": codes.ravel(),
-                }
-            )
-            yield out
+    def tile(xs, xid, ys, yid, diag):
+        sim = xs @ ys.T
+        hit = sim >= threshold
+        iu, ju = np.nonzero(np.triu(hit, k=1) if diag else hit)
+        a, b = xid[iu], yid[ju]
+        return pd.DataFrame({"d1": np.minimum(a, b), "d2": np.maximum(a, b), "cosine": sim[iu, ju]})
 
-    return (
-        d.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-        .mapInPandas(kernel, schema="_id bigint, table int, bucket bigint")
-        .select(F.col("_id").alias(id_col), "table", "bucket")
+    return _block_pair_tiles(
+        df, id_col, vec_col, num_blocks, tile, "d1 bigint, d2 bigint, cosine double"
     )
 
 
 def cosine_pairs_blocked_gemm(
-    df: DataFrame, id_col: str, vec_col: str, threshold: float, block_col: str
-) -> DataFrame:
-    """:func:`cosine_pairs` semantics (pairs d1 < d2 with cosine ≥
-    threshold WITHIN equal ``block_col`` groups) at BLAS speed: one
-    applyInPandas kernel per block computes the block's upper-triangle
-    similarity matrix as a single numpy GEMM, instead of one interpreted
-    expression tree per candidate pair (~100× slower at identical
-    arithmetic — the constant that made blocked SemDeDup look quadratic
-    long before its candidate count did).  Task memory holds one block's
-    vectors — bounded by the blocker's bucket-size contract, exactly what
-    the quantizer's plane count is chosen for."""
-    d = as_double(df, vec_col)
-    empty = pd.DataFrame({"d1": [], "d2": [], "cosine": []})
-
-    def kernel(pdf):
-        if len(pdf) < 2:
-            return empty
-        xs = np.vstack(pdf["_v"].to_numpy())
-        xs = xs / np.linalg.norm(xs, axis=1, keepdims=True)
-        ids = pdf["_id"].to_numpy()
-        sim = xs @ xs.T
-        iu, ju = np.triu_indices(len(ids), k=1)
-        keep = sim[iu, ju] >= threshold
-        a, b = ids[iu][keep], ids[ju][keep]
-        return pd.DataFrame(
-            {
-                "d1": np.minimum(a, b),
-                "d2": np.maximum(a, b),
-                "cosine": sim[iu, ju][keep],
-            }
-        )
-
-    return (
-        d.select(
-            F.col(id_col).alias("_id"),
-            F.col(vec_col).alias("_v"),
-            F.col(block_col).alias("_b"),
-        )
-        .groupBy("_b")
-        .applyInPandas(kernel, schema="d1 bigint, d2 bigint, cosine double")
-    )
-
-
-def cosine_pairs_blocked_gemm_incremental(
     df: DataFrame,
     id_col: str,
     vec_col: str,
     threshold: float,
     block_col: str,
-    is_new_col: str,
+    is_new_col: str | None = None,
 ) -> DataFrame:
-    """:func:`cosine_pairs_blocked_gemm` restricted to pairs TOUCHING the
-    new batch (``is_new_col`` true): per block the GEMM is batch-rows ×
-    all-rows, so history×history similarities are never computed — the
-    property that makes continuous semantic dedup affordable (per-day cost
-    scales with the batch, not the accumulated corpus).  Emitted pairs are
-    (d1 < d2) with at least one batch member; a batch–batch pair inside a
-    block is emitted once (from its lower-id side).  Work per block =
-    |batch ∩ block| × |block|; with the quantizer holding expected block
-    size constant, total work is linear in the batch."""
-    d = as_double(df, vec_col)
+    """:func:`cosine_pairs` semantics (pairs d1 < d2 with cosine ≥
+    threshold WITHIN equal ``block_col`` groups) at BLAS speed: one
+    applyInPandas kernel per block computes the block's similarities as
+    a single numpy GEMM, instead of one interpreted expression tree per
+    candidate pair (~100× slower at identical arithmetic — the constant
+    that made blocked SemDeDup look quadratic long before its candidate
+    count did).  Task memory holds one block's vectors — bounded by the
+    blocker's bucket-size contract, exactly what the quantizer's plane
+    count is chosen for.
+
+    ``is_new_col`` restricts the output to pairs TOUCHING the new batch
+    (rows where it is true): per block the GEMM is batch-rows × all-rows,
+    so history×history similarities are never computed — the property
+    that makes continuous semantic dedup affordable (q213: per-day cost
+    scales with the batch, not the accumulated corpus).  Without it every
+    row is new (q200, q212).  A pair inside a block is emitted once (from
+    its lower-id side when both ends are new).  Work per block =
+    |batch ∩ block| × |block|."""
     empty = pd.DataFrame({"d1": [], "d2": [], "cosine": []})
 
     def kernel(pdf):
         new_mask = pdf["_new"].to_numpy()
         if len(pdf) < 2 or not new_mask.any():
             return empty
-        xs = np.vstack(pdf["_v"].to_numpy())
-        xs = xs / np.linalg.norm(xs, axis=1, keepdims=True)
+        xs = _rows(pdf["_v"], unit=True)
         ids = pdf["_id"].to_numpy()
         bx, bid = xs[new_mask], ids[new_mask]
         sim = bx @ xs.T
@@ -403,13 +371,9 @@ def cosine_pairs_blocked_gemm_incremental(
             }
         )
 
+    is_new = F.col(is_new_col).cast("boolean") if is_new_col else F.lit(True)
     return (
-        d.select(
-            F.col(id_col).alias("_id"),
-            F.col(vec_col).alias("_v"),
-            F.col(block_col).alias("_b"),
-            F.col(is_new_col).cast("boolean").alias("_new"),
-        )
+        _id_vec(df, id_col, vec_col, F.col(block_col).alias("_b"), is_new.alias("_new"))
         .groupBy("_b")
         .applyInPandas(kernel, schema="d1 bigint, d2 bigint, cosine double")
     )
@@ -422,18 +386,26 @@ def portable_hyperplane_buckets(
     n_planes: int,
     dim: int = 64,
     keep_vec: bool = False,
+    n_tables: int = 1,
 ) -> DataFrame:
-    """Sign-bit hyperplane codes whose plane coefficients come from the
-    PORTABLE 32-bit mixer (operators.sketches.portable_hash_py) instead of
-    numpy's RandomState — so a SQL engine can regenerate every coefficient
-    (``p(j, d) = h(j·dim + d) / 2^32 · 2 − 1``) and replay the whole
-    bucketing, making the quantizer hash-oracle-able, not just
-    error-banded.  One (id, bucket) row per vector; the projections run
-    as a single Arrow GEMM per batch, same scale shape as
-    :func:`hyperplane_buckets`.  ``keep_vec=True`` carries the (already
-    double-cast) vector through the kernel as ``_v`` so a downstream
-    scorer avoids a corpus self-join back onto the vectors (q229's
-    certified LSH uses this).
+    """Random-hyperplane LSH buckets: one (id, bucket) row per vector and
+    hash table, the bucket an integer sign-bit code of that table's
+    ``n_planes`` projections.
+
+    Plane coefficients come from the PORTABLE 32-bit mixer
+    (operators.sketches.portable_hash_py), so a SQL engine can regenerate
+    every coefficient (``p(j, d) = h(j·dim + d) / 2^32 · 2 − 1``) and
+    replay the whole bucketing, making the quantizer hash-oracle-able,
+    not just error-banded.  Table ``t`` uses planes ``t·n_planes …
+    t·n_planes + n_planes − 1`` and its codes are offset by
+    ``t·2^n_planes``, so tables never share a bucket id and a probe joins
+    on ``bucket`` alone; with ``n_tables=1`` the bucket is the bare code
+    (what :func:`hyperplane_cte_parts` replays).  All tables' projections
+    run as a single Arrow GEMM per batch (``X @ planes.T``) — per-plane
+    expression trees don't scale past a few planes.  ``keep_vec=True``
+    carries the (already double-cast) vector through the kernel as ``_v``
+    so a downstream scorer avoids a corpus self-join back onto the
+    vectors (q229's certified LSH uses this).
 
     Cross-engine caveat: the dot products are float sums whose order
     differs between numpy's GEMM and SQL's sequential sum, so a
@@ -443,39 +415,33 @@ def portable_hyperplane_buckets(
     every float oracle here already accepts."""
     from python_async_sample_spark.operators.sketches import portable_hash_py
 
+    n_all = n_tables * n_planes
     planes = np.array(
         [
             [
                 portable_hash_py(j * dim + d0, 0) / 2**32 * 2 - 1
                 for d0 in range(dim)
             ]
-            for j in range(n_planes)
+            for j in range(n_all)
         ]
-    ).reshape(n_planes, dim)  # keeps (0, dim) shape at n_planes=0 (one bucket)
+    ).reshape(n_all, dim)  # keeps (0, dim) shape at n_planes=0 (one bucket)
     weights = np.power(2, np.arange(n_planes), dtype=np.int64)
-    d = as_double(df, vec_col)
+    offsets = np.arange(n_tables, dtype=np.int64) << n_planes
 
     def kernel(batches):
-        # one kernel for both shapes — the flag only decides whether the
-        # (already double-cast) vector is echoed through (round-8 review:
-        # two near-identical kernels would fork on the next shared fix)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            xs = np.vstack(pdf["_v"].to_numpy())
-            bits = (xs @ planes.T >= 0).astype(np.int64)
-            out = {"_id": pdf["_id"].to_numpy(), "bucket": bits @ weights}
+            bits = (_rows(pdf["_v"]) @ planes.T >= 0).astype(np.int64)
+            codes = bits.reshape(len(pdf), n_tables, n_planes) @ weights + offsets
+            out = {"_id": pdf["_id"].to_numpy().repeat(n_tables), "bucket": codes.ravel()}
             if keep_vec:
-                out["_v"] = pdf["_v"]
+                out["_v"] = pdf["_v"].to_numpy().repeat(n_tables)
             yield pd.DataFrame(out)
 
     schema = "_id bigint, bucket bigint" + (", _v array<double>" if keep_vec else "")
     cols = [F.col("_id").alias(id_col), "bucket"] + (["_v"] if keep_vec else [])
-    return (
-        d.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-        .mapInPandas(kernel, schema=schema)
-        .select(*cols)
-    )
+    return _id_vec(df, id_col, vec_col).mapInPandas(kernel, schema=schema).select(*cols)
 
 
 def _kmeans(sample: np.ndarray, k: int, iters: int, seed: int) -> np.ndarray:
@@ -704,9 +670,7 @@ def ivf_topk(
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                xs = np.vstack(pdf["_v"].to_numpy())
-                xs = xs / np.linalg.norm(xs, axis=1, keepdims=True)
-                sims = xs @ cents.T
+                sims = _rows(pdf["_v"], unit=True) @ cents.T
                 top = np.argsort(-sims, axis=1)[:, :n_cells]
                 out = pdf.loc[pdf.index.repeat(n_cells)].copy()
                 out["cell"] = top.ravel()
@@ -715,27 +679,22 @@ def ivf_topk(
         return kernel
 
     c_assigned = (
-        cd.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
+        _id_vec(cd, id_col, vec_col)
         .mapInPandas(assign_kernel(1), schema="_id bigint, _v array<double>, cell int")
         .select(F.col("_id").alias("neighbor_id"), F.col("_v").alias("_cv"), "cell")
     )
     q_assigned = (
-        as_double(queries, vec_col)
-        .select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
+        _id_vec(queries, id_col, vec_col)
         .mapInPandas(assign_kernel(n_probe), schema="_id bigint, _v array<double>, cell int")
         .select(F.col("_id").alias("query_id"), "cell")
     )
-    qids, qn = _collect_query_matrix(queries, id_col, vec_col)
+    qids, qn = _collect_queries(queries, id_col, vec_col, unit=True)
     cands = (
         c_assigned.join(F.broadcast(q_assigned), "cell")
         .where(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id", "_cv")
     )
-    scored = _score_candidates(cands, qids, qn)
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w).cast("bigint")).where(
-        F.col("rank") <= k
-    )
+    return _rank_topk(_score_candidates(cands, qids, qn), "cosine", k, descending=True)
 
 
 def lsh_topk(
@@ -751,19 +710,21 @@ def lsh_topk(
     """Approximate top-k via multi-table hyperplane LSH.
 
     Candidates = pairs sharing any table's bucket (union over ``n_tables``
-    independent hash tables — single-table sign-LSH recall decays fast with
-    angle, so multiple tables are the standard recall lever). The bucket
-    index holds IDs only; vectors join back in for scoring exactly once per
-    distinct candidate pair, so corpus vectors are never replicated through
-    the candidate shuffle."""
-    cb = hyperplane_buckets(
+    hash tables of :func:`portable_hyperplane_buckets` — single-table
+    sign-LSH recall decays fast with angle, so multiple tables are the
+    standard recall lever; table-offset bucket ids make one equi-join on
+    ``bucket`` probe every table). The bucket index holds IDs only;
+    vectors join back in for scoring exactly once per distinct candidate
+    pair, so corpus vectors are never replicated through the candidate
+    shuffle."""
+    cb = portable_hyperplane_buckets(
         corpus, id_col, vec_col, n_planes, dim, n_tables=n_tables
-    ).select(F.col(id_col).alias("neighbor_id"), "table", "bucket")
-    qb = hyperplane_buckets(
+    ).select(F.col(id_col).alias("neighbor_id"), "bucket")
+    qb = portable_hyperplane_buckets(
         queries, id_col, vec_col, n_planes, dim, n_tables=n_tables
-    ).select(F.col(id_col).alias("query_id"), "table", "bucket")
+    ).select(F.col(id_col).alias("query_id"), "bucket")
     cands = (
-        cb.join(F.broadcast(qb), ["table", "bucket"])
+        cb.join(F.broadcast(qb), "bucket")
         .where(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id")
         .distinct()
@@ -771,12 +732,9 @@ def lsh_topk(
     cvec = as_double(corpus, vec_col).select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")
     )
-    qids, qn = _collect_query_matrix(queries, id_col, vec_col)
+    qids, qn = _collect_queries(queries, id_col, vec_col, unit=True)
     scored = _score_candidates(cands.join(cvec, "neighbor_id"), qids, qn)
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w).cast("bigint")).where(
-        F.col("rank") <= k
-    )
+    return _rank_topk(scored, "cosine", k, descending=True)
 
 
 # ---------------------------------------------------------------------------
@@ -845,35 +803,15 @@ def all_pairs_topk_gemm(
     """Top-k cosine neighbors for EVERY vector — the all-pairs form of
     ``brute_force_topk``, without its broadcast-the-queries contract.
 
-    Same block-pair GEMM decomposition as ``cosine_pairs_gemm`` (each
-    (bi ≤ bj) tile is one BLAS matmul in an Arrow kernel), but instead of
-    thresholded pairs each tile emits only each vector's LOCAL top-k
-    against the opposite block — ≤ k rows per (vector, tile), so the
-    post-kernel shuffle is O(N · num_blocks · k), linear in the corpus,
-    and the global window reduces the per-tile partials to the true
-    top-k.  No driver-side matrix, no broadcast: both sides of every tile
-    arrive by partitioned shuffle — this is the kernel to use when the
-    query set IS the corpus (reciprocal-NN, kNN graphs, dedup sweeps).
+    Same block-pair tiles as ``cosine_pairs_gemm`` (:func:`_block_pair_tiles`),
+    but instead of thresholded pairs each tile emits only each vector's
+    LOCAL top-k against the opposite block — ≤ k rows per (vector, tile),
+    so the post-kernel shuffle is O(N · num_blocks · k), linear in the
+    corpus, and the global window reduces the per-tile partials to the
+    true top-k.  No driver-side matrix, no broadcast: both sides of every
+    tile arrive by partitioned shuffle — this is the kernel to use when
+    the query set IS the corpus (reciprocal-NN, kNN graphs, dedup sweeps).
     """
-    blk = F.pmod(F.hash(F.col(id_col)), F.lit(num_blocks))
-    pair_keys = F.transform(
-        F.sequence(F.lit(0), F.lit(num_blocks - 1)),
-        lambda j: F.struct(
-            F.least(blk, j).alias("bi"), F.greatest(blk, j).alias("bj")
-        ),
-    )
-    exploded = (
-        as_double(df, vec_col)
-        .select(
-            F.col(id_col).alias("_id"),
-            F.col(vec_col).alias("_v"),
-            blk.alias("_blk"),
-            F.explode(F.array_distinct(pair_keys)).alias("_bp"),
-        )
-        .select("_id", "_v", "_blk", F.col("_bp.bi").alias("bi"), F.col("_bp.bj").alias("bj"))
-    )
-
-    empty = pd.DataFrame({"query_id": [], "neighbor_id": [], "cosine": []})
 
     def _local_topk(sim, qids, nids, out):
         # sim: (nq, nc); emit each query's top-k FINITE columns (the masked
@@ -892,31 +830,17 @@ def all_pairs_topk_gemm(
             out[1].append(nids[cols])
             out[2].append(sim[i, cols])
 
-    def kernel(key, pdf):
-        bi, bj = key
-        left = pdf[pdf["_blk"] == bi]
-        if len(left) == 0:
-            return empty
-        xs = np.vstack(left["_v"].to_numpy())
-        xs = xs / np.linalg.norm(xs, axis=1, keepdims=True)
-        xid = left["_id"].to_numpy()
+    def tile(xs, xid, ys, yid, diag):
+        sim = xs @ ys.T
         out = ([], [], [])
-        if bi == bj:
-            sim = xs @ xs.T
+        if diag:
             np.fill_diagonal(sim, -np.inf)
             _local_topk(sim, xid, xid, out)
         else:
-            right = pdf[pdf["_blk"] == bj]
-            if len(right) == 0:
-                return empty
-            ys = np.vstack(right["_v"].to_numpy())
-            ys = ys / np.linalg.norm(ys, axis=1, keepdims=True)
-            yid = right["_id"].to_numpy()
-            sim = xs @ ys.T
             _local_topk(sim, xid, yid, out)
             _local_topk(sim.T, yid, xid, out)
         if not out[0]:
-            return empty
+            return None
         return pd.DataFrame(
             {
                 "query_id": np.concatenate(out[0]),
@@ -925,14 +849,11 @@ def all_pairs_topk_gemm(
             }
         )
 
-    local = exploded.groupBy("bi", "bj").applyInPandas(
-        kernel, schema="query_id bigint, neighbor_id bigint, cosine double"
+    local = _block_pair_tiles(
+        df, id_col, vec_col, num_blocks, tile,
+        "query_id bigint, neighbor_id bigint, cosine double",
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        local.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rank") <= k)
-    )
+    return _rank_topk(local, "cosine", k, descending=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1028,10 +949,34 @@ def ivf_topk_certified(
         "neighbor_id",
         sq_dist_cols(F.col("_cv"), F.col("_qv")).alias("d2"),
     )
-    w = W.partitionBy("query_id").orderBy(F.asc("d2"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w).cast("bigint")).where(
-        F.col("rank") <= k
-    )
+    return _rank_topk(scored, "d2", k, descending=False)
+
+
+def exact_l2_rank_sql(pairs: str, k: int, out_round: int, pad: str) -> str:
+    """The exact-L2 ranking tail shared by the certified DuckDB replays
+    (IVF, LSH, refined PQ): an ``ex`` CTE scoring every
+    (query_id, neighbor_id) row of ``pairs`` (a CTE name and alias, e.g.
+    ``"cand c"``) with the squared L2 on the 1e-9 grid over ``dims``, then
+    the final top-``k`` SELECT ranked by (d2, neighbor_id). Every line
+    after the first is indented by ``pad`` to sit in its caller's text."""
+    a = pairs.split()[-1]
+    text = f"""ex AS (
+  SELECT {a}.query_id, {a}.neighbor_id,
+         round(sum((qd.val - pd.val) * (qd.val - pd.val)), 9) AS d2
+  FROM {pairs}
+  JOIN dims qd ON qd.id = {a}.query_id
+  JOIN dims pd ON pd.id = {a}.neighbor_id AND pd.dim = qd.dim
+  GROUP BY 1, 2
+)
+SELECT query_id, neighbor_id, round(d2, {out_round}) AS d2, rank
+FROM (
+  SELECT query_id, neighbor_id, d2,
+         CAST(row_number() OVER (PARTITION BY query_id
+                                 ORDER BY d2, neighbor_id) AS BIGINT) AS rank
+  FROM ex
+) WHERE rank <= {k}
+ORDER BY query_id, rank"""
+    return text.replace("\n", "\n" + pad)
 
 
 def ivf_certified_oracle_sql(
@@ -1080,29 +1025,8 @@ def ivf_certified_oracle_sql(
           WHERE a.id <> p.query_id
         )"""
     )
-    parts.append(
-        """ex AS (
-          SELECT c.query_id, c.neighbor_id,
-                 round(sum((qd.val - pd.val) * (qd.val - pd.val)), 9) AS d2
-          FROM cand c
-          JOIN dims qd ON qd.id = c.query_id
-          JOIN dims pd ON pd.id = c.neighbor_id AND pd.dim = qd.dim
-          GROUP BY 1, 2
-        )"""
-    )
-    return (
-        "WITH "
-        + ",\n".join(parts)
-        + f"""
-        SELECT query_id, neighbor_id, round(d2, {out_round}) AS d2, rank
-        FROM (
-          SELECT query_id, neighbor_id, d2,
-                 CAST(row_number() OVER (PARTITION BY query_id
-                                         ORDER BY d2, neighbor_id) AS BIGINT) AS rank
-          FROM ex
-        ) WHERE rank <= {k}
-        ORDER BY query_id, rank"""
-    )
+    parts.append(exact_l2_rank_sql("cand c", k, out_round, " " * 8))
+    return "WITH " + ",\n".join(parts)
 
 
 # ---------------------------------------------------------------------------
@@ -1122,16 +1046,16 @@ def lsh_topk_certified(
 ) -> DataFrame:
     """LSH top-k whose ENTIRE trajectory replays in SQL — the
     hash-certification twin of :func:`lsh_topk` (which stays the
-    production face: numpy-seeded planes, GEMM scoring, recall-guarded in
-    q36), completing the certified-twin ladder: SimHash→q187,
-    SemDeDup→q212, PQ→q223, aHash→q225, IVF→q227, LSH→here.
+    production face: multi-table buckets, GEMM cosine scoring,
+    recall-guarded in q36), completing the certified-twin ladder:
+    SimHash→q187, SemDeDup→q212, PQ→q223, aHash→q225, IVF→q227, LSH→here.
 
-    Deterministic pieces: plane coefficients from the portable 32-bit
-    mixer (``p(j,d) = h(j·dim+d)/2^32·2−1`` — DuckDB regenerates every
-    coefficient, the q200 oracle's proven fragment), sign-bit bucket
-    codes, candidates = same-bucket corpus rows (self excluded), scored
-    with the EXACT squared L2 on the 1e-9 grid (``sq_dist_cols``), ranked
-    by (d2, neighbor_id).
+    Deterministic pieces: one table of :func:`portable_hyperplane_buckets`
+    (``p(j,d) = h(j·dim+d)/2^32·2−1`` — DuckDB regenerates every
+    coefficient, the q200 oracle's proven fragment), candidates =
+    same-bucket corpus rows (self excluded), scored with the EXACT
+    squared L2 on the 1e-9 grid (``sq_dist_cols``), ranked by
+    (d2, neighbor_id).
 
     The sign-bit ulp caveat of :func:`portable_hyperplane_buckets`
     applies (a projection within ~1e-16 of exactly 0 could flip a bit);
@@ -1157,10 +1081,7 @@ def lsh_topk_certified(
         "neighbor_id",
         sq_dist_cols(F.col("_cv"), F.col("_qv")).alias("d2"),
     )
-    w = W.partitionBy("query_id").orderBy(F.asc("d2"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w).cast("bigint")).where(
-        F.col("rank") <= k
-    )
+    return _rank_topk(scored, "d2", k, descending=False)
 
 
 def hyperplane_cte_parts(n_planes_expr: str, dim: int = 64) -> list[str]:
@@ -1221,8 +1142,8 @@ def lsh_certified_oracle_sql(
     coefficients from the portable mixer, rebuild every sign-bit bucket
     code, mine same-bucket candidates, score exactly on the 1e-9 grid,
     rank by (d2, neighbor_id) — the shared :func:`hyperplane_cte_parts`
-    quantizer with a fixed plane count and an exact-distance ranking
-    tail."""
+    quantizer with a fixed plane count and the shared
+    :func:`exact_l2_rank_sql` tail."""
     parts = ",\n".join(hyperplane_cte_parts(str(n_planes), dim))
     return f"""
     WITH pts AS MATERIALIZED (
@@ -1237,19 +1158,4 @@ def lsh_certified_oracle_sql(
       SELECT q.query_id, c.id AS neighbor_id
       FROM q JOIN codes c ON c.bucket = q.bucket AND c.id <> q.query_id
     ),
-    ex AS (
-      SELECT c.query_id, c.neighbor_id,
-             round(sum((qd.val - pd.val) * (qd.val - pd.val)), 9) AS d2
-      FROM cand c
-      JOIN dims qd ON qd.id = c.query_id
-      JOIN dims pd ON pd.id = c.neighbor_id AND pd.dim = qd.dim
-      GROUP BY 1, 2
-    )
-    SELECT query_id, neighbor_id, round(d2, {out_round}) AS d2, rank
-    FROM (
-      SELECT query_id, neighbor_id, d2,
-             CAST(row_number() OVER (PARTITION BY query_id
-                                     ORDER BY d2, neighbor_id) AS BIGINT) AS rank
-      FROM ex
-    ) WHERE rank <= {k}
-    ORDER BY query_id, rank"""
+    {exact_l2_rank_sql("cand c", k, out_round, " " * 4)}"""

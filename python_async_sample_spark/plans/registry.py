@@ -77,206 +77,152 @@ def query(name: str, oracle: str | None = None, ref: str = "", tags: tuple[str, 
 
 
 # The driver's CORRECTNESS pass checks only the first 50 registry entries, so
-# ordering is part of the contract.  The prefix below lists the 50 queries that
-# must land inside the checked window (all SQL-oracled, each SURVEY §2 row
-# keeps at least one in-window query).
-#
-# ROUND-3 ROTATION (r3 bookkeeping retained below in compressed form): 13
-# long-stable residents were swapped for 13 never-driver-checked round-2
-# queries; their §2 attributions (q07→q72, q09→q83, q13/q14→q61/q72,
-# q15→q80/q22, q25→q27, q31→q38, q34→q78/q35, q42/q43→q41, q62→q82,
-# q65→q64, q68→q74) all have green CORRECTNESS_r03.json rows plus ongoing
-# parity coverage.
-#
-# ROUND-4 ROTATION (executes VERDICT r3 item 1): the window keeps the 23
-# §2-critical residents — every SURVEY §2 row retains an in-window query —
-# and swaps the other 27 slots onto the round-3 additions that had never
-# earned a driver row, strongest first per the r3 candidate list.
-# Coverage bookkeeping for the 27 rotated-out residents (each has a green
-# CORRECTNESS_r03.json row from last round plus driver_sim/pytest parity):
-#   q18/q60/q77 → streaming faces stay in-window via q71 (exactly-once),
-#   q75 (stateful), q160 (streaming PSI), q163 (streaming PIT);
-#   q32/q38/q39/q78 → near-dup family in-window via q121 (repeated-span)
-#   and q154 (containment); LSH/PPJoin/cluster-resolve keep r3 rows;
-#   q35 → ANN GEMM top-k kernel in-window via q158 (kNN label transfer);
-#   q41/q79/q48 → text-quality/transform keep r3 rows; token accounting
-#   in-window via q122; LM scoring via q125;
-#   q47/q74 → packing/mixing keep r3 rows; budget-mixture via q122;
-#   q49/q88 → corpus-prep composition keeps r3 rows (q145 parity);
-#   q50 → multimodal keeps r3 row + golden decode tests;
-#   q64 → as-of family in-window via q143 (PIT join) + q163 (stream PIT);
-#   q73/q76 → bucketed/salted join strategies are plan-gated in
-#   tests/test_plan_quality.py (their correctness faces keep r3 rows);
-#   q82 → rollup/grouping-sets family keeps r3 row (q70/q62 parity);
-#   q84 → JSONL source keeps r3 row + test_jsonl;
-#   q89 → vocabulary-join LM in-window via q125 (bigram, the conditional
-#   extension of q89's unigram — same shuffle-gated join shape);
-#   q92 → calendar/resample family in-window via q139 (date-spine gaps);
-#   q94 → change-capture family in-window via q123 (SCD2) + q131
-#   (incremental MV maintenance);
-#   q95 → event-sequence family in-window via q129 (retention cohorts),
-#   q130 (transition matrix), q152 (sequence pattern);
-#   q96 → windowed/prefix-sum family in-window via q132 (peak concurrency);
-#   q99 → §2.7 math stays via q22/q80; quantile family keeps r3 row.
-# ROUND-5 ROTATION (executes the r4 candidate list recorded below): the 23
-# §2-critical residents stay; the other 27 slots swap onto never-driver-
-# checked ORACLED queries, strongest first — the 10 round-4 additions
-# (q177 MERGE INTO, q176 PNG pixel decode, q178 PCA closed form, q179 BPE
-# encode, q180-q183 portable-hash CMS/HLL/Bloom/bootstrap, q184-q185
-# manifest-versioned time travel + exactly-once stream sink), the four
-# remaining r3 candidates (q106, q112, q115, q140), the newly-oracled
-# q127 (quantized-Lloyd's k-means) and q141 (BPE training), the corpus/
-# inference quartet (q145-q148), and seven of the statistics family
-# (q166, q167, q170, q172, q173, q174, q175).
-# Coverage bookkeeping for the 27 rotated-out round-4 occupants: each has
-# a green CORRECTNESS_r04.json row from last round plus ongoing
-# driver_sim/pytest parity, and their §2 families keep in-window faces —
-#   streaming: q71/q75 (residents) + q185 (exactly-once versioned sink,
-#   rotating IN) cover what q131/q160/q163 covered;
-#   near-dup/pair mining: q121/q154 hand to q106 (edit-distance-1 fuzzy
-#   join), q147 (incremental near-dedup), q112 (bloom semi-join);
-#   graph (q149/q150/q159): r4 rows + invariant guards + parity;
-#   PIT/as-of (q143/q163): r4 rows; the dimension-join shape stays via
-#   q177's keyed MERGE and q184's time travel;
-#   statistics (q153/q157 etc.): family stays in-window via
-#   q170/q173/q174/q175;
-#   LM scoring (q125): r4 row; token surface stays via q141/q179;
-#   ANN kernel (q158): r4 row; GEMM top-k shape stays via q167
-#   (reciprocal nearest pairs rides the same kernel).
-# ROUND-6 ROTATION (executes VERDICT r5 item 1 — the r5 candidate list
-# recorded below): the 23 §2-critical residents stay; q173 also stays one
-# more round so its de-zeroed face (confidence floor 0.5→0.1, VERDICT r5
-# "what's wrong" #3) earns a driver row with spark_rows > 0; the other 26
-# slots swap onto every never-driver-checked round-5 addition — the
-# versioned-storage closing verbs (q186 compaction+history, q190 snapshot
-# CDC, q193 CDC-maintained rollup, q195 history purge, q198 schema
-# evolution, q201 stats-pruned range scan, q202 Z-order box pruning, q207
-# atomic multi-table catalog, q208 Hive partition pruning, q209 manifest
-# bloom point lookups, q210 CHECK-constraint gate), the text/privacy ops
-# (q187 portable SimHash, q188 boilerplate removal, q189 recursive
-# hierarchy, q191 k-anonymity, q192 interval coalesce, q194 EWMA anomaly),
-# the training/statistics faces (q196 SVM training, q197 DP release, q199
-# histogram quantile sketch, q200 SemDeDup, q203/q205 HLL/CMS merge laws,
-# q204 data expectations, q206 Neyman allocation), and q211 (the round-6
-# EDC→ROT→AVM watermark-cascade face, VERDICT r5 item 7).
-# Coverage bookkeeping for the 26 rotated-out round-5 occupants: each has
-# a green CORRECTNESS_r05.json row from last round plus ongoing
-# driver_sim/pytest parity, and their §2 families keep in-window faces —
-#   versioned storage (q177 MERGE, q184 time travel, q185 stream sink):
-#   family stays in-window via q186/q190/q193/q195/q198/q201/q202/
-#   q207-q210; the exactly-once/idempotent face (S12/I3/I6) stays via
-#   q17 (resident) + q210's constraint-refusal semantics;
-#   portable sketches (q180-q182): family stays via q203/q205 merge laws
-#   + q199's quantile sketch (same 32-bit mixer oracle discipline);
-#   multimodal (q176): r5 row + golden decode tests (test_multimodal);
-#   linear algebra/training (q178 PCA, q127 k-means, q183 bootstrap):
-#   family stays via q196 (SVM training) + q206 (Neyman allocation);
-#   BPE (q141/q179): r5 rows; token surface keeps pytest parity
-#   (test_bpe) — no in-window twin needed, driver_sim re-hashes both;
-#   near-dup/pair mining (q106/q112/q147): family stays via q200
-#   (SemDeDup) + q188 (boilerplate spans) + q187 (portable SimHash);
-#   text/IR (q115 TF-IDF, q140 entropy): family stays via q46 (resident
-#   BM25 — the same doc-frequency join shape) + q188;
-#   corpus/inference (q145/q146/q148): r5 rows + test_inference parity;
-#   composition face stays via q204's publish gate;
-#   statistics (q166/q167/q170/q172/q174/q175): r5 rows; q170's KS shape
-#   recurs in q194's EWMA residuals, q206 keeps the stratified-estimation
-#   face in-window, q204 keeps the data-contract face in-window.
-# ROUND-7 ROTATION (executes VERDICT r6 item 1 — the r6 candidate list
-# recorded below): the 23 §2-critical residents stay, PLUS q211 stays as
-# a 24th resident — it is the only driver face for §2.9's I7 cascade row
-# (EDC→ROT→AVM), which the 23-resident set predates; rotating it out
-# would leave I7 without an in-window query.  The other 26 slots swap
-# onto the four round-6 additions (q212 SemDeDup k-means twin, q213
-# incremental SemDeDup, q214 RESTORE, q215 isotonic calibration), the
-# new round-7 q216 (DataFrame-keyed purge, VERDICT r6 item 2 — in-window
-# immediately so the new verb is driver-checked the round it ships), and
-# the never-driver-checked stragglers strongest-first per the r6
-# candidate order: q168 (chi-square), q169 (Benford), q171 (Gini), q113,
-# q124, q116, q114, q120, q110, q109, q107, q100, q101, then the
-# q126-q139 oracled leftovers (q126, q128, q134, q137, q138) and the
-# training-pipeline trio q117/q118/q119.
-# Coverage bookkeeping for the 27 rotated-out round-6 occupants (q173 +
-# the 26 round-6 rotations): each has a green CORRECTNESS_r06.json row
-# from last round plus ongoing driver_sim/pytest parity, and their §2
-# families keep in-window faces —
-#   versioned storage (q186/q190/q193/q195/q198/q201/q202/q207-q210):
-#   family stays in-window via q216 (purge over history — the same
-#   manifest machinery: create/merge/range-join planning/atomic manifest
-#   flip/time travel), q17 keeps S11/S12/I3 in-window, and q211 keeps
-#   the exactly-once cascade face;
-#   text/privacy (q187 SimHash, q188 boilerplate, q191 k-anonymity):
-#   near-dup family stays via q46-resident text stack + r6 rows; q80
-#   keeps the normalization face in-window;
-#   statistics/training (q194 EWMA, q196 SVM, q197 DP, q199 quantile
-#   sketch, q200 SemDeDup, q203/q205 merge laws, q204 expectations,
-#   q206 Neyman): family stays via q168/q169/q171 (distribution
-#   screens), q215 (calibration), q212/q213 (SemDeDup twins) rotating IN;
-#   q189 hierarchy / q192 interval coalesce: r6 rows + parity;
-#   q173 association rules: earned its de-zeroed driver row in r6
-#   (132 rows), family stays via q124 (PMI co-occurrence) rotating IN.
-# After the round-7 rotation the never-driver-checked oracled set was:
-# q217-q224 (the eight round-7 additions), q81, q85, q86, q90, q93, q97,
-# q98, q103, q108, q111, plus the deliberate §2-duplicated tail quartet
-# q19/q40/q44/q45.
-# ROUND-8 ROTATION (executes VERDICT r7 item 1): the 24 residents stay
-# (23 §2-critical + q211 as the only I7 cascade face); the 26 swap slots
-# land on ALL 18 round-8 candidates in the recorded order (q223/q224
-# first — q223's recall floor was raised this round, so its new contract
-# is driver-checked the round it changed — then q217-q222, then
-# q81/q85/q86/q90/q93/q97/q98/q103/q108/q111), PLUS the deliberate
-# §2-duplicated tail quartet q19/q40/q44/q45 (their coverage is
-# duplicated in-window, but 26 slots ≥ 22 candidates, so the quartet
-# earns driver rows too — after this rotation EVERY oracled query has
-# had a driver CORRECTNESS row at least once), PLUS the round-8
-# additions (in-window the round they ship, same posture as q216 in r7).
-# Coverage bookkeeping for the 26 rotated-out round-7 occupants (each
-# has a green CORRECTNESS_r07.json row plus ongoing driver_sim/pytest
-# parity), by §2 family face left in-window:
-#   SemDeDup twins (q212/q213): embedding-similarity family stays via
-#   q223/q224 (PQ ANN) and q86 (int8 ANN) rotating IN;
-#   versioned storage (q214 RESTORE, q216 relation purge): family stays
-#   via q217 (relation DELETE), q220 (clone), q221 (DROP COLUMN), q222
-#   (streaming CDC source) rotating IN; S11/S12/I3 stay via q17;
-#   training/statistics (q215 isotonic, q168/q169/q171 screens, q113,
-#   q124, q116, q114, q120, q110, q109): family stays via q218
-#   (Spearman) + q219 (embargo split) rotating IN;
-#   analytics (q107, q100, q101, q126, q128, q134, q137, q138,
-#   q117/q118/q119): §2 faces all duplicated by residents (A5/O5/O7/
-#   R4/null-handling); window family stays via q81 (window suite) +
-#   q93 (sliding windows) rotating IN.
-# After the round-8 rotation the ONLY oracled query without a driver row
-# was q229 (certified LSH twin, added mid-round-8 after the window was
-# sized; green in driver_sim at sf0.001/0.01/0.1 + TZ).
-# ROUND-9 ROTATION (executes VERDICT r8 item 2): q229 swaps IN for
-# q19_sessionization, the round-9 addition q230 (MEA mismatched-grid
-# full-outer rejects, VERDICT r8 item 8) swaps IN for q40_text_stats,
-# and the round-9 additions q231 (semantic decontamination) and q232
-# (quality-aware dedup keep) swap IN for q44_token_counts and
-# q45_vocab_stats. All outgoing queries are from the deliberately
-# §2-duplicated tail quartet (green driver rows in r8; their §2 faces
-# are duplicated by residents — sessionization by q93's windows, text
-# normalization/scalars by q80 in-window, grouped-count/LIMIT faces by
-# q16/q46). q98 stays in-window to prove the round-9 portability fix
-# (array_join'd priorities column) at the real gate.
-# After this rotation every oracled query has a driver row from some
-# round, and both round-9 changes (q98 fix, q229/q230 additions) are
-# driver-checked the round they ship.
-#
-# _TAIL holds, in order: oracled queries whose §2 coverage is duplicated by
-# an in-window query (q03→J1 via q04, O7 via q46's LIMIT; q05→J3 via q66's
-# EXISTS-semi, J5 via q26; q30→dedup-exact via q88's composition oracle;
-# q20→A7/kernel via q22, closed-form≡lstsq property-tested; q28→S9 via
-# q27/q72; q52→multimodal via q50; q08→J10 via q23, q21→R4 via q72,
-# q51→via q50, q67→via q66, q69→via q74, q70→via q82), then the rows-only
-# checks (q33/q36/q37/q63 — `no_oracle` by design, their invariants
-# asserted in tests/).  The former never-checked quartet q19/q40/q44/q45
-# rotated INTO the round-8 window, so every _TAIL member now has a driver
-# row from some past round.  Queries registered but listed in neither
-# group slot in between: after the gate-critical prefix, before the
-# deliberate tail.
+# ordering is part of the contract: ``_PRIORITY`` is that window (all
+# SQL-oracled; every SURVEY §2 row keeps at least one in-window query),
+# unlisted queries follow in registration order, and ``_TAIL`` goes last.
+# Earlier rounds rotated queries through the window (see git history and
+# CORRECTNESS_r*.json); every oracled query has a driver row from some round
+# and a driver_sim/pytest check every round.  Each oracled query outside the
+# window names the in-window queries that cover its family (the rows-only
+# ones name their oracled twin in ROWS_ONLY_TWINS; _TAIL entries say it inline):
+#   q32 MinHash LSH pairs       -> q111 (incremental MinHash dedup), q232
+#   q38 Jaccard prefix filter   -> q111, q232
+#   q39 dedup clusters          -> q111 (same closure), q232
+#   q121 repeated n-gram spans  -> q232, q80
+#   q147 incremental near-dedup -> q111
+#   q154 containment pairs      -> q111, q232
+#   q64 as-of click/purchase    -> q228 (as-of-version join), q85
+#   q82 grouping sets           -> q01, q29 (grouped rollups)
+#   q92 resample + ffill        -> q81 (window suite)
+#   q94 snapshot diff           -> q220 (clone divergence), q222 (CDC source)
+#   q95 event funnel            -> q81, q12
+#   q96 rolling aggregates      -> q81
+#   q99 exact-quantile outliers -> q81
+#   q100 top-k per group        -> q12, q81
+#   q101 revenue share          -> q81, q04
+#   q123 SCD2 user state        -> q222, q220
+#   q126 skew report            -> q226 (hash sharding), q16
+#   q128 cumulative distinct    -> q81
+#   q129 retention cohorts      -> q81, q12
+#   q130 transition matrix      -> q81
+#   q132 peak concurrency       -> q81
+#   q133 table checksum         -> q220, q222
+#   q134 variant extract        -> q97 (JSON extract)
+#   q136 group OLS              -> q22 (per-group pandas fit)
+#   q137 null-safe join         -> q04, q06
+#   q138 try_* functions        -> q97, q80
+#   q139 date-spine gaps        -> q81, q11
+#   q142 CMS heavy hitters      -> q226 (same portable hash)
+#   q143 PIT dimension join     -> q228, q85
+#   q152 sequence pattern       -> q81
+#   q153 Welch t-test           -> q01, q16 (grouped moments)
+#   q157 drift PSI              -> q233 (DSIR distribution weights)
+#   q162 join-size estimate     -> q226
+#   q166 data-contract report   -> q23 (grid validation), q230
+#   q168 chi-square uniformity  -> q01, q16
+#   q169 Benford screen         -> q01, q16
+#   q170 KS drift               -> q81
+#   q171 Gini                   -> q81
+#   q174 Kaplan-Meier           -> q81
+#   q218 Spearman               -> q81
+#   q149 PageRank               -> q04 (joins; graph kernels keep test_graph)
+#   q150 triangles              -> q04 (joins; graph kernels keep test_graph)
+#   q159 bounded shortest paths -> q04 (joins; graph kernels keep test_graph)
+#   q173 association rules      -> q83 (set operations)
+#   q189 hierarchy rollup       -> q29
+#   q177 MERGE INTO             -> q220, q221, q228 (versioned storage)
+#   q184 time travel            -> q221, q228
+#   q186 compaction + history   -> q220, q221
+#   q190 snapshot changes       -> q222
+#   q193 CDC-maintained rollup  -> q222, q29
+#   q195 purged time travel     -> q221, q228
+#   q216 purged relation travel -> q221, q228
+#   q217 relation delete travel -> q220, q221
+#   q198 evolved time travel    -> q221 (dropped column)
+#   q201 stats-pruned range     -> q228, q108
+#   q202 Z-order box scan       -> q108 (Morton curve)
+#   q207 atomic catalog pair    -> q228 (catalog join)
+#   q208 hive-partition scan    -> q90 (source scan), q228
+#   q209 bloom point lookups    -> q26 (keyed lookup)
+#   q210 constrained ingest     -> q230 (side-output rejects)
+#   q214 RESTORE                -> q220, q221
+#   q106 fuzzy join (ED 1)      -> q111, q232
+#   q112 bloom semi-join        -> q06, q26
+#   q135 geo near join          -> q04
+#   q161 probabilistic linkage  -> q232, q111
+#   q172 golden-record merge    -> q232
+#   q50 media features          -> q225 (aHash decode)
+#   q176 PNG pixel decode       -> q225
+#   q84 JSONL source            -> q97, q90
+#   q204 data expectations      -> q230, q23
+#   q35 brute-force ANN top-k   -> q86, q223 (same broadcast top-k kernel)
+#   q78 embedding dedup         -> q231 (semantic decontamination)
+#   q119 hard-negative mining   -> q86, q223
+#   q127 k-means                -> q227 (same quantized Lloyd's)
+#   q158 kNN label transfer     -> q86, q223
+#   q167 reciprocal NN pairs    -> q231
+#   q178 PCA closed form        -> q22 (closed-form kernel)
+#   q200 SemDeDup               -> q231, q229 (same hyperplane quantizer)
+#   q212 SemDeDup k-means twin  -> q231, q227
+#   q213 incremental SemDeDup   -> q231, q224
+#   q180 portable CMS           -> q226
+#   q181 portable HLL           -> q226
+#   q182 portable Bloom         -> q226
+#   q183 bootstrap CI           -> q226
+#   q187 portable SimHash       -> q225 (hamming join), q226
+#   q199 histogram quantiles    -> q81
+#   q203 HLL merge law          -> q226
+#   q205 CMS merge law          -> q226
+#   q107 partial-agg merge      -> q29
+#   q109 decile binning         -> q81
+#   q110 group z-score          -> q81
+#   q113 touch attribution      -> q81, q12
+#   q191 k-anonymity ladder     -> q16
+#   q192 interval coalesce      -> q81
+#   q194 EWMA anomaly           -> q81
+#   q197 DP noisy counts        -> q16
+#   q18 stream window counts    -> q71, q75, q103
+#   q77 stream-stream join      -> q85, q71
+#   q60 stream sessionization   -> q75
+#   q131 stream incremental MV  -> q29, q71
+#   q148 stream inference       -> q85
+#   q160 stream drift monitor   -> q75
+#   q163 stream PIT enrich      -> q85
+#   q165 stream CMS             -> q75, q226
+#   q185 stream versioned sink  -> q71, q222
+#   q41 quality score           -> q80, q46
+#   q79 repetition quality      -> q80, q232
+#   q89 unigram log-prob        -> q46
+#   q114 quality classifier     -> q232, q233
+#   q115 TF-IDF keywords        -> q46 (same doc-frequency join)
+#   q116 corpus health report   -> q80, q46
+#   q124 co-occurrence PMI      -> q46
+#   q125 bigram log-prob        -> q46
+#   q140 source entropy         -> q46
+#   q141 BPE merges             -> q80
+#   q179 BPE encode             -> q80
+#   q146 batch inference        -> q22 (pandas UDF)
+#   q175 classifier AUC         -> q81
+#   q188 boilerplate removal    -> q80, q232
+#   q47 sequence packing        -> q235 (best-fit packing), q226
+#   q48 PII redaction           -> q80
+#   q73 bucketed join           -> q04
+#   q74 weighted mix            -> q234 (epoch-capped mixing)
+#   q49 decontamination         -> q231
+#   q76 salted hot-key join     -> q04, q226
+#   q88 corpus-prep pipeline    -> q232, q233
+#   q117 document chunking      -> q235, q226
+#   q118 temperature mixing     -> q234
+#   q120 leakage-safe split     -> q219 (embargo split)
+#   q122 token-budget sample    -> q234, q233
+#   q145 corpus release         -> q232, q233
+#   q151 hybrid RRF retrieval   -> q46, q86
+#   q156 weighted reservoir     -> q233, q234
+#   q196 SVM training           -> q22
+#   q206 Neyman allocation      -> q234
+#   q215 isotonic calibration   -> q81
 _PRIORITY: tuple[str, ...] = (
-    # ---- 23 §2-critical residents (every SURVEY §2 row stays in-window) --
+    # 23 §2-critical residents (every SURVEY §2 row stays in-window)
     "q01_pricing_summary",
     "q02_like_in_filter",
     "q04_region_nation_revenue",
@@ -300,10 +246,9 @@ _PRIORITY: tuple[str, ...] = (
     "q75_stream_stateful_profiles",
     "q80_normalize_text",
     "q83_set_operations",
-    # ---- 24th resident: the only driver face for §2.9's I7 cascade row --
+    # the only driver face for §2.9's I7 cascade row
     "q211_watermark_cascade",
-    # ---- 26 round-8 rotations: all 18 recorded candidates, the
-    # ---- §2-duplicated tail quartet, and the round-8 additions ----------
+    # rotated in by earlier rounds
     "q223_pq_ann_topk",
     "q224_incremental_pq_encode",
     "q219_embargo_label_windows",
@@ -313,85 +258,60 @@ _PRIORITY: tuple[str, ...] = (
     "q81_window_suite",
     "q85_stream_static_enrich",
     "q86_ann_quantized_topk",
-    # q93_sliding_windows rotated to _TAIL in round 11 (see ROUND-11 note)
     "q97_json_extract",
     "q98_array_agg",
     "q103_stream_bounded_dedup",
     "q108_zorder_curve",
     "q111_incremental_dedup",
-    # ---- round-8 additions (in-window the round they shipped) -----------
     "q225_ahash_near_pairs",
     "q226_hash_sharding",
     "q227_ivf_certified_topk",
     "q228_catalog_travel_join",
-    # ---- round-9 rotations: q229 gets its first driver row; q230-q234
-    # ---- are the round-9 additions (in-window the round they ship).
-    # ---- Rotated OUT for the new slots, both with green CORRECTNESS_r08
-    # ---- rows and families that keep driver_sim/pytest parity every
-    # ---- round: q218_spearman_length_vocab (beyond-reference statistics)
-    # ---- and q217_relation_delete_travel (versioned-storage family keeps
-    # ---- q220/q221/q228 in-window). --------------------------------------
     "q229_lsh_certified_topk",
     "q230_mea_mismatched_grid_rejects",
     "q231_semantic_decontaminate",
     "q232_quality_dedup_keep",
     "q233_dsir_selection",
     "q234_epoch_capped_mixing",
-    # ---- ROUND-10 ROTATION: q235 (best-fit-decreasing packing, VERDICT r9
-    # ---- item 6) is in-window the round it ships, same posture as every
-    # ---- prior addition.  Rotated OUT: q90_orc_source (green
-    # ---- CORRECTNESS_r09 row; beyond-reference source format whose scan
-    # ---- family keeps q61 parquet-wide and q97 JSON in-window, plus
-    # ---- ongoing driver_sim/pytest parity every round). -------------------
     "q235_best_fit_packing",
-    # ---- ROUND-11 ROTATION (executes VERDICT r10 item 5): q90_orc_source
-    # ---- rotates BACK IN — it was the only registered query whose latest
-    # ---- driver row was 2 rounds old (rotated out for q235 in r10 through
-    # ---- no fault of its own; the "every query re-sampled periodically"
-    # ---- invariant needs it back). Rotated OUT: q93_sliding_windows
-    # ---- (green CORRECTNESS_r09 AND _r10 rows, hash-match both; its
-    # ---- window-function family face stays in-window via q81_window_suite,
-    # ---- itself green r09+r10, plus ongoing driver_sim/pytest parity). ----
     "q90_orc_source",
 )
 
 _TAIL: tuple[str, ...] = (
-    # rotated out of the round-11 window (coverage duplicated in-window by
-    # q81_window_suite; green r09+r10 driver rows)
-    "q93_sliding_windows",
-    "q19_sessionization",
-    "q40_text_stats",
-    "q44_token_counts",
-    "q45_vocab_stats",
-    "q30_exact_dedup",
-    "q05_semi_join_urgent_buyers",
-    "q07_full_outer_nation_counts",
-    "q09_distinct_flags",
-    "q13_pivot_events_wide",
-    "q14_unpivot_part",
-    "q15_scalar_functions",
-    "q25_validation_split",
-    "q31_ngram_jaccard_pairs",
-    "q34_embedding_cosine_pairs",
-    "q42_language_id",
-    "q43_fingerprints",
-    "q62_rollup_revenue",
-    "q65_range_join_errors_in_windows",
-    "q68_train_test_split",
-    "q03_top_orders_by_revenue",
-    "q20_rot_fit_closed_form",
-    "q28_rot_pipeline_detail",
-    "q52_media_catalog",
-    "q08_cross_join_grid",
-    "q21_rot_apply_affine",
-    "q51_frame_sampling",
-    "q67_scalar_subquery",
-    "q69_stratified_sample",
-    "q70_cube_order_stats",
-    "q33_simhash_near_pairs",
-    "q36_ann_lsh_topk",
-    "q37_ann_ivf_topk",
-    "q63_approx_distinct_users",
+    "q93_sliding_windows",  # q81 (window suite)
+    "q19_sessionization",  # q75 (stateful profiles), q81
+    "q40_text_stats",  # q80, q16
+    "q44_token_counts",  # q80, q46
+    "q45_vocab_stats",  # q80, q46
+    "q30_exact_dedup",  # q111, q232
+    "q05_semi_join_urgent_buyers",  # q66 (EXISTS semi), q26
+    "q07_full_outer_nation_counts",  # q72, q230 (full outer)
+    "q09_distinct_flags",  # q83
+    "q13_pivot_events_wide",  # q61, q72
+    "q14_unpivot_part",  # q61, q72
+    "q15_scalar_functions",  # q80, q22
+    "q25_validation_split",  # q27, q219
+    "q31_ngram_jaccard_pairs",  # q111, q232
+    "q34_embedding_cosine_pairs",  # q231, q86
+    "q42_language_id",  # q80
+    "q43_fingerprints",  # q80, q111
+    "q62_rollup_revenue",  # q01, q29
+    "q65_range_join_errors_in_windows",  # q228, q11
+    "q68_train_test_split",  # q219, q234
+    "q03_top_orders_by_revenue",  # q04, q46 (LIMIT)
+    "q20_rot_fit_closed_form",  # q22
+    "q28_rot_pipeline_detail",  # q27, q72
+    "q52_media_catalog",  # q225
+    "q08_cross_join_grid",  # q23
+    "q21_rot_apply_affine",  # q72
+    "q51_frame_sampling",  # q225
+    "q67_scalar_subquery",  # q66
+    "q69_stratified_sample",  # q234
+    "q70_cube_order_stats",  # q01, q29
+    "q33_simhash_near_pairs",  # rows-only; twin q187
+    "q36_ann_lsh_topk",  # rows-only; twin q229
+    "q37_ann_ivf_topk",  # rows-only; twin q227
+    "q63_approx_distinct_users",  # rows-only; twin q181
 )
 
 

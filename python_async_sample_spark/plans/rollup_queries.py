@@ -121,15 +121,16 @@ _ZORDER_ORACLE = """
 @query(
     "q108_zorder_curve",
     oracle=_ZORDER_ORACLE,
-    ref="multi-dim z-order clustering key (beyond reference; sources/layout.py zorder_by)",
+    ref="multi-dim z-order clustering key (beyond reference; sources/layout.morton2, clustered by versioned.rewrite_layout)",
     tags=("layout",),
 )
 def q108_zorder_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Morton (Z-curve) clustering key zorder_by sorts files with,
-    surfaced as a query so the bit-interleave arithmetic is pinned
-    cross-engine: first 50 events along the curve of (user_id, int(value)).
-    The curve is what turns two-column box predicates into file-level
-    min/max pruning (test_layout proves the pruning; this pins the key)."""
+    """The Morton (Z-curve) clustering key ``versioned.rewrite_layout``
+    sorts files with, surfaced as a query so the bit-interleave arithmetic
+    is pinned cross-engine: first 50 events along the curve of (user_id,
+    int(value)). The curve is what turns two-column box predicates into
+    file-level min/max pruning (q202 and test_versioned prove the pruning;
+    this pins the key)."""
     from python_async_sample_spark.sources.layout import morton2
 
     events = load_table(spark, sf_dir, "events")

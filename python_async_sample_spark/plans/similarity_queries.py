@@ -5,11 +5,27 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from python_async_sample_spark.operators.pq import (
+    brute_force_topk_l2,
+    pq_encode,
+    pq_encode_oracle_sql,
+    pq_fit,
+    pq_oracle_sql,
+    pq_topk_refined,
+)
 from python_async_sample_spark.operators.similarity import (
+    all_pairs_topk_gemm,
     brute_force_topk,
+    cosine_pairs_blocked_gemm,
     cosine_pairs_gemm,
+    hyperplane_cte_parts,
+    ivf_certified_oracle_sql,
     ivf_topk,
+    ivf_topk_certified,
+    lsh_certified_oracle_sql,
     lsh_topk,
+    lsh_topk_certified,
+    portable_hyperplane_buckets,
     quantized_topk,
 )
 from python_async_sample_spark.plans.registry import query
@@ -140,11 +156,13 @@ def _union_poison_guard(out: DataFrame, violation: DataFrame, msg: str) -> DataF
     tags=("llm-data", "similarity"),
 )
 def q36_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Random-hyperplane LSH top-k: each query scores only its bucket — the
-    100 TB path where a full scan per query is off the table. Recall vs the
-    exact GEMM top-k is computed in-plan and the query fails loudly below
-    the floor (near-uniform synthetic vectors make LSH recall modest by
-    design; the floor catches collapse, tests pin the real level)."""
+    """Random-hyperplane LSH top-k: each query scores only its buckets (8
+    tables × 6 planes of the portable mixer, the quantizer q229 certifies
+    one table of) — the 100 TB path where a full scan per query is off the
+    table. Recall vs the exact GEMM top-k is computed in-plan and the query
+    fails loudly below the floor (near-uniform synthetic vectors make LSH
+    recall modest by design: 0.44/0.30/0.27 at sf0.001/0.01/0.1; the floor
+    catches collapse, tests pin the real level)."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") % 100 == 0)
     out = lsh_topk(emb, queries, "vec_id", "embedding", k=10, n_planes=6, dim=64)
@@ -526,8 +544,6 @@ def q167_reciprocal_nearest_pairs(spark: SparkSession, sf_dir: str) -> DataFrame
     Reciprocity is then a self-join of the (query → neighbor) edge with
     its reverse — O(N) rows on id.  At 100 TB the exact top-1 swaps for
     the ANN index (q36/q37) with the same reciprocity join."""
-    from python_async_sample_spark.operators.similarity import all_pairs_topk_gemm
-
     emb = load_table(spark, sf_dir, "embeddings")
     nn = all_pairs_topk_gemm(emb, "vec_id", "embedding", k=1).select(
         F.col("query_id").alias("qa"), F.col("neighbor_id").alias("qb"), "cosine"
@@ -596,8 +612,6 @@ def q178_pca_closed_form(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _semdedup_hyperplane_oracle() -> str:
-    from python_async_sample_spark.operators.similarity import hyperplane_cte_parts
-
     hp_parts = ",\n".join(hyperplane_cte_parts("(SELECT np FROM pn)"))
     return f"""
     WITH RECURSIVE
@@ -689,10 +703,6 @@ def q200_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
     from python_async_sample_spark.operators.cluster import dedup_clusters
-    from python_async_sample_spark.operators.similarity import (
-        cosine_pairs_blocked_gemm,
-        portable_hyperplane_buckets,
-    )
     from pyspark.sql.window import Window as W
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -806,7 +816,6 @@ def q212_semdedup_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     same downstream pipeline, linear candidate growth."""
     from python_async_sample_spark.operators.cluster import dedup_clusters
     from python_async_sample_spark.operators.kmeans import kmeans_fit, kmeans_predict
-    from python_async_sample_spark.operators.similarity import cosine_pairs_blocked_gemm
 
     emb = load_table(spark, sf_dir, "embeddings")
     cents, _hist = kmeans_fit(emb, "vec_id", "embedding", k=8, iters=2, round_digits=6)
@@ -844,8 +853,6 @@ def q212_semdedup_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _incremental_semdedup_oracle() -> str:
-    from python_async_sample_spark.operators.similarity import hyperplane_cte_parts
-
     hp_parts = ",\n".join(hyperplane_cte_parts("(SELECT np FROM pn)"))
     return f"""
     WITH RECURSIVE
@@ -928,10 +935,6 @@ def q213_incremental_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
     from python_async_sample_spark.operators.cluster import connected_components
-    from python_async_sample_spark.operators.similarity import (
-        cosine_pairs_blocked_gemm_incremental,
-        portable_hyperplane_buckets,
-    )
 
     emb = load_table(spark, sf_dir, "embeddings")
     n = emb.count()
@@ -944,7 +947,7 @@ def q213_incremental_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("is_new", F.col("vec_id") % 4 == 0)
         .localCheckpoint(eager=False)
     )
-    pairs = cosine_pairs_blocked_gemm_incremental(
+    pairs = cosine_pairs_blocked_gemm(
         tagged, "vec_id", "embedding",
         threshold=0.45, block_col="bucket", is_new_col="is_new",
     ).select("d1", "d2")
@@ -967,12 +970,9 @@ def q213_incremental_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from python_async_sample_spark.operators.pq import pq_oracle_sql as _pq_oracle
-
-
 @query(
     "q223_pq_ann_topk",
-    oracle=_pq_oracle(
+    oracle=pq_oracle_sql(
         "embeddings", "vec_id", "embedding",
         m=8, ksub=16, iters=2, query_pred="id % 100 = 0", k=10, refine=400,
     ),
@@ -997,13 +997,6 @@ def q223_pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     FLAT in the shortlist (fit+encode dominate) — so the FAISS-style
     ``k_factor=40`` (shortlist 400) buys 0.89+ for free and the in-plan
     floor rises 0.5 → 0.7 with 0.19 margin at the worst measured scale."""
-    from python_async_sample_spark.operators.pq import (
-        brute_force_topk_l2,
-        pq_encode,
-        pq_fit,
-        pq_topk_refined,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") % 100 == 0)
     cbs = pq_fit(emb, "vec_id", "embedding", m=8, ksub=16, iters=2)
@@ -1018,14 +1011,9 @@ def q223_pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("query_id", "rank")
 
 
-from python_async_sample_spark.operators.pq import (
-    pq_encode_oracle_sql as _pq_enc_oracle,
-)
-
-
 @query(
     "q224_incremental_pq_encode",
-    oracle=_pq_enc_oracle(
+    oracle=pq_encode_oracle_sql(
         "embeddings", "vec_id", "embedding",
         m=8, ksub=16, iters=2,
         fit_pred="vec_id % 4 <> 0", encode_pred="vec_id % 4 = 0",
@@ -1045,8 +1033,6 @@ def q224_incremental_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch from first principles, so a drifted codebook, a history row
     leaking into the batch scan, or a tie-break divergence all
     hash-mismatch."""
-    from python_async_sample_spark.operators.pq import pq_encode, pq_fit
-
     emb = load_table(spark, sf_dir, "embeddings")
     history = emb.where(F.col("vec_id") % 4 != 0)
     batch = emb.where(F.col("vec_id") % 4 == 0)
@@ -1057,14 +1043,9 @@ def q224_incremental_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("vec_id", "s")
 
 
-from python_async_sample_spark.operators.similarity import (
-    ivf_certified_oracle_sql as _ivf_cert_oracle,
-)
-
-
 @query(
     "q227_ivf_certified_topk",
-    oracle=_ivf_cert_oracle(
+    oracle=ivf_certified_oracle_sql(
         "embeddings", "vec_id", "embedding",
         n_cells=16, iters=2, n_probe=4, query_pred="id % 100 = 0", k=10,
     ),
@@ -1085,8 +1066,6 @@ def q227_ivf_certified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe order, or a candidate leaking from an unprobed cell all
     hash-mismatch. One corpus shuffle on cell id; probe set and query
     vectors broadcast."""
-    from python_async_sample_spark.operators.similarity import ivf_topk_certified
-
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") % 100 == 0)
     out = ivf_topk_certified(
@@ -1097,14 +1076,9 @@ def q227_ivf_certified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("query_id", "rank")
 
 
-from python_async_sample_spark.operators.similarity import (
-    lsh_certified_oracle_sql as _lsh_cert_oracle,
-)
-
-
 @query(
     "q229_lsh_certified_topk",
-    oracle=_lsh_cert_oracle(
+    oracle=lsh_certified_oracle_sql(
         "embeddings", "vec_id", "embedding",
         n_planes=4, dim=64, query_pred="id % 100 = 0", k=10,
     ),
@@ -1119,13 +1093,11 @@ def q229_lsh_certified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored with the EXACT squared L2 on the 1e-9 grid, ranked by
     (d2, neighbor_id). A drifted plane, a flipped sign-bit convention, a
     candidate from a foreign bucket, or a ranking tie-break divergence
-    all hash-mismatch. q36 stays the production face (numpy-seeded
-    planes, GEMM scoring, in-plan recall floor); this face certifies the
-    LSH ALGEBRA. The corpus keeps its vector through the bucketing
+    all hash-mismatch. q36 stays the production face (eight tables of
+    the same portable planes, GEMM cosine scoring, in-plan recall floor);
+    this face certifies the LSH ALGEBRA of one table. The corpus keeps its vector through the bucketing
     kernel (no self-join back onto the float store); one shuffle on
     bucket id; query codes and vectors broadcast."""
-    from python_async_sample_spark.operators.similarity import lsh_topk_certified
-
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") % 100 == 0)
     out = lsh_topk_certified(

@@ -71,7 +71,10 @@ def main() -> int:
             # durable record so an intermittent one can be diagnosed later
             with open("/tmp/driver_sim_failures.log", "a") as f:
                 f.write(f"{time.strftime('%F %T')} {sf_dir} {name}: {status}\n")
-        print(f"{name}: {status} ({time.perf_counter() - t0:.2f}s)")
+        # flushed per query, so JVM stderr (task errors, stack traces)
+        # lands just above the line of the query that was running, even
+        # when stdout is piped to a file
+        print(f"{name}: {status} ({time.perf_counter() - t0:.2f}s)", flush=True)
 
     print(f"\n{len(qs) - len(failed)}/{len(qs)} queries OK at {sf_dir}")
     if failed:

@@ -1,9 +1,8 @@
-"""Compaction, range clustering and Z-ordering: content-preserving,
-layout-changing; keyed DELETE/MERGE pruning on those layouts."""
+"""Clustered and Z-ordered snapshot layouts: keyed DELETE/MERGE pruning on
+them, the Morton curve, and hive-partition pruning."""
 
 from __future__ import annotations
 
-import glob
 import tempfile
 
 import pyarrow.parquet as pq
@@ -11,7 +10,6 @@ import pytest
 from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
-from python_async_sample_spark.sources.layout import cluster_by, compact, dir_bytes
 from python_async_sample_spark.sources.readers import load_table
 from python_async_sample_spark.sources.versioned import (
     _DATA_DIR,
@@ -33,68 +31,6 @@ def fragmented(spark, sf_dir):
     tmp = tempfile.mkdtemp(prefix="layout_frag_") + "/events_64"
     load_table(spark, sf_dir, "events").repartition(64).write.parquet(tmp)
     return tmp
-
-
-def _files(path: str) -> list[str]:
-    return sorted(glob.glob(f"{path}/part-*.parquet"))
-
-
-def test_compact_reduces_files_and_preserves_content(spark, fragmented):
-    out = tempfile.mkdtemp(prefix="layout_out_") + "/compacted"
-    before = spark.read.parquet(fragmented)
-    compacted = compact(spark, fragmented, out, target_file_mb=128)
-
-    assert len(_files(fragmented)) == 64
-    # sf0.001 events ≪ 128 MB → exactly one output file
-    assert len(_files(out)) == 1
-    assert compacted.count() == before.count()
-    assert before.exceptAll(compacted).count() == 0
-    assert compacted.exceptAll(before).count() == 0
-
-
-def test_target_count_derives_from_bytes(spark, fragmented):
-    total = dir_bytes(spark, fragmented)
-    assert total > 0
-    out = tempfile.mkdtemp(prefix="layout_out_") + "/tiny_target"
-    # a 1 MB target below the table size forces ceil(bytes/1MB) files
-    compact(spark, fragmented, out, target_file_mb=1)
-    assert len(_files(out)) == max(1, -(-total // (1024 * 1024)))
-
-
-def test_cluster_by_gives_disjoint_file_ranges(spark, fragmented):
-    out = tempfile.mkdtemp(prefix="layout_out_") + "/clustered"
-    clustered = cluster_by(spark, fragmented, out, ["user_id"], n_files=4)
-    files = _files(out)
-    assert len(files) > 1
-
-    # each file owns a disjoint user_id range → footer min/max prunes scans
-    ranges = []
-    for f in files:
-        meta = pq.read_metadata(f)
-        mins, maxs = [], []
-        for rg in range(meta.num_row_groups):
-            col = next(
-                meta.row_group(rg).column(i)
-                for i in range(meta.num_columns)
-                if meta.row_group(rg).column(i).path_in_schema == "user_id"
-            )
-            mins.append(col.statistics.min)
-            maxs.append(col.statistics.max)
-        ranges.append((min(mins), max(maxs)))
-    ranges.sort()
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 <= lo2  # range boundaries may touch, never interleave
-
-    before = spark.read.parquet(fragmented)
-    assert before.exceptAll(clustered).count() == 0
-    assert clustered.exceptAll(before).count() == 0
-
-
-def test_compact_never_overwrites(spark, fragmented):
-    out = tempfile.mkdtemp(prefix="layout_out_") + "/once"
-    compact(spark, fragmented, out, target_file_mb=128)
-    with pytest.raises(Exception):
-        compact(spark, fragmented, out, target_file_mb=128)
 
 
 # Keyed DELETE and MERGE live in ``sources.versioned`` and commit as one
@@ -193,59 +129,6 @@ def test_delete_keys_tolerates_missing_footer_stats(spark, tmp_path):
     after = read_version(spark, root)
     assert after.where(F.col("user_id").isin([500, 3])).count() == 0
     assert after.count() == 100 + 2 - 2
-
-
-def _file_ranges(path, col):
-    out = {}
-    for f in _files(path):
-        meta = pq.read_metadata(f)
-        mins, maxs = [], []
-        for rg in range(meta.num_row_groups):
-            c = next(
-                meta.row_group(rg).column(i)
-                for i in range(meta.num_columns)
-                if meta.row_group(rg).column(i).path_in_schema == col
-            )
-            mins.append(c.statistics.min)
-            maxs.append(c.statistics.max)
-        out[f] = (min(mins), max(maxs))
-    return out
-
-
-def test_zorder_prunes_box_queries_on_both_dims(spark, fragmented):
-    """Z-ordering by (user_id, int(value)) must give files small min/max
-    rectangles in BOTH dimensions, so a box predicate can prune files on
-    either column — single-column clustering can only prune its lead
-    column."""
-    from pyspark.sql import functions as F
-
-    from python_async_sample_spark.sources.layout import zorder_by
-
-    zout = tempfile.mkdtemp(prefix="layout_out_") + "/zorder"
-    # events value is double — quantize to ints for the curve
-    tmp = tempfile.mkdtemp(prefix="layout_out_") + "/quantized"
-    spark.read.parquet(fragmented).withColumn(
-        "value_i", F.col("value").cast("int")
-    ).write.parquet(tmp)
-    z = zorder_by(spark, tmp, zout, "user_id", "value_i", n_files=8)
-
-    before = spark.read.parquet(tmp)
-    assert before.exceptAll(z).count() == 0 and z.exceptAll(before).count() == 0
-
-    u_ranges = _file_ranges(zout, "user_id")
-    v_ranges = _file_ranges(zout, "value_i")
-    files = list(u_ranges)
-    assert len(files) == 8
-
-    # box: user_id <= 1 AND value_i <= 40
-    def intersects(f):
-        return u_ranges[f][0] <= 1 and v_ranges[f][0] <= 40
-
-    surviving = [f for f in files if intersects(f)]
-    assert len(surviving) < len(files)  # the box prunes files
-    # and specifically the VALUE dimension prunes at least one file whose
-    # user range still matches — impossible under user_id-only clustering
-    assert any(u_ranges[f][0] <= 1 and v_ranges[f][0] > 40 for f in files)
 
 
 def test_morton_covers_full_16bit_domain(spark):

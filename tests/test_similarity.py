@@ -194,14 +194,11 @@ def test_blocked_gemm_matches_expression_pairs(spark, sf_dir):
 
 
 def test_incremental_gemm_is_touching_subset_of_full(spark, sf_dir):
-    """q213's kernel contract: cosine_pairs_blocked_gemm_incremental must
-    emit EXACTLY the full blocked-GEMM pair set restricted to pairs
+    """q213's kernel contract: cosine_pairs_blocked_gemm with is_new_col
+    must emit EXACTLY the full blocked-GEMM pair set restricted to pairs
     touching the batch — nothing extra (no history x history), nothing
     missing (no dropped batch pair), each batch-batch pair exactly once."""
-    from python_async_sample_spark.operators.similarity import (
-        cosine_pairs_blocked_gemm,
-        cosine_pairs_blocked_gemm_incremental,
-    )
+    from python_async_sample_spark.operators.similarity import cosine_pairs_blocked_gemm
 
     emb = (
         load_table(spark, sf_dir, "embeddings")
@@ -215,7 +212,7 @@ def test_incremental_gemm_is_touching_subset_of_full(spark, sf_dir):
         ).collect()
     }
     touching = {k: v for k, v in full.items() if k[0] % 4 == 0 or k[1] % 4 == 0}
-    inc_rows = cosine_pairs_blocked_gemm_incremental(
+    inc_rows = cosine_pairs_blocked_gemm(
         emb, "vec_id", "embedding",
         threshold=0.45, block_col="bucket", is_new_col="is_new",
     ).collect()
@@ -255,6 +252,93 @@ def test_portable_hyperplane_buckets_python_replayable(spark, sf_dir):
             if sum(p * x for p, x in zip(planes[j], v)) >= 0
         )
         assert got[r["vec_id"]] == code, r["vec_id"]
+
+
+def test_multi_table_buckets_python_replayable(spark, sf_dir):
+    """lsh_topk's index: table t of portable_hyperplane_buckets uses planes
+    t*n_planes .. t*n_planes+n_planes-1 of the portable mixer and offsets
+    its code by t*2^n_planes — every bucket must equal a pure-Python replay,
+    and table 0 must be the single-table (q200/q213/q229) output."""
+    from python_async_sample_spark.operators.similarity import (
+        portable_hyperplane_buckets,
+    )
+    from python_async_sample_spark.operators.sketches import portable_hash_py
+
+    emb = load_table(spark, sf_dir, "embeddings").limit(100)
+    n_planes, n_tables = 4, 2
+    got = {}
+    for r in portable_hyperplane_buckets(
+        emb, "vec_id", "embedding", n_planes=n_planes, dim=64, n_tables=n_tables
+    ).collect():
+        got.setdefault(r["vec_id"], []).append(r["bucket"])
+    single = {
+        r["vec_id"]: r["bucket"]
+        for r in portable_hyperplane_buckets(
+            emb, "vec_id", "embedding", n_planes=n_planes, dim=64
+        ).collect()
+    }
+    planes = [
+        [portable_hash_py(j * 64 + d, 0) / 2**32 * 2 - 1 for d in range(64)]
+        for j in range(n_tables * n_planes)
+    ]
+    rows = emb.select("vec_id", "embedding").collect()
+    assert len(got) == len(rows) == len(single)
+    for r in rows:
+        v = [float(x) for x in r["embedding"]]
+        want = [
+            t * 2**n_planes
+            + sum(
+                (1 << i)
+                for i in range(n_planes)
+                if sum(p * x for p, x in zip(planes[t * n_planes + i], v)) >= 0
+            )
+            for t in range(n_tables)
+        ]
+        assert sorted(got[r["vec_id"]]) == want, r["vec_id"]
+        assert single[r["vec_id"]] == want[0], r["vec_id"]
+
+
+def test_broadcast_topk_faces_are_exact(spark, sf_dir):
+    """Both faces of the one broadcast top-k kernel — cosine
+    (brute_force_topk) and squared L2 (pq.brute_force_topk_l2) — must equal
+    a local numpy exact top-k on a 7-partition corpus: self excluded, ties
+    broken by neighbor_id, exactly k rows per query. The reference uses
+    each face's own arithmetic (unit-vector GEMM; the clamped expanded
+    x2 - 2xq + q2 form) over the whole corpus at once."""
+    import numpy as np
+
+    from python_async_sample_spark.operators.pq import brute_force_topk_l2
+
+    k = 7
+    emb = load_table(spark, sf_dir, "embeddings").repartition(7)
+    queries = emb.where(F.col("vec_id") % 50 == 0)
+    rows = emb.select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    ).collect()
+    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
+    x = np.vstack([r["v"] for r in rows])
+    qi = np.where(ids % 50 == 0)[0]
+    xn = x / np.linalg.norm(x, axis=1, keepdims=True)
+    cos = xn @ xn[qi].T
+    sq = (x * x).sum(axis=1)
+    d2 = np.maximum(sq[:, None] - 2.0 * (x @ x[qi].T) + sq[qi][None, :], 0.0)
+
+    def want(key):  # lower key = better
+        out = {}
+        for j, q in enumerate(qi):
+            order = [i for i in np.lexsort((ids, key[:, j])) if i != q][:k]
+            for rank, i in enumerate(order, start=1):
+                out[(int(ids[q]), rank)] = int(ids[i])
+        return out
+
+    for df, key, col in (
+        (brute_force_topk(emb, queries, k=k), -cos, "cosine"),
+        (brute_force_topk_l2(emb, queries, k=k), d2, "d2"),
+    ):
+        got = df.collect()
+        assert len(got) == k * len(qi), col
+        assert {(r["query_id"], r["rank"]): r["neighbor_id"] for r in got} == want(key), col
+        assert all(r["query_id"] != r["neighbor_id"] for r in got), col
 
 
 def test_cosine_pairs_requires_blocking_and_plans_equi_join(spark):
