@@ -30,10 +30,24 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-FIT_COLS = ("shift_x", "shift_y", "theta_urad")
+
+def rot_x(x: Column, dy: Column, shift_x: Column, tan_theta: Column) -> Column:
+    """Affine-corrected x: ``x + sx − dy·tanθ`` (R/tlcd_nikonrot.R:241)."""
+    return x + shift_x - dy * tan_theta
+
+
+def rot_y(y: Column, dx: Column, shift_y: Column, tan_theta: Column) -> Column:
+    """Affine-corrected y: ``y + sy + dx·tanθ`` (R/tlcd_nikonrot.R:242)."""
+    return y + shift_y + dx * tan_theta
+
+
+def theta_urad(tan_theta: Column) -> Column:
+    """Rotation in µrad from its tangent: ``atan(t)·1e6`` — the unit the
+    reference's optimizer fits (R/basic_fun.R:29-30)."""
+    return F.atan(tan_theta) * 1e6
 
 
 def fit_rot(df: DataFrame, group_cols: list[str], x="x", y="y", dx="dx", dy="dy") -> DataFrame:
@@ -56,7 +70,7 @@ def fit_rot(df: DataFrame, group_cols: list[str], x="x", y="y", dx="dx", dy="dy"
         *group_cols,
         (t * F.col("_mdy") - F.col("_mx")).alias("shift_x"),
         (-F.col("_my") - t * F.col("_mdx")).alias("shift_y"),
-        (F.atan(t) * 1e6).alias("theta_urad"),
+        theta_urad(t).alias("theta_urad"),
         t.alias("tan_theta"),
         "n_sites",
     )
@@ -127,8 +141,6 @@ def apply_rot(
     """Apply the per-group affine correction to every site row
     (``R/tlcd_nikonrot.R:241-242``). ``fits`` is broadcast — one row per
     glass, always tiny relative to the site rows."""
-    from python_async_sample_spark.functions.scalars import rot_x, rot_y
-
     joined = df.join(F.broadcast(fits.select(*group_cols, "shift_x", "shift_y", "tan_theta")), group_cols)
     return joined.withColumn(
         "x_rot", rot_x(F.col(x), F.col(dy), F.col("shift_x"), F.col("tan_theta"))
@@ -193,42 +205,3 @@ def label_positions(
         .drop("x_id")
     )
 
-
-def label_positions_pandas(
-    df: DataFrame, group_cols: list[str], x="x", y="y", marks: int = MARKS_PER_GROUP
-) -> DataFrame:
-    """Gap-split 1-D clustering variant (applyInPandas): cut the sorted
-    z-scored x at the k−1 largest gaps (k = n/marks) — identical groups to
-    Ward linkage for separated 1-D clusters, deterministic, and usable when
-    x has jitter so exact-equality grouping (dense_rank) would over-split.
-
-    Groups whose size is not a multiple of ``marks`` are rejected upstream
-    (R/basic_fun.R:87-91) — see operators.validate.
-    """
-    schema_fields = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-    out_schema = f"{schema_fields}, item_id bigint"
-
-    def label(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        k = n // marks
-        xs = pdf[x].to_numpy(float)
-        sd = xs.std(ddof=1)
-        z = (xs - xs.mean()) / sd if sd > 0 else np.zeros_like(xs)
-        order = np.argsort(z, kind="stable")
-        gaps = np.diff(z[order])
-        # cluster boundaries at the k−1 largest gaps
-        cut_idx = np.sort(np.argsort(gaps, kind="stable")[::-1][: max(k - 1, 0)])
-        group_of_sorted = np.zeros(n, dtype=int)
-        for b in cut_idx:
-            group_of_sorted[b + 1 :] += 1
-        group = np.empty(n, dtype=int)
-        group[order] = group_of_sorted
-        out = pdf.copy()
-        out["_grp"] = group
-        out["item_id"] = (
-            out["_grp"] * marks
-            + out.groupby("_grp")[y].rank(method="first").astype(int)
-        ).astype("int64")
-        return out.drop(columns=["_grp"])
-
-    return df.groupBy(*group_cols).applyInPandas(label, schema=out_schema)

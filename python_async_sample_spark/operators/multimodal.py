@@ -24,17 +24,6 @@ from dataclasses import dataclass
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-MEDIA_META = T.StructType(
-    [
-        T.StructField("media_type", T.StringType()),  # image/audio/video
-        T.StructField("format", T.StringType()),  # png/wav/mp4/...
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("duration_ms", T.LongType()),
-    ]
-)
 
 
 def attach_media(

@@ -10,9 +10,6 @@ side's hot keys across R salt buckets, so a hot key's rows land on R tasks
 instead of one. Correctness is unchanged for inner/left joins on equi-keys;
 the cost is an R× replication of the small side — use only when the small
 side is broadcast-too-big but replication-R-affordable.
-
-``top_keys`` is the companion probe: find the keys worth salting from a
-bounded sample instead of a full-table count.
 """
 
 from __future__ import annotations
@@ -27,18 +24,6 @@ def content_salt(cols: list[str], salt: int) -> F.Column:
     """Salt bucket in [0, salt) as a pure function of row content — identical
     across stage retries, repartitions and input orderings."""
     return F.pmod(F.xxhash64(*cols), F.lit(salt)).cast("int")
-
-
-def top_keys(df: DataFrame, keys: list[str], n: int = 20, fraction: float = 0.01, seed: int = 42) -> DataFrame:
-    """Approximate hot-key probe: frequency over a seeded sample (never a
-    full-table groupBy just to plan a join)."""
-    return (
-        df.sample(fraction=fraction, seed=seed)
-        .groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("approx_rows"))
-        .orderBy(F.desc("approx_rows"))
-        .limit(n)
-    )
 
 
 def salted_join(

@@ -70,33 +70,6 @@ DIALECT_TS_LITERALS: dict[str, Callable[[datetime], str]] = {
 }
 
 
-def pg_insert_values_sql(table: str, n_rows: int) -> str:
-    """The reference's psycopg2 multi-row INSERT shape
-    (``dbs/nikon.py:160-167``): one ``%s`` placeholder PER ROW TUPLE,
-    joined with commas — psycopg2 adapts each Python tuple to a composite
-    value client-side.  Generated here (and byte-pinned in tests) so the
-    Spark-side sink speaks the same wire dialect when pointed at a real
-    PostgreSQL; in-sandbox the live path is Derby via ``df.write.jdbc``,
-    which batches without literal SQL."""
-    if n_rows < 1:
-        raise ValueError("n_rows must be >= 1")
-    return f"INSERT INTO {table} VALUES ({','.join(['%s'] * n_rows)})"
-
-
-def pg_delete_window_named_sql(table: str, like_col: str, ts_col: str) -> str:
-    """The reference's parameterized PG idempotency delete
-    (``dbs/nikon.py:117-136``): quoted identifiers, a LIKE tool filter,
-    the half-open ``(lo, hi]`` window, and psycopg2 NAMED placeholders —
-    placeholder names kept verbatim (``tlcd`` / ``psql_lastendtime`` /
-    ``ora_lastendtime``) because the wire string is the contract being
-    pinned."""
-    return (
-        f'DELETE FROM "{table}" WHERE "{like_col}" LIKE %(tlcd)s '
-        f'AND "{ts_col}" > %(psql_lastendtime)s '
-        f'AND "{ts_col}" <= %(ora_lastendtime)s'
-    )
-
-
 def interval_predicates(
     ts_col: str,
     lo: datetime,
@@ -147,17 +120,6 @@ def read_jdbc_interval(
         predicates=interval_predicates(ts_col, lo, hi, num_partitions, ts_literal),
         properties=properties or {},
     )
-
-
-def read_jdbc_table(
-    spark: SparkSession,
-    url: str,
-    table: str,
-    properties: dict[str, str] | None = None,
-) -> DataFrame:
-    """Whole-table scan for dimension/config tables (J2 design values,
-    config tables) — small enough to read unpartitioned and broadcast."""
-    return spark.read.jdbc(url=url, table=table, properties=properties or {})
 
 
 def write_jdbc_append(

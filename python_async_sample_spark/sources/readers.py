@@ -9,7 +9,6 @@ SQL strings to get the same effect.
 
 from __future__ import annotations
 
-import os
 from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
@@ -30,8 +29,6 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def pin_reader_conf(spark: SparkSession) -> None:

@@ -19,9 +19,9 @@ atomic epoch commit to a manifest-versioned table
 (``versioned.commit_stream_epoch``), identified by (epoch id, batch
 fingerprint) in the manifest's ledger, so a replayed epoch is skipped even
 from a fresh checkpoint. Per-batch outputs (the incremental MV's and PIT
-enrichment's partial aggregates, CMS cells, transformWithState emissions,
-the CDC capture) are appended this way, and the reader folds them. Three
-sinks keep their own protocol on purpose: the complete-mode overwrite of
+enrichment's partial aggregates, CMS cells, the CDC capture) are appended
+this way, and the reader folds them. Three sinks keep their own protocol
+on purpose: the complete-mode overwrite of
 :func:`run_available_now` (each batch replaces the whole result), Spark's
 built-in append-mode parquet file sink (its own ``_spark_metadata`` log),
 and JDBC (:func:`stream_events_to_jdbc_exactly_once`, a server-side

@@ -14,11 +14,6 @@ TEST_SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    # expose the vendored protobuf runtime (if any) BEFORE the JVM launches,
-    # so python workers inherit the shim path — transformWithState needs it
-    from python_async_sample_spark.streaming.stateful import ensure_protobuf
-
-    ensure_protobuf()
     s = get_spark(app_name="pytest", cpus=8, shuffle_partitions=8)
     yield s
 

@@ -56,7 +56,6 @@ def test_jdbc_live_roundtrip_derby(spark, sf_dir):
 
     from python_async_sample_spark.sources.jdbc import (
         read_jdbc_interval,
-        read_jdbc_table,
         ts_literal_func,
         write_jdbc_append,
     )
@@ -70,7 +69,7 @@ def test_jdbc_live_roundtrip_derby(spark, sf_dir):
     n_src = events.count()
 
     write_jdbc_append(events, url, "events_t", properties=props)
-    assert read_jdbc_table(spark, url, "events_t", properties=props).count() == n_src
+    assert spark.read.jdbc(url, "events_t", properties=props).count() == n_src
 
     lo, hi = datetime(2024, 1, 10), datetime(2024, 1, 20)
     got = read_jdbc_interval(
@@ -95,7 +94,7 @@ def test_jdbc_live_roundtrip_derby(spark, sf_dir):
         assert n_deleted == expected.count()
         write_jdbc_append(expected, url, "events_t", properties=props)
         assert (
-            read_jdbc_table(spark, url, "events_t", properties=props).count() == n_src
+            spark.read.jdbc(url, "events_t", properties=props).count() == n_src
         )
     finally:
         conn.close()
@@ -115,7 +114,6 @@ def test_jdbc_overwrite_window_atomic_derby(spark, sf_dir):
 
     from python_async_sample_spark.sources.jdbc import (
         overwrite_window_jdbc,
-        read_jdbc_table,
         ts_literal_func,
         write_jdbc_append,
     )
@@ -144,7 +142,7 @@ def test_jdbc_overwrite_window_atomic_derby(spark, sf_dir):
         spark, window, url, "events_t", '"ts"', lo, hi,
         properties=props, ts_literal=ts_literal_func,
     ) == n_win
-    got = read_jdbc_table(spark, url, "events_t", properties=props)
+    got = spark.read.jdbc(url, "events_t", properties=props)
     assert got.count() == events.count()
     assert got.agg(F.sum("value")).first()[0] == pytest.approx(
         events.agg(F.sum("value")).first()[0]
@@ -158,7 +156,7 @@ def test_jdbc_overwrite_window_atomic_derby(spark, sf_dir):
             spark, bad, url, "events_t", '"ts"', lo, hi,
             properties=props, ts_literal=ts_literal_func,
         )
-    after = read_jdbc_table(spark, url, "events_t", properties=props)
+    after = spark.read.jdbc(url, "events_t", properties=props)
     assert after.count() == events.count()  # window still present, not half-applied
 
 
@@ -180,7 +178,6 @@ def test_jdbc_overwrite_window_concurrent_writers_derby(spark, sf_dir):
 
     from python_async_sample_spark.sources.jdbc import (
         overwrite_window_jdbc,
-        read_jdbc_table,
         ts_literal_func,
         write_jdbc_append,
     )
@@ -238,7 +235,7 @@ def test_jdbc_overwrite_window_concurrent_writers_derby(spark, sf_dir):
                     ok[name] = False
         assert any(ok.values()), "both writers aborted — no interleaving exercised"
 
-        got = read_jdbc_table(spark, url, "events_t", properties=props)
+        got = spark.read.jdbc(url, "events_t", properties=props)
         rows = got.select("event_id", "ts", "writer").collect()
         assert len({r.event_id for r in rows}) == len(rows), "duplicate rows"
         by_region = {"out": [], "a_only": [], "overlap": [], "b_only": []}
@@ -362,33 +359,6 @@ def test_oracle_interval_scan_matches_reference_wire_string():
     ]
 
 
-def test_pg_insert_values_matches_reference_wire_string():
-    """pg_insert_values_sql reproduces dbs/nikon.py:160-167's
-    save_edcdata string: ','.join(['%s'] * len(edcdata)) into
-    INSERT INTO {toolid}_rawdata VALUES (...)."""
-    from python_async_sample_spark.sources.jdbc import pg_insert_values_sql
-
-    assert pg_insert_values_sql("tlcd0801_rawdata", 3) == (
-        "INSERT INTO tlcd0801_rawdata VALUES (%s,%s,%s)"
-    )
-    assert pg_insert_values_sql("t", 1) == "INSERT INTO t VALUES (%s)"
-    with pytest.raises(ValueError):
-        pg_insert_values_sql("t", 0)
-
-
-def test_pg_delete_named_placeholders_match_reference_wire_string():
-    """pg_delete_window_named_sql reproduces dbs/nikon.py:117-136's
-    delete_tlcd: quoted identifiers, LIKE filter, half-open window,
-    psycopg2 named placeholders with the reference's own names."""
-    from python_async_sample_spark.sources.jdbc import pg_delete_window_named_sql
-
-    assert pg_delete_window_named_sql("index_glassout", "toolid", "endtime") == (
-        'DELETE FROM "index_glassout" WHERE "toolid" LIKE %(tlcd)s '
-        'AND "endtime" > %(psql_lastendtime)s '
-        'AND "endtime" <= %(ora_lastendtime)s'
-    )
-
-
 def test_stream_to_jdbc_exactly_once_derby(spark, sf_dir, tmp_path):
     """Streaming → JDBC exactly-once, live on Derby: the drain lands every
     source row exactly once; a crash-style REPLAY of an epoch (same epoch
@@ -398,10 +368,7 @@ def test_stream_to_jdbc_exactly_once_derby(spark, sf_dir, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from python_async_sample_spark.sources.jdbc import (
-        overwrite_epoch_jdbc,
-        read_jdbc_table,
-    )
+    from python_async_sample_spark.sources.jdbc import overwrite_epoch_jdbc
     from python_async_sample_spark.sources.readers import load_table
     from python_async_sample_spark.streaming.jobs import (
         stream_events_to_jdbc_exactly_once,
@@ -417,7 +384,7 @@ def test_stream_to_jdbc_exactly_once_derby(spark, sf_dir, tmp_path):
         checkpoint=str(tmp_path / "ckpt"), properties=props,
     )
     assert n_epochs >= 1
-    got = read_jdbc_table(spark, url, "events_stream_t", properties=props)
+    got = spark.read.jdbc(url, "events_stream_t", properties=props)
     assert got.count() == n_src
     assert got.select("__epoch").distinct().count() == n_epochs
 
@@ -432,7 +399,7 @@ def test_stream_to_jdbc_exactly_once_derby(spark, sf_dir, tmp_path):
     clean = e0.withColumn("__epoch", F.lit(0).cast("bigint"))
     assert overwrite_epoch_jdbc(
         spark, clean, url, "events_stream_t", "__epoch", 0, props) == n_e0
-    after = read_jdbc_table(spark, url, "events_stream_t", properties=props)
+    after = spark.read.jdbc(url, "events_stream_t", properties=props)
     assert after.count() == n_src
     assert after.agg(F.sum("value")).first()[0] == pytest.approx(
         events.agg(F.sum("value")).first()[0]
@@ -442,7 +409,7 @@ def test_stream_to_jdbc_exactly_once_derby(spark, sf_dir, tmp_path):
     bad = clean.withColumnRenamed("value", "wrong_col")
     with pytest.raises(Exception):
         overwrite_epoch_jdbc(spark, bad, url, "events_stream_t", "__epoch", 0, props)
-    assert read_jdbc_table(spark, url, "events_stream_t", properties=props).count() == n_src
+    assert spark.read.jdbc(url, "events_stream_t", properties=props).count() == n_src
 
     # the epoch column is the sink's contract: refuse un-stamped batches
     with pytest.raises(ValueError, match="stamped"):

@@ -14,7 +14,6 @@ from python_async_sample_spark.kernels.rot import (
     fit_rot_pandas,
     grid_stats,
     label_positions,
-    label_positions_pandas,
     rebuild_grid,
 )
 from python_async_sample_spark.operators.validate import (
@@ -79,7 +78,7 @@ def test_grid_stats_and_rebuild(spark):
     assert (grid[-1]["x"], grid[-1]["y"]) == (20.0, 5.0)
 
 
-def test_label_positions_window_and_pandas_agree(spark):
+def test_label_positions_numbers_by_x_cluster_then_y(spark):
     # 2 x-clusters × 6 marks with jitter-free x; y unique per (glass, x)
     rows = [
         ("g", 0.0 + 100.0 * c, float(m * 3 + c), c * 6 + m)  # expected item_id order
@@ -89,9 +88,11 @@ def test_label_positions_window_and_pandas_agree(spark):
     df = spark.createDataFrame([(g, x, y) for g, x, y, _ in rows], ["glass", "x", "y"])
     expected = {(r[1], r[2]): r[3] + 1 for r in rows}
 
-    for fn in (label_positions, label_positions_pandas):
-        got = {(r["x"], r["y"]): r["item_id"] for r in fn(df, ["glass"]).collect()}
-        assert got == expected, fn.__name__
+    got = {
+        (r["x"], r["y"]): r["item_id"]
+        for r in label_positions(df, ["glass"]).collect()
+    }
+    assert got == expected
 
 
 def test_validate_split_flags(spark):

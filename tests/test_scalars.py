@@ -1,38 +1,18 @@
-"""Named scalar helpers (§2.7) — semantics pinned to the reference."""
+"""The ROT affine-correction scalars (§2.7) — semantics pinned to the reference."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from python_async_sample_spark.functions import scalars as S
+from python_async_sample_spark.kernels.rot import rot_x, rot_y, theta_urad
 
 
 def test_scalar_surface(spark):
-    df = spark.createDataFrame(
-        [("tlcda01_rawdata", "TFT-X1234", "2024-01-02 03:04:05.678", "TRUE")],
-        "relname string, param_collection string, ts_str string, enabled string",
-    )
-    row = df.select(
-        S.tool_key("relname").alias("tool"),
-        S.product_from_param_collection("param_collection").alias("product"),
-        S.to_ts_ms("ts_str").alias("ts"),
-        S.enabled_flag("enabled").alias("on"),
-    ).first()
-    assert row.tool == "TLCDA01_"
-    assert row.product == "TLX1234"
-    assert row.ts.microsecond == 678000
-    assert row.on is True
-
-    r2 = df.select(S.fmt_ts_s(S.to_ts_ms("ts_str")).alias("s")).first()
-    assert r2.s == "2024-01-02 03:04:05"
-
     r3 = spark.range(1).select(
-        S.rot_x(F.lit(10.0), F.lit(2.0), F.lit(-1.0), F.lit(0.5)).alias("x"),
-        S.rot_y(F.lit(10.0), F.lit(2.0), F.lit(-1.0), F.lit(0.5)).alias("y"),
-        S.zscore(F.lit(12.0), F.lit(10.0), F.lit(2.0)).alias("z"),
-        (F.round(S.theta_urad(F.lit(1e-6)), 3)).alias("th"),
+        rot_x(F.lit(10.0), F.lit(2.0), F.lit(-1.0), F.lit(0.5)).alias("x"),
+        rot_y(F.lit(10.0), F.lit(2.0), F.lit(-1.0), F.lit(0.5)).alias("y"),
+        (F.round(theta_urad(F.lit(1e-6)), 3)).alias("th"),
     ).first()
     assert r3.x == 10.0 - 1.0 - 2.0 * 0.5
     assert r3.y == 10.0 - 1.0 + 2.0 * 0.5
-    assert r3.z == 1.0
     assert r3.th == 1.0

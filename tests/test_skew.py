@@ -9,7 +9,6 @@ from python_async_sample_spark.operators.skew import (
     SALT_COL,
     content_salt,
     salted_join,
-    top_keys,
 )
 
 
@@ -56,8 +55,3 @@ def test_salt_is_repartition_invariant(spark):
     assert salted(big.repartition(17, "v")) == base
     assert salted(big.orderBy(F.desc("v"))) == base
 
-
-def test_top_keys_probe(spark):
-    probe = top_keys(_skewed(spark), ["k"], n=1, fraction=0.2)
-    rows = probe.collect()
-    assert rows and rows[0].k == "hot"

@@ -102,40 +102,3 @@ def test_timeout_clamps_to_watermark_when_natural_timeout_is_stale():
     list(fn((7,), iter([_batch([0, 1_000_000])]), st))
     assert st.timeout_ms == wm_ms + 1
 
-
-def test_tws_profiles_match_batch_oracle_or_skip(spark, sf_dir):
-    """The transformWithStateInPandas face (q75's semantics on the Spark-4
-    successor API) — runs only where the protobuf runtime exists; the
-    operator refuses loudly otherwise (tested either way)."""
-    import tempfile
-
-    import pytest
-
-    from python_async_sample_spark.streaming.stateful import (
-        stream_profiles_tws_to_parquet,
-    )
-
-    from python_async_sample_spark.streaming.stateful import ensure_protobuf
-
-    if not ensure_protobuf():
-        with pytest.raises(ImportError, match="protobuf"):
-            stream_profiles_tws_to_parquet(spark, sf_dir, tempfile.mkdtemp())
-        pytest.skip("google.protobuf not available in this environment")
-
-    from pyspark.sql import functions as F
-
-    from python_async_sample_spark.sources.readers import load_table
-
-    out = stream_profiles_tws_to_parquet(spark, sf_dir, tempfile.mkdtemp())
-    got = {r["user_id"]: (r["n_events"], r["n_sessions"], r["max_gap_us"]) for r in out.collect()}
-    ev = load_table(spark, sf_dir, "events")
-    from python_async_sample_spark.operators.sessionize import session_stats
-
-    sess = (
-        session_stats(ev, gap_minutes=30)
-        .groupBy("user_id")
-        .agg(F.sum("n_events").alias("n"), F.count(F.lit(1)).alias("s"))
-    )
-    want = {r["user_id"]: (r["n"], r["s"]) for r in sess.collect()}
-    for u, (n, s, _g) in got.items():
-        assert (n, s) == want[u]
