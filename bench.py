@@ -13,8 +13,10 @@ carries its own evidence instead of requiring a hand audit:
 
 * a cheap CONTROL (q01, ~1 s) is re-timed every ~20 queries; the control
   series is emitted as ``controls`` so uniform box inflation is visible;
-* any query whose best time exceeds 2x its committed BENCH_SELF.json entry
-  (and 1 s absolute) gets a THIRD trial — the ONCE set included, since
+* floors come from BENCH_SELF_<n>c.json when one was cut at this
+  session's core count n, else from BENCH_SELF.json;
+* any query whose best time exceeds 2x its committed floor (and 1 s
+  absolute) gets a THIRD trial — the ONCE set included, since
   every side-effecting query mkdtemps a fresh fixture per call, so a
   re-run is a true repeat — and, if still over, a co-measured fresh
   control; the pair lands in ``flagged`` as {t, ref, ctl, ctl_ref};
@@ -38,7 +40,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from python_async_sample_spark.plans.registry import load_all
-from python_async_sample_spark.session import get_spark
+from python_async_sample_spark.session import DEFAULT_CPUS, get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 REPO = os.path.dirname(os.path.abspath(__file__))
@@ -54,18 +56,20 @@ CTL_INFLATED = 1.3  # co-measured control > this x its entry => stall signature
 
 
 def _committed_reference() -> dict[str, float]:
-    """Per-query floors from the committed BENCH_SELF.json (empty if absent
-    or recorded at a different sf — ratios against a different scale are
-    meaningless)."""
-    try:
-        with open(os.path.join(REPO, "BENCH_SELF.json")) as f:
-            rec = json.load(f)
-    except (OSError, ValueError):
-        return {}
+    """Per-query floors from the committed record cut at this session's
+    core count (BENCH_SELF_<n>c.json), else from BENCH_SELF.json; a record
+    is skipped if absent or recorded at a different sf (ratios against a
+    different scale are meaningless), and no match gives no floors."""
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    if str(rec.get("sf")) != sf:
-        return {}
-    return {n: float(t) for n, t in rec.get("queries", {}).items() if t}
+    for name in (f"BENCH_SELF_{DEFAULT_CPUS}c.json", "BENCH_SELF.json"):
+        try:
+            with open(os.path.join(REPO, name)) as f:
+                rec = json.load(f)
+        except (OSError, ValueError):
+            continue
+        if str(rec.get("sf")) == sf:
+            return {n: float(t) for n, t in rec.get("queries", {}).items() if t}
+    return {}
 
 
 def main() -> None:

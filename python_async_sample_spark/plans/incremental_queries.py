@@ -27,6 +27,38 @@ from python_async_sample_spark.sources.readers import load_table
 WM0 = datetime.fromisoformat("2024-01-24 00:00:00")
 
 
+def _cdc_batch(orders: DataFrame, inserts: bool = True) -> DataFrame:
+    """The versioned-orders queries' CDC batch: keys ≡ 0 mod 97 update to
+    status 'M' with price + 1000.00 (DECIMAL(18,2), so sums stay exact),
+    and with ``inserts`` fresh keys ≡ 0 mod 397, offset past the key
+    space, insert with status 'N' and price 42.42."""
+    upd = (
+        orders.where(F.col("o_orderkey") % 97 == 0)
+        .withColumn("o_orderstatus", F.lit("M"))
+        .withColumn(
+            "o_totalprice",
+            (F.col("o_totalprice").cast("decimal(18,2)") + F.lit(1000.00)).cast("double"),
+        )
+    )
+    if not inserts:
+        return upd
+    return upd.unionByName(
+        orders.where(F.col("o_orderkey") % 397 == 0)
+        .withColumn("o_orderkey", F.col("o_orderkey") + F.lit(10_000_000))
+        .withColumn("o_orderstatus", F.lit("N"))
+        .withColumn("o_totalprice", F.lit(42.42))
+    )
+
+
+def _status_rollup(df: DataFrame, version: int, n_col: str = "n_rows") -> DataFrame:
+    """One snapshot's per-``o_orderstatus`` row count (named ``n_col``)
+    and DECIMAL-exact price total, tagged with ``version``."""
+    return df.groupBy("o_orderstatus").agg(
+        F.count(F.lit(1)).cast("bigint").alias(n_col),
+        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("total_price"),
+    ).select(F.lit(version).cast("int").alias("version"), "o_orderstatus", n_col, "total_price")
+
+
 @query(
     "q17_incremental_catchup",
     oracle="""
@@ -117,20 +149,7 @@ def q177_merge_into(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = f"{tempfile.mkdtemp(prefix='spark_graft_merge_')}/orders"
     orders = load_table(spark, sf_dir, "orders")
     create_table(spark, root, orders, n_files=8, layout_col="o_orderkey")
-    updates = (
-        orders.where(F.col("o_orderkey") % 97 == 0)
-        .withColumn("o_orderstatus", F.lit("M"))
-        .withColumn(
-            "o_totalprice",
-            (F.col("o_totalprice").cast("decimal(18,2)") + F.lit(1000.00)).cast("double"),
-        )
-        .unionByName(
-            orders.where(F.col("o_orderkey") % 397 == 0)
-            .withColumn("o_orderkey", F.col("o_orderkey") + F.lit(10_000_000))
-            .withColumn("o_orderstatus", F.lit("N"))
-            .withColumn("o_totalprice", F.lit(42.42))
-        )
-    )
+    updates = _cdc_batch(orders)
     merge_into_versioned(spark, root, updates, "o_orderkey")
     merge_into_versioned(spark, root, updates, "o_orderkey")  # re-delivery
 
@@ -206,39 +225,13 @@ def q184_versioned_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # range-ordered base so the manifest's min/max pruning has teeth
     create_table(spark, root, orders.orderBy("o_orderkey"), n_files=8)
 
-    updates = (
-        orders.where(F.col("o_orderkey") % 97 == 0)
-        .withColumn("o_orderstatus", F.lit("M"))
-        .withColumn(
-            "o_totalprice",
-            (F.col("o_totalprice").cast("decimal(18,2)") + F.lit(1000.00)).cast("double"),
-        )
-        .unionByName(
-            orders.where(F.col("o_orderkey") % 397 == 0)
-            .withColumn("o_orderkey", F.col("o_orderkey") + F.lit(10_000_000))
-            .withColumn("o_orderstatus", F.lit("N"))
-            .withColumn("o_totalprice", F.lit(42.42))
-        )
-    )
+    updates = _cdc_batch(orders)
     merge_into_versioned(spark, root, updates, "o_orderkey")
     merge_into_versioned(spark, root, updates, "o_orderkey")  # re-delivery
 
-    def rollup(df: DataFrame, version: int) -> DataFrame:
-        return df.groupBy("o_orderstatus").agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total_price"),
-        ).select(
-            F.lit(version).cast("int").alias("version"),
-            "o_orderstatus",
-            "n_orders",
-            "total_price",
-        )
-
     return (
-        rollup(read_version(spark, root, 0), 0)
-        .unionByName(rollup(read_version(spark, root), 2))
+        _status_rollup(read_version(spark, root, 0), 0, "n_orders")
+        .unionByName(_status_rollup(read_version(spark, root), 2, "n_orders"))
         .orderBy("version", "o_orderstatus")
     )
 
@@ -381,20 +374,7 @@ def q190_versioned_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = f"{tmp}/orders_cdc"
     orders = load_table(spark, sf_dir, "orders")
     create_table(spark, root, orders.orderBy("o_orderkey"), n_files=8)
-    updates = (
-        orders.where(F.col("o_orderkey") % 97 == 0)
-        .withColumn("o_orderstatus", F.lit("M"))
-        .withColumn(
-            "o_totalprice",
-            (F.col("o_totalprice").cast("decimal(18,2)") + F.lit(1000.00)).cast("double"),
-        )
-        .unionByName(
-            orders.where(F.col("o_orderkey") % 397 == 0)
-            .withColumn("o_orderkey", F.col("o_orderkey") + F.lit(10_000_000))
-            .withColumn("o_orderstatus", F.lit("N"))
-            .withColumn("o_totalprice", F.lit(42.42))
-        )
-    )
+    updates = _cdc_batch(orders)
     merge_into_versioned(spark, root, updates, "o_orderkey")
     return (
         changes_between(spark, root, 0, 1)
@@ -484,20 +464,7 @@ def q193_cdc_maintained_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     create_table(spark, root, orders.orderBy("o_orderkey"), n_files=8)
 
-    updates1 = (
-        orders.where(F.col("o_orderkey") % 97 == 0)
-        .withColumn("o_orderstatus", F.lit("M"))
-        .withColumn(
-            "o_totalprice",
-            (F.col("o_totalprice").cast("decimal(18,2)") + F.lit(1000.00)).cast("double"),
-        )
-        .unionByName(
-            orders.where(F.col("o_orderkey") % 397 == 0)
-            .withColumn("o_orderkey", F.col("o_orderkey") + F.lit(10_000_000))
-            .withColumn("o_orderstatus", F.lit("N"))
-            .withColumn("o_totalprice", F.lit(42.42))
-        )
-    )
+    updates1 = _cdc_batch(orders)
     merge_into_versioned(spark, root, updates1, "o_orderkey")
     updates2 = (
         read_version(spark, root)
@@ -613,14 +580,7 @@ def q195_purged_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = f"{tmp}/orders_purge"
     orders = load_table(spark, sf_dir, "orders")
     create_table(spark, root, orders.orderBy("o_orderkey"), n_files=8)
-    updates = (
-        orders.where(F.col("o_orderkey") % 97 == 0)
-        .withColumn("o_orderstatus", F.lit("M"))
-        .withColumn(
-            "o_totalprice",
-            (F.col("o_totalprice").cast("decimal(18,2)") + F.lit(1000.00)).cast("double"),
-        )
-    )
+    updates = _cdc_batch(orders, inserts=False)
     merge_into_versioned(spark, root, updates, "o_orderkey")
     victims = [
         r[0]
@@ -630,20 +590,9 @@ def q195_purged_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     purge_keys(spark, root, "o_orderkey", victims)
 
-    def rollup(df: DataFrame, version: int) -> DataFrame:
-        return df.groupBy("o_orderstatus").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total_price"),
-        ).select(
-            F.lit(version).cast("int").alias("version"),
-            "o_orderstatus", "n_rows", "total_price",
-        )
-
     return (
-        rollup(read_version(spark, root, 0), 0)
-        .unionByName(rollup(read_version(spark, root, 1), 1))
+        _status_rollup(read_version(spark, root, 0), 0)
+        .unionByName(_status_rollup(read_version(spark, root, 1), 1))
         .orderBy("version", "o_orderstatus")
     )
 
@@ -713,32 +662,14 @@ def q216_purged_relation_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = f"{tmp}/orders_purge_rel"
     orders = load_table(spark, sf_dir, "orders")
     create_table(spark, root, orders.orderBy("o_orderkey"), n_files=8)
-    updates = (
-        orders.where(F.col("o_orderkey") % 97 == 0)
-        .withColumn("o_orderstatus", F.lit("M"))
-        .withColumn(
-            "o_totalprice",
-            (F.col("o_totalprice").cast("decimal(18,2)") + F.lit(1000.00)).cast("double"),
-        )
-    )
+    updates = _cdc_batch(orders, inserts=False)
     merge_into_versioned(spark, root, updates, "o_orderkey")
     victims = orders.where(F.col("o_custkey") % 89 == 0).select("o_orderkey")
     res = purge_relation(spark, root, "o_orderkey", victims)
 
-    def rollup(df: DataFrame, version: int) -> DataFrame:
-        return df.groupBy("o_orderstatus").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total_price"),
-        ).select(
-            F.lit(version).cast("int").alias("version"),
-            "o_orderstatus", "n_rows", "total_price",
-        )
-
     return (
-        rollup(read_version(spark, root, 0), 0)
-        .unionByName(rollup(read_version(spark, root, 1), 1))
+        _status_rollup(read_version(spark, root, 0), 0)
+        .unionByName(_status_rollup(read_version(spark, root, 1), 1))
         .withColumn("victim_keys", F.lit(res["victim_keys"]).cast("bigint"))
         .orderBy("version", "o_orderstatus")
     )
@@ -799,20 +730,9 @@ def q217_relation_delete_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     victims = orders.where(F.col("o_custkey") % 53 == 0).select("o_orderkey")
     res = delete_relation(spark, root, "o_orderkey", victims)
 
-    def rollup(df: DataFrame, version: int) -> DataFrame:
-        return df.groupBy("o_orderstatus").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total_price"),
-        ).select(
-            F.lit(version).cast("int").alias("version"),
-            "o_orderstatus", "n_rows", "total_price",
-        )
-
     return (
-        rollup(read_version(spark, root, 0), 0)
-        .unionByName(rollup(read_version(spark, root, res["version"]), 1))
+        _status_rollup(read_version(spark, root, 0), 0)
+        .unionByName(_status_rollup(read_version(spark, root, res["version"]), 1))
         .withColumn("deleted_rows", F.lit(res["deleted_rows"]).cast("bigint"))
         .orderBy("version", "o_orderstatus")
     )
@@ -2027,23 +1947,10 @@ def q214_restored_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     v2 = restore_version(spark, root, 0)
     assert v2 == 2, f"restore committed version {v2}, expected 2"
 
-    def rollup(df: DataFrame, version: int) -> DataFrame:
-        return df.groupBy("o_orderstatus").agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total_price"),
-        ).select(
-            F.lit(version).cast("int").alias("version"),
-            "o_orderstatus",
-            "n_orders",
-            "total_price",
-        )
-
     return (
-        rollup(read_version(spark, root, 0), 0)
-        .unionByName(rollup(read_version(spark, root, 1), 1))
-        .unionByName(rollup(read_version(spark, root), 2))  # head == restored
+        _status_rollup(read_version(spark, root, 0), 0, "n_orders")
+        .unionByName(_status_rollup(read_version(spark, root, 1), 1, "n_orders"))
+        .unionByName(_status_rollup(read_version(spark, root), 2, "n_orders"))  # head == restored
         .orderBy("version", "o_orderstatus")
     )
 

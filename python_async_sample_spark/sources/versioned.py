@@ -42,8 +42,11 @@ from every snapshot).  Each takes its victims as a Python list of keys or
 as a relation (``delete_keys_versioned`` / ``purge_keys`` name the list
 form) and shares everything but the hit-file finder: one file-range
 source (:func:`_file_ranges`), one victim normaliser
-(:func:`_prepare_victims`), one broadcast anti join for the rewrite, one
-count-plus-checksum purge ledger entry.
+(:func:`_prepare_victims`), one file-rewrite job
+(:func:`_rewrite_without`: one scan of every hit file, one broadcast
+anti join, one write partitioned by source file, so each new file holds
+the rows of exactly one old file), one count-plus-checksum purge ledger
+entry.
 
 Reference tie-in: the reference's watermark table + delete-then-insert
 window (dbs/nikon.py:107-186) hand-rolls "readers see either the old or
@@ -61,6 +64,7 @@ import shutil
 import tempfile
 import time
 import uuid
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -110,10 +114,7 @@ def _stage_files(
     df: DataFrame, root: str, n_files: int, layout_col=None
 ) -> list[str]:
     """Write ``df`` as ``n_files`` immutable data files and return their
-    data-dir-relative names.  Files are moved under ``data/`` with fresh
-    uuid names BEFORE any manifest references them, so a crash here leaves
-    only unreferenced orphans — invisible to every reader, reclaimed by
-    :func:`vacuum`.
+    data-dir-relative names (moved in by :func:`_adopt_staged`).
 
     ``layout_col`` clusters the write: range-partitioned and sorted within
     each file on that column, so the per-file [min, max] stats embedded in
@@ -130,14 +131,56 @@ def _stage_files(
         else df.repartition(max(1, n_files))
     )
     shaped.write.mode("overwrite").parquet(stage)
+    names = _adopt_staged(root, stage)
+    shutil.rmtree(stage, ignore_errors=True)
+    return names
+
+
+def _adopt_staged(root: str, stage_dir: str) -> list[str]:
+    """Move the part files of ``stage_dir`` under ``data/`` with fresh
+    uuid names and return those names.  The files land BEFORE any
+    manifest references them, so a crash here leaves only unreferenced
+    orphans — invisible to every reader, reclaimed by :func:`vacuum`."""
     os.makedirs(f"{root}/{_DATA_DIR}", exist_ok=True)
     names = []
-    for f in sorted(glob.glob(f"{stage}/part-*.parquet")):
+    for f in sorted(glob.glob(f"{stage_dir}/part-*.parquet")):
         name = f"part-{uuid.uuid4().hex}.parquet"
         shutil.move(f, f"{root}/{_DATA_DIR}/{name}")
         names.append(name)
-    shutil.rmtree(stage, ignore_errors=True)
     return names
+
+
+def _rewrite_without(
+    spark: SparkSession,
+    root: str,
+    names: list[str],
+    schema: T.StructType,
+    vic: DataFrame,
+    key_col: str,
+) -> tuple[dict[str, list[str]], dict]:
+    """Rewrite the data files ``names`` without the victim rows, in ONE
+    write job: the one file-rewrite kernel of DELETE and PURGE.
+
+    One scan reads every file with ``schema`` and tags each row with the
+    file it came from (``_metadata.file_name``), :func:`_drop_victims`
+    runs the broadcast anti join, and the survivors are written once,
+    ``partitionBy`` that tag, so each new file holds rows of exactly one
+    old file (a clustered layout keeps its per-file ranges).  Returns
+    ``{old: [new, ...]}`` — an empty list when every row of ``old`` was a
+    victim — and the new files' stats (:func:`_collect_file_stats`)."""
+    stage = f"{root}/.stage-{uuid.uuid4().hex}"
+    src = spark.read.schema(schema).parquet(*[f"{root}/{_DATA_DIR}/{n}" for n in names])
+    tagged = src.select("*", F.col("_metadata.file_name").alias("__src"))
+    _drop_victims(tagged, vic, key_col).write.partitionBy("__src").mode(
+        "overwrite"
+    ).parquet(stage)
+    replacement: dict[str, list[str]] = {n: [] for n in names}
+    for d in glob.glob(f"{stage}/__src=*"):
+        replacement[unquote(os.path.basename(d)[len("__src="):])] = _adopt_staged(root, d)
+    shutil.rmtree(stage, ignore_errors=True)
+    return replacement, _collect_file_stats(
+        root, [n for new in replacement.values() for n in new]
+    )
 
 
 def _collect_file_stats(root: str, names: list[str]) -> dict:
@@ -220,11 +263,10 @@ def _values_relation(spark, values: list):
     A pure-JVM LocalRelation (``VALUES ...``) when every value has an
     exact SQL literal: a createDataFrame over a Python list is a pickled
     RDD in defaultParallelism slices, and every plan that broadcasts it
-    re-runs its build as a Python job, PER REWRITE (purge: 16 rewrites x
-    32 tasks measured at 0.6-2 s each under job concurrency), while a
-    LocalRelation collects and broadcasts on the driver with no job at
-    all (guide §2.4).  Values without a literal form fall back to
-    createDataFrame inference."""
+    (the rewrite's anti join included) re-runs its build as a Python job
+    of defaultParallelism tasks, while a LocalRelation collects and
+    broadcasts on the driver with no job at all.  Values
+    without a literal form fall back to createDataFrame inference."""
     lits = _sql_key_literals(values)
     if lits is None:
         return spark.createDataFrame([(v,) for v in values], ["__v"])
@@ -1347,10 +1389,12 @@ def delete_relation(
       the driver, so driver state is O(files).
 
     Victims are normalised once (:func:`_prepare_victims`: exact key-type
-    cast, NULL/NaN never targets), the affected files are rewritten by one
-    broadcast anti join, and NULL-key rows are never deleted.  Returns
-    ``{"version", "rewritten", "deleted_rows"}``; no hit file means no
-    commit."""
+    cast, NULL/NaN never targets), and NULL-key rows are never deleted.
+    The hit files are read with the head schema and rewritten by one job
+    (:func:`_rewrite_without`); each new file holds rows of one old file,
+    so a ``layout_col``-clustered table keeps its disjoint file ranges.
+    Returns ``{"version", "rewritten", "deleted_rows"}``; no hit file
+    means no commit."""
     root = root.rstrip("/")
     _require_local_path(root, "delete_relation")
     pin_reader_conf(spark)
@@ -1365,16 +1409,11 @@ def delete_relation(
         return {"version": parent, "rewritten": 0, "deleted_rows": 0}
     hit = set(names_hit)
     rows_before = sum(r for n, _, _, r in ranges if n in hit)
-    keep = _drop_victims(
-        spark.read.schema(schema).parquet(*[f"{root}/{_DATA_DIR}/{n}" for n in names_hit]),
-        vic, key_col,
-    )
-    new_names = _stage_files(keep, root, len(names_hit))
-    new_stats = _collect_file_stats(root, new_names)
-    rows_after = sum(new_stats[n]["rows"] for n in new_names)
+    _, new_stats = _rewrite_without(spark, root, names_hit, schema, vic, key_col)
+    rows_after = sum(e["rows"] for e in new_stats.values())
     kept_names = [n for n in manifest["files"] if n not in hit]
     version = _commit(
-        root, kept_names + new_names, manifest["schema"], f"delete:{key_col}", parent,
+        root, kept_names + list(new_stats), manifest["schema"], f"delete:{key_col}", parent,
         stats=new_stats,
     )
     return {
@@ -1687,18 +1726,6 @@ def verify_table(root: str, deep: bool = False) -> dict:
     return {"ok": not problems, "versions": len(versions), "problems": problems}
 
 
-def _newest_key_field(manifests: dict, key_col: str, root: str) -> T.StructField:
-    """The NEWEST schema's field for ``key_col``: reading an older file
-    with an evolved schema null-fills added columns (never the reverse
-    KeyError), and a file rewritten under it stays readable by every
-    manifest."""
-    for m in reversed(list(manifests.values())):
-        sch = T.StructType.fromJson(json.loads(m["schema"]))
-        if key_col in sch.fieldNames():
-            return sch[key_col]
-    raise ValueError(f"column {key_col!r} exists in no version of {root!r}")
-
-
 def purge_relation(
     spark: SparkSession, root: str, key_col: str, victims
 ) -> dict:
@@ -1722,10 +1749,14 @@ def purge_relation(
 
     Mechanics: the union of affected files across every retained manifest
     is found once (files are immutable and uniquely named, so a file
-    shared by many manifests is planned and rewritten ONCE).  Each is
-    rewritten by one broadcast anti join under a fresh immutable name,
-    then every manifest that referenced it is atomically REPLACED
-    (:func:`manifest_log.replace`) with one referencing the new name;
+    shared by many manifests is planned and rewritten ONCE), and all of
+    them are rewritten by ONE job (:func:`_rewrite_without`) under fresh
+    immutable names — a file whose rows were all victims has no
+    replacement.  Files are read with the by-name union of every retained
+    manifest's schema, so a column dropped from the head keeps its values
+    for the older snapshots that still read it.  Then every manifest that
+    referenced a rewritten file is atomically REPLACED
+    (:func:`manifest_log.replace`) with one referencing the new names;
     version numbers, ops, the epoch ledger and all other rows are
     preserved.  Readers see each manifest either before or after its
     single atomic replace, and both states are complete, valid snapshots
@@ -1757,52 +1788,31 @@ def purge_relation(
     if not versions:
         return empty
     manifests = {v: _read_manifest(root, v) for v in versions}
-    key_field = _newest_key_field(manifests, key_col, root)
+    # by-name union of every retained schema: columns are only added or
+    # dropped (a dropped name never returns), so each name has one type,
+    # and a rewritten file keeps every column any manifest reads from it
+    schemas = [T.StructType.fromJson(json.loads(m["schema"])) for m in manifests.values()]
+    union = T.StructType(list({f.name: f for s in schemas for f in s.fields}.values()))
+    if key_col not in union.fieldNames():
+        raise ValueError(f"column {key_col!r} exists in no version of {root!r}")
     ranges: dict[str, tuple] = {}
-    for m in manifests.values():
-        if key_col in {f["name"] for f in json.loads(m["schema"])["fields"]}:
+    for m, sch in zip(manifests.values(), schemas):
+        if key_col in sch.fieldNames():
             ranges.update((r[0], r) for r in _file_ranges(m, key_col))
     vic, affected, n_vic, ck = _victim_hits(
-        spark, victims, key_col, key_field, [r for _, r in sorted(ranges.items())]
+        spark, victims, key_col, union[key_col], [r for _, r in sorted(ranges.items())]
     )
     if n_vic == 0:
         return empty
     entry = f"relation:{key_col}:n={n_vic}:ck={ck:08x}"
-
-    def _rewrite_one(old: str) -> tuple[str, str | None, dict | None, int]:
-        # newest manifest referencing the file: the most-evolved schema
-        # that can read it (older files null-fill newer columns)
-        schema_owner = next(
-            m for m in reversed(list(manifests.values())) if old in m["files"]
-        )
-        schema = T.StructType.fromJson(json.loads(schema_owner["schema"]))
-        kept = _drop_victims(
-            spark.read.schema(schema).parquet(f"{root}/{_DATA_DIR}/{old}"), vic, key_col
-        )
-        names = _stage_files(kept, root, 1)
-        stats = _collect_file_stats(root, names)
-        rows_before = ranges[old][3]
-        rows_after = stats[names[0]]["rows"]
-        if rows_after == 0:
-            os.remove(f"{root}/{_DATA_DIR}/{names[0]}")
-            return old, None, None, rows_before
-        return old, names[0], stats[names[0]], rows_before - rows_after
-
-    # one small Spark job per affected file; submit them CONCURRENTLY
-    # (Spark's scheduler interleaves jobs from multiple threads) — a
-    # sequential loop pays per-job latency x files, ~8x slower here
-    from concurrent.futures import ThreadPoolExecutor
-
-    replacement: dict[str, str | None] = {}  # old -> new (None: emptied)
-    new_stats: dict[str, dict] = {}
-    removed_per_file: dict[str, int] = {}
-    if affected:
-        with ThreadPoolExecutor(max_workers=min(8, len(affected))) as pool:
-            for old, new, st, removed in pool.map(_rewrite_one, affected):
-                replacement[old] = new
-                removed_per_file[old] = removed
-                if new is not None:
-                    new_stats[new] = st
+    replacement, new_stats = (
+        _rewrite_without(spark, root, affected, union, vic, key_col)
+        if affected else ({}, {})
+    )
+    removed_per_file = {
+        old: ranges[old][3] - sum(new_stats[n]["rows"] for n in new)
+        for old, new in replacement.items()
+    }
 
     rows_removed: dict[int, int] = {}
     updated = 0
@@ -1813,8 +1823,7 @@ def purge_relation(
         if not hit:
             continue
         next_files = sorted(
-            replacement.get(n, n) for n in m["files"]
-            if replacement.get(n, n) is not None
+            n2 for n in m["files"] for n2 in replacement.get(n, [n])
         )
         stats = {**m["stats"], **new_stats}
         mlog.replace(_log(root), v, dict(

@@ -97,3 +97,27 @@ def test_refresh_baseline_protocol():
     merged2, _ = refresh_baseline(base, cur, allow_lower=True)
     assert merged2["q1"] == 0.5         # lowered with the flag
     assert merged2["q2"] == 2.0         # still never raised
+
+
+def test_bench_floors_follow_the_session_core_count(tmp_path, monkeypatch):
+    """bench.py flags against the record cut at the session's core count
+    when one exists at the run's sf, else against BENCH_SELF.json."""
+    import json
+
+    import bench
+
+    def put(name, sf, t):
+        (tmp_path / name).write_text(json.dumps({"sf": sf, "queries": {"q01": t}}))
+
+    monkeypatch.setattr(bench, "REPO", str(tmp_path))
+    monkeypatch.setattr(bench, "SF_DIR", "/data/sf0.1")
+    monkeypatch.setattr(bench, "DEFAULT_CPUS", 4)
+    assert bench._committed_reference() == {}
+    put("BENCH_SELF.json", 0.1, 2.0)
+    assert bench._committed_reference() == {"q01": 2.0}
+    put("BENCH_SELF_4c.json", 0.01, 1.0)  # cut at another sf: skipped
+    assert bench._committed_reference() == {"q01": 2.0}
+    put("BENCH_SELF_4c.json", 0.1, 1.0)
+    assert bench._committed_reference() == {"q01": 1.0}
+    monkeypatch.setattr(bench, "DEFAULT_CPUS", 8)
+    assert bench._committed_reference() == {"q01": 2.0}

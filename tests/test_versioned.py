@@ -1907,3 +1907,79 @@ def test_vacuum_crash_at_any_remove_leaves_every_listed_version_readable(
         assert table_versions(work) == [3], k
         assert vacuum(work, keep_last=1, grace_seconds=0)["data_files_removed"] == 0
         assert sorted(read_version(spark, work).collect()) == head, k
+
+
+def test_purge_after_drop_column_keeps_dropped_values_in_history(spark, root):
+    """Purge rewrites each hit file under the union of every retained
+    schema: a column dropped from the head still holds its values in the
+    older snapshots that read it, for every row that is not a victim."""
+    from python_async_sample_spark.sources.versioned import drop_column, purge_keys
+
+    df = spark.createDataFrame(
+        [(1, "a", "s1"), (2, "b", "s2"), (3, "c", "s3")], "k int, v string, secret string"
+    )
+    create_table(spark, root, df, n_files=1)
+    drop_column(spark, root, "secret")
+    purge_keys(spark, root, "k", [2])
+    assert sorted(read_version(spark, root, 0).collect()) == [(1, "a", "s1"), (3, "c", "s3")]
+    assert sorted(read_version(spark, root).collect()) == [(1, "a"), (3, "c")]
+
+
+def test_delete_and_purge_keep_a_clustered_layout(spark, sf_dir, root):
+    """Each file DELETE or PURGE writes holds rows of exactly one old
+    file, so on a ``layout_col``-clustered table every replacement's key
+    range lies inside the range of the file it replaced, and a range scan
+    prunes to as many files after the verb as before it."""
+    from python_async_sample_spark.sources.versioned import (
+        _read_manifest,
+        delete_relation,
+        prune_files_for_range,
+        purge_keys,
+    )
+
+    orders = _orders(spark, sf_dir)
+    create_table(spark, root, orders, n_files=8, layout_col="o_orderkey")
+    m0 = _read_manifest(root, 0)
+    old = {n: m0["stats"][n]["cols"]["o_orderkey"] for n in m0["files"]}
+    a, b = sorted(old.values())[1:3]  # a scan across two neighbouring files
+    lo, hi = (a[0] + a[1]) // 2, (b[0] + b[1]) // 2
+    n_picked = len(prune_files_for_range(root, "o_orderkey", lo, hi)[0])
+    assert n_picked == 2
+
+    def check(version):
+        m = _read_manifest(root, version)
+        for n in m["files"]:
+            nlo, nhi = m["stats"][n]["cols"]["o_orderkey"]
+            assert any(olo <= nlo and nhi <= ohi for olo, ohi in old.values()), (n, nlo, nhi)
+        assert len(prune_files_for_range(root, "o_orderkey", lo, hi, version)[0]) == n_picked
+
+    victims = orders.where(F.col("o_custkey") % 53 == 0).select("o_orderkey")
+    res = delete_relation(spark, root, "o_orderkey", victims)
+    assert res["rewritten"] > 2 and res["deleted_rows"] > 0
+    check(res["version"])
+    keys = [r[0] for r in orders.where(F.col("o_custkey") % 41 == 0).select("o_orderkey").collect()]
+    assert purge_keys(spark, root, "o_orderkey", keys)["files_rewritten"] > 2
+    check(0)
+    check(res["version"])
+
+
+def test_purge_job_count_does_not_grow_with_files_hit(spark, sf_dir, root):
+    """All hit files are rewritten by one write job: a purge that hits 2
+    files starts as many Spark jobs as one that hits 8."""
+    from python_async_sample_spark.sources.versioned import _read_manifest, purge_keys
+
+    def next_job() -> int:
+        return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+    orders = _orders(spark, sf_dir)
+    jobs = {}
+    for n_hit in (2, 8):
+        r = f"{root}-{n_hit}"
+        create_table(spark, r, orders, n_files=8, layout_col="o_orderkey")
+        m = _read_manifest(r, 0)
+        keys = [m["stats"][n]["cols"]["o_orderkey"][0] for n in m["files"][:n_hit]]
+        j0 = next_job()
+        res = purge_keys(spark, r, "o_orderkey", keys)
+        jobs[n_hit] = next_job() - j0
+        assert res["files_rewritten"] == n_hit
+    assert jobs[2] == jobs[8], jobs
