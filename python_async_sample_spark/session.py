@@ -9,13 +9,43 @@ sized from the environment instead of hard-coded.
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
 
 # Defaults are for the local[/N] test harness; on a real cluster the same
 # settings remain valid (AQE coalesces the shuffle partitions it needs).
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+
+# Spark refuses a socket dir longer than 61 chars: it names each socket
+# `.<uuid4>.sock` (42 chars) in the dir, and sizes the whole path to macOS's
+# 104-byte sun_path (Linux's holds 107). mkdtemp names the dir `tmp` + 8
+# random chars.
+_SOCKET_DIR_MAX = 61
+_MKDTEMP_NAME_LEN = len("/tmpXXXXXXXX")
+
+
+def _make_socket_dir(parents: tuple[str, ...] | None = None) -> str | None:
+    """A private (0700) directory for Unix sockets under the first of
+    ``parents`` (default: the temp dir, then ``/tmp``) short enough for
+    Spark's socket paths, removed at exit; None when none is."""
+    for parent in parents or (tempfile.gettempdir(), "/tmp"):
+        if len(os.path.abspath(parent)) + _MKDTEMP_NAME_LEN > _SOCKET_DIR_MAX:
+            continue
+        try:
+            path = tempfile.mkdtemp(dir=parent)
+        except OSError:
+            continue
+        atexit.register(shutil.rmtree, path, ignore_errors=True)
+        return path
+    return None
+
+
+_socket_dir = functools.cache(_make_socket_dir)
 
 
 def _external_master() -> str | None:
@@ -85,6 +115,20 @@ def get_spark(
     archive only after it changed. The daemon is set only on the local
     fallback: on an external master the executors' filesystem and Python
     are unknown, so pyspark's daemon stays.
+
+    Local sessions also run the JVM's exchanges with Python (workers, the
+    accumulator server, collect and broadcast data sockets) over Unix
+    domain sockets. Over loopback TCP the JVM's writes stall each Python
+    task's finish by 40-50 ms, and no Spark conf reaches that; over a Unix
+    socket it reads about 0 ms. The sockets live in one private (0700)
+    directory per process, made under the temp dir, or under ``/tmp`` when
+    the temp dir is too long for a socket path (Spark caps the directory at
+    61 chars, so that ``<dir>/.<uuid4>.sock`` fits 104 bytes), and removed
+    at exit; when neither fits, the session keeps TCP. Spark skips its
+    shared-secret handshake on a Unix socket, so the directory's permissions
+    are the only guard. External masters keep TCP, as they keep pyspark's
+    daemon, and so does a session a caller builds itself (the driver's
+    ``__spark_entry__`` contract).
     """
     cpus = cpus or DEFAULT_CPUS
     shuffle = shuffle_partitions or max(cpus, 8)
@@ -109,6 +153,11 @@ def get_spark(
         extra_conf["spark.executorEnv.PYTHONPATH"] = (
             f"{root}{os.pathsep}{pythonpath}" if pythonpath else root
         )
+        socket_dir = _socket_dir()
+        if socket_dir is not None:
+            builder = builder.config(
+                "spark.python.unix.domain.socket.enabled", "true"
+            ).config("spark.python.unix.domain.socket.dir", socket_dir)
     builder = (
         builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle))

@@ -67,15 +67,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     read as long nanos via ``spark.sql.legacy.parquet.nanosAsLong`` and
     truncated to microsecond timestamps with integer arithmetic (a double
     division would lose precision above 2^53 ns).
+
+    The schema comes from the file's footer (``hadoop_fs.parquet_schema``):
+    Spark's own inference is a one-task job per read.
     """
     # The driver owns the session; pin the reader confs at call time.
     pin_reader_conf(spark)
     path = f"{sf_dir.rstrip('/')}/{name}.parquet"
     ns_cols = _nanos_timestamp_columns(path)
-    if not ns_cols:
-        return spark.read.parquet(path)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    if ns_cols:
+        # before the footer read: the converter maps NANOS to long under it
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = spark.read.schema(hadoop_fs.parquet_schema(spark, path)).parquet(path)
     for c in ns_cols:
         df = df.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
     return df

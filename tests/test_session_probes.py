@@ -187,28 +187,149 @@ def test_local_session_workers_run_the_engine_daemon(spark):
     assert got and all(f.endswith("_pydaemon.py") for f in got), got
 
 
-def test_daemon_imports_whatever_the_cwd(tmp_path):
-    """The daemon is launched as `python -m`, so get_spark must put the
-    package on the workers' path: a driver started outside the repo still
-    runs Python-worker tasks."""
+def _session_subprocess(cwd, **env_overrides):
+    """Run a get_spark session in a fresh interpreter started in ``cwd``:
+    one Python-worker task, then ``stop()``. Prints the rows, the session's
+    Unix socket dir and the socket files left in it after the stop."""
     import subprocess
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     code = (
-        f"import sys; sys.path.insert(0, {repo!r})\n"
+        f"import os, sys; sys.path.insert(0, {repo!r})\n"
         "from python_async_sample_spark.session import get_spark\n"
-        "s = get_spark(app_name='cwd-probe', cpus=1)\n"
+        "s = get_spark(app_name='subprocess-probe', cpus=1)\n"
         "print('ROWS', s.createDataFrame([(1,)], 'a int').collect())\n"
+        "d = s.sparkContext.getConf().get('spark.python.unix.domain.socket.dir')\n"
         "s.stop()\n"
+        "print('SOCKDIR', d)\n"
+        "print('SOCKS', sorted(f for f in os.listdir(d) if f.endswith('.sock')) if d else None)\n"
     )
     env = {
         k: v for k, v in os.environ.items()
         if not k.startswith("PYSPARK_GATEWAY") and k not in ("SPARK_MASTER", "MASTER")
     }
     env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    env.update(env_overrides)
     out = subprocess.run(
-        [sys.executable, "-c", code], cwd=tmp_path, env=env,
+        [sys.executable, "-c", code], cwd=cwd, env=env,
         capture_output=True, text=True, timeout=300,
     )
     assert out.returncode == 0, out.stderr[-2000:]
-    assert "ROWS [Row(a=1)]" in out.stdout
+    return dict(line.split(" ", 1) for line in out.stdout.splitlines() if " " in line)
+
+
+def test_daemon_imports_whatever_the_cwd(tmp_path):
+    """The daemon is launched as `python -m`, so get_spark must put the
+    package on the workers' path: a driver started outside the repo still
+    runs Python-worker tasks. Its Unix sockets are gone after stop() and
+    their directory after the process exits."""
+    got = _session_subprocess(tmp_path)
+    assert got["ROWS"] == "[Row(a=1)]"
+    assert got["SOCKS"] == "[]"
+    assert not os.path.exists(got["SOCKDIR"])
+
+
+def test_long_tmpdir_session_keeps_its_sockets_under_tmp(tmp_path):
+    """A temp dir too long for a socket path must not stop the session from
+    starting: its sockets move under /tmp."""
+    long_tmp = tmp_path / ("t" * (100 - len(str(tmp_path)) - 1))
+    long_tmp.mkdir()
+    assert len(str(long_tmp)) == 100
+    got = _session_subprocess(tmp_path, TMPDIR=str(long_tmp))
+    assert got["ROWS"] == "[Row(a=1)]"
+    assert os.path.dirname(got["SOCKDIR"]) == "/tmp"
+    assert got["SOCKS"] == "[]"
+    assert not os.path.exists(got["SOCKDIR"])
+
+
+def test_socket_dir_chooser_guards_the_path_limit(tmp_path, monkeypatch):
+    """The socket dir is a private directory under the temp dir, under /tmp
+    when the temp dir is too long for Spark's limit (61 chars for the dir,
+    104 bytes for `<dir>/.<uuid4>.sock`), and None (keep TCP) when no
+    parent is short enough."""
+    import shutil
+    import tempfile
+    import uuid
+
+    from python_async_sample_spark.session import _make_socket_dir
+
+    def made_under(parent, parents=None):
+        path = _make_socket_dir(parents)
+        try:
+            assert os.path.dirname(path) == parent
+            assert os.stat(path).st_mode & 0o777 == 0o700
+            assert len(path) <= 61
+            assert len(os.path.join(path, f".{uuid.uuid4()}.sock")) <= 104
+        finally:
+            os.rmdir(path)
+
+    made_under(tempfile.gettempdir())
+    long_tmp = tmp_path / ("t" * max(1, 60 - len(str(tmp_path))))
+    long_tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(long_tmp))
+    made_under("/tmp")
+    assert _make_socket_dir((str(long_tmp), "/" + "x" * 60)) is None
+
+    base = tempfile.mkdtemp(dir="/tmp")
+    try:
+        edge = os.path.join(base, "e" * (49 - len(base) - 1))
+        os.mkdir(edge)
+        made_under(edge, (edge,))  # a 61-char dir: the longest Spark takes
+        assert _make_socket_dir((edge + "x",)) is None
+    finally:
+        shutil.rmtree(base)
+
+
+def test_local_session_python_tasks_run_over_unix_sockets(spark):
+    """get_spark's local sessions hand Python workers a Unix socket, not
+    loopback TCP."""
+    if not spark.sparkContext.master.startswith("local"):
+        pytest.skip("an external master keeps TCP")
+
+    def mode(_):
+        yield os.environ.get("PYTHON_UNIX_DOMAIN_ENABLED", "").lower()
+
+    assert spark.sparkContext.parallelize(range(2), 2).mapPartitions(mode).collect() == [
+        "true",
+        "true",
+    ]
+
+
+def _next_job_id(spark):
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+
+def test_load_table_reads_footer_schemas_without_a_job(spark, sf_dir):
+    """load_table takes each table's schema from its footer: no read starts
+    a Spark job, and the schema is the one inference would find."""
+    from python_async_sample_spark.sources.readers import TABLES
+
+    for name in TABLES:
+        before = _next_job_id(spark)
+        df = load_table(spark, sf_dir, name)
+        assert _next_job_id(spark) == before, name
+        inferred = spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
+        assert df.schema == inferred, name
+
+
+def test_load_table_reads_nanos_timestamps_without_a_job(spark, tmp_path):
+    """The TIMESTAMP(NANOS) branch reads its footer as longs too: no job,
+    and the column comes back as microsecond timestamps."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ns = [1_706_054_400_000_001_999, 1_706_140_800_123_456_789]
+    pq.write_table(
+        pa.table({"id": [1, 2], "ts": pa.array(ns, pa.timestamp("ns"))}),
+        tmp_path / "t.parquet",
+    )
+    old = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong")
+    try:
+        before = _next_job_id(spark)
+        df = load_table(spark, str(tmp_path), "t")
+        assert _next_job_id(spark) == before
+        assert isinstance(df.schema["ts"].dataType, TimestampType)
+        got = df.selectExpr("id", "unix_micros(ts) AS us").orderBy("id").collect()
+        assert [r.us for r in got] == [n // 1000 for n in ns]
+    finally:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", old)
